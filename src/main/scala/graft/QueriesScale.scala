@@ -51,11 +51,12 @@ object QueriesScale {
     * (identical subtree, exchange reuse). */
   private[graft] def scaledDocs(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      .repartition(s.sparkContext.defaultParallelism)
+    ScaleCorpus.requireIdsFitStride(docs, "doc_id", mult)
+    val wide = docs.repartition(s.sparkContext.defaultParallelism)
     (0 until mult).map { c =>
       val txt =
         if (c == 0) col("text") else ScaleCorpus.cipherText(col("text"), c)
-      docs.select((col("doc_id") + lit(c * 10000000L)).as("doc_id"),
+      wide.select((col("doc_id") + lit(c * ScaleCorpus.IdStride)).as("doc_id"),
         txt.as("text"))
     }.reduce(_.unionByName(_))
   }
@@ -65,12 +66,13 @@ object QueriesScale {
     * bit-preserved, cross-copy ~0). */
   private[graft] def scaledEmb(s: SparkSession, dir: String): DataFrame = {
     val emb = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-      .repartition(s.sparkContext.defaultParallelism)
+    ScaleCorpus.requireIdsFitStride(emb, "vec_id", mult)
+    val wide = emb.repartition(s.sparkContext.defaultParallelism)
     (0 until mult).map { c =>
       val vec =
         if (c == 0) col("embedding")
         else ScaleCorpus.flipEmbedding(col("embedding"), c)
-      emb.select((col("vec_id") + lit(c * 10000000L)).as("vec_id"),
+      wide.select((col("vec_id") + lit(c * ScaleCorpus.IdStride)).as("vec_id"),
         vec.as("embedding"))
     }.reduce(_.unionByName(_))
   }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
@@ -111,6 +111,24 @@ object ScaleCorpus {
       x * when(pmod(hash(j + lit(c * 37)), lit(2)) === 0, lit(1.0f))
         .otherwise(lit(-1.0f)))
 
+  /** Per-copy id shift: copy c's ids are the base ids + c·IdStride. */
+  private[graft] val IdStride = 10000000L
+
+  /** The copies stay disjoint only while every base id lies in
+    * [0, IdStride): a grown base corpus would otherwise silently merge
+    * copy c's shifted ids into copy c+1's. One min/max aggregate over
+    * the id column; a no-op at mult 1 (a single copy cannot collide). */
+  private[graft] def requireIdsFitStride(base: DataFrame, idCol: String,
+      mult: Int): Unit = if (mult > 1) {
+    val id = col(idCol).cast("long")
+    val r = base.agg(min(id), max(id)).head()
+    if (!r.isNullAt(0))
+      require(r.getLong(0) >= 0L && r.getLong(1) < IdStride,
+        s"$idCol spans [${r.getLong(0)}, ${r.getLong(1)}]: the per-copy id " +
+          s"stride $IdStride needs every base id in [0, $IdStride) or " +
+          s"copies would share ids")
+  }
+
   def main(args: Array[String]): Unit = {
     require(args.length == 3 || args.length == 4,
       "usage: ScaleCorpus <baseSfDir> <outDir> <mult> [all|emb]")
@@ -146,19 +164,21 @@ object ScaleCorpus {
       else (0 until mult).map { c =>
         val txt = if (c == 0) col("text") else cipherText(col("text"), c)
         docs.select(
-          (col("doc_id") + lit(c * 10000000L)).as("doc_id"),
+          (col("doc_id") + lit(c * IdStride)).as("doc_id"),
           txt.as("text"), col("lang"), col("source"),
           length(txt).cast("long").as("n_chars"))
       }.reduce(_.unionByName(_))
+    if (!embOnly) requireIdsFitStride(docs, "doc_id", mult)
     bigDocs.repartition(32)
       .write.mode("overwrite").parquet(s"$out/documents.parquet")
 
     val emb = Tables.load(spark, base, "embeddings")
+    requireIdsFitStride(emb, "vec_id", mult)
     val bigEmb = (0 until mult).map { c =>
       val vec =
         if (c == 0) col("embedding") else flipEmbedding(col("embedding"), c)
       emb.select(
-        (col("vec_id") + lit(c * 10000000L)).as("vec_id"),
+        (col("vec_id") + lit(c * IdStride)).as("vec_id"),
         vec.as("embedding"), col("label"))
     }.reduce(_.unionByName(_))
     bigEmb.repartition(32)

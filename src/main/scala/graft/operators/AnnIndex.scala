@@ -229,9 +229,8 @@ object AnnIndex {
     * ||v[j·sub ..] − cb[j][code_j]||², summed over subspaces; codes
     * without a codebook entry contribute the segment's distance to the
     * zero vector, exactly [[reconError]]'s coalesce arm. The codebook
-    * rides as one bounded nested-array Literal (m × k × sub doubles),
-    * the [[ivfPqKnnJoin]] cbLit discipline — never an unrolled
-    * expression tree. */
+    * rides as one bounded nested-array Literal (m × k × sub doubles) —
+    * never an unrolled expression tree. */
   private def reconRowErr(vec: Column, code: Column,
       cb: Map[(Int, Int), Array[Double]], m: Int, sub: Int): Column = {
     val kk = cb.keys.map(_._2).max + 1
@@ -285,18 +284,8 @@ object AnnIndex {
   private def stampReconBaseline(spark: SparkSession, path: String,
       coded: DataFrame, vecColName: String, m: Int, sub: Int,
       n: Long): Unit = {
-    // the build just wrote `_codebooks` itself, so its schema is known
-    // — the explicit-schema read skips the per-read inference job (the
-    // liveIndexRows discipline; reconError casts the int columns anyway)
-    import org.apache.spark.sql.types._
-    val cbSchema = StructType(Seq(
-      StructField("subspace", IntegerType),
-      StructField("centroid_id", IntegerType),
-      StructField("centroid", ArrayType(DoubleType)),
-      StructField("quantizer", StringType)))
-    val (err, sn) = reconError(coded, vecColName,
-      spark.read.schema(cbSchema).parquet(s"$path/_codebooks"), m, sub, n,
-      KmeansFitSampleCap)
+    val (err, sn) = reconError(coded, vecColName, codebooksFrame(spark, path),
+      m, sub, n, KmeansFitSampleCap)
     writeReconSidecar(new org.apache.hadoop.fs.Path(path).getFileSystem(
       spark.sparkContext.hadoopConfiguration), path, err, 0.0, 0L, sn)
   }
@@ -1247,19 +1236,21 @@ object AnnIndex {
    *     `cell` — both sides shuffle on the cell key only, NEVER a query
    *     × corpus cross join, and each scanned row is a code, not a raw
    *     vector;
-   *  3. codes score against the query IN PLACE: the shared codebooks
-   *     are bounded (m×k rows — the same driver-side collect the
-   *     single-query path inlines) and become ONE nested-array literal,
-   *     and each candidate row's asymmetric distance is a pure
-   *     projection over its code and the query's normalized vector
-   *     (carried through the cell join, d doubles per probed pair) —
-   *     no per-candidate explode, no (query, j, c) shuffle: scoring a
-   *     corpus-sized candidate set costs m array lookups per row
-   *     exactly like the single-query path, and the only
-   *     candidate-mass shuffle in the plan is the per-query cut's
-   *     window exchange. The `ann_ivfpq_knn_join` oracle replays the
-   *     same math as an explicit distance-table join — value-identical
-   *     under the 6dp rounding, term for term;
+   *  3. codes score against the query IN PLACE by asymmetric distance
+   *     computation (Jégou et al., TPAMI 2011): each query builds ONE
+   *     flat m·k distance table against the shared codebooks (bounded
+   *     m×k rows — the same driver-side collect the single-query path
+   *     inlines) alongside its normalization, BEFORE the centroid cross
+   *     join, and the table rides the cell join in place of the
+   *     query vector. Each candidate row's distance is then m
+   *     code-generated table lookups — no higher-order function runs
+   *     per code row, no per-candidate explode, no (query, j, c)
+   *     shuffle: scoring a corpus-sized candidate set costs exactly
+   *     what the single-query path costs, and the only candidate-mass
+   *     shuffle in the plan is the per-query cut's window exchange. The
+   *     `ann_ivfpq_knn_join` oracle replays the same math as an
+   *     explicit distance-table join — value-identical under the 6dp
+   *     rounding, term for term;
    *  4. the per-query k*overFetch cut by asymmetric distance, then an
    *     exact cosine re-rank of ONLY the candidate ids against the raw
    *     vectors (a candidate-mass-sized equi-join — the single touch of
@@ -1268,15 +1259,16 @@ object AnnIndex {
    * All cuts are 6dp-rounded with id tiebreaks (cell, then vec_id), so
    * the sign-quantizer path is value-replayable cross-engine exactly
    * like the single-query probe. Missing (subspace, code) codebook slots
-   * (ragged k-means codebooks) score +inf via the left join's coalesce,
-   * so no stored code ranks by a hole in the table — same contract as
+   * (ragged k-means codebooks) are null table slots and score +inf, so
+   * no stored code ranks by a hole in the table — same contract as
    * [[pqDistanceColumns]].
    *
    * Scale notes: step 1 is Q × nCells centroid cosines (the standard
    * batch-IVF coarse cost — at n=100M, nCells ≈ 24k and the build side
-   * is ~12 MB broadcast); steps 2–4 are candidate-mass-sized (~Q ×
-   * nProbe × targetCellRows code rows pre-cut). Parallelism follows the
-   * query count through every window.
+   * is ~12 MB broadcast) plus Q table builds of m·k·sub flops each;
+   * steps 2–4 are candidate-mass-sized (~Q × nProbe × targetCellRows
+   * code rows pre-cut). Parallelism follows the query count through
+   * every window.
    *
    * @return (query_id, vec_id, cosine) — up to k rows per query
    */
@@ -1286,79 +1278,8 @@ object AnnIndex {
       nProbe: Int = -1, overFetch: Int = 4,
       scope: Option[DataFrame] = None): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // fail-closed sidecar reads (interrupted rebuilds error, and the
-    // centroid listing cross-checks the on-disk cell layout)
-    val cents = ivfCentroids(spark, path)
-    requireCodebooks(spark, path)
-    // nProbe < 0 => recall-holding plan — see [[Similarity.planIvfProbe]]
-    val probe = if (nProbe >= 0) nProbe else Similarity.planIvfProbe(cents.length)
-    import spark.implicits._
-    val centsDf = cents.toSeq.map { case (c, a) => (c, a.toSeq) }
-      .toDF("cell", "centroid")
-    // queries normalize exactly like the build (buildPq's unit-sphere
-    // invariant: squared-L2 over codes is monotone in cosine only there)
-    val qn = queries
-      .select(col(idCol).as("query_id"), col(vecCol).cast("array<double>").as("qraw"))
-      .withColumn("__n",
-        sqrt(aggregate(col("qraw"), lit(0.0), (a, x) => a + x * x)))
-      .select(col("query_id"),
-        transform(col("qraw"),
-          x => when(col("__n") > 0, x / col("__n")).otherwise(x)).as("qv"))
-    // 1. per-query coarse ranking over the broadcast centroid table; the
-    // query's normalized vector rides along into the cell join (d
-    // doubles per probed pair — the price of projection-only scoring)
-    val wProbe = Window.partitionBy("query_id")
-      .orderBy(col("__cc").desc, col("cell").asc)
-    val probed = qn.crossJoin(broadcast(centsDf))
-      .select(col("query_id"), col("qv"), col("cell"),
-        round(cosine(col("centroid"), col("qv")), 6).as("__cc"))
-      .withColumn("__rn", row_number().over(wProbe))
-      .filter(col("__rn") <= probe)
-      .select("query_id", "qv", "cell")
-    // 3a. the shared codebooks as one nested-array literal: cbLit[j][c]
-    // is subspace j's centroid for code c — a single bounded Literal
-    // (m * k * sub doubles), NOT a per-element expression tree, so
-    // codegen never sees it unrolled. Holes (ragged k-means codebooks,
-    // or a code with no codebook entry) are null slots; the per-term
-    // coalesce below scores them +inf — the [[pqDistanceColumns]]
-    // contract, so no stored code ranks by a hole in the table. A
-    // stored code BEYOND the trained range (a frozen-geometry sign
-    // append can introduce patterns training never saw — the streaming
-    // twin's normal state between reindexes) is the same hole, not a
-    // crash: the range guard below sends it through the coalesce
-    // instead of an element_at out-of-bounds error.
-    val cbMap = spark.read.parquet(s"$path/_codebooks").collect()
-      .map(r => ((r.getInt(0), r.getInt(1)), r.getSeq[Double](2)))
-      .toMap
-    val m = cbMap.keys.map(_._1).max + 1
-    val kk = cbMap.keys.map(_._2).max + 1
-    val sub = cbMap.values.head.length
-    val cbLit = typedLit((0 until m).map(j => (0 until kk).map(c =>
-      cbMap.get((j, c)).map(_.toList).orNull)))
-    // 2 + 3b. cell equi-join, then projection-only code scoring:
-    // approx_dist = sum_j ||cb[j][code_j] - q_j||^2, m lookups per row
-    // (tombstoned and out-of-scope rows drop here, BEFORE the
-    // k·overFetch cut — see [[liveRows]]/[[scopedRows]]: a post-filter
-    // would let them eat the candidate budget)
-    val codes = scopedRows(
-      liveRows(spark, path, spark.read.parquet(path)), scope)
-    val approxDist = round((0 until m).map { j =>
-      val cj = col("code").getItem(j)
-      coalesce(
-        aggregate(zip_with(
-          when(cj.between(0, kk - 1),
-            element_at(element_at(cbLit, j + 1), cj + 1)),
-          slice(col("qv"), j * sub + 1, sub),
-          (a, b) => (a - b) * (a - b)), lit(0.0), (acc, x) => acc + x),
-        lit(Double.MaxValue))
-    }.reduce(_ + _), 6)
-    val wCut = Window.partitionBy("query_id")
-      .orderBy(col("approx_dist").asc, col("vec_id").asc)
-    val cut = probed.join(codes, Seq("cell"))
-      .select(col("query_id"), col("vec_id"), approxDist.as("approx_dist"))
-      .withColumn("__rn", row_number().over(wCut))
-      .filter(col("__rn") <= k * overFetch)
-      .select("query_id", "vec_id")
+    val cut = ivfPqCandidates(spark, path, queries, vecCol, idCol,
+      k * overFetch, nProbe, scope).select("query_id", "vec_id")
     // 4. exact re-rank of the candidate ids only
     val corpus = embeddings.select(col(idCol).as("vec_id"), col(vecCol).as("__cv"))
     val qraw = queries.select(col(idCol).as("query_id"), col(vecCol).as("__qrv"))
@@ -1373,6 +1294,85 @@ object AnnIndex {
       .drop("__rn")
   }
 
+  /** Steps 1–3 of [[ivfPqKnnJoin]]: every query's `limit` best code rows
+    * by asymmetric distance over its nProbe cells — (query_id, vec_id,
+    * approx_dist), 6dp-rounded, vec_id tiebreak. */
+  private[graft] def ivfPqCandidates(spark: SparkSession, path: String,
+      queries: DataFrame, vecCol: String, idCol: String, limit: Int,
+      nProbe: Int, scope: Option[DataFrame]): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    // fail-closed sidecar reads (interrupted rebuilds error, and the
+    // centroid listing cross-checks the on-disk cell layout)
+    val cents = ivfCentroids(spark, path)
+    requireCodebooks(spark, path)
+    // nProbe < 0 => recall-holding plan — see [[Similarity.planIvfProbe]]
+    val probe = if (nProbe >= 0) nProbe else Similarity.planIvfProbe(cents.length)
+    import spark.implicits._
+    val centsDf = cents.toSeq.map { case (c, a) => (c, a.toSeq) }
+      .toDF("cell", "centroid")
+    val cb = readCodebooks(spark, path)
+    val m = cb.keys.map(_._1).max + 1
+    val kk = cb.keys.map(_._2).max + 1
+    val sub = cb.values.head.length
+    // queries normalize exactly like the build (buildPq's unit-sphere
+    // invariant: squared-L2 over codes is monotone in cosine only there)
+    val qn = queries
+      .select(col(idCol).as("query_id"), col(vecCol).cast("array<double>").as("qraw"))
+      .withColumn("__n",
+        sqrt(aggregate(col("qraw"), lit(0.0), (a, x) => a + x * x)))
+      .select(col("query_id"),
+        transform(col("qraw"),
+          x => when(col("__n") > 0, x / col("__n")).otherwise(x)).as("qv"))
+    // 3a. the query's ADC table, built ONCE per query row (query-sized
+    // side — the only higher-order functions in the scoring path): slot
+    // j·kk + c = ||cb[j][c] − q_j||², a left fold from 0.0 exactly like
+    // the driver-side table of [[pqDistanceColumns]]. The codebooks ride
+    // as one bounded nested-array literal (m × kk × sub doubles); a hole
+    // (ragged k-means codebook, or a code training never saw) is a null
+    // slot, which zip_with/aggregate propagate
+    val cbLit = typedLit((0 until m).map(j => (0 until kk).map(c =>
+      cb.get((j, c)).map(_.toSeq).orNull)))
+    val tbl = flatten(transform(cbLit, (row, j) => transform(row, cent =>
+      aggregate(zip_with(cent, slice(col("qv"), j * sub + 1, lit(sub)),
+        (a, b) => (a - b) * (a - b)), lit(0.0), (acc, x) => acc + x))))
+    // 1. per-query coarse ranking over the broadcast centroid table; the
+    // query's table (m·kk doubles per probed pair) rides into the cell join
+    val wProbe = Window.partitionBy("query_id")
+      .orderBy(col("__cc").desc, col("cell").asc)
+    val probed = qn.select(col("query_id"), col("qv"), tbl.as("tbl"))
+      .crossJoin(broadcast(centsDf))
+      .select(col("query_id"), col("tbl"), col("cell"),
+        round(cosine(col("centroid"), col("qv")), 6).as("__cc"))
+      .withColumn("__rn", row_number().over(wProbe))
+      .filter(col("__rn") <= probe)
+      .select("query_id", "tbl", "cell")
+    // 2 + 3b. cell equi-join, then lookup-only code scoring:
+    // approx_dist = Σ_j tbl[j·kk + code_j], m lookups per row. A null
+    // slot, or a stored code BEYOND the trained range (a frozen-geometry
+    // sign append can introduce patterns training never saw — the
+    // streaming twin's normal state between reindexes), scores +inf:
+    // the range guard sends it through the coalesce instead of an
+    // element_at out-of-bounds error, the [[pqDistanceColumns]] contract.
+    // Tombstoned and out-of-scope rows drop BEFORE the cut — see
+    // [[liveRows]]/[[scopedRows]]: a post-filter would let them eat the
+    // candidate budget
+    val codes = scopedRows(
+      liveRows(spark, path, spark.read.parquet(path)), scope)
+    val approxDist = round((0 until m).map { j =>
+      val cj = col("code").getItem(j)
+      coalesce(
+        when(cj.between(0, kk - 1), element_at(col("tbl"), cj + (j * kk + 1))),
+        lit(Double.MaxValue))
+    }.reduce(_ + _), 6)
+    val wCut = Window.partitionBy("query_id")
+      .orderBy(col("approx_dist").asc, col("vec_id").asc)
+    probed.join(codes, Seq("cell"))
+      .select(col("query_id"), col("vec_id"), approxDist.as("approx_dist"))
+      .withColumn("__rn", row_number().over(wCut))
+      .filter(col("__rn") <= limit)
+      .drop("__rn")
+  }
+
   /** The query's per-subspace asymmetric-distance lookup columns from a
     * `_codebooks` sidecar — shared by [[searchPq]] and [[searchIvfPq]].
     * `q` must already be unit-normalized. Absent (subspace, id) slots
@@ -1384,9 +1384,7 @@ object AnnIndex {
   private def pqDistanceColumns(
       spark: SparkSession, path: String, q: Array[Double]): Seq[org.apache.spark.sql.Column] = {
     requireCodebooks(spark, path) // fail closed on interrupted rebuilds
-    val cb = spark.read.parquet(s"$path/_codebooks").collect()
-      .map(r => ((r.getInt(0), r.getInt(1)), r.getSeq[Double](2).toArray))
-      .toMap
+    val cb = readCodebooks(spark, path)
     val m = cb.keys.map(_._1).max + 1
     val kk = cb.keys.map(_._2).max + 1
     val sub = cb.values.head.length
@@ -3181,9 +3179,8 @@ object AnnIndex {
     * for a verb that rewrites O(index) anyway. */
   private def reconstructedLiveRows(spark: SparkSession, path: String,
       m: Int, sub: Int): DataFrame = {
-    val cb = spark.read.parquet(s"$path/_codebooks")
-      .select(col("subspace").cast("int").as("subspace"),
-        col("centroid_id").cast("int").as("centroid_id"), col("centroid"))
+    val cb = codebooksFrame(spark, path)
+      .select(col("subspace"), col("centroid_id"), col("centroid"))
     liveRows(spark, path,
         spark.read.parquet(path).select("vec_id", "code"))
       .select(col("vec_id"),
@@ -3364,23 +3361,36 @@ object AnnIndex {
   }
 
 
+  /** The `_codebooks` sidecar schema every build writes (see [[buildPq]]
+    * / [[buildIvfPq]]). Reading with it skips Spark's per-read schema
+    * inference job; a legacy pre-marker sidecar reads `quantizer` as
+    * null, which [[readCodebooksSidecar]] refuses exactly as before. */
+  private val CodebooksSchema = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(
+      StructField("subspace", IntegerType),
+      StructField("centroid_id", IntegerType),
+      StructField("centroid", ArrayType(DoubleType)),
+      StructField("quantizer", StringType)))
+  }
+
+  private def codebooksFrame(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(CodebooksSchema).parquet(s"$path/_codebooks")
+
+  private def codebookMap(rows: Array[org.apache.spark.sql.Row])
+      : Map[(Int, Int), Array[Double]] =
+    rows.map(r => ((r.getInt(0), r.getInt(1)), r.getSeq[Double](2).toArray))
+      .toMap
+
   /** The `_codebooks` sidecar in ONE read+collect — (map, quantizer
     * marker), the [[readCentroidsSidecar]] treatment for the verbs that
-    * previously read the same sidecar twice (marker + map). Legacy
-    * detection unchanged: the marker comes off the INFERRED schema. */
+    * previously read the same sidecar twice (marker + map). A legacy
+    * sidecar without the marker column reads it as null and is refused. */
   private def readCodebooksSidecar(spark: SparkSession,
       path: String): (Map[(Int, Int), Array[Double]], String) = {
-    val df = spark.read.parquet(s"$path/_codebooks")
-    val hasQ = df.columns.contains("quantizer")
-    val rows = df.collect()
-    val cb = rows
-      .map(r => ((r.getInt(0), r.getInt(1)), r.getSeq[Double](2).toArray))
-      .toMap
-    val q =
-      if (hasQ && rows.nonEmpty)
-        Option(rows.head.getString(rows.head.fieldIndex("quantizer")))
-      else None
-    (cb, q.getOrElse(throw new IllegalStateException(
+    val rows = codebooksFrame(spark, path).collect()
+    val q = rows.headOption.flatMap(r => Option(r.getString(3)))
+    (codebookMap(rows), q.getOrElse(throw new IllegalStateException(
       s"index at $path: _codebooks has no quantizer marker (pre-round-14 " +
         s"build) — appends cannot verify the encode family; rebuild the " +
         s"index once to stamp it.")))
@@ -3391,9 +3401,7 @@ object AnnIndex {
     * path already does. */
   private def readCodebooks(spark: SparkSession,
       path: String): Map[(Int, Int), Array[Double]] =
-    spark.read.parquet(s"$path/_codebooks").collect()
-      .map(r => ((r.getInt(0), r.getInt(1)), r.getSeq[Double](2).toArray))
-      .toMap
+    codebookMap(codebooksFrame(spark, path).collect())
 
   /** code[j] = nearest frozen codeword for subvector j (squared-L2,
     * ties to the lowest id — KMeansModel.transform's first-wins). The

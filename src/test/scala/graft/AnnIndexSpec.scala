@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{AnnIndex, Similarity}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Persisted ANN indexes: partition-pruned probes must return the same
@@ -562,6 +563,25 @@ class AnnIndexSpec extends SparkSpec {
     // count sees three)
     assert(logical.contains("dynamicpruning"),
       s"expected dynamic partition pruning on the code scan:\n$logical")
+    // the per-row scoring kernel is lookups only: the projection scoring
+    // code rows above the cell join holds no higher-order function (those
+    // are interpreted, never code-generated); they run only on the
+    // query-sized side, where each query builds its ADC table once
+    import org.apache.spark.sql.catalyst.expressions.{ArrayAggregate,
+      ArrayTransform, Expression, ZipWith}
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, Project}
+    def hofs(p: Project): Seq[Expression] = p.projectList.flatMap(_.collect {
+      case e @ (_: ArrayAggregate | _: ZipWith | _: ArrayTransform) => e })
+    def projecting(name: String): Seq[Project] =
+      joined.queryExecution.optimizedPlan.collect {
+        case p: Project if p.projectList.exists(_.name == name) => p }
+    val scoring = projecting("approx_dist")
+    assert(scoring.nonEmpty && scoring.forall(_.child.exists(_.isInstanceOf[Join])),
+      s"expected the approx_dist projection above the cell join:\n$logical")
+    scoring.foreach(p => assert(hofs(p).isEmpty,
+      s"higher-order functions in the per-row scoring kernel: ${hofs(p)}"))
+    assert(projecting("tbl").exists(hofs(_).nonEmpty),
+      s"expected the per-query ADC table build on the query side:\n$logical")
     val got = joined.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .groupBy(_._1)
@@ -589,6 +609,102 @@ class AnnIndexSpec extends SparkSpec {
     (0L until 3L).foreach { qid =>
       assert(gotK(qid).head._2 === qid, s"kmeans batched self-hit lost: $qid")
     }
+  }
+
+  /** The pre-ADC batched scoring, kept as a test-only reference: every
+    * code row reads its centroids out of one nested codebook literal and
+    * scores them against the query vector with higher-order functions.
+    * With every cell probed the candidates are the whole index, so the
+    * reference cut needs no coarse ranking. */
+  private def legacyCut(path: String, queries: DataFrame,
+      limit: Int): Set[(Long, Long, Double)] = {
+    import org.apache.spark.sql.expressions.Window
+    val cb = spark.read.parquet(s"$path/_codebooks").collect()
+      .map(r => ((r.getInt(0), r.getInt(1)), r.getSeq[Double](2))).toMap
+    val m = cb.keys.map(_._1).max + 1
+    val kk = cb.keys.map(_._2).max + 1
+    val sub = cb.values.head.length
+    val cbLit = typedLit((0 until m).map(j => (0 until kk).map(c =>
+      cb.get((j, c)).map(_.toList).orNull)))
+    val qn = queries
+      .select(col("vec_id").as("query_id"),
+        col("embedding").cast("array<double>").as("qraw"))
+      .withColumn("__n",
+        sqrt(aggregate(col("qraw"), lit(0.0), (a, x) => a + x * x)))
+      .select(col("query_id"), transform(col("qraw"),
+        x => when(col("__n") > 0, x / col("__n")).otherwise(x)).as("qv"))
+    val approxDist = round((0 until m).map { j =>
+      val cj = col("code").getItem(j)
+      coalesce(
+        aggregate(zip_with(
+          when(cj.between(0, kk - 1),
+            element_at(element_at(cbLit, j + 1), cj + 1)),
+          slice(col("qv"), j * sub + 1, sub),
+          (a, b) => (a - b) * (a - b)), lit(0.0), (acc, x) => acc + x),
+        lit(Double.MaxValue))
+    }.reduce(_ + _), 6)
+    val w = Window.partitionBy("query_id")
+      .orderBy(col("approx_dist").asc, col("vec_id").asc)
+    qn.crossJoin(spark.read.parquet(path))
+      .select(col("query_id"), col("vec_id"), approxDist.as("approx_dist"))
+      .withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") <= limit)
+      .select("query_id", "vec_id", "approx_dist")
+      .as[(Long, Long, Double)].collect().toSet
+  }
+
+  /** The ADC-scored candidate cut equals [[legacyCut]] value for value,
+    * at a k·overFetch-sized cut and over every code row. */
+  private def assertAdcMatchesLegacy(path: String, queries: DataFrame,
+      cut: Int): Set[(Long, Long, Double)] = {
+    Seq(cut, Int.MaxValue).map { limit =>
+      val adc = AnnIndex.ivfPqCandidates(spark, path, queries, "embedding",
+        "vec_id", limit, nProbe = Int.MaxValue, scope = None)
+        .as[(Long, Long, Double)].collect().toSet
+      val ref = legacyCut(path, queries, limit)
+      assert(adc === ref, s"ADC vs legacy scoring at limit $limit: " +
+        s"only ADC ${(adc -- ref).take(5)}, only legacy ${(ref -- adc).take(5)}")
+      adc
+    }.last
+  }
+
+  test("ivfPqKnnJoin ADC table scoring == the per-row higher-order-" +
+      "function scoring, value for value: sign m=8 and m=16, ragged " +
+      "k-means holes, sign codes beyond the trained range (+inf, no error)") {
+    val queries = emb.filter(col("vec_id") < 3)
+    Seq(8, 16).foreach { m =>
+      val p = Tables.freshScratch(s"ivfpq_adc_m$m") + "/idx"
+      AnnIndex.buildIvfPq(emb, "embedding", "vec_id", p, nCells = 16, m = m)
+      val all = assertAdcMatchesLegacy(p, queries, cut = 40)
+      assert(all.size === 3 * 500, s"m=$m: every code row scores")
+    }
+    // ragged k-means: subspace 1 sees 3 distinct (normalized) subvectors,
+    // so its codebook stops at 3 of the 16 slots subspace 0 fills — the
+    // table's null holes
+    val perms = Seq(1f, 2f, 3f, 4f).permutations.toIndexedSeq
+    val ragged = (0 until 48).map { i =>
+      (i.toLong, perms(i % 24) ++ Seq.tabulate(4)(d => if (d == i % 3) 5f else 0f))
+    }.toDF("vec_id", "embedding")
+    val pk = Tables.freshScratch("ivfpq_adc_km") + "/idx"
+    AnnIndex.buildIvfPq(ragged, "embedding", "vec_id", pk, nCells = 2, m = 2,
+      quantizer = "kmeans", autoPlan = false)
+    val perSub = spark.read.parquet(s"$pk/_codebooks")
+      .groupBy("subspace").count().as[(Int, Long)].collect().toMap
+    assert(perSub(1) < perSub(0), s"expected a ragged codebook: $perSub")
+    assertAdcMatchesLegacy(pk, ragged.filter(col("vec_id") < 4), cut = 8)
+    // sign codes beyond the trained range: training sees only all-negative
+    // vectors (code 0 in both subspaces, kk = 1); the appended row keeps
+    // the trained cell but carries codes 14 and 15
+    val neg = (1 to 3).map(i =>
+      (i.toLong, Seq.fill(8)(-0.1f * i))).toDF("vec_id", "embedding")
+    val pos = Seq((98L, (-0.5f) +: Seq.fill(7)(0.5f))).toDF("vec_id", "embedding")
+    val ps = Tables.freshScratch("ivfpq_adc_oob") + "/idx"
+    AnnIndex.buildIvfPq(neg, "embedding", "vec_id", ps, nCells = 2, m = 2,
+      quantizer = "sign", autoPlan = false)
+    AnnIndex.appendIvfPq(pos, "embedding", "vec_id", ps)
+    val oob = assertAdcMatchesLegacy(ps, neg.filter(col("vec_id") === 1), cut = 3)
+    assert(oob.collect { case (_, 98L, d) => d }.forall(_ >= Double.MaxValue) &&
+      oob.exists(_._2 == 98L), s"the untrained code must score +inf: $oob")
   }
 
   test("buildIvf(sign) + ivfKnnJoin: batched probe over the raw-vector " +

@@ -113,4 +113,18 @@ class ScaleCorpusSpec extends SparkSpec {
         s"copy $c: identity digit map")
     }
   }
+
+  test("the per-copy id stride refuses a base id outside [0, 10^7) " +
+      "instead of silently merging copies") {
+    val fits = Seq(0L, ScaleCorpus.IdStride - 1).toDF("id")
+    ScaleCorpus.requireIdsFitStride(fits, "id", mult = 2)
+    val grown = Seq(1L, ScaleCorpus.IdStride).toDF("id")
+    val e = intercept[IllegalArgumentException](
+      ScaleCorpus.requireIdsFitStride(grown, "id", mult = 2))
+    assert(e.getMessage.contains("stride"), e.getMessage)
+    intercept[IllegalArgumentException](
+      ScaleCorpus.requireIdsFitStride(Seq(-1L).toDF("id"), "id", mult = 3))
+    // one copy has nothing to collide with
+    ScaleCorpus.requireIdsFitStride(grown, "id", mult = 1)
+  }
 }
