@@ -53,18 +53,8 @@ object DedupLifecycleProbe {
       val r = f
       (r, (System.nanoTime() - t0) / 1e9)
     }
-    def dataFiles(p: String): Long = {
-      val fs = new org.apache.hadoop.fs.Path(p).getFileSystem(
-        spark.sparkContext.hadoopConfiguration)
-      var n = 0L
-      graft.operators.FsWalk.foreachFile(
-        fs, new org.apache.hadoop.fs.Path(p)) { st =>
-        val f = st.getPath
-        if (f.getName.endsWith(".parquet") &&
-          !f.toString.contains("/_tombstones/")) n += 1
-      }
-      n
-    }
+    def dataFiles(p: String): Long = graft.operators.IndexStore
+      .dataFiles(graft.operators.IndexStore.fsOf(spark, p), p).size.toLong
 
     val docs = Tables.load(spark, dir, "documents")
       .select(col("doc_id"), col("text")).localCheckpoint(true)

@@ -68,18 +68,8 @@ object EmbIndexProbe {
       if (den == 1L) vecs
       else vecs.filter(pmod(xxhash64(col("vec_id"), lit(5)), lit(den)) === 0)
 
-    def dataFiles(p: String): Long = {
-      val fs = new org.apache.hadoop.fs.Path(p).getFileSystem(
-        spark.sparkContext.hadoopConfiguration)
-      var n = 0L
-      graft.operators.FsWalk.foreachFile(
-        fs, new org.apache.hadoop.fs.Path(p)) { st =>
-        val f = st.getPath
-        if (f.getName.endsWith(".parquet") &&
-          !f.toString.contains("/_tombstones/")) n += 1
-      }
-      n
-    }
+    def dataFiles(p: String): Long = graft.operators.IndexStore
+      .dataFiles(graft.operators.IndexStore.fsOf(spark, p), p).size.toLong
 
     val key = (r: org.apache.spark.sql.Row) => (r.getLong(0), r.getLong(1))
     var bad = false

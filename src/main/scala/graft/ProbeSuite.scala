@@ -257,19 +257,10 @@ object ProbeSuite {
       // data-file snapshot of the 99% BASE build — the vacuum bound
       // below asserts these exact files survive the targeted delete
       // untouched (same name, same length)
-      def dataFileSnap(p: String): Map[String, Long] = {
-        val fsP = new org.apache.hadoop.fs.Path(p).getFileSystem(
-          spark.sparkContext.hadoopConfiguration)
-        val out = scala.collection.mutable.Map.empty[String, Long]
-        graft.operators.FsWalk.foreachFile(
-          fsP, new org.apache.hadoop.fs.Path(p)) { f =>
-          val s0 = f.getPath.toString
-          if (s0.endsWith(".parquet") && !Seq("_centroids", "_codebooks",
-            "_tombstones", "_vacuum_staged", "_sample").exists(d =>
-              s0.contains(s"/$d/"))) out(s0) = f.getLen
-        }
-        out.toMap
-      }
+      def dataFileSnap(p: String): Map[String, Long] =
+        graft.operators.IndexStore.dataFiles(
+          graft.operators.IndexStore.fsOf(spark, p), p)
+          .map(f => f.getPath.toString -> f.getLen).toMap
       val baseFiles = dataFileSnap(inc)
       val (nApp, tApp) = timed(AnnIndex.appendIvfPq(
         corpus.filter(isBatch), "embedding", "vec_id", inc))
@@ -456,19 +447,10 @@ object ProbeSuite {
       // while the listing yields file:/x — compare on the fs path alone
       def fsPath(s0: String): String =
         new org.apache.hadoop.fs.Path(s0).toUri.getPath
-      def snap(p: String): Map[String, Long] = {
-        val fsP = new org.apache.hadoop.fs.Path(p).getFileSystem(
-          spark.sparkContext.hadoopConfiguration)
-        val outM = scala.collection.mutable.Map.empty[String, Long]
-        graft.operators.FsWalk.foreachFile(
-          fsP, new org.apache.hadoop.fs.Path(p)) { f =>
-          val s0 = f.getPath.toString
-          if (s0.endsWith(".parquet") && !Seq("_tombstones",
-            "_vacuum_staged").exists(d => s0.contains(s"/$d/")))
-            outM(fsPath(s0)) = f.getLen
-        }
-        outM.toMap
-      }
+      def snap(p: String): Map[String, Long] =
+        graft.operators.IndexStore.dataFiles(
+          graft.operators.IndexStore.fsOf(spark, p), p)
+          .map(f => fsPath(f.getPath.toString) -> f.getLen).toMap
       def chk(p: String): Long = spark.read.parquet(p)
         .select(xxhash64(col("id"), col("band").cast("long"),
           col("key")).as("h"))

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.AnnIndex
+import graft.operators.{AnnIndex, IndexStore}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -47,18 +47,8 @@ object VacuumProbe {
       val r = f
       (r, (System.nanoTime() - t0) / 1e9)
     }
-    def dataFiles(p: String): Long = {
-      val fs = new org.apache.hadoop.fs.Path(p).getFileSystem(
-        spark.sparkContext.hadoopConfiguration)
-      var n = 0L
-      graft.operators.FsWalk.foreachFile(
-        fs, new org.apache.hadoop.fs.Path(p)) { st =>
-        val f = st.getPath.toString
-        if (f.endsWith(".parquet") && !Seq("_plan", "_tombstones",
-          "_vacuum_staged").exists(d => f.contains(s"/$d/"))) n += 1
-      }
-      n
-    }
+    def dataFiles(p: String): Long =
+      IndexStore.dataFiles(IndexStore.fsOf(spark, p), p).size.toLong
 
     val dims = 64
     def unif(seed: org.apache.spark.sql.Column, salt: Int) =
@@ -87,8 +77,8 @@ object VacuumProbe {
     val fsV = new org.apache.hadoop.fs.Path(vIdx).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     val qual = fsV.makeQualified(new org.apache.hadoop.fs.Path(vIdx)).toString
-    val (locRows, tLoc) = timed(AnnIndex.locateScan(spark, qual,
-      doomed.select(col("vec_id"))).collect())
+    val (locRows, tLoc) = timed(IndexStore.locateScan(spark, qual,
+      doomed.select(col("vec_id")), "vec_id").collect())
     println(f"[probe] vacuum locate alone=$tLoc%.1fs files=${locRows.length}")
 
     val ((vFiles, vRows), tVac) =

@@ -106,35 +106,12 @@ object AnnIndex {
     }
   }
 
-  /** Row-count sidecar (`_rows` — one small text file, underscore-invisible
-    * to the parquet reader like every other sidecar): builds stamp the
-    * index's row count and appends bump it, so the drift WARN prices
-    * occupancy WITHOUT a per-append job over the index data path (round 14
-    * verdict: the old full-index `count()` was parquet-metadata-only but
-    * still a full file listing per daily batch — at 100 TB that is
-    * millions of footers listed for one WARN input). NOT fail-closed,
-    * unlike the geometry sidecars: the count is advisory (a WARN input),
-    * so a missing/unparsable `_rows` (legacy index, crash mid-update)
-    * self-heals — [[indexRowCount]] counts once and re-stamps. */
-  private def writeRowsSidecar(fs: org.apache.hadoop.fs.FileSystem,
-      path: String, rows: Long): Unit = {
-    val out = fs.create(new org.apache.hadoop.fs.Path(s"$path/_rows"), true)
-    try out.write(rows.toString.getBytes("UTF-8")) finally out.close()
-  }
-
-  /** The `_rows` sidecar's count, or None when absent/unreadable (legacy
-    * index, truncated write) — see [[writeRowsSidecar]]. */
-  private def readRowsSidecar(fs: org.apache.hadoop.fs.FileSystem,
-      path: String): Option[Long] = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/_rows")
-    if (!fs.exists(p)) None
-    else try {
-      val in = fs.open(p)
-      val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      Some(s.trim.toLong)
-    } catch { case scala.util.control.NonFatal(_) => None }
-  }
+  // Row-count sidecar (`_rows`, [[IndexStore.writeRows]]): builds stamp
+  // the index's row count and appends bump it, so the drift WARN prices
+  // occupancy WITHOUT a per-append job over the index data path. NOT
+  // fail-closed, unlike the geometry sidecars: the count is advisory, so
+  // a missing/unparsable `_rows` self-heals — [[indexRowCount]] counts
+  // once and re-stamps.
 
   // -------------------- codebook-staleness sidecar (`_recon`, round 16)
   //
@@ -410,28 +387,19 @@ object AnnIndex {
   private[graft] def indexRowCount(spark: SparkSession, path: String): Long = {
     val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
-    readRowsSidecar(fs, path).getOrElse {
+    IndexStore.readRows(fs, path).getOrElse {
       val n = spark.read.parquet(path).count()
-      writeRowsSidecar(fs, path, n)
+      IndexStore.writeRows(fs, path, n)
       n
     }
   }
 
-  /** Filter an index scan down to LIVE rows: anti-join the `_tombstones`
-    * sidecar when one exists ([[deleteIds]]) — applied BEFORE every top-k
-    * cut, so deleted rows neither appear in results nor consume k slots.
-    * The common no-deletes case costs ONE fs.exists and leaves the plan
-    * untouched; with tombstones the side is a bounded id table the planner
-    * broadcasts when small (not forced: a mass takedown can be large). */
+  /** An index scan restricted to LIVE rows ([[IndexStore.dropTombstoned]])
+    * — applied BEFORE every top-k cut, so deleted rows neither appear in
+    * results nor consume k slots. */
   private def liveRows(spark: SparkSession, path: String,
-      df: DataFrame): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$path/_tombstones"))) df
-    else df.join(
-      spark.read.parquet(s"$path/_tombstones").select("vec_id").distinct(),
-      Seq("vec_id"), "left_anti")
-  }
+      df: DataFrame): DataFrame =
+    IndexStore.dropTombstoned(spark, path, df, "vec_id")
 
   /** Restrict an index scan to an ALLOWED id set (scoped search, round
     * 15): the batched joins take `scope` so a tenant/license/language
@@ -518,10 +486,12 @@ object AnnIndex {
       spark: SparkSession, path: String): CentroidsSidecar = {
     val hPath = new org.apache.hadoop.fs.Path(path)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    IndexStore.requireNoCrashedSwap(fs, path, "ivfCentroids")
     if (!fs.exists(hPath)) throw new IllegalStateException(
       s"ivf index at $path does not exist — build one with " +
         s"AnnIndex.buildIvf / buildIvfPq")
-    requireNoInterruptedVacuum(fs, path, "ivfCentroids")
+    IndexStore.requireNoInterruptedVacuum(fs, path, "ivfCentroids",
+      IndexLayout)
     if (!fs.exists(new org.apache.hadoop.fs.Path(s"$path/_centroids")))
       throw new IllegalStateException(
         s"ivf index at $path has no _centroids sidecar — the build " +
@@ -589,11 +559,13 @@ object AnnIndex {
   private def requireCodebooks(spark: SparkSession, path: String): Unit = {
     val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
+    IndexStore.requireNoCrashedSwap(fs, path, "requireCodebooks")
     if (!fs.exists(new org.apache.hadoop.fs.Path(path)))
       throw new IllegalStateException(
         s"pq index at $path does not exist — build one with " +
           s"AnnIndex.buildPq / buildIvfPq")
-    requireNoInterruptedVacuum(fs, path, "requireCodebooks")
+    IndexStore.requireNoInterruptedVacuum(fs, path, "requireCodebooks",
+      IndexLayout)
     if (!fs.exists(new org.apache.hadoop.fs.Path(s"$path/_codebooks")))
       throw new IllegalStateException(
         s"pq index at $path has no _codebooks sidecar — the build deletes " +
@@ -702,9 +674,8 @@ object AnnIndex {
         s"buildIvf: unknown quantizer '$other' (kmeans|sign)")
     }
     // stamp the count — appends price the drift WARN from this sidecar
-    // instead of a per-append listing job (see [[writeRowsSidecar]])
-    writeRowsSidecar(new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration), path, n)
+    // instead of a per-append listing job (see [[IndexStore.writeRows]])
+    IndexStore.writeRows(IndexStore.fsOf(spark, path), path, n)
   }
 
   /**
@@ -914,9 +885,8 @@ object AnnIndex {
       case other => throw new IllegalArgumentException(
         s"buildPq: unknown quantizer '$other' (kmeans|sign)")
     }
-    // stamp the count (sidecar-read appends — see [[writeRowsSidecar]])
-    writeRowsSidecar(new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration), path, n)
+    // stamp the count (sidecar-read appends — see [[IndexStore.writeRows]])
+    IndexStore.writeRows(IndexStore.fsOf(spark, path), path, n)
     // raw-vector reservoir for corpus-less retraining (see `_sample`)
     writeReservoir(base, "vec", path, n, fitSampleCap)
   }
@@ -1154,9 +1124,9 @@ object AnnIndex {
       case other => throw new IllegalArgumentException(
         s"buildIvfPq: unknown quantizer '$other' (sign|kmeans)")
     }
-    // stamp the count — sidecar-read drift WARNs (see [[writeRowsSidecar]])
-    writeRowsSidecar(new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration), path, n)
+    // stamp the count — sidecar-read drift WARNs (see
+    // [[IndexStore.writeRows]])
+    IndexStore.writeRows(IndexStore.fsOf(spark, path), path, n)
     // raw-vector reservoir for corpus-less retraining (see the
     // `_sample` section) — one bounded filtered write off the arm's
     // reservoir source (sign: the checkpointed coded table — cache
@@ -1501,8 +1471,8 @@ object AnnIndex {
       .toDF("bits", "probe_hamming", "family", "grp_bits")
       .coalesce(1).write.mode("overwrite").json(s"$path/_plan")
     // stamp the count — appendLsh's drift WARN prices occupancy from this
-    // sidecar instead of a per-append listing job ([[writeRowsSidecar]])
-    writeRowsSidecar(fs, path, n)
+    // sidecar instead of a per-append listing job ([[IndexStore.writeRows]])
+    IndexStore.writeRows(fs, path, n)
     plan
   }
 
@@ -1640,10 +1610,12 @@ object AnnIndex {
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // a missing index is a clear error, not a FileNotFoundException from
     // the listing below (round 14, advisor ask)
+    IndexStore.requireNoCrashedSwap(fs, path, "lshIndexPlan")
     if (!fs.exists(hPath)) throw new IllegalStateException(
       s"lshIndexPlan($path): no index at this path — build one with " +
         s"AnnIndex.buildLsh")
-    requireNoInterruptedVacuum(fs, path, "lshIndexPlan")
+    IndexStore.requireNoInterruptedVacuum(fs, path, "lshIndexPlan",
+      IndexLayout)
     val sidecar = fs.exists(new org.apache.hadoop.fs.Path(s"$path/_plan"))
     val (plan, family, grpBits) =
       if (!sidecar) ((12, 1), FamilyPm1, None)
@@ -1864,31 +1836,6 @@ object AnnIndex {
         s"Nothing was written.")
   }
 
-  /** Appending an id that is TOMBSTONED ([[deleteIds]]) is legal but
-    * almost always a mistake: [[liveRows]] anti-joins by id, so the
-    * fresh row is invisible until a [[vacuumTombstones]] (or the full
-    * [[compactIndex]]) clears the tombstones — the documented
-    * replace-a-row sequence is delete → vacuum → append. This WARN gives
-    * the caller the signal instead of silent invisibility: one O(batch)
-    * semi-join count, and only when a `_tombstones` sidecar exists at
-    * all (fs.exists gate — the common no-deletes append pays nothing). */
-  private def warnTombstonedAppend(spark: SparkSession, path: String,
-      batch: DataFrame, op: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$path/_tombstones"))) {
-      val hidden = batch.select("vec_id").join(
-        spark.read.parquet(s"$path/_tombstones").select("vec_id").distinct(),
-        Seq("vec_id"), "left_semi").count()
-      if (hidden > 0)
-        System.err.println(s"[annindex] WARN $op($path): $hidden appended " +
-          s"row(s) carry TOMBSTONED ids — they are written but invisible " +
-          s"to probes until vacuumTombstones (or compactIndex) clears the " +
-          s"tombstones. Replacing a row is delete -> vacuumTombstones -> " +
-          s"append.")
-    }
-  }
-
   /** Nearest-centroid assignment for append batches against a FROZEN
     * centroid table (kmeans-built indexes): batch × broadcast(centroids)
     * with PARTIAL-AGGREGATED min_by, so the map-side combine collapses
@@ -2026,7 +1973,8 @@ object AnnIndex {
       .withColumn("sig",
         Similarity.sigCol(col("vec"), bits, family == FamilyOrtho))
       .withColumn("sig_grp", shiftright(col("sig"), bits - grpBits))
-    warnTombstonedAppend(spark, path, batch, "appendLsh")
+    IndexStore.warnTombstonedIngest(spark, path, batch, IndexLayout,
+      "appendLsh")
     val obs = org.apache.spark.sql.Observation()
     batch
       // the batch count rides the write job (observe()) — the old path
@@ -2042,8 +1990,8 @@ object AnnIndex {
     // AQE's empty-relation propagation collapses a provably-empty batch
     // plan and the CollectMetrics node with it — an absent metric IS the
     // empty batch, so 0 is exact, never a guess
-    val appended = obs.get.getOrElse("n", 0L).asInstanceOf[Long]
-    writeRowsSidecar(fs, path, oldN + appended)
+    val appended = IndexStore.observedCount(obs, "n")
+    IndexStore.writeRows(fs, path, oldN + appended)
     val planned = Similarity.planLshProbe(oldN + appended, targetCosine,
       bits, probeHamming, targetOccupancy)
     if (planned._1 > bits)
@@ -2084,7 +2032,8 @@ object AnnIndex {
     // (see [[requireDimsAndKnownCells]])
     if (quant != "sign")
       requireBatchDims(batch, "vec", dim, "appendIvf", path)
-    warnTombstonedAppend(spark, path, batch, "appendIvf")
+    IndexStore.warnTombstonedIngest(spark, path, batch, IndexLayout,
+      "appendIvf")
     val assigned = quant match {
       case "sign" =>
         // the PLANNED width from the sidecar, never the occupied-cell
@@ -2105,9 +2054,8 @@ object AnnIndex {
       .transform(writeShuffle(cents.length, col("cell"))) // see [[writeShuffle]]
       .write.mode("append").partitionBy("cell").parquet(path)
     // absent metric = AQE-collapsed empty batch (see appendLsh) → 0
-    val appended = obs.get.getOrElse("n", 0L).asInstanceOf[Long]
-    writeRowsSidecar(new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration), path, oldN + appended)
+    val appended = IndexStore.observedCount(obs, "n")
+    IndexStore.writeRows(IndexStore.fsOf(spark, path), path, oldN + appended)
     warnIvfDrift(path, "appendIvf", oldN + appended, cents.length,
       targetCellRows, "AnnIndex.reindexIvf(spark, path) — re-plans and " +
         "rebuilds from the index's own rows")
@@ -2147,7 +2095,8 @@ object AnnIndex {
     // whole-batch width guard (the raw width equals the normalized width)
     // — see [[requireBatchDims]]
     requireBatchDims(base, "vec", m * sub, "appendPq", path)
-    warnTombstonedAppend(spark, path, base, "appendPq")
+    IndexStore.warnTombstonedIngest(spark, path, base, IndexLayout,
+      "appendPq")
     // read BEFORE the write: a legacy `_rows`-less index self-heals by
     // counting, and counting after the append would double-count the batch
     val oldN = indexRowCount(spark, path)
@@ -2166,9 +2115,8 @@ object AnnIndex {
       .write.mode("append").parquet(path)
     // absent metrics = AQE-collapsed empty batch (see appendLsh) → 0
     val metrics = obs.get
-    val appended = metrics.getOrElse("n", 0L).asInstanceOf[Long]
-    writeRowsSidecar(new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration), path, oldN + appended)
+    val appended = IndexStore.observedCount(obs, "n")
+    IndexStore.writeRows(IndexStore.fsOf(spark, path), path, oldN + appended)
     // staleness: fold THIS batch's write-observed reconstruction error
     // against the frozen codebooks into the appended-mass mean — what
     // indexHealth compares to the build baseline
@@ -2215,7 +2163,8 @@ object AnnIndex {
     // [[requireDimsAndKnownCells]])
     if (quant != "sign")
       requireBatchDims(base, "nv", m * sub, "appendIvfPq", path)
-    warnTombstonedAppend(spark, path, base, "appendIvfPq")
+    IndexStore.warnTombstonedIngest(spark, path, base, IndexLayout,
+      "appendIvfPq")
     val assigned = quant match {
       case "sign" =>
         // planned width from the sidecar, never the occupied-cell count
@@ -2249,9 +2198,8 @@ object AnnIndex {
       .write.mode("append").partitionBy("cell").parquet(path)
     // absent metrics = AQE-collapsed empty batch (see appendLsh) → 0
     val metrics = obs.get
-    val appended = metrics.getOrElse("n", 0L).asInstanceOf[Long]
-    writeRowsSidecar(new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration), path, oldN + appended)
+    val appended = IndexStore.observedCount(obs, "n")
+    IndexStore.writeRows(IndexStore.fsOf(spark, path), path, oldN + appended)
     // staleness: fold this batch's write-observed reconstruction error
     // into the `_recon` running mean (see appendPq)
     foldReconObserved(spark, path, metrics.getOrElse("recon_sum", null), appended)
@@ -2263,548 +2211,110 @@ object AnnIndex {
     appended
   }
 
-  // ----------------------------------------------------- tombstone delete
+  // ------------------------------------------- tombstones, vacuum, compact
   //
-  // The lifecycle's last verb (round 15): real corpus maintenance REMOVES
-  // rows — takedowns, re-crawl replacements, survivor pruning — and the
-  // alternative to a delete verb is a full rebuild per takedown. Deletes
-  // are TOMBSTONES, not rewrites: [[deleteIds]] appends the ids to a
-  // `_tombstones` sidecar (underscore-invisible to the data reader), every
-  // probe/join anti-joins it BEFORE its top-k cut ([[liveRows]] — deleted
-  // rows neither appear nor consume k slots; the no-deletes case costs one
-  // fs.exists), and [[compactIndex]] drops tombstoned rows PHYSICALLY and
-  // clears the sidecar. Geometry sidecars are untouched — survivors keep
-  // byte-identical cells/signatures/codes.
+  // Deletes are TOMBSTONES, not rewrites: every probe/join anti-joins the
+  // `_tombstones` sidecar before its top-k cut ([[liveRows]]), and the
+  // targeted vacuum or the full compaction drops tombstoned rows
+  // physically. Geometry sidecars are untouched — survivors keep
+  // byte-identical cells/signatures/codes. The on-disk protocol
+  // (sidecar, staged swap, roll-forward manifest, crash states) is
+  // [[IndexStore]]'s; this layout supplies what is ANN-specific.
+
+  /** Fail-closed geometry check shared by the mutations: a sidecar-less
+    * tree is an interrupted rebuild (or not an AnnIndex layout), and an
+    * inconsistent one must not hide behind a mutation's results. */
+  private def requireGeometry(spark: SparkSession, path: String,
+      op: String): Unit = {
+    val fs = IndexStore.fsOf(spark, path)
+    val sidecars = Seq("_plan", "_centroids", "_codebooks")
+      .filter(s => fs.exists(new org.apache.hadoop.fs.Path(s"$path/$s")))
+    if (sidecars.isEmpty) throw new IllegalStateException(
+      s"$op($path): no sidecars — an interrupted rebuild (rebuild the " +
+        s"index) or not an AnnIndex layout; refusing to mutate an index " +
+        s"whose geometry is unknown.")
+    if (sidecars.contains("_plan")) lshIndexPlan(spark, path)
+    else if (sidecars.contains("_centroids")) ivfCentroids(spark, path)
+    else requireCodebooks(spark, path) // flat PQ
+  }
+
+  /** The build's write discipline for rewritten rows: explicit-width
+    * repartition on the partition key (dir count unknown here — keep
+    * the width shuffle, see [[writeShuffle]]), sig-sorted within the
+    * grouped LSH layout for row-group pruning. "sig" last: the legacy
+    * raw-sig LSH tree partitions on the raw signature itself, and
+    * omitting it would rewrite that index UNPARTITIONED. Flat PQ has no
+    * partition column and writes `flatFiles` files. */
+  private def rewriteWriter(df: DataFrame, flatFiles: Int) =
+    Seq("sig_grp", "cell", "sig").find(df.columns.contains) match {
+      case Some(c) =>
+        val re = writeShuffle(Int.MaxValue, col(c))(df)
+        (if (c == "sig_grp") re.sortWithinPartitions("sig") else re)
+          .write.partitionBy(c)
+      case None => df.coalesce(flatFiles).write
+    }
+
+  /** The ANN family's [[IndexStore.Layout]]: `_rows` is the live row
+    * count (re-stamped on every physical drop); `_recon` and the
+    * reservoir cap ride a compaction unchanged (content is preserved),
+    * and the `_sample` reservoir drops tombstoned ids so a taken-down
+    * vector cannot resurrect through a reservoir retrain. */
+  private[graft] val IndexLayout = IndexStore.Layout("AnnIndex", "vec_id",
+    "deleteIds", "vacuumTombstones", "compactIndex", requireGeometry,
+    indexRowCount, (df, _) => rewriteWriter(df, 1),
+    df => rewriteWriter(df, math.max(1, writeParts(df) / 4)),
+    carried = Seq("_plan", "_centroids", "_codebooks", "_recon",
+      "_sample_cap"),
+    filtered = Seq("_sample"), restampRows = true)
 
   /**
    * Tombstone-delete ids from a persisted index (any AnnIndex layout):
-   * O(ids), no data rewrite. The sidecar is append-only — each call adds
-   * its batch, duplicates are collapsed at read time — so a crash
-   * mid-write can only leave a PARTIAL batch of tombstones (some of the
-   * requested ids deleted, none un-deleted, prior deletes untouched);
-   * re-running the same delete is idempotent. Fail-closed like every
-   * mutation: refuses indexes whose geometry sidecars are missing or
-   * inconsistent.
-   *
-   * A tombstoned id stays invisible until [[vacuumTombstones]] (the
-   * targeted path — rewrites only the files holding tombstoned rows),
-   * [[compactIndex]] or a reindex physically drops it — including
-   * against a LATER append of the same id. Replacing a row (re-crawl)
-   * is therefore delete → vacuum → append, or append under a NEW id;
-   * the orchestration-layer manifest protocol
-   * ([[graft.sources.FileCommit]]) is the place to sequence that,
-   * exactly as for append batches. When the accumulated tombstones pass
-   * 1% of the index (every probe pays the anti-join on that mass), the
-   * call WARNs with the vacuum prescription.
+   * O(ids), no data rewrite, idempotent ([[IndexStore.delete]]). A
+   * tombstoned id stays invisible — including against a LATER append of
+   * the same id — until [[vacuumTombstones]], [[compactIndex]] or a
+   * reindex drops it physically; replacing a row is delete → vacuum →
+   * append. Fail-closed on sidecar-less or inconsistent geometry.
    *
    * @param ids one column of ids to delete (same type as the index's
    *            vec_id); extra columns are ignored
    * @return number of distinct ids tombstoned by this call
    */
   def deleteIds(spark: SparkSession, path: String, ids: DataFrame,
-      idCol: String = "vec_id"): Long = {
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(hPath)) throw new IllegalStateException(
-      s"deleteIds($path): no index at this path")
-    val sidecars = Seq("_plan", "_centroids", "_codebooks")
-      .filter(s => fs.exists(new org.apache.hadoop.fs.Path(s"$path/$s")))
-    if (sidecars.isEmpty) throw new IllegalStateException(
-      s"deleteIds($path): no sidecars — an interrupted rebuild (rebuild " +
-        s"the index) or not an AnnIndex layout; refusing to tombstone " +
-        s"rows whose geometry is unknown.")
-    // same fail-closed geometry checks as compactIndex: a delete against
-    // an inconsistent index would hide the inconsistency behind results
-    if (sidecars.contains("_plan")) lshIndexPlan(spark, path)
-    else if (sidecars.contains("_centroids")) ivfCentroids(spark, path)
-    else requireCodebooks(spark, path) // flat PQ
-    val batch = ids.select(col(idCol).as("vec_id")).distinct()
-    // the distinct count rides the sidecar write via observe() (r19,
-    // guide §1.2 — the write touches every row; the old shape re-ran
-    // the distinct in a separate count() job). Absent metrics = the
-    // AQE-collapsed empty batch → 0, the appendLsh convention.
-    val obs = org.apache.spark.sql.Observation()
-    batch.observe(obs, count(lit(1)).as("n"))
-      .coalesce(1).write.mode("append")
-      .parquet(s"$path/_tombstones")
-    val n = obs.get.getOrElse("n", 0L) match {
-      case l: java.lang.Long => l.longValue(); case _ => 0L
-    }
-    // accumulation WARN: the sidecar is small (ids only) but every probe
-    // anti-joins it — past ~1% of the index the takedown mass deserves a
-    // vacuum. `_rows` sidecar read only, no job over the data path.
-    // The WARN's distinct count is gated behind the sidecar's METADATA
-    // row count (r19): distinct ids ≤ rows, so under the 1024 floor the
-    // shuffle-dedup job can never change the answer and is skipped.
-    val total = math.max(1L, indexRowCount(spark, path))
-    val tombRows = spark.read.parquet(s"$path/_tombstones").count()
-    if (tombRows >= 1024L) {
-      val tombs = spark.read.parquet(s"$path/_tombstones")
-        .select("vec_id").distinct().count()
-      if (tombs >= 1024L && tombs * 100L >= total)
-        System.err.println(s"[annindex] WARN deleteIds($path): $tombs " +
-          s"accumulated tombstones vs $total rows — every probe now " +
-          s"anti-joins that mass; call AnnIndex.vacuumTombstones to make " +
-          s"the deletes physical and clear the sidecar.")
-    }
-    n
-  }
+      idCol: String = "vec_id"): Long =
+    IndexStore.delete(spark, path, ids, idCol, IndexLayout)
 
   /**
-   * Compact a persisted index after a run of appends. Every append adds
-   * up to one file PER TOUCHED PARTITION DIRECTORY (the layout forces
-   * it: a 1% daily batch still spreads across most cells/groups), so K
-   * daily appends multiply the file count — and with it footer reads,
-   * listing cost and probe task counts — by up to K. Compaction rewrites
-   * the data under the build's own write discipline (explicit-width
-   * repartition on the partition key, sig-sorted within for LSH row-group
-   * pruning) with the GEOMETRY UNTOUCHED: sidecars are carried over
-   * byte-identical, so the compacted index answers exactly like the
-   * fragmented one — only file counts change.
-   *
-   * Crash-safety is a staged-directory swap, not an in-place overwrite
-   * (an interrupted in-place rewrite would leave PARTIAL DATA under
-   * VALID sidecars — silent row loss, strictly worse than the stale-
-   * geometry states the sidecar protocol fails closed on):
-   *   1. write compacted data to `<path>.__compacting`;
-   *   2. copy the sidecars in;
-   *   3. rename `<path>` → `<path>.__precompact` (atomic dir rename);
-   *   4. rename `<path>.__compacting` → `<path>`;
-   *   5. delete `<path>.__precompact`.
-   * A crash before (3) leaves the live index untouched; between (3) and
-   * (4) readers fail closed on the missing path and the original is
-   * recoverable by renaming `__precompact` back; after (4) the compacted
-   * index is live and only garbage remains. A leftover `__compacting` /
-   * `__precompact` from a previous crash is deleted on entry.
-   *
-   * Works on every persisted layout this module writes: grouped LSH
-   * (`sig_grp=` dirs, sig-sorted), IVF / IVF-PQ (`cell=` dirs), flat PQ,
-   * and the legacy raw-sig LSH tree (`sig=` dirs, partitioning kept).
-   * Fail-closed like the readers: a sidecar-less index (interrupted
-   * rebuild) refuses compaction.
-   *
-   * Round 15: compaction is also where TOMBSTONES ([[deleteIds]]) become
-   * physical — deleted rows are dropped from the rewrite and the
-   * `_tombstones` sidecar is not carried over, so the compacted index
-   * starts tombstone-free with survivors byte-identical; the `_rows`
-   * sidecar is re-stamped with the post-drop count.
+   * Compact a persisted index after a run of appends — every append adds
+   * up to one file per touched partition directory, so K appends
+   * multiply the file count (footer reads, listing cost, probe tasks) by
+   * up to K. The rewrite keeps the build's write discipline and the
+   * geometry sidecars byte-identical, drops tombstoned rows physically
+   * and re-stamps `_rows`, so the compacted index answers exactly like
+   * the fragmented one. Crash-safe staged swap ([[IndexStore.compact]]);
+   * refuses to empty the index. Works on every layout this module
+   * writes, including the legacy raw-sig LSH tree (`sig=` kept).
    *
    * @return (files before, files after), data files only
    */
-  def compactIndex(spark: SparkSession, path: String): (Long, Long) = {
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(hPath)) throw new IllegalStateException(
-      s"compactIndex($path): no index at this path")
-    val sidecars = Seq("_plan", "_centroids", "_codebooks")
-      .filter(s => fs.exists(new org.apache.hadoop.fs.Path(s"$path/$s")))
-    val isLsh = sidecars.contains("_plan")
-    if (sidecars.isEmpty) throw new IllegalStateException(
-      s"compactIndex($path): no sidecars — an interrupted rebuild " +
-        s"(rebuild the index) or not an AnnIndex layout; refusing to " +
-        s"rewrite data whose geometry is unknown.")
-    if (isLsh) lshIndexPlan(spark, path) // fail-closed cross-checks
-    else if (sidecars.contains("_centroids")) ivfCentroids(spark, path)
-    else requireCodebooks(spark, path)   // flat PQ
-    // `_tombstones` holds parquet too — never count it as data; a
-    // crashed pre-publish vacuum staging dir is garbage, not data
-    val nonData = sidecars ++ Seq("_tombstones", "_vacuum_staged", "_sample")
-    def dataFiles(p: String): Long = {
-      var n = 0L
-      FsWalk.foreachFile(fs, new org.apache.hadoop.fs.Path(p)) { st =>
-        val f = st.getPath
-        // sidecar dirs hold parquet/json too — count data files only
-        if (f.getName.endsWith(".parquet") &&
-          !nonData.exists(s => f.toString.contains(s"/$s/"))) n += 1
-      }
-      n
-    }
-    val before = dataFiles(path)
-    val tmp = new org.apache.hadoop.fs.Path(s"$path.__compacting")
-    val old = new org.apache.hadoop.fs.Path(s"$path.__precompact")
-    fs.delete(tmp, true); fs.delete(old, true) // prior-crash leftovers
-    // tombstoned rows ([[deleteIds]]) drop PHYSICALLY here — the rewrite
-    // is the one pass that touches every row anyway — and the sidecar is
-    // NOT carried over: the compacted index starts tombstone-free
-    val df0 = liveRows(spark, path, spark.read.parquet(path))
-    // the post-drop row count rides the staged write via observe() (r19
-    // — the old re-stamp re-read the freshly-written tree in a separate
-    // count job); written rows = live rows, the same value
-    val reObs = org.apache.spark.sql.Observation()
-    val df = df0.observe(reObs, count(lit(1)).as("__n"))
-    // "sig" last: the legacy raw-sig LSH tree partitions on the raw
-    // signature itself — omitting it here would rewrite a legacy index
-    // UNPARTITIONED (sig demoted to a data column, every probe a full
-    // scan) behind a clean swap; vacuumTombstones already carries it
-    val pCol = Seq("sig_grp", "cell", "sig").find(df.columns.contains)
-    val writer = pCol match {
-      case Some(c) =>
-        // dir count unknown here — conservatively keep the round-15
-        // width shuffle (parallel dir fan-out; see [[writeShuffle]])
-        val re = writeShuffle(Int.MaxValue, col(c))(df)
-        // within-dir sig sort only applies to the GROUPED layout (in
-        // the legacy tree sig is constant within each directory)
-        (if (isLsh && c == "sig_grp") re.sortWithinPartitions("sig")
-         else re).write.partitionBy(c)
-      case None => df.coalesce(
-        math.max(1, writeParts(df) / 4)).write // flat PQ: few big files
-    }
-    writer.mode("overwrite").parquet(tmp.toString)
-    // `_recon` rides along: compaction preserves data content, so the
-    // staleness baseline and appended-mass mean stay valid
-    (sidecars ++ Seq("_recon", "_sample_cap").filter(n =>
-      fs.exists(new org.apache.hadoop.fs.Path(s"$path/$n")))).foreach { s =>
-      org.apache.hadoop.fs.FileUtil.copy(
-        fs, new org.apache.hadoop.fs.Path(s"$path/$s"),
-        fs, new org.apache.hadoop.fs.Path(s"$tmp/$s"),
-        false, spark.sparkContext.hadoopConfiguration)
-    }
-    // `_sample` rides along MINUS tombstoned ids: the compacted index
-    // starts tombstone-free, so a raw copy would let a taken-down
-    // vector resurrect through a later reservoir retrain
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$path/_sample")))
-      liveRows(spark, path, spark.read.parquet(s"$path/_sample"))
-        .coalesce(8).write.mode("overwrite").parquet(s"$tmp/_sample")
-    // re-stamp the count on the staged copy (tombstone drops change it)
-    // from the write job's own observed rows — no re-read of the tree
-    writeRowsSidecar(fs, tmp.toString,
-      reObs.get.getOrElse("__n", 0L) match {
-        case l: java.lang.Long => l.longValue(); case _ => 0L
-      })
-    swapStaged(fs, hPath, tmp, old, "compactIndex")
-    (before, dataFiles(path))
-  }
-
-  /** The atomic-rename tail of the staged-rewrite protocol shared by
-    * [[compactIndex]] and the reindexes: live → old, staged → live,
-    * delete old. A failed second rename restores the original and keeps
-    * the staged copy for inspection — no window exposes a readable
-    * half-index.
-    *
-    * DESIGN DECISION (round 15, documented per the round-14 review): a
-    * reader racing the swap sees a MISSING path between the two renames
-    * and errors — it can never see a half-index, but it doesn't retry.
-    * The alternative — a `_current` pointer file over versioned
-    * directories ([[graft.sources.SnapshotStore]]'s protocol) — would
-    * make cut-over atomic for concurrent readers and give index
-    * time-travel. We deliberately stay with in-place renames: these
-    * indexes serve BATCH pipelines (maintenance and probes are steps of
-    * the same orchestrated run, never concurrent), a pointer layer would
-    * double every reader's metadata round-trips at 100 TB for a window
-    * no batch reader can hit, and an index that ever serves online
-    * traffic should be PUBLISHED into a SnapshotStore (which already
-    * exists and is oracle-gated) rather than re-implementing its
-    * version-flip here. */
-  /** Refuse to read or mutate over a CRASHED staged swap — the
-    * [[swapStaged]] protocol's one unrecoverable-looking window is a
-    * crash between its two renames: the live path is missing and the
-    * pre-swap dir holds the ONLY copy. Every caller must fail with the
-    * rename-back recovery, never a rebuild/re-train prescription that
-    * would orphan it. A missing live path with NO leftover dirs is just
-    * a not-yet-built index, which each caller handles its own way.
-    * Canonical here because this file owns the swap protocol (and its
-    * suffixes); [[graft.streaming.Streams]] and the embedding index's
-    * plan reader both delegate. */
-  private[graft] def requireNoCrashedSwap(
-      fs: org.apache.hadoop.fs.FileSystem, path: String,
-      op: String): Unit =
-    if (!fs.exists(new org.apache.hadoop.fs.Path(path)))
-      Seq(".__precompact", ".__prereindex").foreach { suf =>
-        val orphan = new org.apache.hadoop.fs.Path(path + suf)
-        if (fs.exists(orphan)) throw new IllegalStateException(
-          s"$op($path): the index path is missing but $orphan exists — " +
-            s"a maintenance swap crashed between its two renames and " +
-            s"that dir holds the intact pre-swap index. Recover by " +
-            s"renaming it back to $path (nothing was lost); do not " +
-            s"rebuild or re-train over the orphan.")
-      }
-
-  private[operators] def swapStaged(fs: org.apache.hadoop.fs.FileSystem,
-      live: org.apache.hadoop.fs.Path, staged: org.apache.hadoop.fs.Path,
-      old: org.apache.hadoop.fs.Path, op: String): Unit = {
-    if (!fs.rename(live, old)) throw new IllegalStateException(
-      s"$op($live): could not stage the live index aside")
-    if (!fs.rename(staged, live)) {
-      fs.rename(old, live) // restore — the staged copy stays for inspection
-      throw new IllegalStateException(
-        s"$op($live): swap failed; original restored, staged copy left " +
-          s"at $staged for inspection")
-    }
-    fs.delete(old, true)
-  }
-
-  // ------------------------------------------------ targeted vacuum (r15)
-  //
-  // [[compactIndex]] makes tombstones physical, but it rewrites the WHOLE
-  // index — at 100 TB a takedown of 100 ids must not cost a full-corpus
-  // rewrite. [[vacuumTombstones]] rewrites ONLY the data files that
-  // contain tombstoned rows: one column-pruned (vec_id, file) scan
-  // locates them, survivors of just those files are rewritten under the
-  // build's own write discipline, and a manifest-driven ROLL-FORWARD
-  // commit makes the file swap crash-safe (the
-  // [[graft.sources.FileCommit]] manifest idea applied inside the index
-  // directory — every step idempotent, re-run to completion). Geometry
-  // sidecars are untouched: survivors keep byte-identical
-  // cells/signatures/codes, and files without a tombstoned row are not
-  // read, not rewritten, not even listed beyond the locate scan.
-
-  private val VacuumMarker = "_vacuum"
-
-  private def vacuumMarkerPath(path: String) =
-    new org.apache.hadoop.fs.Path(s"$path/$VacuumMarker")
-
-  /** Readers and mutations fail closed while a `_vacuum` manifest exists:
-    * between the manifest's atomic publish and [[completeVacuum]]'s final
-    * marker delete, rewritten and original files can coexist (duplicate
-    * survivors) or originals may be gone with staged files not yet moved
-    * in (missing rows) — both silently wrong to read. The manifest is
-    * roll-forward-complete, so the prescription is always "re-run
-    * vacuumTombstones", never manual repair. */
-  private def requireNoInterruptedVacuum(
-      fs: org.apache.hadoop.fs.FileSystem, path: String, op: String): Unit =
-    if (fs.exists(vacuumMarkerPath(path)))
-      throw new IllegalStateException(
-        s"$op($path): an interrupted vacuum left its _vacuum manifest — " +
-          s"data files are mid-swap (rewritten and original files may " +
-          s"coexist), so reading would silently duplicate or drop rows; " +
-          s"re-run AnnIndex.vacuumTombstones($path) to roll it forward.")
+  def compactIndex(spark: SparkSession, path: String): (Long, Long) =
+    IndexStore.compact(spark, path, IndexLayout)
 
   /**
    * Make tombstones ([[deleteIds]]) PHYSICAL by rewriting only the data
    * files that contain tombstoned rows — the targeted sibling of
-   * [[compactIndex]]'s full rewrite, sized to the takedown instead of
-   * the corpus. The common case (a bounded id set spread over a few
-   * files) costs one narrow locate scan (vec_id + file name, column-
-   * pruned) plus a rewrite of just those files; every other file is
-   * untouched on disk. After a vacuum the `_tombstones` sidecar is
-   * cleared — probes stop paying the anti-join, and a previously
-   * tombstoned id becomes appendable again (the replace-a-row sequence
-   * is delete → vacuum → append).
-   *
-   * Crash-safety is a ROLL-FORWARD manifest, not a staged-dir swap (the
-   * rewrite is per-file, not whole-index): survivors are staged under
-   * `_vacuum_staged` (underscore-invisible to readers), then a `_vacuum`
-   * manifest listing every move and delete is published by an atomic
-   * tmp-write + rename. From that instant every reader fails closed
-   * (the marker gate in [[lshIndexMeta]]/[[ivfCentroids]]/
-   * [[requireCodebooks]]) until [[completeVacuum]] finishes the moves,
-   * the deletes, the `_rows` re-stamp and the sidecar clear, and removes
-   * the marker — each step idempotent, so a crash anywhere re-runs to
-   * the same end state. A crash BEFORE the manifest publish leaves only
-   * unreferenced staged garbage, swept on the next call; the live index
-   * is untouched and keeps answering (tombstones still filter).
-   *
-   * The locate scan's result (affected file list + per-file drop counts)
-   * is driver-side state bounded by the number of AFFECTED files — the
-   * right shape for takedowns. A mass delete that touches most files
-   * should use [[compactIndex]] instead (same physical outcome, no
-   * per-file manifest); the call WARNs when the takedown stops being
-   * targeted. Works on every persisted layout this module writes,
-   * including the legacy raw-sig LSH tree. Fail-closed like every
-   * mutation on sidecar-less (interrupted-rebuild) states.
+   * [[compactIndex]], sized to the takedown instead of the corpus. Every
+   * other file is untouched on disk; the `_tombstones` sidecar is
+   * cleared, so probes stop paying the anti-join and a tombstoned id
+   * becomes appendable again. A crash rolls forward on the next call
+   * ([[IndexStore.vacuum]]); it WARNs when the takedown touches so many
+   * files that [[compactIndex]] is the better verb, and refuses to
+   * empty the index.
    *
    * @return (files rewritten, rows dropped); (0, 0) when there is
    *         nothing to vacuum
    */
-  def vacuumTombstones(spark: SparkSession, path: String): (Long, Long) = {
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(hPath)) throw new IllegalStateException(
-      s"vacuumTombstones($path): no index at this path")
-    // an interrupted vacuum rolls FORWARD first — its manifest carries
-    // everything needed to finish, and the marker gates all other reads
-    if (fs.exists(vacuumMarkerPath(path))) completeVacuum(spark, path)
-    else if (stageVacuum(spark, path)) completeVacuum(spark, path)
-    else (0L, 0L)
-  }
-
-  /** The staging half of [[vacuumTombstones]]: locate affected files,
-    * rewrite their survivors into `_vacuum_staged`, publish the `_vacuum`
-    * manifest (the commit point — readers fail closed from here until
-    * [[completeVacuum]]). Returns false when there is nothing to do (no
-    * tombstones, or every tombstoned id is row-less — the sidecar is
-    * cleared outright in that case). Package-private so the spec can
-    * construct the interrupted state a crash would leave. */
-  private[graft] def stageVacuum(
-      spark: SparkSession, path: String): Boolean = {
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // pre-publish leftovers from a crashed staging pass: referenced by
-    // no manifest, plain garbage
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/$VacuumMarker.tmp"),
-      false)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/_vacuum_staged"), true)
-    val sidecars = Seq("_plan", "_centroids", "_codebooks")
-      .filter(s => fs.exists(new org.apache.hadoop.fs.Path(s"$path/$s")))
-    if (sidecars.isEmpty) throw new IllegalStateException(
-      s"vacuumTombstones($path): no sidecars — an interrupted rebuild " +
-        s"(rebuild the index) or not an AnnIndex layout; refusing to " +
-        s"rewrite data whose geometry is unknown.")
-    val isLsh = sidecars.contains("_plan")
-    if (isLsh) lshIndexPlan(spark, path) // fail-closed cross-checks
-    else if (sidecars.contains("_centroids")) ivfCentroids(spark, path)
-    else requireCodebooks(spark, path)   // flat PQ
-    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$path/_tombstones")))
-      return false // steady state: nothing tombstoned
-    val tomb = spark.read.parquet(s"$path/_tombstones")
-      .select("vec_id").distinct()
-    // the reservoir drops its tombstoned members NOW, while the sidecar
-    // still exists to name them (completion clears it, after which
-    // nothing would hide a taken-down vector from a reservoir retrain);
-    // the eager checkpoint makes the same-path overwrite safe, and a
-    // crash mid-write only degrades the ADVISORY `_sample`
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$path/_sample"))) {
-      val filtered = spark.read.parquet(s"$path/_sample")
-        .join(tomb, Seq("vec_id"), "left_anti").localCheckpoint(true)
-      filtered.coalesce(8).write.mode("overwrite")
-        .parquet(s"$path/_sample")
-    }
-    val qualified = fs.makeQualified(hPath).toString
-    // locate: ONE job over (vec_id, file name) — column-pruned to the
-    // narrowest possible scan; returns the affected files AND the
-    // per-file drop counts together
-    val perFile = locateScan(spark, qualified, tomb).collect()
-    val affected = perFile.map(_.getString(0))
-    val dropped = perFile.map(_.getLong(1)).sum
-    if (affected.isEmpty) {
-      // every tombstoned id is row-less (already vacuumed / never
-      // present): clearing the sidecar IS the whole job
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/_tombstones"), true)
-      return false
-    }
-    val rowsAfter = indexRowCount(spark, path) - dropped
-    // rewrite survivors of ONLY the affected files, under the build's
-    // write discipline (explicit-width repartition on the partition key;
-    // sig-sorted within groups for LSH row-group pruning). basePath
-    // keeps the partition column on the per-file read.
-    val staged = s"$path/_vacuum_staged"
-    val aff = spark.read.option("basePath", qualified)
-      .parquet(affected.toIndexedSeq: _*)
-      .join(tomb, Seq("vec_id"), "left_anti")
-    val pCol = Seq("sig_grp", "cell", "sig").find(aff.columns.contains)
-    (pCol match {
-      case Some(c) =>
-        val re = writeShuffle(Int.MaxValue, col(c))(aff)
-        (if (isLsh && c == "sig_grp") re.sortWithinPartitions("sig")
-         else re).write.partitionBy(c)
-      case None => aff.coalesce(1).write // flat PQ: affected files only
-    }).mode("overwrite").parquet(staged)
-    if (affected.length.toLong * 10 >= 3L * dataFileCount(fs, path,
-        sidecars)) System.err.println(
-      s"[annindex] WARN vacuumTombstones($path): the takedown touches " +
-        s"${affected.length} files — no longer a targeted delete; " +
-        s"compactIndex reaches the same physical state without the " +
-        s"per-file manifest.")
-    // manifest: every staged->dest move + every original delete,
-    // published ATOMICALLY (tmp-write + rename). The commit point.
-    val stagedQ = fs.makeQualified(new org.apache.hadoop.fs.Path(staged))
-    val sb = new StringBuilder("graft-vacuum-v1\n")
-    sb.append(s"rows_after=$rowsAfter\n")
-    sb.append(s"rows_dropped=$dropped\n")
-    FsWalk.foreachFile(fs, stagedQ) { st =>
-      val f = st.getPath
-      if (f.getName.endsWith(".parquet")) {
-        val rel = f.toString.stripPrefix(stagedQ.toString)
-          .stripPrefix("/")
-        sb.append(s"move\t$f\t$qualified/$rel\n")
-      }
-    }
-    affected.foreach(f => sb.append(s"del\t$f\n"))
-    sb.append("end\n")
-    val tmpMarker =
-      new org.apache.hadoop.fs.Path(s"$path/$VacuumMarker.tmp")
-    val out = fs.create(tmpMarker, true)
-    try out.write(sb.toString.getBytes("UTF-8")) finally out.close()
-    if (!fs.rename(tmpMarker, vacuumMarkerPath(path)))
-      throw new IllegalStateException(
-        s"vacuumTombstones($path): could not publish the _vacuum manifest")
-    true
-  }
-
-  /** The vacuum's locate scan as a frame: (file, rows-to-drop) for every
-    * data file holding a tombstoned row. The whole point is its SHAPE —
-    * the parquet read must prune to the id column alone (ReadSchema:
-    * vec_id; `input_file_name` is scan metadata, not a data column), so
-    * at 100 TB the locate costs one narrow column, not the corpus.
-    * Package-private so AnnVacuumSpec can pin that plan per-round. */
-  private[graft] def locateScan(spark: SparkSession, qualified: String,
-      tomb: DataFrame): DataFrame =
-    spark.read.option("basePath", qualified)
-      .parquet(qualified)
-      .select(col("vec_id"), input_file_name().as("_file"))
-      .join(tomb, Seq("vec_id"), "left_semi")
-      .groupBy("_file").count()
-
-  /** Data-file count for the vacuum's "still targeted?" WARN — one
-    * recursive listing, sidecar/tombstone/staged trees excluded. */
-  private def dataFileCount(fs: org.apache.hadoop.fs.FileSystem,
-      path: String, sidecars: Seq[String]): Long = {
-    val nonData = sidecars ++ Seq("_tombstones", "_vacuum_staged", "_sample")
-    var n = 0L
-    FsWalk.foreachFile(fs, new org.apache.hadoop.fs.Path(path)) { st =>
-      val f = st.getPath
-      if (f.getName.endsWith(".parquet") &&
-        !nonData.exists(s => f.toString.contains(s"/$s/"))) n += 1
-    }
-    n
-  }
-
-  /** Roll an in-flight vacuum FORWARD from its `_vacuum` manifest: moves
-    * are skipped when already done (staged gone, destination present),
-    * deletes when already gone — every step idempotent, so a crash at
-    * any point re-runs to the same end state. The tail order is the
-    * contract: `_rows` re-stamp and `_tombstones` clear happen BEFORE
-    * the marker delete, which is the single point that lets readers
-    * back in. */
-  private[graft] def completeVacuum(
-      spark: SparkSession, path: String): (Long, Long) = {
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = vacuumMarkerPath(path)
-    val in = fs.open(marker)
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val lines = text.split("\n", -1).toIndexedSeq
-    // the manifest is published by an atomic rename, so a malformed one
-    // is external damage, not a crash state — fail with that distinction
-    if (!lines.headOption.contains("graft-vacuum-v1") ||
-        !lines.contains("end"))
-      throw new IllegalStateException(
-        s"vacuumTombstones($path): unreadable _vacuum manifest — " +
-          s"manifests are published whole (tmp-write + rename), so this " +
-          s"is external damage; rebuild the index.")
-    val body = lines.takeWhile(_ != "end")
-    def field(k: String): Long = body.collectFirst {
-      case l if l.startsWith(s"$k=") => l.stripPrefix(s"$k=").toLong
-    }.getOrElse(throw new IllegalStateException(
-      s"vacuumTombstones($path): _vacuum manifest lacks $k"))
-    val rowsAfter = field("rows_after")
-    val droppedRows = field("rows_dropped")
-    val moves = body.filter(_.startsWith("move\t"))
-      .map { l => val a = l.split("\t"); (a(1), a(2)) }
-    val dels = body.filter(_.startsWith("del\t")).map(_.split("\t")(1))
-    moves.foreach { case (s0, d) =>
-      val sp = new org.apache.hadoop.fs.Path(s0)
-      val dp = new org.apache.hadoop.fs.Path(d)
-      if (fs.exists(sp)) {
-        if (fs.exists(dp)) fs.delete(dp, false) // re-run of a done move
-        if (!fs.rename(sp, dp)) throw new IllegalStateException(
-          s"vacuumTombstones($path): could not move $s0 into place")
-      } else if (!fs.exists(dp)) throw new IllegalStateException(
-        s"vacuumTombstones($path): staged file $s0 and destination $d " +
-          s"are BOTH missing — the manifest does not match the " +
-          s"directory (external damage); rebuild the index.")
-    }
-    dels.foreach { f =>
-      val p = new org.apache.hadoop.fs.Path(f)
-      if (fs.exists(p)) fs.delete(p, false)
-    }
-    writeRowsSidecar(fs, path, rowsAfter)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/_tombstones"), true)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/_vacuum_staged"), true)
-    fs.delete(marker, false)
-    (dels.size.toLong, droppedRows)
-  }
+  def vacuumTombstones(spark: SparkSession, path: String): (Long, Long) =
+    IndexStore.vacuum(spark, path, IndexLayout)
 
   // --------------------------------------------- index health (r15 late)
   //
@@ -2863,7 +2373,8 @@ object AnnIndex {
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(hPath)) throw new IllegalStateException(
       s"indexHealth($path): no index at this path")
-    requireNoInterruptedVacuum(fs, path, "indexHealth")
+    IndexStore.requireNoInterruptedVacuum(fs, path, "indexHealth",
+      IndexLayout)
     val sidecars = Seq("_plan", "_centroids", "_codebooks")
       .filter(s => fs.exists(new org.apache.hadoop.fs.Path(s"$path/$s")))
     if (sidecars.isEmpty) throw new IllegalStateException(
@@ -2876,15 +2387,11 @@ object AnnIndex {
       else if (sidecars.contains("_centroids")) "ivf"
       else "pq"
     val rows = indexRowCount(spark, path)
-    val tombstones =
-      if (!fs.exists(new org.apache.hadoop.fs.Path(s"$path/_tombstones")))
-        0L
-      else spark.read.parquet(s"$path/_tombstones")
-        .select("vec_id").distinct().count()
+    val tombstones = IndexStore.tombstoneCount(spark, path, IndexLayout)
     val partitions = fs.listStatus(hPath).iterator.map(_.getPath.getName)
       .count(n => n.startsWith("sig_grp=") || n.startsWith("cell=") ||
         n.startsWith("sig="))
-    val files = dataFileCount(fs, path, sidecars)
+    val files = IndexStore.dataFiles(fs, path).size.toLong
     val (current, planned) = layout match {
       case "lsh" =>
         val m = lshIndexMeta(spark, path)
@@ -3045,19 +2552,16 @@ object AnnIndex {
   def reindexIvf(spark: SparkSession, path: String, nCells: Int = 16,
       seed: Long = 42L, targetCellRows: Long = 4096L,
       fitSampleCap: Long = KmeansFitSampleCap): Int = {
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val quant = readCentroidsSidecar(spark, path) // fail-closed check
       .quantizer(path)
-    val tmp = new org.apache.hadoop.fs.Path(s"$path.__reindexing")
-    val old = new org.apache.hadoop.fs.Path(s"$path.__prereindex")
-    fs.delete(tmp, true); fs.delete(old, true) // prior-crash leftovers
-    val rows = liveRows(spark, path,
-      spark.read.parquet(path).select("vec_id", "vec"))
-    buildIvf(rows, "vec", "vec_id", tmp.toString, nCells = nCells,
-      seed = seed, autoPlan = true, targetCellRows = targetCellRows,
-      fitSampleCap = fitSampleCap, quantizer = quant)
-    swapStaged(fs, hPath, tmp, old, "reindexIvf")
+    IndexStore.rewriteStaged(IndexStore.fsOf(spark, path), path,
+        IndexStore.Reindex, "reindexIvf") { tmp =>
+      val rows = liveRows(spark, path,
+        spark.read.parquet(path).select("vec_id", "vec"))
+      buildIvf(rows, "vec", "vec_id", tmp, nCells = nCells,
+        seed = seed, autoPlan = true, targetCellRows = targetCellRows,
+        fitSampleCap = fitSampleCap, quantizer = quant)
+    }
     ivfCentroids(spark, path).length
   }
 
@@ -3082,21 +2586,17 @@ object AnnIndex {
   def reindexLsh(spark: SparkSession, path: String, bits: Int = 12,
       refHamming: Int = 1, targetCosine: Double = 0.9,
       targetOccupancy: Double = 2.0): (Int, Int) = {
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     lshIndexMeta(spark, path) // fail-closed: trust the rows only if the
                               // geometry describing them is consistent
-    val tmp = new org.apache.hadoop.fs.Path(s"$path.__reindexing")
-    val old = new org.apache.hadoop.fs.Path(s"$path.__prereindex")
-    fs.delete(tmp, true); fs.delete(old, true) // prior-crash leftovers
-    val rows = liveRows(spark, path,
-      spark.read.parquet(path).select("vec_id", "vec"))
-    // dims is vestigial in buildLsh (signatures derive width from bits)
-    val plan = buildLsh(rows, "vec", "vec_id", tmp.toString, dims = 0,
-      bits = bits, autoPlan = true, targetCosine = targetCosine,
-      refHamming = refHamming, targetOccupancy = targetOccupancy)
-    swapStaged(fs, hPath, tmp, old, "reindexLsh")
-    plan
+    IndexStore.rewriteStaged(IndexStore.fsOf(spark, path), path,
+        IndexStore.Reindex, "reindexLsh") { tmp =>
+      val rows = liveRows(spark, path,
+        spark.read.parquet(path).select("vec_id", "vec"))
+      // dims is vestigial in buildLsh (signatures derive width from bits)
+      buildLsh(rows, "vec", "vec_id", tmp, dims = 0,
+        bits = bits, autoPlan = true, targetCosine = targetCosine,
+        refHamming = refHamming, targetOccupancy = targetOccupancy)
+    }
   }
 
   /**
@@ -3105,10 +2605,10 @@ object AnnIndex {
    * yourself" without crash safety): PQ codes are lossy, so unlike
    * [[reindexIvf]]/[[reindexLsh]] the rebuild must read the UPSTREAM
    * corpus — the caller passes it — but the cut-over rides the same
-   * staged-swap protocol: the fresh build lands in `<path>.__reindexing`,
-   * then [[swapStaged]] flips it live. An interrupted reindex (crash or
-   * a throwing build — wrong m, bad quantizer) leaves the ORIGINAL index
-   * untouched and answering; there is never a readable half-index.
+   * staged rewrite ([[IndexStore.rewriteStaged]]). An interrupted
+   * reindex (crash or a throwing build — wrong m, bad quantizer) leaves
+   * the ORIGINAL index untouched and answering; there is never a
+   * readable half-index.
    *
    * Tombstones ([[deleteIds]]) are honored: the corpus is anti-joined
    * against the index's `_tombstones` before building, so a takedown
@@ -3123,22 +2623,19 @@ object AnnIndex {
       targetCellRows: Long = 4096L,
       fitSampleCap: Long = KmeansFitSampleCap): Int = {
     val spark = embeddings.sparkSession
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     requireCodebooks(spark, path)  // fail-closed
     val quant = readCentroidsSidecar(spark, path) // fail-closed check
       .quantizer(path)
     val useM =
       if (m > 0) m
       else readCodebooks(spark, path).keys.map(_._1).max + 1
-    val tmp = new org.apache.hadoop.fs.Path(s"$path.__reindexing")
-    val old = new org.apache.hadoop.fs.Path(s"$path.__prereindex")
-    fs.delete(tmp, true); fs.delete(old, true) // prior-crash leftovers
-    val corpus = tombstoneFiltered(spark, path, embeddings, idCol)
-    buildIvfPq(corpus, vecCol, idCol, tmp.toString, nCells = nCells,
-      m = useM, seed = seed, quantizer = quant, autoPlan = true,
-      targetCellRows = targetCellRows, fitSampleCap = fitSampleCap)
-    swapStaged(fs, hPath, tmp, old, "reindexIvfPq")
+    IndexStore.rewriteStaged(IndexStore.fsOf(spark, path), path,
+        IndexStore.Reindex, "reindexIvfPq") { tmp =>
+      buildIvfPq(IndexStore.dropTombstoned(spark, path, embeddings, idCol,
+          "vec_id"), vecCol, idCol, tmp, nCells = nCells,
+        m = useM, seed = seed, quantizer = quant, autoPlan = true,
+        targetCellRows = targetCellRows, fitSampleCap = fitSampleCap)
+    }
     ivfCentroids(spark, path).length
   }
 
@@ -3153,21 +2650,18 @@ object AnnIndex {
       path: String, m: Int = -1, k: Int = 16, seed: Long = 42L,
       fitSampleCap: Long = KmeansFitSampleCap): Unit = {
     val spark = embeddings.sparkSession
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     requireCodebooks(spark, path) // fail-closed
     // ONE sidecar read serves marker + map (see [[readCodebooksSidecar]])
     val (cbAll, quant) = readCodebooksSidecar(spark, path)
     val useM =
       if (m > 0) m
       else cbAll.keys.map(_._1).max + 1
-    val tmp = new org.apache.hadoop.fs.Path(s"$path.__reindexing")
-    val old = new org.apache.hadoop.fs.Path(s"$path.__prereindex")
-    fs.delete(tmp, true); fs.delete(old, true) // prior-crash leftovers
-    val corpus = tombstoneFiltered(spark, path, embeddings, idCol)
-    buildPq(corpus, vecCol, idCol, tmp.toString, m = useM, k = k,
-      seed = seed, quantizer = quant, fitSampleCap = fitSampleCap)
-    swapStaged(fs, hPath, tmp, old, "reindexPq")
+    IndexStore.rewriteStaged(IndexStore.fsOf(spark, path), path,
+        IndexStore.Reindex, "reindexPq") { tmp =>
+      buildPq(IndexStore.dropTombstoned(spark, path, embeddings, idCol,
+          "vec_id"), vecCol, idCol, tmp, m = useM, k = k,
+        seed = seed, quantizer = quant, fitSampleCap = fitSampleCap)
+    }
   }
 
   /** Decode every LIVE row back to its reconstructed vector (per-
@@ -3216,11 +2710,7 @@ object AnnIndex {
     * bench scale. */
   private def reservoirOrReconstructed(spark: SparkSession, path: String,
       res: DataFrame, m: Int, sub: Int): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val noTombs = !fs.exists(
-      new org.apache.hadoop.fs.Path(s"$path/_tombstones"))
-    if (noTombs &&
+    if (!IndexStore.hasTombstones(IndexStore.fsOf(spark, path), path) &&
       spark.read.parquet(path).select("vec_id").count() == res.count())
       res
     else reconstructedLiveRows(spark, path, m, sub)
@@ -3249,7 +2739,7 @@ object AnnIndex {
    *    footprint, bounded by the old codebooks' reconstruction error).
    *  - The staged `_sample` is re-stamped from the RAW reservoir (the
    *    mixed corpus must never poison it with reconstructions), and the
-   *    cut-over rides [[swapStaged]] like every reindex.
+   *    cut-over is the staged rewrite like every reindex.
    *
    * Fails closed when no reservoir exists (legacy index) — callers fall
    * back to the corpus-bound [[reindexIvfPq]].
@@ -3259,8 +2749,6 @@ object AnnIndex {
   def reindexIvfPqFromReservoir(spark: SparkSession, path: String,
       nCells: Int = -1, seed: Long = 42L, targetCellRows: Long = 4096L,
       fitSampleCap: Long = KmeansFitSampleCap): Int = {
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // ONE sidecar read serves the geometry check + marker + width
     val sc = readCentroidsSidecar(spark, path)
     val cents = sc.cells
@@ -3281,22 +2769,22 @@ object AnnIndex {
       if (nCells > 0) nCells
       else if (quant == "sign") 1 << sc.signBits(path)
       else cents.length
-    val tmp = new org.apache.hadoop.fs.Path(s"$path.__reindexing")
-    val old = new org.apache.hadoop.fs.Path(s"$path.__prereindex")
-    fs.delete(tmp, true); fs.delete(old, true) // prior-crash leftovers
-    val corpus = reservoirOrReconstructed(spark, path, res, m, sub)
-    buildIvfPq(corpus, "vec", "vec_id", tmp.toString, nCells = refCells,
-      m = m, seed = seed, quantizer = quant, autoPlan = true,
-      targetCellRows = targetCellRows, fitSampleCap = fitSampleCap,
-      fitFrame = Some(res))
-    // re-stamp the staged reservoir from the RAW rows — buildIvfPq just
-    // derived one from the mixed (partly reconstructed) corpus — and
-    // carry the ORIGINAL cap (the one every existing row leveled
-    // against), not the build's own
-    res.select(col("vec_id"), col("vec"))
-      .coalesce(8).write.mode("overwrite").parquet(s"$tmp/_sample")
-    restampReservoirCap(fs, path, tmp.toString)
-    swapStaged(fs, hPath, tmp, old, "reindexIvfPqFromReservoir")
+    val fs = IndexStore.fsOf(spark, path)
+    IndexStore.rewriteStaged(fs, path, IndexStore.Reindex,
+        "reindexIvfPqFromReservoir") { tmp =>
+      val corpus = reservoirOrReconstructed(spark, path, res, m, sub)
+      buildIvfPq(corpus, "vec", "vec_id", tmp, nCells = refCells,
+        m = m, seed = seed, quantizer = quant, autoPlan = true,
+        targetCellRows = targetCellRows, fitSampleCap = fitSampleCap,
+        fitFrame = Some(res))
+      // re-stamp the staged reservoir from the RAW rows — buildIvfPq just
+      // derived one from the mixed (partly reconstructed) corpus — and
+      // carry the ORIGINAL cap (the one every existing row leveled
+      // against), not the build's own
+      res.select(col("vec_id"), col("vec"))
+        .coalesce(8).write.mode("overwrite").parquet(s"$tmp/_sample")
+      restampReservoirCap(fs, path, tmp)
+    }
     ivfCentroids(spark, path).length
   }
 
@@ -3319,8 +2807,6 @@ object AnnIndex {
   def reindexPqFromReservoir(spark: SparkSession, path: String,
       k: Int = -1, seed: Long = 42L,
       fitSampleCap: Long = KmeansFitSampleCap): Unit = {
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     requireCodebooks(spark, path) // fail-closed
     // ONE sidecar read serves marker + map (see [[readCodebooksSidecar]])
     val (cb, quant) = readCodebooksSidecar(spark, path)
@@ -3331,35 +2817,18 @@ object AnnIndex {
         s"reindexPqFromReservoir($path): no _sample reservoir (a " +
           s"legacy or interrupted build) — use reindexPq(corpus, ...)"))
       .localCheckpoint(true)
-    val tmp = new org.apache.hadoop.fs.Path(s"$path.__reindexing")
-    val old = new org.apache.hadoop.fs.Path(s"$path.__prereindex")
-    fs.delete(tmp, true); fs.delete(old, true) // prior-crash leftovers
-    val corpus = reservoirOrReconstructed(spark, path, res, m, sub)
-    buildPq(corpus, "vec", "vec_id", tmp.toString, m = m, k = useK,
-      seed = seed, quantizer = quant, fitSampleCap = fitSampleCap,
-      fitFrame = Some(res))
-    res.select(col("vec_id"), col("vec"))
-      .coalesce(8).write.mode("overwrite").parquet(s"$tmp/_sample")
-    restampReservoirCap(fs, path, tmp.toString)
-    swapStaged(fs, hPath, tmp, old, "reindexPqFromReservoir")
+    val fs = IndexStore.fsOf(spark, path)
+    IndexStore.rewriteStaged(fs, path, IndexStore.Reindex,
+        "reindexPqFromReservoir") { tmp =>
+      val corpus = reservoirOrReconstructed(spark, path, res, m, sub)
+      buildPq(corpus, "vec", "vec_id", tmp, m = m, k = useK,
+        seed = seed, quantizer = quant, fitSampleCap = fitSampleCap,
+        fitFrame = Some(res))
+      res.select(col("vec_id"), col("vec"))
+        .coalesce(8).write.mode("overwrite").parquet(s"$tmp/_sample")
+      restampReservoirCap(fs, path, tmp)
+    }
   }
-
-  /** The corpus-side tombstone filter for the corpus-bound reindexes:
-    * anti-join `idCol` against the index's `_tombstones` so deleted ids
-    * do not resurrect through a rebuild. No-op (one fs.exists) when the
-    * index has no tombstones. */
-  private def tombstoneFiltered(spark: SparkSession, path: String,
-      corpus: DataFrame, idCol: String): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$path/_tombstones")))
-      corpus
-    else corpus.join(
-      spark.read.parquet(s"$path/_tombstones")
-        .select(col("vec_id").as(idCol)).distinct(),
-      Seq(idCol), "left_anti")
-  }
-
 
   /** The `_codebooks` sidecar schema every build writes (see [[buildPq]]
     * / [[buildIvfPq]]). Reading with it skips Spark's per-read schema

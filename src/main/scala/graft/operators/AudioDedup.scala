@@ -175,10 +175,9 @@ object AudioDedup {
     * layout, like every flat-layout appender. */
   def appendToAudioIndex(fps: DataFrame, idCol: String,
       path: String): Unit = {
-    Dedup.requireNoInterruptedMinhashVacuum(
-      new org.apache.hadoop.fs.Path(path).getFileSystem(
-        fps.sparkSession.sparkContext.hadoopConfiguration),
-      path, "appendToAudioIndex")
+    IndexStore.requireNoInterruptedVacuum(
+      IndexStore.fsOf(fps.sparkSession, path), path,
+      "appendToAudioIndex", Dedup.BandLayout)
     Dedup.requireLayout(fps.sparkSession, path, "batch",
       "appendToAudioIndex",
       "This index is flat (band= dirs); batch= generations belong to " +
@@ -193,7 +192,7 @@ object AudioDedup {
    * fresh, corpus sequences come off the index's own rows — corpus
    * payloads are never re-read, never re-fingerprinted. Tombstoned
    * ids are anti-joined before the window join
-   * ([[Dedup.liveIndexRows]]); `scope` restricts which INDEXED assets
+   * ([[IndexStore.liveRows]]); `scope` restricts which INDEXED assets
    * may pair (the shared-index per-tenant polarity of the other
    * families). Returns (id_a, id_b, bit_errors), smaller id first.
    */
@@ -204,7 +203,8 @@ object AudioDedup {
     val par = spark.sparkContext.defaultParallelism
     val batch = bandedFps(batchFps, idCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val live = Dedup.liveIndexRows(spark, indexPath, Some(batch.schema))
+    val live = IndexStore.liveRows(spark, indexPath, Dedup.BandLayout,
+      Some(batch.schema))
     val index = scope.fold(live)(sc =>
       live.join(sc.select(col(sc.columns.head).as("id")).distinct(),
         Seq("id"), "left_semi"))
@@ -240,8 +240,8 @@ object AudioDedup {
         s"ingestAudioBatch: $indexBatchDir has no parent index root"))
     val fs = new org.apache.hadoop.fs.Path(parent).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
-    Dedup.requireNoInterruptedMinhashVacuum(fs, parent,
-      "ingestAudioBatch")
+    IndexStore.requireNoInterruptedVacuum(fs, parent,
+      "ingestAudioBatch", Dedup.BandLayout)
     Dedup.requireLayout(spark, parent, "band", "ingestAudioBatch",
       "Rebuild the index under batch= directories (or append with " +
         "appendToAudioIndex instead).")
@@ -252,10 +252,10 @@ object AudioDedup {
     val pairs = indexPath match {
       case None => inBatch
       case Some(p) =>
-        Dedup.warnTombstonedIngest(spark, p, batch)
-        indexedPairs(batch,
-          Dedup.liveIndexRows(spark, p, Some(batch.schema)), maxBitErrors,
-          par).union(inBatch)
+        IndexStore.warnTombstonedIngest(spark, p, batch, Dedup.BandLayout,
+          "ingestAudioBatch")
+        indexedPairs(batch, IndexStore.liveRows(spark, p, Dedup.BandLayout,
+          Some(batch.schema)), maxBitErrors, par).union(inBatch)
     }
     val out = Dedup.materializePairs(pairs, pairsSink)
     Dedup.indexWrite(batch).mode("overwrite").partitionBy("band")

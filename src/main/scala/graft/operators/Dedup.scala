@@ -4,6 +4,7 @@ import graft.functions.TextFunctions._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 /**
  * Deduplication operators for 100 TB-scale corpora. All variants avoid the
@@ -1079,10 +1080,9 @@ object Dedup {
   def appendToMinhashIndex(docs: DataFrame, textCol: String, idCol: String,
       path: String, shingleK: Int = 5, numHashes: Int = 16,
       bands: Int = 4): Unit = {
-    requireNoInterruptedMinhashVacuum(
-      new org.apache.hadoop.fs.Path(path).getFileSystem(
-        docs.sparkSession.sparkContext.hadoopConfiguration),
-      path, "appendToMinhashIndex")
+    IndexStore.requireNoInterruptedVacuum(
+      IndexStore.fsOf(docs.sparkSession, path), path,
+      "appendToMinhashIndex", BandLayout)
     requireLayout(docs.sparkSession, path, "batch", "appendToMinhashIndex",
       "Use ingestBatch (a batch= subdirectory) on this index.")
     indexWrite(minhashBanded(docs, textCol, idCol, shingleK, numHashes,
@@ -1159,7 +1159,8 @@ object Dedup {
     val par = spark.sparkContext.defaultParallelism
     val batch = minhashBanded(newDocs, textCol, idCol, shingleK, numHashes, bands)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val live = liveIndexRows(spark, indexPath, Some(batch.schema))
+    val live = IndexStore.liveRows(spark, indexPath, BandLayout,
+      Some(batch.schema))
     val index = scope.fold(live)(s =>
       live.join(s.select(col(s.columns.head).as("id")).distinct(),
         Seq("id"), "left_semi"))
@@ -1199,9 +1200,10 @@ object Dedup {
     val pairs = indexPath match {
       case None => inBatch
       case Some(p) =>
-        warnTombstonedIngest(spark, p, batch)
-        indexCandPairs(batch,
-          liveIndexRows(spark, p, Some(batch.schema)), par, minJaccard)
+        IndexStore.warnTombstonedIngest(spark, p, batch, BandLayout,
+          "ingestBatch")
+        indexCandPairs(batch, IndexStore.liveRows(spark, p, BandLayout,
+          Some(batch.schema)), par, minJaccard)
           .union(inBatch)
     }
     // a flat-layout root (band= dirs) must not gain batch= dirs — the
@@ -1209,9 +1211,9 @@ object Dedup {
     // mid-swap (interrupted-vacuum) tree must not gain anything at all
     Option(new org.apache.hadoop.fs.Path(indexBatchDir).getParent)
       .foreach { parent =>
-        requireNoInterruptedMinhashVacuum(
+        IndexStore.requireNoInterruptedVacuum(
           parent.getFileSystem(spark.sparkContext.hadoopConfiguration),
-          parent.toString, "ingestBatch")
+          parent.toString, "ingestBatch", BandLayout)
         requireLayout(spark, parent.toString, "band",
           "ingestBatch", "Rebuild the index under batch= directories (or " +
             "append with appendToMinhashIndex instead).")
@@ -1229,158 +1231,95 @@ object Dedup {
   // ----------------------------------- persisted-index lifecycle (r15)
   //
   // The ANN index's lifecycle discipline (tombstone delete -> physical
-  // drop at compaction), applied to the OTHER persisted incremental
-  // structure: a takedown must also stop suppressing fresh content as
+  // drop by a targeted vacuum or a compaction), applied to the band
+  // indexes: a takedown must also stop suppressing fresh content as
   // "duplicates of a removed document" — the signature rows are how a
   // deleted doc keeps influencing dedup decisions — and the batch=
   // directories a long-lived stream accumulates (one per micro-batch,
-  // forever) need the same bounded-files reclaim.
+  // forever) need the same bounded-files reclaim. The verbs are
+  // layout-generic (an `id` column under `band=` / `batch=N/band=`
+  // trees, payload columns never read), so the minhash, embedding,
+  // phash and audio indexes share them; the on-disk protocol is
+  // [[IndexStore]]'s.
 
-  /** The interrupted-vacuum gate ([[vacuumMinhashTombstones]]'s marker,
-    * the [[AnnIndex]] convention): between the `_vacuum` manifest
-    * publish and [[completeMinhashVacuum]]'s marker delete the data
-    * tree is MID-SWAP (some survivors moved in, some originals not yet
-    * deleted) — every reader and mutation fails closed until the
-    * roll-forward finishes. */
-  private[operators] def requireNoInterruptedMinhashVacuum(
-      fs: org.apache.hadoop.fs.FileSystem, path: String, op: String): Unit =
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$path/_vacuum")))
+  /** A band index's read schema from the schema of a frame banded by
+    * the same writer: the frame minus `band`, then `band` (int) as a
+    * partition column, plus `batch` (long — discovery would say int,
+    * the cast is per-spec safe) when the root holds streaming batch=
+    * generations. */
+  private def bandReadSchema(fs: org.apache.hadoop.fs.FileSystem,
+      path: String, banded: StructType): StructType = {
+    val hasBatch = fs.listStatus(new org.apache.hadoop.fs.Path(path))
+      .iterator.map(_.getPath.getName).exists(_.startsWith("batch="))
+    StructType(banded.fields.filterNot(_.name == "band") ++
+      Seq(StructField("band", IntegerType)) ++
+      (if (hasBatch) Seq(StructField("batch", LongType)) else Nil))
+  }
+
+  /** Fail-closed layout check for the mutations: a tree with neither
+    * layout's partition directories is not a band index, and
+    * tombstoning or rewriting rows whose layout is unknown helps
+    * nobody. */
+  private def requireBandLayout(spark: org.apache.spark.sql.SparkSession,
+      path: String, op: String): Unit =
+    if (!IndexStore.fsOf(spark, path)
+        .listStatus(new org.apache.hadoop.fs.Path(path)).iterator
+        .map(_.getPath.getName)
+        .exists(n => n.startsWith("band=") || n.startsWith("batch=")))
       throw new IllegalStateException(
-        s"$op($path): an interrupted vacuum left its _vacuum manifest — " +
-          s"the data tree is mid-swap; run " +
-          s"Dedup.vacuumMinhashTombstones($path) to roll it forward.")
+        s"$op($path): no band=/batch= partition directories — not a " +
+          s"minhash index layout; refusing to mutate a tree whose " +
+          s"layout is unknown.")
 
-  /** An index scan restricted to LIVE rows: anti-join the `_tombstones`
-    * sidecar ([[deleteFromMinhashIndex]]) when one exists — the common
-    * no-deletes case costs one fs.exists and leaves the plan untouched.
-    * Pairs against deleted docs neither surface nor suppress. */
-  /** @param banded the caller's own banded-frame schema when it has one
-    *   (the ingest/incremental paths band the batch with the SAME writer
-    *   that produced the index, so the index's data schema is known
-    *   up to the generic id/payload types the batch frame carries) —
-    *   passing it skips the per-read parquet schema-INFERENCE job and
-    *   its footer pass (r18 optimization: measured ~0.1-0.15 s of fixed
-    *   driver+job latency per index read at bench scale, 2-4 reads per
-    *   lifecycle row). Maintenance/health callers that hold no batch
-    *   frame pass None and infer as before. */
-  private[operators] def liveIndexRows(spark: org.apache.spark.sql.SparkSession, path: String,
-      banded: Option[org.apache.spark.sql.types.StructType] = None): DataFrame = {
-    import org.apache.spark.sql.types._
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    requireNoInterruptedMinhashVacuum(fs, path, "minhash index read")
-    val df = banded match {
-      case Some(sch) =>
-        // data columns = the banded frame minus the partition column;
-        // `band` (int) comes back as a partition column, plus `batch`
-        // (long — discovery would say int, the cast is per-spec safe)
-        // when the root holds streaming batch= generations
-        val hasBatch = fs.listStatus(new org.apache.hadoop.fs.Path(path))
-          .iterator.map(_.getPath.getName).exists(_.startsWith("batch="))
-        val full = StructType(
-          sch.fields.filterNot(_.name == "band") ++
-            Seq(StructField("band", IntegerType)) ++
-            (if (hasBatch) Seq(StructField("batch", LongType)) else Nil))
-        spark.read.schema(full).parquet(path)
-      case None => spark.read.parquet(path)
-    }
-    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$path/_tombstones"))) df
-    else {
-      // the sidecar holds exactly one column (id) of the index's own id
-      // type — known whenever the banded schema is
-      val tombs = banded match {
-        case Some(sch) => spark.read.schema(org.apache.spark.sql.types
-            .StructType(Seq(sch("id")))).parquet(s"$path/_tombstones")
-        case None => spark.read.parquet(s"$path/_tombstones")
-      }
-      df.join(tombs.select("id").distinct(), Seq("id"), "left_anti")
-    }
-  }
-
-  /** Re-ingesting a TOMBSTONED id (a re-crawl of a taken-down doc) is
-    * legal but invisible: [[liveIndexRows]] hides the id until a
-    * [[compactMinhashIndex]] clears the tombstones — and a compaction
-    * run BEFORE the re-ingest drops the old rows so the fresh ones
-    * surface (the replace flow is delete → compact → re-ingest). One
-    * O(batch) semi-join, only when a sidecar exists at all. */
-  private[operators] def warnTombstonedIngest(spark: org.apache.spark.sql.SparkSession, path: String,
-      batch: DataFrame): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$path/_tombstones"))) {
-      val hidden = batch.select("id").distinct().join(
-        spark.read.parquet(s"$path/_tombstones").select("id").distinct(),
-        Seq("id"), "left_semi").count()
-      if (hidden > 0)
-        System.err.println(s"[dedup] WARN ingestBatch($path): $hidden " +
-          s"batch doc(s) carry TOMBSTONED ids — their signatures are " +
-          s"written but invisible to index probes until " +
-          s"compactMinhashIndex clears the tombstones. Replacing a doc " +
-          s"is delete -> compactMinhashIndex -> re-ingest.")
-    }
-  }
+  /** The band indexes' [[IndexStore.Layout]]. A delete prices
+    * tombstones against the signature rows (a parquet metadata count —
+    * deletes run at takedown cadence, and the id floor gates it). The
+    * vacuum keys the staged rewrite on the PARTITION COLUMNS alone, at
+    * a width bounded by the affected count, so each affected
+    * directory's survivors colocate into ~one file (keying on the id
+    * would replace each deleted file with up to a task-width of smaller
+    * ones). A compaction writes under [[indexWrite]] and collapses every
+    * `batch=N` generation into ONE `batch=-1` — a value no streaming
+    * batchId takes, so a replayed micro-batch can never collide with
+    * compacted history. The embedding index's frozen plan (`_embplan`)
+    * and its advisory `_rows` drift baseline are carried, never
+    * re-stamped: dropping the baseline would hand the next stream batch
+    * a fresh-start count and silently disable the drift WARN. */
+  private[graft] val BandLayout = IndexStore.Layout("Dedup", "id",
+    "deleteFromMinhashIndex", "vacuumMinhashTombstones",
+    "compactMinhashIndex", requireBandLayout,
+    (spark, path) => spark.read.parquet(path).count(),
+    (aff, affected) => {
+      val parts = math.max(1,
+        math.min(aff.sparkSession.sessionState.conf.numShufflePartitions,
+          affected))
+      val pCols =
+        if (aff.columns.contains("batch")) Seq("batch", "band")
+        else Seq("band")
+      aff.repartition(parts, pCols.map(col): _*)
+        .write.partitionBy(pCols: _*)
+    },
+    live =>
+      if (live.columns.contains("batch"))
+        indexWrite(live.withColumn("batch", lit(-1L)))
+          .partitionBy("batch", "band")
+      else indexWrite(live).partitionBy("band"),
+    carried = Seq("_embplan", "_rows"), readSchema = bandReadSchema)
 
   /**
-   * Tombstone-delete documents from a persisted minhash index (takedown,
-   * re-crawl replacement): ids append to an append-only `_tombstones`
-   * sidecar — O(ids), idempotent re-runs, no data rewrite — and every
-   * index read ([[incrementalNearDupPairs]], [[ingestBatch]]'s
-   * index arm) anti-joins it, so a deleted doc stops matching new
-   * content immediately. [[compactMinhashIndex]] makes the delete
-   * physical. Fail-closed on a directory that is not a minhash index
-   * (neither layout's partition dirs present — tombstoning rows whose
-   * schema is unknown helps nobody).
-   *
-   * The accumulation WARN prices tombstones against the index's
-   * signature rows with a parquet metadata count — unlike the ANN
-   * appends this is NOT a per-ingest cost (deletes run at takedown
-   * cadence), and the count is gated behind the id floor so small
-   * takedowns never pay it.
+   * Tombstone-delete documents from a persisted band index (takedown,
+   * re-crawl replacement): O(ids), idempotent, no data rewrite
+   * ([[IndexStore.delete]]). Every index read anti-joins the sidecar, so
+   * a deleted doc stops matching new content immediately;
+   * [[vacuumMinhashTombstones]] or [[compactMinhashIndex]] makes the
+   * delete physical. Fail-closed on a directory that is not a band
+   * index layout.
    *
    * @return distinct ids tombstoned in this call
    */
   def deleteFromMinhashIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-      ids: DataFrame, idCol: String = "id"): Long = {
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(hPath)) throw new IllegalStateException(
-      s"deleteFromMinhashIndex($path): no index at this path")
-    val roots = fs.listStatus(hPath).iterator.map(_.getPath.getName).toSeq
-    if (!roots.exists(n => n.startsWith("band=") || n.startsWith("batch=")))
-      throw new IllegalStateException(
-        s"deleteFromMinhashIndex($path): no band=/batch= partition " +
-          s"directories — not a minhash index layout; refusing to " +
-          s"tombstone rows whose layout is unknown.")
-    requireNoInterruptedMinhashVacuum(fs, path, "deleteFromMinhashIndex")
-    val batch = ids.select(col(idCol).as("id")).distinct()
-    // distinct count rides the sidecar write (observe(), r19 — the old
-    // shape re-ran the distinct in a separate count() job); the WARN's
-    // whole-sidecar distinct is additionally gated behind the metadata
-    // row count (distinct ids ≤ rows, so under the floor the shuffle
-    // job can never change the answer). Absent metrics = the
-    // AQE-collapsed empty batch → 0 (the appendLsh convention).
-    val obs = org.apache.spark.sql.Observation()
-    batch.observe(obs, count(lit(1)).as("__n"))
-      .coalesce(1).write.mode("append").parquet(s"$path/_tombstones")
-    val n = obs.get.getOrElse("__n", 0L) match {
-      case l: java.lang.Long => l.longValue(); case _ => 0L
-    }
-    val tombRows = spark.read.parquet(s"$path/_tombstones").count()
-    if (tombRows >= 1024L) {
-      val tombs = spark.read.parquet(s"$path/_tombstones")
-        .select("id").distinct().count()
-      if (tombs >= 1024L) {
-        val sigRows = spark.read.parquet(path).count() // metadata-only
-        if (tombs * 100L >= math.max(1L, sigRows))
-          System.err.println(s"[dedup] WARN deleteFromMinhashIndex($path): " +
-            s"$tombs accumulated tombstoned ids vs ~$sigRows signature " +
-            s"rows — every index probe now anti-joins that mass; call " +
-            s"Dedup.vacuumMinhashTombstones to make the deletes physical " +
-            s"(compactMinhashIndex if the index is also fragmented).")
-      }
-    }
-    n
-  }
+      ids: DataFrame, idCol: String = "id"): Long =
+    IndexStore.delete(spark, path, ids, idCol, BandLayout)
 
   /** Operational snapshot of a persisted minhash index — the
     * [[graft.operators.AnnIndex.indexHealth]] discipline on the second
@@ -1447,7 +1386,8 @@ object Dedup {
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(hPath)) throw new IllegalStateException(
       s"minhashIndexHealth($path): no index at this path")
-    requireNoInterruptedMinhashVacuum(fs, path, "minhashIndexHealth")
+    IndexStore.requireNoInterruptedVacuum(fs, path, "minhashIndexHealth",
+      BandLayout)
     val roots = fs.listStatus(hPath).map(_.getPath)
     val batchDirs = roots.filter(_.getName.startsWith("batch="))
     val rootBands = roots.count(_.getName.startsWith("band="))
@@ -1463,20 +1403,13 @@ object Dedup {
     var files = 0L
     var baseBytes = 0L
     var freshBytes = 0L
-    FsWalk.foreachFile(fs, hPath) { f =>
+    IndexStore.dataFiles(fs, path).foreach { f =>
       val s = f.getPath.toString
-      if (f.getPath.getName.endsWith(".parquet") &&
-        !s.contains("/_tombstones/") && !s.contains("/_vacuum_staged/")) {
-        files += 1
-        if (s.contains("/batch=-1/")) baseBytes += f.getLen
-        else if (s.contains("/batch=")) freshBytes += f.getLen
-      }
+      files += 1
+      if (s.contains("/batch=-1/")) baseBytes += f.getLen
+      else if (s.contains("/batch=")) freshBytes += f.getLen
     }
-    val tombstones =
-      if (!fs.exists(new org.apache.hadoop.fs.Path(s"$path/_tombstones")))
-        0L
-      else spark.read.parquet(s"$path/_tombstones")
-        .select("id").distinct().count()
+    val tombstones = IndexStore.tombstoneCount(spark, path, BandLayout)
     val width = spark.sessionState.conf.numShufflePartitions
     val freshGens = batchDirs.count(_.getName != "batch=-1")
     // batch layout: accumulated generations (size-aware — see the
@@ -1534,322 +1467,34 @@ object Dedup {
   }
 
   /**
-   * Compact a persisted minhash index: drop tombstoned rows PHYSICALLY,
+   * Compact a persisted band index: drop tombstoned rows PHYSICALLY,
    * clear the `_tombstones` sidecar, and rewrite the data under the
-   * index write discipline ([[indexWrite]] — a bounded session-width of
-   * files per band partition) — reclaiming both the per-probe anti-join
-   * and the file accumulation of appends/micro-batches. Handles BOTH
-   * layouts: a flat tree rewrites in place (`band=` dirs preserved); a
-   * batch tree collapses every `batch=N` directory into ONE `batch=-1`
-   * generation — a value no streaming batchId takes, so a replayed
-   * micro-batch (which overwrites its own `batch=<id>` dir) can never
-   * collide with compacted history. Run it between streaming runs (the
-   * stream stopped), the same maintenance-window contract as the ANN
-   * staged swaps. Crash-safe via the shared staged-directory rename
-   * protocol ([[AnnIndex.swapStaged]]): a reader mid-swap fails closed
-   * on the missing path; a crash leaves the original intact or the
-   * compacted tree live, never a half-index.
+   * index write discipline ([[indexWrite]]) — reclaiming both the
+   * per-probe anti-join and the file accumulation of appends and
+   * micro-batches. A flat tree rewrites in place (`band=` dirs
+   * preserved); a batch tree collapses into ONE `batch=-1` generation.
+   * Run it between streaming runs (the stream stopped). Crash-safe
+   * staged swap ([[IndexStore.compact]]); refuses to empty the index.
    *
    * @return (data files before, data files after)
    */
-  def compactMinhashIndex(spark: org.apache.spark.sql.SparkSession, path: String): (Long, Long) = {
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(hPath)) throw new IllegalStateException(
-      s"compactMinhashIndex($path): no index at this path")
-    requireNoInterruptedMinhashVacuum(fs, path, "compactMinhashIndex")
-    val roots = fs.listStatus(hPath).iterator.map(_.getPath.getName).toSeq
-    if (!roots.exists(n => n.startsWith("band=") || n.startsWith("batch=")))
-      throw new IllegalStateException(
-        s"compactMinhashIndex($path): no band=/batch= partition " +
-          s"directories — not a minhash index layout; refusing to " +
-          s"rewrite a tree whose layout is unknown.")
-    val before = minhashDataFiles(fs, path)
-    val tmp = new org.apache.hadoop.fs.Path(s"$path.__compacting")
-    val old = new org.apache.hadoop.fs.Path(s"$path.__precompact")
-    fs.delete(tmp, true); fs.delete(old, true) // prior-crash leftovers
-    val live0 = liveIndexRows(spark, path)
-    // the all-tombstoned guard rides the staged write via observe()
-    // (r19 — the old isEmpty() take(1) was its own anti-join job): a
-    // zero-row write throws BEFORE the swap with the staged tree
-    // deleted, so the live index is untouched exactly as before; only
-    // where on the timeline the error surfaces moved
-    val obs = org.apache.spark.sql.Observation()
-    val live = live0.observe(obs, count(lit(1)).as("__n"))
-    val writer =
-      if (live.columns.contains("batch"))
-        indexWrite(live.withColumn("batch", lit(-1L)))
-          .partitionBy("batch", "band")
-      else
-        indexWrite(live).partitionBy("band")
-    writer.mode("overwrite").parquet(tmp.toString)
-    val written = obs.get.getOrElse("__n", 0L) match {
-      case l: java.lang.Long => l.longValue(); case _ => 0L
-    }
-    if (written == 0L) {
-      fs.delete(tmp, true)
-      throw new IllegalStateException(
-        s"compactMinhashIndex($path): every row is tombstoned — compacting " +
-          s"would leave an empty, unreadable tree. Delete the index " +
-          s"directory instead (or re-ingest before compacting).")
-    }
-    // the `_tombstones` sidecar is NOT carried over: the compacted index
-    // starts tombstone-free (deletes are physical now). The embedding
-    // band index's frozen-plan sidecar ([[Similarity.buildEmbeddingIndex]]
-    // — this compaction is layout-generic and serves that index too) IS
-    // carried: compaction preserves content, so the plan stays valid,
-    // and losing it would fail-close every later probe. Its advisory
-    // `_rows` drift baseline (round 17) is carried for the same reason —
-    // dropping it would hand the next stream batch a fresh-start count
-    // and silently disable the drift WARN on exactly the long-lived
-    // streams it exists for (the old count over-reads by the compacted-
-    // away tombstoned rows, which only makes the WARN fire early).
-    Seq("_embplan", "_rows").foreach { sc =>
-      val p = new org.apache.hadoop.fs.Path(s"$path/$sc")
-      if (fs.exists(p))
-        org.apache.hadoop.fs.FileUtil.copy(fs, p,
-          fs, new org.apache.hadoop.fs.Path(s"$tmp/$sc"),
-          false, spark.sparkContext.hadoopConfiguration)
-    }
-    AnnIndex.swapStaged(fs, hPath, tmp, old, "compactMinhashIndex")
-    (before, minhashDataFiles(fs, path))
-  }
-
-  /** Recursive parquet DATA-file count under a minhash index — the
-    * `_tombstones` sidecar and any `_vacuum_staged` leftovers excluded. */
-  private def minhashDataFiles(fs: org.apache.hadoop.fs.FileSystem,
-      path: String): Long = {
-    var n = 0L
-    FsWalk.foreachFile(fs, new org.apache.hadoop.fs.Path(path)) { st =>
-      val f = st.getPath
-      if (f.getName.endsWith(".parquet") &&
-        !f.toString.contains("/_tombstones/") &&
-        !f.toString.contains("/_vacuum_staged/")) n += 1
-    }
-    n
-  }
-
-  // ------------------------------------ targeted minhash vacuum (r16)
-  //
-  // [[compactMinhashIndex]] makes tombstones physical, but it rewrites
-  // the WHOLE index — at 100 TB a takedown of 100 docs must not cost a
-  // full-corpus rewrite of the dedup index. This is the round-15 ANN
-  // verb ([[AnnIndex.vacuumTombstones]]'s locate-scan + per-file
-  // survivor rewrite + roll-forward `_vacuum` manifest, same protocol
-  // and same crash states) ported to the minhash layouts: one
-  // column-pruned (id, file) scan finds the files holding tombstoned
-  // rows, survivors of ONLY those files are staged and swapped in by an
-  // atomically-published manifest, and everything else stays
-  // byte-identical on disk. Readers fail closed between the manifest
-  // publish and [[completeMinhashVacuum]]'s marker delete
-  // ([[requireNoInterruptedMinhashVacuum]] in [[liveIndexRows]] and
-  // every mutation); each completion step is idempotent, so a crash
-  // anywhere re-runs to the same end state.
+  def compactMinhashIndex(spark: org.apache.spark.sql.SparkSession,
+      path: String): (Long, Long) =
+    IndexStore.compact(spark, path, BandLayout)
 
   /**
    * Make tombstone deletes physical by rewriting ONLY the files that
-   * hold tombstoned rows. O(affected files), never O(index): the verb
-   * for takedown-cadence deletes on a streaming-scale index; a mass
-   * delete that touches most files should use [[compactMinhashIndex]]
-   * instead (same physical outcome, no per-file manifest) — the call
-   * WARNs when the takedown stops being targeted. Works on both
-   * layouts (`band=` flat, `batch=N/band=` streaming); partition
-   * directories are preserved as-is — unlike compaction, a vacuum
-   * never collapses generations.
+   * hold tombstoned rows ([[IndexStore.vacuum]]): O(affected files),
+   * never O(index) — the verb for takedown-cadence deletes on a
+   * streaming-scale index. Partition directories are preserved as-is;
+   * unlike compaction, a vacuum never collapses generations. A crash
+   * rolls forward on the next call; it WARNs when the takedown touches
+   * so many files that [[compactMinhashIndex]] is the better verb.
    *
    * @return (files rewritten, rows dropped); (0, 0) when there is
    *         nothing to vacuum
    */
   def vacuumMinhashTombstones(spark: org.apache.spark.sql.SparkSession,
-      path: String): (Long, Long) = {
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(hPath)) throw new IllegalStateException(
-      s"vacuumMinhashTombstones($path): no index at this path")
-    // an interrupted vacuum rolls FORWARD first — its manifest carries
-    // everything needed to finish, and the marker gates all other reads
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$path/_vacuum")))
-      completeMinhashVacuum(spark, path)
-    else if (stageMinhashVacuum(spark, path))
-      completeMinhashVacuum(spark, path)
-    else (0L, 0L)
-  }
-
-  /** The staging half of [[vacuumMinhashTombstones]]: locate affected
-    * files, rewrite their survivors into `_vacuum_staged`, publish the
-    * `_vacuum` manifest (the commit point — readers fail closed from
-    * here until [[completeMinhashVacuum]]). Returns false when there is
-    * nothing to do (no tombstones, or every tombstoned id is row-less —
-    * the sidecar is cleared outright in that case). Package-private so
-    * the spec can construct the interrupted state a crash would
-    * leave. */
-  private[graft] def stageMinhashVacuum(
-      spark: org.apache.spark.sql.SparkSession, path: String): Boolean = {
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // pre-publish leftovers from a crashed staging pass: referenced by
-    // no manifest, plain garbage
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/_vacuum.tmp"), false)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/_vacuum_staged"), true)
-    val roots = fs.listStatus(hPath).iterator.map(_.getPath.getName).toSeq
-    if (!roots.exists(n => n.startsWith("band=") || n.startsWith("batch=")))
-      throw new IllegalStateException(
-        s"vacuumMinhashTombstones($path): no band=/batch= partition " +
-          s"directories — not a minhash index layout; refusing to " +
-          s"rewrite a tree whose layout is unknown.")
-    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$path/_tombstones")))
-      return false // steady state: nothing tombstoned
-    val tomb = spark.read.parquet(s"$path/_tombstones")
-      .select("id").distinct()
-    val qualified = fs.makeQualified(hPath).toString
-    // locate: ONE job over (id, file name) — column-pruned to the
-    // narrowest possible scan; returns the affected files AND the
-    // per-file drop counts together
-    val perFile = minhashLocateScan(spark, qualified, tomb).collect()
-    val affected = perFile.map(_.getString(0))
-    val dropped = perFile.map(_.getLong(1)).sum
-    if (affected.isEmpty) {
-      // every tombstoned id is row-less (already vacuumed / never
-      // present): clearing the sidecar IS the whole job
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/_tombstones"), true)
-      return false
-    }
-    val totalFiles = minhashDataFiles(fs, path)
-    // rewrite survivors of ONLY the affected files. basePath keeps the
-    // partition columns (band, and batch on the streaming layout) on
-    // the per-file read. The repartition keys on the PARTITION COLUMNS
-    // alone (the AnnIndex.stageVacuum discipline): each affected dir's
-    // survivors colocate, so the staged tree holds ~one file per
-    // affected DIRECTORY — keying on (band, id) here would scatter one
-    // dir's survivors across every task and the vacuum would REPLACE
-    // each deleted file with up to a task-width of smaller ones,
-    // growing the file count on every takedown. Width is bounded by
-    // the affected count: a targeted takedown stages a few files, not
-    // a session-width spray.
-    val staged = s"$path/_vacuum_staged"
-    val aff = spark.read.option("basePath", qualified)
-      .parquet(affected.toIndexedSeq: _*)
-      .join(tomb, Seq("id"), "left_anti")
-    val width = spark.sessionState.conf.numShufflePartitions
-    val parts = math.max(1, math.min(width, affected.length))
-    val pCols =
-      if (aff.columns.contains("batch")) Seq("batch", "band")
-      else Seq("band")
-    aff.repartition(parts, pCols.map(col): _*)
-      .write.partitionBy(pCols: _*).mode("overwrite").parquet(staged)
-    if (affected.length.toLong * 10 >= 3L * totalFiles)
-      System.err.println(
-        s"[dedup] WARN vacuumMinhashTombstones($path): the takedown " +
-          s"touches ${affected.length} of $totalFiles files — no longer " +
-          s"a targeted delete; compactMinhashIndex reaches the same " +
-          s"physical state without the per-file manifest.")
-    // manifest: every staged->dest move + every original delete,
-    // published ATOMICALLY (tmp-write + rename). The commit point.
-    val stagedQ = fs.makeQualified(new org.apache.hadoop.fs.Path(staged))
-    val sb = new StringBuilder("graft-mh-vacuum-v1\n")
-    sb.append(s"rows_dropped=$dropped\n")
-    var stagedFiles = 0L
-    FsWalk.foreachFile(fs, stagedQ) { st =>
-      val f = st.getPath
-      if (f.getName.endsWith(".parquet")) {
-        stagedFiles += 1
-        val rel = f.toString.stripPrefix(stagedQ.toString)
-          .stripPrefix("/")
-        sb.append(s"move\t$f\t$qualified/$rel\n")
-      }
-    }
-    affected.foreach(f => sb.append(s"del\t$f\n"))
-    sb.append("end\n")
-    if (stagedFiles == 0L && affected.length.toLong == totalFiles) {
-      // completing would delete every data file and move nothing in —
-      // an empty, unreadable tree (compaction refuses the same state)
-      fs.delete(new org.apache.hadoop.fs.Path(staged), true)
-      throw new IllegalStateException(
-        s"vacuumMinhashTombstones($path): every row is tombstoned — " +
-          s"vacuuming would leave an empty, unreadable tree. Delete the " +
-          s"index directory instead (or re-ingest before vacuuming).")
-    }
-    val tmpMarker = new org.apache.hadoop.fs.Path(s"$path/_vacuum.tmp")
-    val out = fs.create(tmpMarker, true)
-    try out.write(sb.toString.getBytes("UTF-8")) finally out.close()
-    if (!fs.rename(tmpMarker,
-        new org.apache.hadoop.fs.Path(s"$path/_vacuum")))
-      throw new IllegalStateException(
-        s"vacuumMinhashTombstones($path): could not publish the " +
-          s"_vacuum manifest")
-    true
-  }
-
-  /** The vacuum's locate scan as a frame: (file, rows-to-drop) for
-    * every data file holding a tombstoned row. The whole point is its
-    * SHAPE — the parquet read must prune to the id column alone
-    * (ReadSchema: id; `input_file_name` is scan metadata, not a data
-    * column), so at 100 TB the locate costs one narrow column, not the
-    * shingle sets. Package-private so DedupIndexSpec can pin that plan
-    * per-round. */
-  private[graft] def minhashLocateScan(
-      spark: org.apache.spark.sql.SparkSession, qualified: String,
-      tomb: DataFrame): DataFrame =
-    spark.read.option("basePath", qualified)
-      .parquet(qualified)
-      .select(col("id"), input_file_name().as("_file"))
-      .join(tomb, Seq("id"), "left_semi")
-      .groupBy("_file").count()
-
-  /** Roll an in-flight minhash vacuum FORWARD from its `_vacuum`
-    * manifest: moves are skipped when already done (staged gone,
-    * destination present), deletes when already gone — every step
-    * idempotent, so a crash at any point re-runs to the same end
-    * state. The tail order is the contract: the `_tombstones` clear
-    * happens BEFORE the marker delete, which is the single point that
-    * lets readers back in. */
-  private[graft] def completeMinhashVacuum(
-      spark: org.apache.spark.sql.SparkSession, path: String): (Long, Long) = {
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new org.apache.hadoop.fs.Path(s"$path/_vacuum")
-    val in = fs.open(marker)
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val lines = text.split("\n", -1).toIndexedSeq
-    // the manifest is published by an atomic rename, so a malformed one
-    // is external damage, not a crash state — fail with that distinction
-    if (!lines.headOption.contains("graft-mh-vacuum-v1") ||
-        !lines.contains("end"))
-      throw new IllegalStateException(
-        s"vacuumMinhashTombstones($path): unreadable _vacuum manifest — " +
-          s"manifests are published whole (tmp-write + rename), so this " +
-          s"is external damage; rebuild the index.")
-    val body = lines.takeWhile(_ != "end")
-    val droppedRows = body.collectFirst {
-      case l if l.startsWith("rows_dropped=") =>
-        l.stripPrefix("rows_dropped=").toLong
-    }.getOrElse(throw new IllegalStateException(
-      s"vacuumMinhashTombstones($path): _vacuum manifest lacks " +
-        s"rows_dropped"))
-    val moves = body.filter(_.startsWith("move\t"))
-      .map { l => val a = l.split("\t"); (a(1), a(2)) }
-    val dels = body.filter(_.startsWith("del\t")).map(_.split("\t")(1))
-    moves.foreach { case (s0, d) =>
-      val sp = new org.apache.hadoop.fs.Path(s0)
-      val dp = new org.apache.hadoop.fs.Path(d)
-      if (fs.exists(sp)) {
-        if (fs.exists(dp)) fs.delete(dp, false) // re-run of a done move
-        Option(dp.getParent).foreach(fs.mkdirs(_))
-        if (!fs.rename(sp, dp)) throw new IllegalStateException(
-          s"vacuumMinhashTombstones($path): could not move $s0 into place")
-      } else if (!fs.exists(dp)) throw new IllegalStateException(
-        s"vacuumMinhashTombstones($path): staged file $s0 and " +
-          s"destination $d are BOTH missing — the manifest does not " +
-          s"match the directory (external damage); rebuild the index.")
-    }
-    dels.foreach { f =>
-      val p = new org.apache.hadoop.fs.Path(f)
-      if (fs.exists(p)) fs.delete(p, false)
-    }
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/_tombstones"), true)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/_vacuum_staged"), true)
-    fs.delete(marker, false)
-    (dels.size.toLong, droppedRows)
-  }
+      path: String): (Long, Long) =
+    IndexStore.vacuum(spark, path, BandLayout)
 }

@@ -1,0 +1,597 @@
+package graft.operators
+
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Observation, Row, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+
+/**
+ * The on-disk mutation protocol of every persisted index — the ANN
+ * layouts ([[AnnIndex]]: grouped/legacy LSH, IVF, IVF-PQ, flat PQ) and
+ * the band indexes the minhash, embedding, phash and audio families
+ * share ([[Dedup]]: flat `band=` and streaming `batch=N/band=` trees).
+ * This is the only code that knows the protocol; a family supplies a
+ * small [[Layout]] and its public verbs are one-line calls in here.
+ *
+ * '''Tombstones.''' A delete appends ids to the `_tombstones` sidecar
+ * (underscore-invisible to the data reader): O(ids), no data rewrite,
+ * append-only — a crash mid-write leaves a PARTIAL batch (some ids
+ * deleted, none un-deleted) and a re-run is idempotent. Every read
+ * anti-joins the sidecar BEFORE any top-k or band join
+ * ([[dropTombstoned]]), so a deleted row neither appears nor consumes
+ * a slot; the no-deletes case costs one `fs.exists`. A delete WARNs
+ * once the distinct tombstones pass 1024 ids and 1% of the rows.
+ *
+ * '''Targeted vacuum''' ([[vacuum]]) makes tombstones physical by
+ * rewriting ONLY the data files that hold tombstoned rows — a takedown
+ * costs the touched files, not the corpus:
+ *   1. sweep a crashed staging pass (`_vacuum.tmp`, `_vacuum_staged`);
+ *   1. one column-pruned (id, file) locate scan ([[locateScan]]) finds
+ *      the affected files and their drop counts;
+ *   1. survivors of just those files are written to `_vacuum_staged`
+ *      under the family's write discipline;
+ *   1. the `_vacuum` manifest — every staged→live move, every original
+ *      delete — is published by tmp-write + rename. This is the commit
+ *      point: from here every reader and mutation fails closed
+ *      ([[requireNoInterruptedVacuum]]);
+ *   1. [[completeVacuum]] runs the moves and deletes, then the tail
+ *      (`_rows` re-stamp when the manifest carries `rows_after`,
+ *      `_tombstones` clear, staging-tree delete), and deletes the marker
+ *      last — the single point that lets readers back in.
+ * Every completion step is idempotent, so a crash anywhere after the
+ * publish rolls FORWARD on the next vacuum call; a crash before it
+ * leaves only unreferenced garbage the next call sweeps, and the live
+ * index keeps answering through its tombstones.
+ *
+ * '''Staged rewrite''' ([[rewriteStaged]]) is the whole-index cut-over
+ * of compaction and every reindex: write the new tree to
+ * `<path>.__compacting` (`.__reindexing`), rename the live path to
+ * `<path>.__precompact` (`.__prereindex`), rename the staged tree live,
+ * delete the old one. A crash before the first rename leaves the live
+ * index untouched (the leftover is swept on the next call); between
+ * the renames the live path is missing and every reader fails closed
+ * with the rename-back recovery ([[requireNoCrashedSwap]]); after the
+ * second only garbage remains.
+ *
+ * Design decisions:
+ *  - A reader racing a swap sees a MISSING path between the two renames
+ *    and errors — never a half-index, but it doesn't retry. A `_current`
+ *    pointer over versioned directories
+ *    ([[graft.sources.SnapshotStore]]'s protocol) would make cut-over
+ *    atomic for concurrent readers, but these indexes serve BATCH
+ *    pipelines whose maintenance and probes are steps of one run, and
+ *    the pointer would double every reader's metadata round-trips for
+ *    a window no batch reader can hit. An index that serves online
+ *    traffic should be PUBLISHED into a SnapshotStore.
+ *  - Neither verb may empty an index: an all-tombstoned index would
+ *    swap in a data-less tree that no reader can infer a schema from,
+ *    behind a healthy-looking directory. Compaction reads the rewrite's
+ *    row count off the write itself (`observe()`) and a vacuum compares
+ *    its staged and affected files with the data-file count it already
+ *    lists; both refuse BEFORE anything goes live. The guard adds no
+ *    job in the common case; the price is that a fully tombstoned index
+ *    pays one rewrite job before compaction refuses it — a state a
+ *    caller reaches only by deleting every row, where deleting the
+ *    directory is the right call anyway.
+ */
+private[graft] object IndexStore {
+
+  /** What a persisted-index family supplies to the store.
+    *
+    * @param owner           the family's object, prefixing the calls a
+    *                        message prescribes ("AnnIndex", "Dedup")
+    * @param idCol           the row id column (`vec_id` / `id`) — also
+    *                        the `_tombstones` sidecar's one column
+    * @param requireGeometry fail-closed check that the tree is this
+    *                        family's layout with consistent geometry
+    *                        sidecars: (spark, path, op)
+    * @param rowCount        the row count a delete WARN prices
+    *                        tombstones against
+    * @param writeStaged     the vacuum's discipline for the survivors of
+    *                        the affected files (rows, affected file count)
+    * @param writeCompacted  the compaction's discipline for every live row
+    * @param carried         sidecars a compaction copies byte-identical
+    * @param filtered        sidecars holding ids that must drop their
+    *                        tombstoned rows when the tombstones clear
+    * @param restampRows     whether `_rows` is the live row count (the
+    *                        store re-stamps it) or a baseline it carries
+    * @param readSchema      the full read schema of the tree given a
+    *                        caller's frame schema (see [[liveRows]]) */
+  case class Layout(owner: String, idCol: String, deleteOp: String,
+      vacuumOp: String, compactOp: String,
+      requireGeometry: (SparkSession, String, String) => Unit,
+      rowCount: (SparkSession, String) => Long,
+      writeStaged: (DataFrame, Int) => DataFrameWriter[Row],
+      writeCompacted: DataFrame => DataFrameWriter[Row],
+      carried: Seq[String], filtered: Seq[String] = Nil,
+      restampRows: Boolean = false,
+      readSchema: (FileSystem, String, StructType) => StructType =
+        (_, _, s) => s) {
+    def tag: String = owner.toLowerCase
+  }
+
+  /** The two staged-rewrite kinds: (staged suffix, aside suffix). */
+  sealed abstract class Rewrite(val staged: String, val aside: String)
+  case object Compaction extends Rewrite(".__compacting", ".__precompact")
+  case object Reindex extends Rewrite(".__reindexing", ".__prereindex")
+
+  private val Tombstones = "_tombstones"
+  private val Marker = "_vacuum"
+  private val Staged = "_vacuum_staged"
+  private val Header = "graft-vacuum-v1"
+  /** Manifest headers completion accepts: the band indexes published
+    * theirs under a family header before the protocol was shared, and
+    * an index can be mid-vacuum across an upgrade. */
+  private val Headers = Set(Header, "graft-mh-vacuum-v1")
+
+  def fsOf(spark: SparkSession, path: String): FileSystem =
+    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  private def child(path: String, name: String) = new Path(s"$path/$name")
+
+  /** A count metric of a finished observed write; absent = the
+    * AQE-collapsed empty input, i.e. 0. */
+  def observedCount(obs: Observation, name: String): Long =
+    obs.get.getOrElse(name, 0L) match {
+      case l: java.lang.Long => l.longValue()
+      case _ => 0L
+    }
+
+  // ------------------------------------------------------ `_rows` sidecar
+
+  /** Write the advisory `_rows` count (one small text file). */
+  def writeRows(fs: FileSystem, path: String, rows: Long): Unit = {
+    val out = fs.create(child(path, "_rows"), true)
+    try out.write(rows.toString.getBytes("UTF-8")) finally out.close()
+  }
+
+  /** `_rows`, or None when absent/unreadable (legacy index, truncated
+    * write) — callers self-heal by counting once and re-stamping. */
+  def readRows(fs: FileSystem, path: String): Option[Long] = {
+    val p = child(path, "_rows")
+    if (!fs.exists(p)) None
+    else try {
+      val in = fs.open(p)
+      val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+        finally in.close()
+      Some(s.trim.toLong)
+    } catch { case scala.util.control.NonFatal(_) => None }
+  }
+
+  // ---------------------------------------------------------------- gates
+
+  /** Readers and mutations fail closed while a `_vacuum` manifest
+    * exists: between its publish and the marker delete, rewritten and
+    * original files can coexist or originals may be gone with staged
+    * files not yet moved in. The manifest is roll-forward-complete, so
+    * the prescription is always "re-run the vacuum". */
+  def requireNoInterruptedVacuum(fs: FileSystem, path: String, op: String,
+      layout: Layout): Unit =
+    if (fs.exists(child(path, Marker)))
+      throw new IllegalStateException(
+        s"$op($path): an interrupted vacuum left its _vacuum manifest — " +
+          s"data files are mid-swap (rewritten and original files may " +
+          s"coexist), so reading would silently duplicate or drop rows; " +
+          s"re-run ${layout.owner}.${layout.vacuumOp}($path) to roll it " +
+          s"forward.")
+
+  /** Refuse to read or mutate over a CRASHED staged swap: the live path
+    * is missing and the aside dir holds the ONLY copy. Callers must fail
+    * with the rename-back recovery, never a rebuild prescription that
+    * would orphan it. A missing path with no aside dir is just an index
+    * not built yet, which each caller handles its own way. */
+  def requireNoCrashedSwap(fs: FileSystem, path: String, op: String): Unit =
+    if (!fs.exists(new Path(path)))
+      Seq(Compaction, Reindex).foreach { k =>
+        val orphan = new Path(path + k.aside)
+        if (fs.exists(orphan)) throw new IllegalStateException(
+          s"$op($path): the index path is missing but $orphan exists — " +
+            s"a maintenance swap crashed between its two renames and " +
+            s"that dir holds the intact pre-swap index. Recover by " +
+            s"renaming it back to $path (nothing was lost); do not " +
+            s"rebuild or re-train over the orphan.")
+      }
+
+  private def requireIndex(fs: FileSystem, path: String, op: String): Unit =
+    if (!fs.exists(new Path(path))) {
+      requireNoCrashedSwap(fs, path, op)
+      throw new IllegalStateException(s"$op($path): no index at this path")
+    }
+
+  /** Every DATA file of the index: parquet files outside the
+    * underscore trees (sidecars, tombstones, vacuum staging) — the data
+    * reader's own hidden-path rule. One recursive listing. */
+  def dataFiles(fs: FileSystem, path: String): Seq[FileStatus] = {
+    val root = fs.makeQualified(new Path(path)).toUri.getPath
+    val out = Seq.newBuilder[FileStatus]
+    FsWalk.foreachFile(fs, new Path(path)) { st =>
+      val rel = st.getPath.toUri.getPath.stripPrefix(root).split("/")
+      if (st.getPath.getName.endsWith(".parquet") &&
+        !rel.init.exists(_.startsWith("_"))) out += st
+    }
+    out.result()
+  }
+
+  // ------------------------------------------------------------ tombstones
+
+  def hasTombstones(fs: FileSystem, path: String): Boolean =
+    fs.exists(child(path, Tombstones))
+
+  /** Distinct tombstoned ids (0 without a sidecar) — one job. */
+  def tombstoneCount(spark: SparkSession, path: String,
+      layout: Layout): Long =
+    if (!hasTombstones(fsOf(spark, path), path)) 0L
+    else spark.read.parquet(s"$path/$Tombstones")
+      .select(layout.idCol).distinct().count()
+
+  /** `df` minus its tombstoned rows: anti-join `df(dfCol)` against the
+    * sidecar's `tombCol` ids. Without a sidecar the plan is untouched;
+    * with one the side is a bounded id table the planner broadcasts
+    * when small. `schema` is the sidecar's read schema when the caller
+    * knows its id type (skips the inference job). */
+  def dropTombstoned(spark: SparkSession, path: String, df: DataFrame,
+      dfCol: String, tombCol: String = "",
+      schema: Option[StructType] = None): DataFrame =
+    if (!hasTombstones(fsOf(spark, path), path)) df
+    else {
+      val t = if (tombCol.isEmpty) dfCol else tombCol
+      val ids = schema.fold(spark.read)(spark.read.schema)
+        .parquet(s"$path/$Tombstones").select(t)
+      df.join((if (t == dfCol) ids else ids.withColumnRenamed(t, dfCol))
+        .distinct(), Seq(dfCol), "left_anti")
+    }
+
+  /** The index's LIVE rows: the interrupted-vacuum and crashed-swap
+    * gates, the data read, the tombstone anti-join. `known` is the
+    * schema of a frame the caller wrote with the same writer as the
+    * index; with it the read skips the schema-inference job and its
+    * footer pass ([[Layout.readSchema]] maps it to the tree's). */
+  def liveRows(spark: SparkSession, path: String, layout: Layout,
+      known: Option[StructType] = None): DataFrame = {
+    val fs = fsOf(spark, path)
+    requireNoInterruptedVacuum(fs, path, "index read", layout)
+    requireNoCrashedSwap(fs, path, "index read")
+    val df = known.fold(spark.read.parquet(path))(s =>
+      spark.read.schema(layout.readSchema(fs, path, s)).parquet(path))
+    dropTombstoned(spark, path, df, layout.idCol,
+      schema = known.map(s => StructType(Seq(s(layout.idCol)))))
+  }
+
+  /** Ingesting an id that is TOMBSTONED is legal but almost always a
+    * mistake: the fresh rows stay invisible until a vacuum or compaction
+    * clears the tombstones (the replace flow is delete → vacuum →
+    * re-ingest). One O(batch) semi-join, only when a sidecar exists. */
+  def warnTombstonedIngest(spark: SparkSession, path: String,
+      batch: DataFrame, layout: Layout, op: String): Unit =
+    if (hasTombstones(fsOf(spark, path), path)) {
+      val id = layout.idCol
+      val hidden = batch.select(id).distinct().join(
+        spark.read.parquet(s"$path/$Tombstones").select(id).distinct(),
+        Seq(id), "left_semi").count()
+      if (hidden > 0)
+        System.err.println(s"[${layout.tag}] WARN $op($path): $hidden " +
+          s"ingested id(s) are TOMBSTONED ids — their rows are written but " +
+          s"invisible to probes until ${layout.owner}.${layout.vacuumOp} " +
+          s"(or ${layout.compactOp}) clears the tombstones. Replacing a " +
+          s"row is delete -> ${layout.vacuumOp} -> re-ingest.")
+    }
+
+  /** Tombstone-delete `ids(idCol)`: the append to `_tombstones` (its
+    * distinct count rides the write via `observe()`), then the
+    * accumulation WARN. The WARN's distinct count is gated behind the
+    * sidecar's metadata row count (distinct ids ≤ rows), so small
+    * takedowns never pay it.
+    * @return distinct ids tombstoned by this call */
+  def delete(spark: SparkSession, path: String, ids: DataFrame,
+      idCol: String, layout: Layout): Long = {
+    val fs = fsOf(spark, path)
+    val op = layout.deleteOp
+    requireIndex(fs, path, op)
+    requireNoInterruptedVacuum(fs, path, op, layout)
+    layout.requireGeometry(spark, path, op)
+    val obs = Observation()
+    ids.select(col(idCol).as(layout.idCol)).distinct()
+      .observe(obs, count(lit(1)).as("n"))
+      .coalesce(1).write.mode("append").parquet(s"$path/$Tombstones")
+    val n = observedCount(obs, "n")
+    if (spark.read.parquet(s"$path/$Tombstones").count() >= 1024L) {
+      val tombs = tombstoneCount(spark, path, layout)
+      if (tombs >= 1024L) {
+        val total = math.max(1L, layout.rowCount(spark, path))
+        if (tombs * 100L >= total)
+          System.err.println(s"[${layout.tag}] WARN $op($path): $tombs " +
+            s"accumulated tombstoned ids vs ~$total rows — every probe " +
+            s"now anti-joins that mass; call ${layout.owner}." +
+            s"${layout.vacuumOp} to make the deletes physical " +
+            s"(${layout.compactOp} if the index is also fragmented).")
+      }
+    }
+    n
+  }
+
+  // --------------------------------------------------------- staged rewrite
+
+  /** Write a whole new tree with `stage(stagedPath)` and swap it live
+    * (see the class doc). Leftovers of a prior crash are swept first —
+    * never an aside dir holding the only copy; a throwing `stage` leaves
+    * the live index untouched. */
+  def rewriteStaged[A](fs: FileSystem, path: String, kind: Rewrite,
+      op: String)(stage: String => A): A = {
+    requireIndex(fs, path, op)
+    fs.delete(new Path(path + kind.staged), true)
+    fs.delete(new Path(path + kind.aside), true)
+    val out = stage(path + kind.staged)
+    moveAside(fs, path, kind, op)
+    moveIn(fs, path, kind, op)
+    out
+  }
+
+  /** The swap's first rename: live → aside. */
+  private[graft] def moveAside(fs: FileSystem, path: String, kind: Rewrite,
+      op: String): Unit =
+    if (!fs.rename(new Path(path), new Path(path + kind.aside)))
+      throw new IllegalStateException(
+        s"$op($path): could not stage the live index aside")
+
+  /** The swap's second rename, staged → live, then the aside delete. A
+    * failed rename restores the original and keeps the staged copy for
+    * inspection. */
+  private[graft] def moveIn(fs: FileSystem, path: String, kind: Rewrite,
+      op: String): Unit = {
+    val (live, aside) = (new Path(path), new Path(path + kind.aside))
+    if (!fs.rename(new Path(path + kind.staged), live)) {
+      fs.rename(aside, live)
+      throw new IllegalStateException(
+        s"$op($path): swap failed; original restored, staged copy left " +
+          s"at ${path + kind.staged} for inspection")
+    }
+    fs.delete(aside, true)
+  }
+
+  /** Compact: rewrite every live row under the family's discipline with
+    * the tombstoned rows dropped (the compacted index starts
+    * tombstone-free), carry the geometry sidecars, swap it live.
+    * @return (data files before, data files after) */
+  def compact(spark: SparkSession, path: String, layout: Layout)
+      : (Long, Long) = {
+    val fs = fsOf(spark, path)
+    val op = layout.compactOp
+    requireIndex(fs, path, op)
+    requireNoInterruptedVacuum(fs, path, op, layout)
+    layout.requireGeometry(spark, path, op)
+    val before = dataFiles(fs, path).size.toLong
+    rewriteStaged(fs, path, Compaction, op)(
+      stageCompaction(spark, path, _, layout))
+    (before, dataFiles(fs, path).size.toLong)
+  }
+
+  /** The compaction's staged tree at `staged`; refuses (deleting it)
+    * when no row survives. */
+  private[graft] def stageCompaction(spark: SparkSession, path: String,
+      staged: String, layout: Layout): Unit = {
+    val fs = fsOf(spark, path)
+    val obs = Observation()
+    layout.writeCompacted(dropTombstoned(spark, path,
+        spark.read.parquet(path), layout.idCol)
+      .observe(obs, count(lit(1)).as("n")))
+      .mode("overwrite").parquet(staged)
+    val written = observedCount(obs, "n")
+    if (written == 0L) {
+      fs.delete(new Path(staged), true)
+      throw emptied(path, layout.compactOp, "compacting")
+    }
+    layout.carried.filter(s => fs.exists(child(path, s))).foreach { s =>
+      org.apache.hadoop.fs.FileUtil.copy(fs, child(path, s),
+        fs, child(staged, s), false, spark.sparkContext.hadoopConfiguration)
+    }
+    layout.filtered.filter(s => fs.exists(child(path, s))).foreach { s =>
+      dropTombstoned(spark, path, spark.read.parquet(s"$path/$s"),
+        layout.idCol).coalesce(8).write.mode("overwrite")
+        .parquet(s"$staged/$s")
+    }
+    if (layout.restampRows) writeRows(fs, staged, written)
+  }
+
+  private def emptied(path: String, op: String, verb: String) =
+    new IllegalStateException(
+      s"$op($path): every row is tombstoned — $verb would leave an " +
+        s"empty, unreadable tree. Delete the index directory instead " +
+        s"(or re-ingest before $verb).")
+
+  // --------------------------------------------------------- targeted vacuum
+
+  /** One step of a vacuum manifest. */
+  private[graft] sealed trait Step
+  private[graft] case class Move(staged: String, dest: String) extends Step
+  private[graft] case class Delete(file: String) extends Step
+
+  /** A vacuum manifest: `rowsAfter` is set when the store re-stamps
+    * `_rows` on completion. */
+  private[graft] case class Manifest(rowsAfter: Option[Long],
+      rowsDropped: Long, steps: Seq[Step]) {
+    def text: String =
+      (Seq(Header) ++ rowsAfter.map(n => s"rows_after=$n") ++
+        Seq(s"rows_dropped=$rowsDropped") ++ steps.map {
+          case Move(s, d) => s"move\t$s\t$d"
+          case Delete(f) => s"del\t$f"
+        } ++ Seq("end")).mkString("", "\n", "\n")
+  }
+
+  /** Make tombstones physical in the files that hold them.
+    * @return (files rewritten, rows dropped); (0, 0) when there is
+    *         nothing to vacuum */
+  def vacuum(spark: SparkSession, path: String, layout: Layout)
+      : (Long, Long) = {
+    val fs = fsOf(spark, path)
+    requireIndex(fs, path, layout.vacuumOp)
+    // an interrupted vacuum rolls FORWARD first
+    if (fs.exists(child(path, Marker))) completeVacuum(fs, path, layout)
+    else if (stageVacuum(spark, path, layout))
+      completeVacuum(fs, path, layout)
+    else (0L, 0L)
+  }
+
+  /** The staging half of [[vacuum]]: stage the survivors, publish the
+    * manifest. False when there is nothing to do. */
+  private[graft] def stageVacuum(spark: SparkSession, path: String,
+      layout: Layout): Boolean =
+    stageSurvivors(spark, path, layout).exists { m =>
+      publishManifest(fsOf(spark, path), path, m, layout)
+      true
+    }
+
+  /** Everything before the commit point: sweep a crashed staging pass,
+    * locate the affected files, drop tombstoned ids from the `filtered`
+    * sidecars, write the survivors to `_vacuum_staged`. None when there
+    * is nothing to do — no tombstones, or only row-less ones (the
+    * sidecar is cleared outright then). */
+  private[graft] def stageSurvivors(spark: SparkSession, path: String,
+      layout: Layout): Option[Manifest] = {
+    val fs = fsOf(spark, path)
+    val op = layout.vacuumOp
+    requireNoInterruptedVacuum(fs, path, op, layout)
+    fs.delete(child(path, s"$Marker.tmp"), false)
+    fs.delete(child(path, Staged), true)
+    layout.requireGeometry(spark, path, op)
+    if (!hasTombstones(fs, path)) return None
+    val id = layout.idCol
+    val tomb = spark.read.parquet(s"$path/$Tombstones").select(id).distinct()
+    // filtered sidecars drop their tombstoned rows before anything can
+    // clear the tombstones that name them; the eager checkpoint makes
+    // the same-path overwrite safe
+    def dropFromFiltered(): Unit =
+      layout.filtered.filter(s => fs.exists(child(path, s))).foreach { s =>
+        spark.read.parquet(s"$path/$s").join(tomb, Seq(id), "left_anti")
+          .localCheckpoint(true).coalesce(8).write.mode("overwrite")
+          .parquet(s"$path/$s")
+      }
+    val qualified = fs.makeQualified(new Path(path)).toString
+    val perFile = locateScan(spark, qualified, tomb, id).collect()
+    val affected = perFile.map(_.getString(0))
+    val dropped = perFile.map(_.getLong(1)).sum
+    if (affected.isEmpty) {
+      dropFromFiltered()
+      fs.delete(child(path, Tombstones), true)
+      return None
+    }
+    val totalFiles = dataFiles(fs, path).size.toLong
+    val rowsAfter =
+      if (layout.restampRows) Some(layout.rowCount(spark, path) - dropped)
+      else None
+    // basePath keeps the partition columns on the per-file read
+    val staged = child(path, Staged)
+    layout.writeStaged(spark.read.option("basePath", qualified)
+        .parquet(affected.toIndexedSeq: _*)
+        .join(tomb, Seq(id), "left_anti"), affected.length)
+      .mode("overwrite").parquet(staged.toString)
+    if (affected.length.toLong * 10 >= 3L * totalFiles)
+      System.err.println(s"[${layout.tag}] WARN $op($path): the takedown " +
+        s"touches ${affected.length} of $totalFiles files — no longer a " +
+        s"targeted delete; ${layout.owner}.${layout.compactOp} reaches " +
+        s"the same physical state without the per-file manifest.")
+    val stagedQ = fs.makeQualified(staged)
+    val moves = Seq.newBuilder[Step]
+    FsWalk.foreachFile(fs, stagedQ) { st =>
+      val f = st.getPath
+      if (f.getName.endsWith(".parquet"))
+        moves += Move(f.toString, qualified + "/" +
+          f.toString.stripPrefix(stagedQ.toString).stripPrefix("/"))
+    }
+    val steps = moves.result() ++ affected.map(Delete(_))
+    if (steps.length == affected.length && affected.length == totalFiles) {
+      fs.delete(staged, true)
+      throw emptied(path, op, "vacuuming")
+    }
+    dropFromFiltered()
+    Some(Manifest(rowsAfter, dropped, steps))
+  }
+
+  /** The commit point: publish the manifest atomically (tmp-write +
+    * rename). */
+  private[graft] def publishManifest(fs: FileSystem, path: String,
+      m: Manifest, layout: Layout): Unit = {
+    val tmp = child(path, s"$Marker.tmp")
+    val out = fs.create(tmp, true)
+    try out.write(m.text.getBytes("UTF-8")) finally out.close()
+    if (!fs.rename(tmp, child(path, Marker)))
+      throw new IllegalStateException(
+        s"${layout.vacuumOp}($path): could not publish the _vacuum manifest")
+  }
+
+  /** The locate scan as a frame: (file, rows-to-drop) for every data
+    * file holding a tombstoned row. The read prunes to the id column
+    * alone (`input_file_name` is scan metadata, not a data column), so
+    * locating costs one narrow column, not the corpus. */
+  private[graft] def locateScan(spark: SparkSession, qualified: String,
+      tomb: DataFrame, idCol: String): DataFrame =
+    spark.read.option("basePath", qualified).parquet(qualified)
+      .select(col(idCol), input_file_name().as("_file"))
+      .join(tomb, Seq(idCol), "left_semi")
+      .groupBy("_file").count()
+
+  /** The published manifest. A malformed one is external damage, not a
+    * crash state: manifests are published whole. */
+  private[graft] def readManifest(fs: FileSystem, path: String,
+      layout: Layout): Manifest = {
+    val in = fs.open(child(path, Marker))
+    val lines = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+      .split("\n", -1).toIndexedSeq finally in.close()
+    if (!lines.headOption.exists(Headers) || !lines.contains("end"))
+      throw new IllegalStateException(
+        s"${layout.vacuumOp}($path): unreadable _vacuum manifest — " +
+          s"manifests are published whole (tmp-write + rename), so this " +
+          s"is external damage; rebuild the index.")
+    val body = lines.takeWhile(_ != "end")
+    def field(k: String) = body.collectFirst {
+      case l if l.startsWith(s"$k=") => l.stripPrefix(s"$k=").toLong
+    }
+    Manifest(field("rows_after"), field("rows_dropped").getOrElse(
+      throw new IllegalStateException(
+        s"${layout.vacuumOp}($path): _vacuum manifest lacks rows_dropped")),
+      body.collect {
+        case l if l.startsWith("move\t") =>
+          val a = l.split("\t"); Move(a(1), a(2))
+        case l if l.startsWith("del\t") => Delete(l.split("\t")(1))
+      })
+  }
+
+  /** Run one manifest step, idempotently: a done move (staged gone,
+    * destination present) and a done delete are skipped. */
+  private[graft] def applyStep(fs: FileSystem, path: String, step: Step,
+      layout: Layout): Unit = step match {
+    case Move(s, d) =>
+      val (sp, dp) = (new Path(s), new Path(d))
+      if (fs.exists(sp)) {
+        if (fs.exists(dp)) fs.delete(dp, false)
+        Option(dp.getParent).foreach(fs.mkdirs(_))
+        if (!fs.rename(sp, dp)) throw new IllegalStateException(
+          s"${layout.vacuumOp}($path): could not move $s into place")
+      } else if (!fs.exists(dp)) throw new IllegalStateException(
+        s"${layout.vacuumOp}($path): staged file $s and destination $d " +
+          s"are BOTH missing — the manifest does not match the directory " +
+          s"(external damage); rebuild the index.")
+    case Delete(f) =>
+      val p = new Path(f)
+      if (fs.exists(p)) fs.delete(p, false)
+  }
+
+  /** The completion tail before the marker delete: `_rows` re-stamp,
+    * `_tombstones` clear, staging-tree delete. */
+  private[graft] def finishVacuum(fs: FileSystem, path: String,
+      m: Manifest): Unit = {
+    m.rowsAfter.foreach(writeRows(fs, path, _))
+    fs.delete(child(path, Tombstones), true)
+    fs.delete(child(path, Staged), true)
+  }
+
+  /** Roll an in-flight vacuum FORWARD from its manifest; the marker
+    * delete comes last. @return (files rewritten, rows dropped) */
+  private[graft] def completeVacuum(fs: FileSystem, path: String,
+      layout: Layout): (Long, Long) = {
+    val m = readManifest(fs, path, layout)
+    m.steps.foreach(applyStep(fs, path, _, layout))
+    finishVacuum(fs, path, m)
+    fs.delete(child(path, Marker), false)
+    (m.steps.count(_.isInstanceOf[Delete]).toLong, m.rowsDropped)
+  }
+}

@@ -124,10 +124,9 @@ object PhashDedup {
     * streaming batch= layout, like every flat-layout appender. */
   def appendToPhashIndex(hashes: DataFrame, idCol: String,
       hashCol: String, path: String, bands: Int = 4): Unit = {
-    Dedup.requireNoInterruptedMinhashVacuum(
-      new org.apache.hadoop.fs.Path(path).getFileSystem(
-        hashes.sparkSession.sparkContext.hadoopConfiguration),
-      path, "appendToPhashIndex")
+    IndexStore.requireNoInterruptedVacuum(
+      IndexStore.fsOf(hashes.sparkSession, path), path,
+      "appendToPhashIndex", Dedup.BandLayout)
     Dedup.requireLayout(hashes.sparkSession, path, "batch",
       "appendToPhashIndex",
       "This index is flat (band= dirs); batch= generations belong to " +
@@ -162,8 +161,8 @@ object PhashDedup {
         s"ingestPhashBatch: $indexBatchDir has no parent index root"))
     val fs = new org.apache.hadoop.fs.Path(parent).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
-    Dedup.requireNoInterruptedMinhashVacuum(fs, parent,
-      "ingestPhashBatch")
+    IndexStore.requireNoInterruptedVacuum(fs, parent,
+      "ingestPhashBatch", Dedup.BandLayout)
     // a flat-layout root (band= dirs) must not gain batch= dirs — the
     // mixed tree bricks every read
     Dedup.requireLayout(spark, parent, "band", "ingestPhashBatch",
@@ -187,8 +186,10 @@ object PhashDedup {
       case Some(p) =>
         // re-ingesting a tombstoned id is legal but invisible until a
         // vacuum/compaction clears the sidecar — the shared WARN
-        Dedup.warnTombstonedIngest(spark, p, batch)
-        val index = Dedup.liveIndexRows(spark, p, Some(batch.schema))
+        IndexStore.warnTombstonedIngest(spark, p, batch, Dedup.BandLayout,
+          "ingestPhashBatch")
+        val index = IndexStore.liveRows(spark, p, Dedup.BandLayout,
+          Some(batch.schema))
         batch.select(col("band"), col("key"), col("id").as("id_n"),
             col("phash").as("h_n"))
           .join(index.select(col("band"), col("key"),
@@ -219,7 +220,7 @@ object PhashDedup {
    * (plus within the batch itself): batch keys are banded fresh,
    * corpus keys AND hashes come off the index — corpus payloads are
    * never re-decoded, never re-hashed. Tombstoned ids are anti-joined
-   * before the band join ([[Dedup.liveIndexRows]]); `scope` restricts
+   * before the band join ([[IndexStore.liveRows]]); `scope` restricts
    * which INDEXED assets may pair (the shared-index per-tenant
    * polarity of the other two families). Returns (id_a, id_b,
    * hamming), smaller id first.
@@ -231,7 +232,8 @@ object PhashDedup {
     val par = spark.sparkContext.defaultParallelism
     val batch = phashBanded(batchHashes, idCol, hashCol, bands)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val live = Dedup.liveIndexRows(spark, indexPath, Some(batch.schema))
+    val live = IndexStore.liveRows(spark, indexPath, Dedup.BandLayout,
+      Some(batch.schema))
     val index = scope.fold(live)(sc =>
       live.join(sc.select(col(sc.columns.head).as("id")).distinct(),
         Seq("id"), "left_semi"))

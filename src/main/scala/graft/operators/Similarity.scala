@@ -521,13 +521,12 @@ object Similarity {
   // The minhash index's production shape, for the EMBEDDING near-dup
   // family: banding work happens once per vector ever, a day's batch
   // dedups against the persisted band keys without re-banding the
-  // corpus, and the whole takedown lifecycle is INHERITED — the
-  // [[Dedup]] lifecycle verbs ([[Dedup.deleteFromMinhashIndex]],
-  // [[Dedup.vacuumMinhashTombstones]], [[Dedup.compactMinhashIndex]],
-  // [[Dedup.minhashIndexHealth]] / [[Dedup.maintainMinhashIndex]]) are
-  // LAYOUT-generic (they operate on an `id` column under `band=` /
-  // `batch=N/band=` partition trees and never read the payload
-  // columns), so they apply to this index unchanged. The one
+  // corpus, and the band-index lifecycle verbs
+  // ([[Dedup.deleteFromMinhashIndex]], [[Dedup.vacuumMinhashTombstones]],
+  // [[Dedup.compactMinhashIndex]], [[Dedup.minhashIndexHealth]] /
+  // [[Dedup.maintainMinhashIndex]] — [[IndexStore]] under
+  // [[Dedup.BandLayout]]) never read the payload columns, so they serve
+  // this index as they are. The one
   // embedding-specific sidecar is `_embplan`: unlike the minhash
   // index, whose shingle/hash parameters are the caller's contract,
   // the banding plan here is DATA-dependent (autoPlan widens bands
@@ -581,7 +580,7 @@ object Similarity {
       .mode("overwrite").partitionBy("band").parquet(path)
     writeEmbPlan(fs, path, EmbPlan(planned, (bands, bitsPerBand),
       minCosine, targetOccupancy, autoPlan))
-    writeEmbRows(fs, path, nVecs)
+    IndexStore.writeRows(fs, path, nVecs)
     planned
   }
 
@@ -596,7 +595,7 @@ object Similarity {
     * outgrown the plan's occupancy target and incremental-dedup cost
     * degrades toward the unbanded regime until
     * [[reindexEmbeddingIndex]] re-plans. The count comes from the
-    * `_rows` sidecar (advisory — see [[writeEmbRows]]), so the WARN
+    * `_rows` sidecar (advisory — see [[embVectorCount]]), so the WARN
     * never runs a job over the index data path.
     *
     * @return rows appended (one per vector per band) */
@@ -605,8 +604,8 @@ object Similarity {
     val spark = newVecs.sparkSession
     val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
-    Dedup.requireNoInterruptedMinhashVacuum(fs,
-      path, "appendToEmbeddingIndex")
+    IndexStore.requireNoInterruptedVacuum(fs, path,
+      "appendToEmbeddingIndex", Dedup.BandLayout)
     Dedup.requireLayout(spark, path, "batch", "appendToEmbeddingIndex",
       "This index is flat (band= dirs); batch= generations belong to " +
         "the streaming ingest layout.")
@@ -628,12 +627,12 @@ object Similarity {
     // caller's retry doesn't double-count the batch; a hard crash
     // still over-reads — the designed direction.
     val appended = newVecs.select(col(idCol)).count()
-    writeEmbRows(fs, path, oldN + appended)
+    IndexStore.writeRows(fs, path, oldN + appended)
     try Dedup.indexWrite(
         bandedEmbeddingCells(cells, plan.planned, plan.ref))
       .mode("append").partitionBy("band").parquet(path)
     catch { case e: Throwable =>
-      writeEmbRows(fs, path, oldN); throw e
+      IndexStore.writeRows(fs, path, oldN); throw e
     }
     warnEmbDrift(plan, oldN + appended, s"appendToEmbeddingIndex($path)")
     appended * plan.planned._1
@@ -668,7 +667,8 @@ object Similarity {
       .withColumn("n", norm(col("v")))
     val batch = bandedEmbeddingCells(cells, planned, ref)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val live = Dedup.liveIndexRows(spark, indexPath, Some(batch.schema))
+    val live = IndexStore.liveRows(spark, indexPath, Dedup.BandLayout,
+      Some(batch.schema))
     val index = scope.fold(live)(sc =>
       live.join(sc.select(col(sc.columns.head).as("id")).distinct(),
         Seq("id"), "left_semi"))
@@ -738,8 +738,8 @@ object Similarity {
         s"ingestEmbeddingBatch: $indexBatchDir has no parent index root"))
     val fs = new org.apache.hadoop.fs.Path(parent).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
-    Dedup.requireNoInterruptedMinhashVacuum(fs, parent,
-      "ingestEmbeddingBatch")
+    IndexStore.requireNoInterruptedVacuum(fs, parent,
+      "ingestEmbeddingBatch", Dedup.BandLayout)
     // a flat-layout root (band= dirs) must not gain batch= dirs — the
     // mixed tree bricks every read
     Dedup.requireLayout(spark, parent, "band", "ingestEmbeddingBatch",
@@ -793,8 +793,10 @@ object Similarity {
         // re-ingesting a tombstoned id is legal but invisible until a
         // vacuum/compaction clears the sidecar — same WARN as the
         // minhash ingest (the id column is shared, the check generic)
-        Dedup.warnTombstonedIngest(spark, p, batch)
-        val index = Dedup.liveIndexRows(spark, p, Some(batch.schema))
+        IndexStore.warnTombstonedIngest(spark, p, batch, Dedup.BandLayout,
+          "ingestEmbeddingBatch")
+        val index = IndexStore.liveRows(spark, p, Dedup.BandLayout,
+          Some(batch.schema))
         batch.select(col("band"), col("key"), col("id").as("id_n"),
             col("v").as("v_n"), col("n").as("n_n"))
           .join(index.select(col("band"), col("key"),
@@ -834,7 +836,7 @@ object Similarity {
       .parquet(indexBatchDir)
     if (indexPath.isEmpty) {
       writeEmbPlan(fs, parent, plan)
-      writeEmbRows(fs, parent, nTrainVecs)
+      IndexStore.writeRows(fs, parent, nTrainVecs)
     } else {
       // advisory bump + drift WARN (see [[appendToEmbeddingIndex]]);
       // a REPLAYED batch overwrites its own batch= dir but bumps the
@@ -842,12 +844,8 @@ object Similarity {
       // replay, which only makes the WARN fire early, never late.
       // The batch count comes off the write job's observed band-0 rows
       // (null on an all-empty batch → 0)
-      val nBatchVecs = obs.get("n_vecs") match {
-        case l: java.lang.Long => l.longValue()
-        case _ => 0L
-      }
-      val newN = oldN + nBatchVecs
-      writeEmbRows(fs, parent, newN)
+      val newN = oldN + IndexStore.observedCount(obs, "n_vecs")
+      IndexStore.writeRows(fs, parent, newN)
       warnEmbDrift(plan, newN, s"ingestEmbeddingBatch($parent)")
     }
     batch.unpersist(false)
@@ -890,15 +888,15 @@ object Similarity {
       path: String): EmbPlan = {
     val p = new org.apache.hadoop.fs.Path(s"$path/_embplan")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Dedup.requireNoInterruptedMinhashVacuum(fs, path,
-      "embedding index read")
+    IndexStore.requireNoInterruptedVacuum(fs, path,
+      "embedding index read", Dedup.BandLayout)
     if (!fs.exists(p)) {
       // a maintenance swap that crashed between its two renames leaves
       // the live path missing and the ONLY copy in the pre-swap dir —
       // prescribing a rebuild here would orphan it (the round-16
       // streaming guard, applied to every batch reader: all embedding
       // index reads funnel through this plan load)
-      AnnIndex.requireNoCrashedSwap(fs, path, "embedding index read")
+      IndexStore.requireNoCrashedSwap(fs, path, "embedding index read")
       throw new IllegalStateException(
         s"embedding index at $path has no _embplan sidecar — the build " +
           s"deletes it before writing data, so this is an interrupted " +
@@ -918,43 +916,23 @@ object Similarity {
       kv.getOrElse("auto_plan", "true").toBoolean)
   }
 
-  /** Advisory vector-count sidecar (`_rows`) for the embedding band
-    * index — the [[graft.operators.AnnIndex]] discipline: the build
-    * stamps the vector count, appends/stream batches bump it, and the
-    * drift WARN prices geometry growth WITHOUT a per-append job over
-    * the index data path. NOT fail-closed: a missing/garbled sidecar
-    * (legacy round-16 index, crash mid-update) self-heals via
-    * [[embVectorCount]]'s one-time metadata count + re-stamp. */
-  private def writeEmbRows(fs: org.apache.hadoop.fs.FileSystem,
-      path: String, vectors: Long): Unit = {
-    val out = fs.create(new org.apache.hadoop.fs.Path(s"$path/_rows"), true)
-    try out.write(vectors.toString.getBytes("UTF-8")) finally out.close()
-  }
-
-  private def readEmbRows(fs: org.apache.hadoop.fs.FileSystem,
-      path: String): Option[Long] = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/_rows")
-    if (!fs.exists(p)) None
-    else try {
-      val in = fs.open(p)
-      val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      Some(s.trim.toLong)
-    } catch { case scala.util.control.NonFatal(_) => None }
-  }
-
-  /** The index's vector count: the `_rows` sidecar, or (legacy/garbled)
-    * ONE metadata count of the band-0 partition (each vector writes
-    * exactly one row per band, so band 0 alone counts vectors and the
-    * partition filter keeps even the fallback off the other bands'
-    * footers), re-stamped so the next caller reads the sidecar. */
+  /** The index's vector count from the advisory `_rows` sidecar
+    * ([[IndexStore.writeRows]]): the build stamps it, appends and stream
+    * batches bump it, so the drift WARN prices geometry growth WITHOUT
+    * a per-append job over the index data path. NOT fail-closed: a
+    * missing/garbled sidecar (legacy round-16 index, crash mid-update)
+    * self-heals with ONE metadata count of the band-0 partition (each
+    * vector writes exactly one row per band, so band 0 alone counts
+    * vectors and the partition filter keeps even the fallback off the
+    * other bands' footers), re-stamped so the next caller reads the
+    * sidecar. */
   private[graft] def embVectorCount(
       spark: org.apache.spark.sql.SparkSession, path: String): Long = {
     val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
-    readEmbRows(fs, path).getOrElse {
+    IndexStore.readRows(fs, path).getOrElse {
       val n = spark.read.parquet(path).filter(col("band") === 0).count()
-      writeEmbRows(fs, path, n)
+      IndexStore.writeRows(fs, path, n)
       n
     }
   }
@@ -1032,7 +1010,7 @@ object Similarity {
     * and dragging every stored vector through the group-by. */
   private[graft] def embOccupancyFrame(
       spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    Dedup.liveIndexRows(spark, path)
+    IndexStore.liveRows(spark, path, Dedup.BandLayout)
       .groupBy(col("band"), col("key")).count()
 
   /** Compute [[EmbeddingIndexHealth]] for either layout (flat `band=`
@@ -1082,13 +1060,13 @@ object Similarity {
    * are de-fanned to one (id, v) per vector, tombstones are honored (a
    * takedown cannot resurrect through a reindex — the `_tombstones`
    * sidecar is consumed, not carried), the plan is re-picked at the
-   * LIVE count, and the cut-over rides the shared staged-swap protocol
-   * ([[graft.operators.AnnIndex.swapStaged]]): a crash or a throwing
-   * rebuild leaves the original index untouched and answering, never a
-   * readable half-index. The streaming `batch=N` layout collapses into
-   * one `batch=-1` generation (the [[Dedup.compactMinhashIndex]]
-   * convention — no replayed batchId can collide with it), so the verb
-   * also subsumes a compaction; the flat layout rebuilds flat.
+   * LIVE count, and the cut-over is the staged rewrite
+   * ([[IndexStore.rewriteStaged]]): a crash or a throwing rebuild leaves
+   * the original index untouched and answering, never a readable
+   * half-index. The streaming `batch=N` layout collapses into one
+   * `batch=-1` generation (as a band-index compaction does — no
+   * replayed batchId can collide with it), so the verb also subsumes a
+   * compaction; the flat layout rebuilds flat.
    *
    * An id appended more than once keeps ONE arbitrary row's vector
    * (they are re-crawls of the same id; band keys re-derive from
@@ -1110,19 +1088,15 @@ object Similarity {
     val refBits = if (bitsPerBand > 0) bitsPerBand else plan.ref._2
     val occ =
       if (targetOccupancy.isNaN) plan.targetOccupancy else targetOccupancy
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val batchLayout = fs.listStatus(hPath)
+    val fs = IndexStore.fsOf(spark, path)
+    val batchLayout = fs.listStatus(new org.apache.hadoop.fs.Path(path))
       .exists(_.getPath.getName.startsWith("batch="))
-    val tmp = new org.apache.hadoop.fs.Path(s"$path.__reindexing")
-    val old = new org.apache.hadoop.fs.Path(s"$path.__prereindex")
-    fs.delete(tmp, true); fs.delete(old, true) // prior-crash leftovers
     // every vector fans out to EVERY band at write time, so band 0 alone
     // carries one row per vector — the partition filter prunes the scan
     // to 1/bands of the index and the de-fan needs no shuffle at all
     // (dropDuplicates stays for the double-appended-id case only, now
     // over 1/bands of the data)
-    val cells = Dedup.liveIndexRows(spark, path)
+    val cells = IndexStore.liveRows(spark, path, Dedup.BandLayout)
       .filter(col("band") === 0)
       .select(col("id"), col("v"))
       .dropDuplicates("id")
@@ -1140,16 +1114,15 @@ object Similarity {
           refBits, occ)
       val banded = bandedEmbeddingCells(cells, planned,
         (refBands, refBits))
-      val writer =
-        if (batchLayout)
-          Dedup.indexWrite(banded.withColumn("batch", lit(-1L)))
-            .partitionBy("batch", "band")
-        else Dedup.indexWrite(banded).partitionBy("band")
-      writer.mode("overwrite").parquet(tmp.toString)
-      writeEmbPlan(fs, tmp.toString, EmbPlan(planned,
-        (refBands, refBits), plan.minCosine, occ, autoPlan))
-      writeEmbRows(fs, tmp.toString, nLive)
-      AnnIndex.swapStaged(fs, hPath, tmp, old, "reindexEmbeddingIndex")
+      IndexStore.rewriteStaged(fs, path, IndexStore.Reindex,
+          "reindexEmbeddingIndex") { tmp =>
+        Dedup.BandLayout.writeCompacted(
+            if (batchLayout) banded.withColumn("batch", lit(-1L)) else banded)
+          .mode("overwrite").parquet(tmp)
+        writeEmbPlan(fs, tmp, EmbPlan(planned,
+          (refBands, refBits), plan.minCosine, occ, autoPlan))
+        IndexStore.writeRows(fs, tmp, nLive)
+      }
       planned
     } finally cells.unpersist(false)
   }
@@ -1218,9 +1191,8 @@ object Similarity {
           val guardN = {
             val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
               spark.sparkContext.hadoopConfiguration)
-            if (fs.exists(
-              new org.apache.hadoop.fs.Path(s"$path/_tombstones")))
-              Dedup.liveIndexRows(spark, path)
+            if (IndexStore.hasTombstones(fs, path))
+              IndexStore.liveRows(spark, path, Dedup.BandLayout)
                 .filter(col("band") === 0).count()
             else embVectorCount(spark, path)
           }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import java.sql.Timestamp
+import graft.operators.IndexStore
 
 /** One event row for typed streaming ops. */
 case class Event(event_id: Long, user_id: Long, event_type: String,
@@ -213,23 +214,6 @@ object Streams {
       _.getPath.getName.endsWith(".parquet"))
   }
 
-  /** Refuse to ingest over a CRASHED maintenance swap (round 16): a
-    * streaming batch landing in the swap protocol's one
-    * unrecoverable-looking window (live path missing, pre-swap dir
-    * holding the only copy) would see "no index" and silently re-train
-    * over the orphaned corpus. Delegates to the canonical guard next to
-    * the protocol it polices ([[graft.operators.AnnIndex.swapStaged]] —
-    * round 17: the embedding index's batch readers run the SAME guard,
-    * so the two can never diverge on the crash state). A missing live
-    * path with NO leftover dirs is just a first batch. */
-  private def requireNoCrashedSwap(
-      spark: org.apache.spark.sql.SparkSession, indexDir: String,
-      op: String): Unit =
-    graft.operators.AnnIndex.requireNoCrashedSwap(
-      new org.apache.hadoop.fs.Path(indexDir).getFileSystem(
-        spark.sessionState.newHadoopConf()),
-      indexDir, op)
-
   def dedupIngest(docs: DataFrame, textCol: String, idCol: String,
       indexDir: String, pairsDir: String, checkpointDir: String,
       shingleK: Int = 5, numHashes: Int = 16, bands: Int = 4,
@@ -240,7 +224,8 @@ object Streams {
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         val df = batch.toDF()
         val spark = df.sparkSession
-        requireNoCrashedSwap(spark, indexDir, "dedupIngest")
+        IndexStore.requireNoCrashedSwap(IndexStore.fsOf(spark, indexDir),
+          indexDir, "dedupIngest")
         // one signature pass per batch: pairs + index write share the
         // cached banded table (Dedup.ingestBatch); the pairs sink makes
         // the per-batch pairs write the materializing action itself
@@ -339,7 +324,8 @@ object Streams {
       targetOccupancy: Double, maintainEvery: Int, batchId: Long,
       skewEvery: Int = 0, skewFactor: Double = 8.0): Unit = {
     val spark = df.sparkSession
-    requireNoCrashedSwap(spark, indexDir, "embDedupIngest")
+    IndexStore.requireNoCrashedSwap(IndexStore.fsOf(spark, indexDir),
+      indexDir, "embDedupIngest")
     val fs = new org.apache.hadoop.fs.Path(indexDir).getFileSystem(
       spark.sessionState.newHadoopConf())
     val hasPlan = fs.exists(
@@ -424,7 +410,8 @@ object Streams {
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         val df = batch.toDF()
         val spark = df.sparkSession
-        requireNoCrashedSwap(spark, indexDir, "phashIngest")
+        IndexStore.requireNoCrashedSwap(IndexStore.fsOf(spark, indexDir),
+          indexDir, "phashIngest")
         implicit val enc = org.apache.spark.sql.Encoders
           .product[graft.multimodal.MediaAsset]
         val hashes = graft.multimodal.Multimodal.perceptualHash(
@@ -467,7 +454,8 @@ object Streams {
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         val df = batch.toDF()
         val spark = df.sparkSession
-        requireNoCrashedSwap(spark, indexDir, "audioIngest")
+        IndexStore.requireNoCrashedSwap(IndexStore.fsOf(spark, indexDir),
+          indexDir, "audioIngest")
         val fps = graft.multimodal.Multimodal.audioFingerprint(
           df.select(col(idCol).cast("long").as(idCol),
             col(payloadCol).cast("binary").as(payloadCol)),
@@ -504,7 +492,8 @@ object Streams {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         val spark = batch.sparkSession
-        requireNoCrashedSwap(spark, indexDir, "qualityGatedDedupIngest")
+        IndexStore.requireNoCrashedSwap(IndexStore.fsOf(spark, indexDir),
+          indexDir, "qualityGatedDedupIngest")
         val judged = gate(batch.toDF())
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
@@ -551,7 +540,8 @@ object Streams {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         val spark = batch.sparkSession
-        requireNoCrashedSwap(spark, indexDir, "curationIngest")
+        IndexStore.requireNoCrashedSwap(IndexStore.fsOf(spark, indexDir),
+          indexDir, "curationIngest")
         // the gate's expression tree (tokenize, repetition, language
         // scores, PII regexes) is the expensive part — persist it so the
         // contaminated-id derivation and the judged join both read the
@@ -697,7 +687,8 @@ object Streams {
       quantizer: String, autoPlan: Boolean, maintainEvery: Int,
       targetCellRows: Long, batchId: Long, lineage: String): Unit = {
     val spark = df.sparkSession
-    requireNoCrashedSwap(spark, indexDir, "annIngestIvfPq")
+    IndexStore.requireNoCrashedSwap(IndexStore.fsOf(spark, indexDir),
+      indexDir, "annIngestIvfPq")
     if (!df.isEmpty) {
       val hasData = indexHasData(spark, indexDir)
       // geometry decides build-vs-append (see [[ingestAnnBatch]]): an
@@ -781,7 +772,8 @@ object Streams {
       targetCosine: Double, targetOccupancy: Double, batchId: Long,
       lineage: String): Unit = {
     val spark = df.sparkSession
-    requireNoCrashedSwap(spark, indexDir, "annIngest")
+    IndexStore.requireNoCrashedSwap(IndexStore.fsOf(spark, indexDir),
+      indexDir, "annIngest")
     if (!df.isEmpty) {
       val hasData = indexHasData(spark, indexDir)
       // GEOMETRY, not data, decides build-vs-append (round 16 — the

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.AnnIndex
+import graft.operators.{AnnIndex, IndexStore}
 import org.apache.spark.sql.functions._
 
 /** Targeted vacuum (round 15): [[AnnIndex.vacuumTombstones]] makes
@@ -160,7 +160,7 @@ class AnnVacuumSpec extends SparkSpec {
     AnnIndex.vacuumTombstones(spark, ref) // the clean run to match
     // stage only — the state a crash right after the manifest publish
     // leaves: marker present, staged files not yet moved in
-    assert(AnnIndex.stageVacuum(spark, p))
+    assert(IndexStore.stageVacuum(spark, p, AnnIndex.IndexLayout))
     val fs = fsOf(p)
     assert(fs.exists(new org.apache.hadoop.fs.Path(s"$p/_vacuum")))
     // every reader and mutation fails closed on the marker
@@ -210,8 +210,8 @@ class AnnVacuumSpec extends SparkSpec {
     val fs = fsOf(p)
     val qualified = fs.makeQualified(
       new org.apache.hadoop.fs.Path(p)).toString
-    val locate = AnnIndex.locateScan(spark, qualified,
-      Seq(7L).toDF("vec_id"))
+    val locate = IndexStore.locateScan(spark, qualified,
+      Seq(7L).toDF("vec_id"), "vec_id")
     // formatted mode prints each scan's full ReadSchema (the plain
     // toString truncates scan metadata)
     val plan = locate.queryExecution.explainString(
@@ -227,6 +227,44 @@ class AnnVacuumSpec extends SparkSpec {
     // and it finds the right file: the one holding vec_id 7
     val rows = locate.collect()
     assert(rows.length === 1 && rows.head.getLong(1) === 1L)
+  }
+
+  test("neither compactIndex nor vacuumTombstones empties an index: with " +
+      "every id tombstoned both refuse before the swap, and the untouched " +
+      "index still answers through its tombstones (IVF-PQ, grouped LSH)") {
+    val few = emb.filter(col("vec_id") < 64)
+    val q = few.filter(col("vec_id") < 3)
+    val layouts = Seq[(String, String => Unit, String => Long)](
+      ("ivfpq",
+        p => AnnIndex.buildIvfPq(few, "embedding", "vec_id", p,
+          nCells = 4, m = 4, quantizer = "sign"),
+        p => AnnIndex.ivfPqKnnJoin(spark, p, q, few, "embedding",
+          "vec_id", k = 3).count()),
+      ("lsh",
+        p => AnnIndex.buildLsh(few, "embedding", "vec_id", p, dims = 64,
+          bits = 8),
+        p => AnnIndex.lshKnnJoin(spark, p, q, "embedding", "vec_id",
+          k = 3).count()))
+    val verbs = Seq[(String, String => Unit)](
+      ("compactIndex", p => AnnIndex.compactIndex(spark, p)),
+      ("vacuumTombstones", p => AnnIndex.vacuumTombstones(spark, p)))
+    for ((layout, build, probe) <- layouts; (verb, run) <- verbs) {
+      val p = tmp(s"vac_empty_${layout}_$verb")
+      build(p)
+      assert(AnnIndex.deleteIds(spark, p, few.select("vec_id")) === 64L)
+      val before = dataFiles(p)
+      val e = intercept[IllegalStateException](run(p))
+      assert(e.getMessage.contains("every row is tombstoned"),
+        s"$layout/$verb: ${e.getMessage}")
+      val fs = fsOf(p)
+      assert(dataFiles(p) === before, s"$layout/$verb touched the data")
+      assert(fs.exists(new org.apache.hadoop.fs.Path(s"$p/_tombstones")))
+      Seq(s"$p/_vacuum", s"$p/_vacuum_staged", s"$p.__compacting")
+        .foreach(s => assert(!fs.exists(new org.apache.hadoop.fs.Path(s)),
+          s"$layout/$verb left $s"))
+      assert(probe(p) === 0L, s"$layout/$verb: tombstoned rows answered")
+      assert(AnnIndex.indexHealth(spark, p).rows === 64L, s"$layout/$verb")
+    }
   }
 
   test("no-op and vacuous cases: zero tombstones returns (0,0) without " +

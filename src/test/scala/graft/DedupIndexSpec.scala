@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Dedup
+import graft.operators.{Dedup, IndexStore}
 import org.apache.spark.sql.functions._
 
 /** Lifecycle of the persisted minhash index (round 15, late): tombstone
@@ -298,56 +298,70 @@ class DedupIndexSpec extends SparkSpec {
 
   test("interrupted vacuum fails closed everywhere, then rolls FORWARD " +
       "idempotently — probes and every mutation refuse mid-swap") {
-    val idx = tmp("mhvcrash"); val ref = tmp("mhvcrash_ref")
-    for (p <- Seq(idx, ref)) {
-      Dedup.buildMinhashIndex(corpus, "text", "doc_id", p,
-        shingleK = 5, numHashes = 16, bands = 4)
-      Dedup.deleteFromMinhashIndex(spark, p, Seq(1L).toDF("doc_id"),
-        idCol = "doc_id")
+    // legacy = the manifest a band index published before the vacuum
+    // protocol was shared: same lines under the family header (the band
+    // indexes never carried rows_after) — an index can be mid-vacuum
+    // across an upgrade
+    for (legacy <- Seq(false, true)) {
+      val idx = tmp("mhvcrash"); val ref = tmp("mhvcrash_ref")
+      for (p <- Seq(idx, ref)) {
+        Dedup.buildMinhashIndex(corpus, "text", "doc_id", p,
+          shingleK = 5, numHashes = 16, bands = 4)
+        Dedup.deleteFromMinhashIndex(spark, p, Seq(1L).toDF("doc_id"),
+          idCol = "doc_id")
+      }
+      Dedup.vacuumMinhashTombstones(spark, ref) // the clean run to match
+      // stage only — the state a crash right after the manifest publish
+      // leaves: marker present, staged files not yet moved in
+      assert(IndexStore.stageVacuum(spark, idx, Dedup.BandLayout))
+      val fs = fsOf(idx)
+      val marker = new org.apache.hadoop.fs.Path(s"$idx/_vacuum")
+      assert(fs.exists(marker))
+      val in = fs.open(marker)
+      val manifest = try scala.io.Source.fromInputStream(in, "UTF-8")
+        .mkString finally in.close()
+      if (legacy) {
+        val lines = manifest.split("\n", -1)
+        assert(!lines.exists(_.startsWith("rows_after=")), manifest)
+        val out = fs.create(marker, true)
+        try out.write(("graft-mh-vacuum-v1" +: lines.tail).mkString("\n")
+          .getBytes("UTF-8")) finally out.close()
+      }
+      val e1 = intercept[IllegalStateException](pairsOf(idx))
+      assert(e1.getMessage.contains("_vacuum"))
+      val e2 = intercept[IllegalStateException](
+        Dedup.deleteFromMinhashIndex(spark, idx, Seq(2L).toDF("doc_id"),
+          idCol = "doc_id"))
+      assert(e2.getMessage.contains("_vacuum"))
+      val e3 = intercept[IllegalStateException](
+        Dedup.compactMinhashIndex(spark, idx))
+      assert(e3.getMessage.contains("_vacuum"))
+      val e4 = intercept[IllegalStateException](
+        Dedup.minhashIndexHealth(spark, idx))
+      assert(e4.getMessage.contains("_vacuum"))
+      // simulate a crash MID-completion: replay the first move and the
+      // first delete by hand, leave the marker — the re-run must skip the
+      // done steps and finish the rest
+      val lines = manifest.split("\n")
+      lines.find(_.startsWith("move\t")).foreach { l =>
+        val a = l.split("\t")
+        assert(fs.rename(new org.apache.hadoop.fs.Path(a(1)),
+          new org.apache.hadoop.fs.Path(a(2))))
+      }
+      lines.find(_.startsWith("del\t")).foreach { l =>
+        fs.delete(new org.apache.hadoop.fs.Path(l.split("\t")(1)), false)
+      }
+      // roll forward — the public verb completes an interrupted vacuum
+      Dedup.vacuumMinhashTombstones(spark, idx)
+      assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$idx/_vacuum")))
+      assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$idx/_vacuum_staged")))
+      assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$idx/_tombstones")))
+      val content = (p: String) => spark.read.parquet(p)
+        .select(col("id"), col("band").cast("int"), col("key").cast("string"))
+        .as[(Long, Int, String)].collect().toSet
+      assert(content(idx) === content(ref))
+      assert(pairsOf(idx) === pairsOf(ref))
     }
-    Dedup.vacuumMinhashTombstones(spark, ref) // the clean run to match
-    // stage only — the state a crash right after the manifest publish
-    // leaves: marker present, staged files not yet moved in
-    assert(Dedup.stageMinhashVacuum(spark, idx))
-    val fs = fsOf(idx)
-    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$idx/_vacuum")))
-    val e1 = intercept[IllegalStateException](pairsOf(idx))
-    assert(e1.getMessage.contains("_vacuum"))
-    val e2 = intercept[IllegalStateException](
-      Dedup.deleteFromMinhashIndex(spark, idx, Seq(2L).toDF("doc_id"),
-        idCol = "doc_id"))
-    assert(e2.getMessage.contains("_vacuum"))
-    val e3 = intercept[IllegalStateException](
-      Dedup.compactMinhashIndex(spark, idx))
-    assert(e3.getMessage.contains("_vacuum"))
-    val e4 = intercept[IllegalStateException](
-      Dedup.minhashIndexHealth(spark, idx))
-    assert(e4.getMessage.contains("_vacuum"))
-    // simulate a crash MID-completion: replay the first move and the
-    // first delete by hand, leave the marker — the re-run must skip the
-    // done steps and finish the rest
-    val in = fs.open(new org.apache.hadoop.fs.Path(s"$idx/_vacuum"))
-    val manifest = try scala.io.Source.fromInputStream(in, "UTF-8")
-      .mkString finally in.close()
-    val lines = manifest.split("\n")
-    lines.find(_.startsWith("move\t")).foreach { l =>
-      val a = l.split("\t")
-      assert(fs.rename(new org.apache.hadoop.fs.Path(a(1)),
-        new org.apache.hadoop.fs.Path(a(2))))
-    }
-    lines.find(_.startsWith("del\t")).foreach { l =>
-      fs.delete(new org.apache.hadoop.fs.Path(l.split("\t")(1)), false)
-    }
-    // roll forward — the public verb completes an interrupted vacuum
-    Dedup.vacuumMinhashTombstones(spark, idx)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$idx/_vacuum")))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$idx/_vacuum_staged")))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$idx/_tombstones")))
-    val content = (p: String) => spark.read.parquet(p)
-      .select(col("id"), col("band").cast("int"), col("key").cast("string"))
-      .as[(Long, Int, String)].collect().toSet
-    assert(content(idx) === content(ref))
-    assert(pairsOf(idx) === pairsOf(ref))
   }
 
   test("the vacuum locate scan is column-pruned to the id column — " +
@@ -359,8 +373,8 @@ class DedupIndexSpec extends SparkSpec {
     val fs = fsOf(idx)
     val qualified = fs.makeQualified(
       new org.apache.hadoop.fs.Path(idx)).toString
-    val locate = Dedup.minhashLocateScan(spark, qualified,
-      Seq(1L).toDF("id"))
+    val locate = IndexStore.locateScan(spark, qualified,
+      Seq(1L).toDF("id"), "id")
     val plan = locate.queryExecution.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
     val reads = plan.linesIterator

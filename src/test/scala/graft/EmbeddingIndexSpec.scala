@@ -364,7 +364,7 @@ class EmbeddingIndexSpec extends SparkSpec {
     val idx = tmp("embreidx"); val fresh = tmp("embreidx_fresh")
     build(idx, corpus)
     // crash leftover from a prior attempt: probes unaffected, the next
-    // reindex clears and succeeds (swapStaged's prior-crash discipline)
+    // reindex clears and succeeds (the staged rewrite sweeps leftovers)
     fsOf(idx).mkdirs(new org.apache.hadoop.fs.Path(s"$idx.__reindexing"))
     assert(pairsOf(idx).contains((1L, 10L)))
     val plan = Similarity.reindexEmbeddingIndex(spark, idx,
