@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /**
  * Persisted ANN indexes — the scale path the in-memory variants in
@@ -399,7 +400,19 @@ object AnnIndex {
     * results nor consume k slots. */
   private def liveRows(spark: SparkSession, path: String,
       df: DataFrame): DataFrame =
-    IndexStore.dropTombstoned(spark, path, df, "vec_id")
+    // the sidecar holds index ids: read it at the frame's vec_id type
+    // instead of paying a schema-inference job per read
+    IndexStore.dropTombstoned(spark, path, df, "vec_id",
+      schema = Some(StructType(Seq(df.schema("vec_id")))))
+
+  /** A probe's read of the index data at the schema memoized on the
+    * family's `geometry` sidecars ([[IndexStore.dataSchema]]): a probe of
+    * an unchanged index pays no schema-inference job. Callers run the
+    * sidecar gates first. */
+  private def indexRows(spark: SparkSession, path: String,
+      geometry: String*): DataFrame =
+    spark.read.schema(IndexStore.dataSchema(spark, path, geometry: _*))
+      .parquet(path)
 
   /** Restrict an index scan to an ALLOWED id set (scoped search, round
     * 15): the batched joins take `scope` so a tenant/license/language
@@ -464,7 +477,10 @@ object AnnIndex {
     * at bench scale). Legacy detection is unchanged: the marker/width
     * are read off the INFERRED schema, and the accessors raise the
     * exact pre-existing errors only when a verb actually needs the
-    * missing field. */
+    * missing field. The decode is memoized by the sidecar's on-disk
+    * identity ([[IndexStore.sidecar]]) and shared between callers, who
+    * must not mutate its arrays; the gates and the `cell=` cross-check
+    * of [[readCentroidsSidecar]] run on every call. */
   private[graft] case class CentroidsSidecar(
       cells: Array[(Long, Array[Double])],
       quantizerOpt: Option[String], signBitsOpt: Option[Int]) {
@@ -498,14 +514,9 @@ object AnnIndex {
           s"deletes sidecars before writing data, so this is an " +
           s"interrupted rebuild; probing against absent/stale geometry " +
           s"would silently mis-rank. Rebuild the index.")
-    val df = spark.read.parquet(s"$path/_centroids")
-    val hasQ = df.columns.contains("quantizer")
-    val hasS = df.columns.contains("sign_bits")
-    val rows = df.collect()
-    val cents = rows
-      .map(r => (r.getAs[Number]("cell").longValue(),
-        r.getSeq[Double](r.fieldIndex("centroid")).toArray))
-    val cellSet = cents.map(_._1).toSet
+    val sc = IndexStore.sidecar(spark, path, "_centroids")(
+      decodeCentroids(spark, path))
+    val cellSet = sc.cells.map(_._1).toSet
     fs.listStatus(hPath).iterator.map(_.getPath.getName)
       .filter(_.startsWith("cell=")).foreach { d =>
         val v = d.stripPrefix("cell=")
@@ -522,6 +533,21 @@ object AnnIndex {
             s"— interrupted rebuild left new data under stale geometry; " +
             s"probes would silently mis-rank. Rebuild the index.")
       }
+    sc
+  }
+
+  /** The `_centroids` decode [[readCentroidsSidecar]] memoizes: one
+    * read+collect; the marker/width come off the INFERRED schema, so a
+    * legacy sidecar without them decodes to None. */
+  private def decodeCentroids(spark: SparkSession,
+      path: String): CentroidsSidecar = {
+    val df = spark.read.parquet(s"$path/_centroids")
+    val hasQ = df.columns.contains("quantizer")
+    val hasS = df.columns.contains("sign_bits")
+    val rows = df.collect()
+    val cents = rows
+      .map(r => (r.getAs[Number]("cell").longValue(),
+        r.getSeq[Double](r.fieldIndex("centroid")).toArray))
     val q =
       if (hasQ && rows.nonEmpty)
         Option(rows.head.getString(rows.head.fieldIndex("quantizer")))
@@ -711,7 +737,7 @@ object AnnIndex {
     // twin (lshTopK/searchLsh round because their ORACLE does; rounding
     // only one IVF twin would let a 6dp near-tie at the k boundary
     // return different top-k sets)
-    liveRows(spark, path, spark.read.parquet(path)
+    liveRows(spark, path, indexRows(spark, path, "_centroids")
         .filter(col("cell").isin(probeCells: _*)))
       .select(col("vec_id"), cosine(col("vec"), qCol).as("cosine"))
       .orderBy(col("cosine").desc, col("vec_id").asc)
@@ -752,8 +778,8 @@ object AnnIndex {
       .select("query_id", "__qv", "cell")
     val wRank = Window.partitionBy("query_id")
       .orderBy(col("cosine").desc, col("vec_id").asc)
-    probed.join(scopedRows(
-        liveRows(spark, path, spark.read.parquet(path)), scope), Seq("cell"))
+    val rows = liveRows(spark, path, indexRows(spark, path, "_centroids"))
+    probed.join(scopedRows(rows, scope), Seq("cell"))
       .select(col("query_id"), col("vec_id"),
         round(cosine(col("vec"), col("__qv")), 6).as("cosine"))
       .withColumn("__rn", row_number().over(wRank))
@@ -908,7 +934,7 @@ object AnnIndex {
     // 6dp rounding BEFORE the cut (with a vec_id tiebreak): the distance
     // table sums small fp terms whose order differs engine-to-engine, so
     // an unrounded candidate cut could differ at the k boundary
-    liveRows(spark, path, spark.read.parquet(path))
+    liveRows(spark, path, indexRows(spark, path, "_codebooks"))
       .select(col("vec_id"), round(perSub.reduce(_ + _), 6).as("approx_dist"))
       .orderBy(col("approx_dist").asc, col("vec_id").asc)
       .limit(k)
@@ -1161,7 +1187,7 @@ object AnnIndex {
     val probe = if (nProbe >= 0) nProbe else Similarity.planIvfProbe(cents.length)
     val probeCells = rankCells(cents, q, probe)
     val perSub = pqDistanceColumns(spark, path, q)
-    liveRows(spark, path, spark.read.parquet(path)
+    liveRows(spark, path, indexRows(spark, path, "_centroids", "_codebooks")
         .filter(col("cell").isin(probeCells: _*)))
       .select(col("vec_id"), round(perSub.reduce(_ + _), 6).as("approx_dist"))
       .orderBy(col("approx_dist").asc, col("vec_id").asc)
@@ -1326,8 +1352,8 @@ object AnnIndex {
     // Tombstoned and out-of-scope rows drop BEFORE the cut — see
     // [[liveRows]]/[[scopedRows]]: a post-filter would let them eat the
     // candidate budget
-    val codes = scopedRows(
-      liveRows(spark, path, spark.read.parquet(path)), scope)
+    val codes = scopedRows(liveRows(spark, path,
+      indexRows(spark, path, "_centroids", "_codebooks")), scope)
     val approxDist = round((0 until m).map { j =>
       val cj = col("code").getItem(j)
       coalesce(
@@ -1533,7 +1559,7 @@ object AnnIndex {
       .withColumn("sig", explode(array(
         masks.map(m => col("__qsig").bitwiseXOR(lit(m))): _*)))
     val idx = scopedRows(
-      liveRows(spark, path, spark.read.parquet(path)), scope)
+      liveRows(spark, path, indexRows(spark, path, "_plan")), scope)
     val grouped = idx.columns.contains("sig_grp")
     val qKeyed =
       if (!grouped) q
@@ -1618,16 +1644,7 @@ object AnnIndex {
       IndexLayout)
     val sidecar = fs.exists(new org.apache.hadoop.fs.Path(s"$path/_plan"))
     val (plan, family, grpBits) =
-      if (!sidecar) ((12, 1), FamilyPm1, None)
-      else {
-        val df = spark.read.json(s"$path/_plan")
-        val cols = df.columns.toSet
-        val r = df.head()
-        ((r.getAs[Long]("bits").toInt, r.getAs[Long]("probe_hamming").toInt),
-          if (cols("family")) r.getAs[String]("family") else FamilyPm1,
-          if (cols("grp_bits")) Some(r.getAs[Long]("grp_bits").toInt)
-          else None)
-      }
+      if (!sidecar) ((12, 1), FamilyPm1, None) else lshPlanSidecar(spark, path)
     val dirs = fs.listStatus(hPath).iterator.map(_.getPath.getName).toSeq
     // legacy layout: raw-sig directories — validate against 2^bits; an
     // unparsable value (e.g. __HIVE_DEFAULT_PARTITION__ from null sigs,
@@ -1663,6 +1680,20 @@ object AnnIndex {
           s"AnnIndex.buildLsh.")
     LshIndexMeta(plan._1, plan._2, family, grpBits.getOrElse(plan._1))
   }
+
+  /** The `_plan` sidecar decoded — ((bits, probe_hamming), family,
+    * grp_bits when stamped) — memoized by its on-disk identity
+    * ([[IndexStore.sidecar]]); pre-family sidecars report [[FamilyPm1]]. */
+  private def lshPlanSidecar(spark: SparkSession, path: String)
+      : ((Int, Int), String, Option[Int]) =
+    IndexStore.sidecar(spark, path, "_plan") {
+      val df = spark.read.json(s"$path/_plan")
+      val cols = df.columns.toSet
+      val r = df.head()
+      ((r.getAs[Long]("bits").toInt, r.getAs[Long]("probe_hamming").toInt),
+        if (cols("family")) r.getAs[String]("family") else FamilyPm1,
+        if (cols("grp_bits")) Some(r.getAs[Long]("grp_bits").toInt) else None)
+    }
 
   /** The partition-group width (grp_bits) of an LSH index — from the
     * `_plan` sidecar; legacy raw-sig layouts report their full bits
@@ -1733,7 +1764,7 @@ object AnnIndex {
       .select(Similarity.sigCol(qCol, useBits, useFamily == FamilyOrtho).as("s"))
       .head().getLong(0)
     val probes = probeSigs(qSig, useBits, useHamming)
-    val df = liveRows(spark, path, spark.read.parquet(path))
+    val df = liveRows(spark, path, indexRows(spark, path, "_plan"))
     val sigPruned =
       if (!df.columns.contains("sig_grp")) df
       else {
@@ -1953,8 +1984,7 @@ object AnnIndex {
     // grp_bits (the two faces of the same legacy state).
     val legacySig = fs.listStatus(new org.apache.hadoop.fs.Path(path))
       .iterator.map(_.getPath.getName).exists(_.startsWith("sig="))
-    val planHasGrp = spark.read.json(s"$path/_plan")
-      .columns.contains("grp_bits")
+    val planHasGrp = lshPlanSidecar(spark, path)._3.isDefined
     if (legacySig || !planHasGrp) throw new IllegalStateException(
       s"appendLsh($path): legacy raw-sig partition layout (sig= " +
         s"directories / no grp_bits in _plan) — appending grouped " +
@@ -2851,26 +2881,34 @@ object AnnIndex {
     rows.map(r => ((r.getInt(0), r.getInt(1)), r.getSeq[Double](2).toArray))
       .toMap
 
-  /** The `_codebooks` sidecar in ONE read+collect — (map, quantizer
-    * marker), the [[readCentroidsSidecar]] treatment for the verbs that
-    * previously read the same sidecar twice (marker + map). A legacy
-    * sidecar without the marker column reads it as null and is refused. */
+  /** The `_codebooks` sidecar decoded in ONE read+collect, memoized by
+    * its on-disk identity ([[IndexStore.sidecar]]): the driver map —
+    * (subspace, code) → centroid, bounded at m × codes rows — and the
+    * quantizer marker (None on a legacy sidecar without the column). */
+  private def codebooksSidecar(spark: SparkSession, path: String)
+      : (Map[(Int, Int), Array[Double]], Option[String]) =
+    IndexStore.sidecar(spark, path, "_codebooks") {
+      val rows = codebooksFrame(spark, path).collect()
+      (codebookMap(rows), rows.headOption.flatMap(r => Option(r.getString(3))))
+    }
+
+  /** The `_codebooks` map and quantizer marker — the
+    * [[readCentroidsSidecar]] treatment for the verbs that need both. A
+    * legacy sidecar without the marker is refused. */
   private def readCodebooksSidecar(spark: SparkSession,
       path: String): (Map[(Int, Int), Array[Double]], String) = {
-    val rows = codebooksFrame(spark, path).collect()
-    val q = rows.headOption.flatMap(r => Option(r.getString(3)))
-    (codebookMap(rows), q.getOrElse(throw new IllegalStateException(
+    val (cb, q) = codebooksSidecar(spark, path)
+    (cb, q.getOrElse(throw new IllegalStateException(
       s"index at $path: _codebooks has no quantizer marker (pre-round-14 " +
         s"build) — appends cannot verify the encode family; rebuild the " +
         s"index once to stamp it.")))
   }
 
   /** The `_codebooks` sidecar as a driver map — (subspace, code) →
-    * centroid. Bounded (m × codes rows), the same collect every scoring
-    * path already does. */
+    * centroid. */
   private def readCodebooks(spark: SparkSession,
       path: String): Map[(Int, Int), Array[Double]] =
-    codebookMap(codebooksFrame(spark, path).collect())
+    codebooksSidecar(spark, path)._1
 
   /** code[j] = nearest frozen codeword for subvector j (squared-L2,
     * ties to the lowest id — KMeansModel.transform's first-wins). The

@@ -227,6 +227,10 @@ object AudioDedup {
    * no plan sidecar exists to freeze. Pairs materialize BEFORE the
    * index write (the batch must not collide with its own rows through
    * the index path).
+   *
+   * @param pairsSink as [[Dedup.ingestBatch]]'s: with a sink the
+   *   returned frame is a lazy read of that directory, valid only until
+   *   the directory is next overwritten.
    */
   def ingestAudioBatch(batchFps: DataFrame, idCol: String,
       indexPath: Option[String], indexBatchDir: String,

@@ -43,7 +43,9 @@ object Dedup {
     * partition, and the returned frame is safe to consume after that
     * write: sink mode re-reads the written directory under its known
     * schema — never the live plan, which by then would see the batch's
-    * own rows through the index. */
+    * own rows through the index. That re-read is lazy, so the frame is
+    * valid only until the sink directory is next overwritten (see the
+    * ingest verbs' `pairsSink`). */
   private[graft] def materializePairs(pairs: DataFrame,
       pairsSink: Option[String]): DataFrame = {
     val deduped = pairs.distinct()
@@ -1186,7 +1188,12 @@ object Dedup {
   /** @param pairsSink the streaming cadence's per-batch pairs
     *   directory: when set, the pairs materialize DIRECTLY into it
     *   (see [[materializePairs]] — one write job instead of
-    *   checkpoint-then-rewrite) and the returned frame reads it back. */
+    *   checkpoint-then-rewrite) and the returned frame reads it back.
+    *   That frame is a lazy read of the directory, not a snapshot:
+    *   consume it before anything overwrites the directory (a replay of
+    *   the batch, or a later batch given the same sink) — after that it
+    *   reads the newer rows or fails mid-scan. Without a sink the frame
+    *   is a GC-tracked local checkpoint that keeps its own rows. */
   def ingestBatch(newDocs: DataFrame, textCol: String, idCol: String,
       indexPath: Option[String], indexBatchDir: String, shingleK: Int = 5,
       numHashes: Int = 16, bands: Int = 4,

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, DataFrameWriter, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -52,6 +53,11 @@ import org.apache.spark.sql.types.StructType
  * the renames the live path is missing and every reader fails closed
  * with the rename-back recovery ([[requireNoCrashedSwap]]); after the
  * second only garbage remains.
+ *
+ * '''Read memo''' ([[sidecar]], [[dataSchema]]): a session decodes a
+ * sidecar, and infers the data read schema, once per on-disk identity
+ * of the sidecar files, so a warm probe of an unchanged index runs no
+ * decode or inference job. The gates above still run on every read.
  *
  * Design decisions:
  *  - A reader racing a swap sees a MISSING path between the two renames
@@ -156,6 +162,71 @@ private[graft] object IndexStore {
         finally in.close()
       Some(s.trim.toLong)
     } catch { case scala.util.control.NonFatal(_) => None }
+  }
+
+  // ----------------------------------------------------------- sidecar memo
+
+  /** Decoded sidecars and read schemas per SparkContext, keyed by
+    * on-disk identity (see [[sidecar]]); access-ordered, at most
+    * [[MemoEntries]] per context. */
+  private val memos =
+    new java.util.WeakHashMap[SparkContext, java.util.LinkedHashMap[Any, Any]]()
+  private val MemoEntries = 64
+
+  /** `decode` of the sidecar `name` under `path`, memoized for the
+    * session by its on-disk identity: the qualified sidecar directory
+    * and the sorted (name, length, mtime) of its files — one driver
+    * `listStatus`, no Spark job. Every build, rebuild and reindex writes
+    * sidecars as Spark part files under fresh job-UUID names, so any
+    * rewrite changes the key. A vacuum leaves them in place (the key
+    * holds); a compaction copies them byte-identical (a fresh key, one
+    * more decode). No writer bumps anything, so no missed bump can
+    * serve a stale decode. A missing sidecar is never memoized
+    * (`decode` runs and fails its own way).
+    *
+    * Only the decode is skipped: callers run every gate (crashed swap,
+    * interrupted vacuum, missing sidecar, layout cross-checks) on every
+    * call. One decode per sidecar name. */
+  def sidecar[A](spark: SparkSession, path: String, name: String)
+      (decode: => A): A =
+    memoized(spark, path, "sidecar", Seq(name))(decode)
+
+  /** The read schema of the index's data, inferred once per identity of
+    * its `geometry` sidecars (as [[sidecar]]): every rebuild and reindex
+    * rewrites them, and appends, vacuums and compactions write the
+    * columns the index already has. A probe of an unchanged index then
+    * pays no schema-inference job. Callers run the sidecar gates first;
+    * with a sidecar missing the schema is inferred, not memoized. */
+  def dataSchema(spark: SparkSession, path: String,
+      geometry: String*): StructType =
+    memoized(spark, path, "schema", geometry)(spark.read.parquet(path).schema)
+
+  private def memoized[A](spark: SparkSession, path: String, kind: String,
+      names: Seq[String])(decode: => A): A = {
+    val fs = fsOf(spark, path)
+    val ids = names.map { n =>
+      val dir = fs.makeQualified(child(path, n))
+      try Some(dir.toString -> fs.listStatus(dir).toSeq
+          .map(s => (s.getPath.getName, s.getLen, s.getModificationTime))
+          .sorted)
+      catch { case _: java.io.FileNotFoundException => None }
+    }
+    if (ids.contains(None)) decode
+    else {
+      val key = (kind, ids.flatten)
+      val memo = memos.synchronized(memos.computeIfAbsent(spark.sparkContext,
+        _ => new java.util.LinkedHashMap[Any, Any](16, 0.75f, true) {
+          override def removeEldestEntry(
+              e: java.util.Map.Entry[Any, Any]): Boolean =
+            size() > MemoEntries
+        }))
+      memo.synchronized(Option(memo.get(key))).map(_.asInstanceOf[A])
+        .getOrElse {
+          val v = decode
+          memo.synchronized(memo.put(key, v))
+          v
+        }
+    }
   }
 
   // ---------------------------------------------------------------- gates

@@ -65,7 +65,16 @@ object NgramLm {
     * (guide §3.1: estimates are wrong after UDFs/checkpoints; hint
     * when you know). Oversized vocabularies (the 100 TB regime) keep
     * the un-hinted shuffle join — correct at that scale — while still
-    * paying the corpus pass only once. */
+    * paying the corpus pass only once.
+    *
+    * Lifetime: the checkpointed pair table's blocks are held by the
+    * returned model's frames. Spark's ContextCleaner drops them once the
+    * [[BigramModel]] and every frame derived from it are unreachable
+    * and the driver has garbage-collected them. A session that trains
+    * many models therefore holds the blocks of every model it still
+    * references; a dropped model frees its blocks at a later driver GC,
+    * not at once. Keep references only to the models in use — no
+    * explicit release is needed. */
   def train(docs: DataFrame, textCol: String): BigramModel = {
     val toksCol = col("__toks")
     val pairCounts = docs

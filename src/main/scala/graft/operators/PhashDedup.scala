@@ -148,6 +148,10 @@ object PhashDedup {
    * plan sidecar exists to freeze. Pairs materialize BEFORE the index
    * write (the batch must not collide with its own rows through the
    * index path).
+   *
+   * @param pairsSink as [[Dedup.ingestBatch]]'s: with a sink the
+   *   returned frame is a lazy read of that directory, valid only until
+   *   the directory is next overwritten.
    */
   def ingestPhashBatch(batchHashes: DataFrame, idCol: String,
       hashCol: String, indexPath: Option[String], indexBatchDir: String,

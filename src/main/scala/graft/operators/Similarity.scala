@@ -723,6 +723,10 @@ object Similarity {
    * [[graft.streaming.Streams.annIngest]], so the first batch should
    * be representative. Pairs materialize BEFORE the index write (the
    * batch must not collide with its own rows through the index path).
+   *
+   * @param pairsSink as [[Dedup.ingestBatch]]'s: with a sink the
+   *   returned frame is a lazy read of that directory, valid only until
+   *   the directory is next overwritten.
    */
   def ingestEmbeddingBatch(newVecs: DataFrame, vecCol: String,
       idCol: String, indexPath: Option[String], indexBatchDir: String,
