@@ -247,7 +247,7 @@ object QueriesMultimodal {
     // stream_dedup_maintain / stream_ann_maintain /
     // stream_ivfpq_maintain / stream_emb_maintain. The shared
     // layout-generic maintenance (health-gated targeted vacuum /
-    // size-aware compaction — maybeMaintainMinhash, unchanged) runs
+    // size-aware compaction — Streams' band-step maintenance) runs
     // every batch; maintenance must not change a single pair (the row
     // shares the one-shot oracle) and the require pins that the
     // compaction really ran (batch= generations collapsed to one) and

@@ -273,14 +273,25 @@ private[graft] object IndexStore {
     * underscore trees (sidecars, tombstones, vacuum staging) — the data
     * reader's own hidden-path rule. One recursive listing. */
   def dataFiles(fs: FileSystem, path: String): Seq[FileStatus] = {
-    val root = fs.makeQualified(new Path(path)).toUri.getPath
     val out = Seq.newBuilder[FileStatus]
-    FsWalk.foreachFile(fs, new Path(path)) { st =>
-      val rel = st.getPath.toUri.getPath.stripPrefix(root).split("/")
-      if (st.getPath.getName.endsWith(".parquet") &&
-        !rel.init.exists(_.startsWith("_"))) out += st
-    }
+    val isData = dataRule(fs, path)
+    FsWalk.foreachFile(fs, new Path(path))(st => if (isData(st)) out += st)
     out.result()
+  }
+
+  /** Whether [[dataFiles]] is non-empty, stopping at the first data
+    * file; false for a missing path. A micro-batch that wrote nothing
+    * leaves a `batch=` dir holding only `_SUCCESS`, and a tree of
+    * sidecars alone has no schema a reader could infer. */
+  def hasData(fs: FileSystem, path: String): Boolean =
+    fs.exists(new Path(path)) &&
+      FsWalk.existsFile(fs, new Path(path))(dataRule(fs, path))
+
+  private def dataRule(fs: FileSystem, path: String): FileStatus => Boolean = {
+    val root = fs.makeQualified(new Path(path)).toUri.getPath
+    st => st.getPath.getName.endsWith(".parquet") &&
+      !st.getPath.toUri.getPath.stripPrefix(root).split("/").init
+        .exists(_.startsWith("_"))
   }
 
   // ------------------------------------------------------------ tombstones

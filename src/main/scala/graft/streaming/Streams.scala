@@ -1,10 +1,16 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
+  OutputMode, StreamingQuery}
+import org.apache.spark.storage.StorageLevel
 import java.sql.Timestamp
-import graft.operators.IndexStore
+import graft.multimodal.{MediaAsset, Multimodal}
+import graft.operators.{AnnIndex, AudioDedup, Decontaminate, Dedup,
+  IndexStore, PhashDedup, Similarity}
+import graft.pipelines.Curation
 
 /** One event row for typed streaming ops. */
 case class Event(event_id: Long, user_id: Long, event_type: String,
@@ -169,695 +175,476 @@ object Streams {
    * carries the stream's progress; the sink itself holds no state.
    */
   def rosterSink(graduated: DataFrame, outDir: String, checkpointDir: String,
-      orderCols: Seq[String], maxRows: Int = 500)
-      : org.apache.spark.sql.streaming.StreamingQuery =
+      orderCols: Seq[String], maxRows: Int = 500): StreamingQuery =
     graduated.writeStream
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         graft.sinks.RosterSink.writeChunked(
           batch.toDF(), s"$outDir/batch=$batchId", orderCols, maxRows)
       }
       .start()
 
-  /**
-   * Streaming near-dup ingestion — the production cadence of the
-   * incremental minhash index (SURVEY dedup family; the batch twin is
-   * `Dedup.incrementalNearDupPairs` + `buildMinhashIndex`): each
-   * micro-batch of documents is deduplicated against everything ingested
-   * BEFORE it (corpus text never re-read — signatures come off the
-   * index), its near-dup pairs land under `pairsDir/batch=<id>`, and its
-   * own signatures are added to the index under `indexDir/batch=<id>`.
-   *
-   * Idempotency follows the [[rosterSink]] batch-directory contract: both
-   * writes are per-batch-dir overwrites, so a replayed batch rewrites its
-   * two directories instead of duplicating rows. If a crash lands between
-   * the index write and the checkpoint commit, the replayed batch sees its
-   * own rows in the index — self-pairs are filtered inside
-   * [[graft.operators.Dedup.ingestBatch]] and its pair `distinct()`
-   * collapses in-batch pairs that would otherwise double-emit via the
-   * index path.
-   *
-   * The index directory is OWNED by this job (batch=N/band=K layout);
-   * don't mix with `buildMinhashIndex`'s flat band=K layout in one dir.
-   */
-  /** True only when the directory holds at least one parquet DATA file:
-    * an all-rejected or empty micro-batch leaves a batch dir with only
-    * `_SUCCESS`, and `fs.exists && listStatus.nonEmpty` would then send
-    * the next batch into `spark.read.parquet` on a data-less tree —
-    * schema inference fails and the stream dies. */
-  private def indexHasData(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) false
-    else graft.operators.FsWalk.existsFile(fs, p)(
-      _.getPath.getName.endsWith(".parquet"))
-  }
+  // ------------------------------------------------ index-ingest driver
 
-  def dedupIngest(docs: DataFrame, textCol: String, idCol: String,
-      indexDir: String, pairsDir: String, checkpointDir: String,
-      shingleK: Int = 5, numHashes: Int = 16, bands: Int = 4,
-      minJaccard: Double = 0.8, maintainEvery: Int = 0)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
+  /** One micro-batch of an index family: (batch rows, batch id). */
+  private type Step = (DataFrame, Long) => Unit
+
+  /**
+   * The one driver behind every streaming index family below. Each
+   * micro-batch of `input` is checked against the index persisted at
+   * `indexDir`, then added to it: the reference's incremental batch
+   * (new rows in, checked against state, appended to state) at stream
+   * cadence. The index directory is owned by its stream. Before a batch
+   * touches it, the driver refuses a crashed maintenance swap
+   * ([[swapChecked]]).
+   *
+   * '''Replay contract.''' The checkpoint runs each batch once in normal
+   * operation; a crash after a batch's writes land but before the
+   * checkpoint commits replays that batch. Every family survives it:
+   *  - the band families ([[bandStep]]) write only `batch=<id>`
+   *    directories — index rows, pairs and rejects — in overwrite mode,
+   *    so a replay rewrites its own directories and never duplicates
+   *    rows. A replay that sees its own rows in the index drops the
+   *    self-pairs, and the pair `distinct()` collapses the rest. A replay
+   *    of a batch that maintenance already compacted rewrites its
+   *    `batch=` dir next to the compacted generation: duplicate index
+   *    rows, which pair results dedupe and the next compaction reclaims;
+   *  - the ANN families ([[annStep]]) append into shared files, so each
+   *    applied batch stamps `<lineage>:<id>` in the `_stream_batch`
+   *    sidecar and an exact replay under the same checkpoint lineage is
+   *    skipped. A crash between the data write and the stamp still
+   *    replays into duplicate rows — one more kNN candidate each, never a
+   *    loss and never a geometry change. Pair with
+   *    [[graft.sources.FileCommit]]'s manifest upstream, or dedup on the
+   *    id at read, when that sliver matters.
+   * Maintenance ([[maintainAt]]) runs between batches. foreachBatch is
+   * sequential, so its staged swaps never race the stream's own writes,
+   * and every maintenance verb is answer-preserving.
+   */
+  private def ingestStream(input: DataFrame, checkpointDir: String,
+      indexDir: String, op: String)(step: Step): StreamingQuery =
+    input.writeStream
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val df = batch.toDF()
-        val spark = df.sparkSession
-        IndexStore.requireNoCrashedSwap(IndexStore.fsOf(spark, indexDir),
-          indexDir, "dedupIngest")
-        // one signature pass per batch: pairs + index write share the
-        // cached banded table (Dedup.ingestBatch); the pairs sink makes
-        // the per-batch pairs write the materializing action itself
-        // (r19 — one job, AQE-sized files, instead of checkpoint +
-        // re-write of every checkpointed partition)
-        graft.operators.Dedup.ingestBatch(df, textCol, idCol,
-          if (indexHasData(spark, indexDir)) Some(indexDir) else None,
-          s"$indexDir/batch=$batchId",
-          shingleK, numHashes, bands, minJaccard,
-          pairsSink = Some(s"$pairsDir/batch=$batchId"))
-        maybeMaintainMinhash(spark, indexDir, batchId, maintainEvery)
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        swapChecked(indexDir, op)(step)(batch.toDF(), batchId)
       }
       .start()
 
-  /** In-stream maintenance for the minhash-index ingest family (round
-    * 15, the annIngest treatment): a long-lived stream accumulates one
-    * batch= generation per micro-batch forever — with `maintainEvery >
-    * 0`, every Nth batch consults
-    * [[graft.operators.Dedup.minhashIndexHealth]] and executes its
-    * by-cause prescription (round 16): tombstone mass alone gets the
-    * TARGETED vacuum (affected files only), fragmentation the full
-    * compaction (generations collapse to one). The fragmentation
-    * trigger is SIZE-AWARE — after the first collapse, fresh
-    * generations must carry `minCompactionGain` of the compacted
-    * base's byte mass before another full rewrite is prescribed, so a
-    * stream that maintains every batch pays amortized-LINEAR lifetime
-    * rewrite bytes (the round-15 count-only trigger full-rewrote the
-    * index every ~2 micro-batches after the first collapse —
-    * quadratic). foreachBatch is sequential, so the staged swap never
-    * races the calling stream's own writes; a checkpoint REPLAY of an
-    * already-compacted batch rewrites its batch= dir next to the
-    * compacted generation — duplicate signature rows, which pair
-    * results dedupe and the next compaction reclaims. Shared by
-    * [[dedupIngest]], [[qualityGatedDedupIngest]] and
-    * [[curationIngest]] (mechanism spec'd on the first; the others
-    * delegate here verbatim). */
-  private def maybeMaintainMinhash(
-      spark: org.apache.spark.sql.SparkSession, indexDir: String,
-      batchId: Long, maintainEvery: Int): Unit =
-    if (maintainEvery > 0 && (batchId + 1) % maintainEvery == 0 &&
-      indexHasData(spark, indexDir)) {
-      val acts = graft.operators.Dedup.maintainMinhashIndex(spark, indexDir)
-      if (acts.nonEmpty)
-        System.err.println(s"[streams] ingest maintenance($indexDir) " +
-          s"batch $batchId: ${acts.mkString(", ")}")
+  /** `step` behind the crashed-swap gate: with the live path missing and
+    * the pre-swap tree aside, the batch fails with the rename-back
+    * recovery instead of training a fresh index over the orphan. `op`
+    * names the entry point in the message. */
+  private def swapChecked(indexDir: String, op: String)(step: Step): Step =
+    (df, batchId) => {
+      IndexStore.requireNoCrashedSwap(
+        IndexStore.fsOf(df.sparkSession, indexDir), indexDir, op)
+      step(df, batchId)
     }
 
+  /** Maintenance on the stream's cadence: after every `every`-th batch
+    * (never at 0), logging what `maintain` did. */
+  private def maintainAt(indexDir: String, batchId: Long, every: Int)(
+      maintain: => Seq[String]): Unit =
+    if (every > 0 && (batchId + 1) % every == 0) {
+      val acts = maintain
+      if (acts.nonEmpty) System.err.println(s"[streams] ingest " +
+        s"maintenance($indexDir) batch $batchId: ${acts.mkString(", ")}")
+    }
+
+  /** The band families' micro-batch. `ingest(prior, out, pairsSink)`
+    * adds the batch to `out = indexDir/batch=<id>` and writes its
+    * near-dup pairs against `prior` (the index before this batch) to
+    * `pairsSink = pairsDir/batch=<id>`. A family that freezes a plan in
+    * its first batch names the plan's `geometry` sidecar, and a prior
+    * index exists when that sidecar does: the plan is written after the
+    * data, so plan-missing means the training batch never committed and
+    * its replay re-trains over its own `batch=` dir. Otherwise a prior
+    * index exists when the tree holds data. `maintain` runs on the
+    * cadence once the index holds data and its geometry. */
+  private def bandStep(spark: SparkSession, batchId: Long,
+      indexDir: String, pairsDir: String, maintainEvery: Int,
+      geometry: Option[String] = None)(
+      ingest: (Option[String], String, Option[String]) => Unit)(
+      maintain: => Seq[String]): Unit = {
+    val fs = IndexStore.fsOf(spark, indexDir)
+    def hasGeometry = geometry.forall(g => fs.exists(new Path(s"$indexDir/$g")))
+    val prior = geometry.fold(IndexStore.hasData(fs, indexDir))(_ => hasGeometry)
+    ingest(Option.when(prior)(indexDir), s"$indexDir/batch=$batchId",
+      Some(s"$pairsDir/batch=$batchId"))
+    maintainAt(indexDir, batchId, maintainEvery) {
+      if (IndexStore.hasData(fs, indexDir) && hasGeometry) maintain else Nil
+    }
+  }
+
+  /** The minhash band step of [[dedupIngest]] and the gated families:
+    * one signature pass per batch, the pairs write its materializing
+    * action ([[graft.operators.Dedup.ingestBatch]]). */
+  private def minhashStep(textCol: String, idCol: String,
+      indexDir: String, pairsDir: String, shingleK: Int, numHashes: Int,
+      bands: Int, minJaccard: Double, maintainEvery: Int): Step = (df, batchId) =>
+    bandStep(df.sparkSession, batchId, indexDir, pairsDir, maintainEvery) {
+      (prior, out, sink) => Dedup.ingestBatch(df, textCol, idCol, prior, out,
+        shingleK, numHashes, bands, minJaccard, pairsSink = sink)
+    }(Dedup.maintainMinhashIndex(df.sparkSession, indexDir))
+
+  /** The gated families' split: the non-`keep` rows of `judged` land in
+    * `rejectsDir/batch=<id>` with their disposition, and the keepers,
+    * without it, go to `keep`. The split is null-safe: a gate built from
+    * a `when()` chain with no `otherwise()` leaves a null disposition,
+    * and those rows are rejects, never silent drops. The gate runs once
+    * per batch: `judged` is persisted for its two readers and released
+    * before the batch returns. */
+  private def judgedStep(judged: DataFrame, rejectsDir: String,
+      batchId: Long)(keep: Step): Unit =
+    persisted(judged) { j =>
+      j.filter(!(col("disposition") <=> "keep"))
+        .write.mode("overwrite").parquet(s"$rejectsDir/batch=$batchId")
+      keep(j.filter(col("disposition") <=> "keep").drop("disposition"), batchId)
+    }
+
+  private def persisted[T](df: DataFrame)(f: DataFrame => T): T = {
+    val p = df.persist(StorageLevel.MEMORY_AND_DISK)
+    try f(p) finally p.unpersist(false)
+  }
+
   /**
-   * Streaming EMBEDDING near-dup ingestion (round 16 — [[dedupIngest]]'s
-   * shape on the embedding band index): each micro-batch of (id, vector)
-   * rows is deduplicated against everything ingested BEFORE it (corpus
-   * vectors never re-banded — keys and vectors come off the index), its
-   * near-dup pairs land under `pairsDir/batch=<id>`, and its own banded
-   * rows are added under `indexDir/batch=<id>`. The FIRST batch is the
+   * Streaming near-dup ingestion on the minhash index, the streaming
+   * twin of `Dedup.incrementalNearDupPairs` + `buildMinhashIndex`: each
+   * micro-batch of documents is deduplicated against everything ingested
+   * before it (signatures come off the index; corpus text is never
+   * re-read). The index uses the `batch=N/band=K` layout; don't mix it
+   * with `buildMinhashIndex`'s flat `band=K` layout in one dir. With
+   * `maintainEvery > 0`, every Nth batch executes
+   * [[graft.operators.Dedup.maintainMinhashIndex]]'s by-cause
+   * prescription: the targeted vacuum for tombstone mass, the full
+   * compaction for fragmentation. The fragmentation trigger is
+   * size-aware (fresh generations must carry `minCompactionGain` of the
+   * compacted base's bytes), so a stream that maintains every batch pays
+   * amortized-linear lifetime rewrite bytes.
+   */
+  def dedupIngest(docs: DataFrame, textCol: String, idCol: String,
+      indexDir: String, pairsDir: String, checkpointDir: String,
+      shingleK: Int = 5, numHashes: Int = 16, bands: Int = 4,
+      minJaccard: Double = 0.8, maintainEvery: Int = 0): StreamingQuery =
+    ingestStream(docs, checkpointDir, indexDir, "dedupIngest")(
+      minhashStep(textCol, idCol, indexDir, pairsDir, shingleK, numHashes,
+        bands, minJaccard, maintainEvery))
+
+  /**
+   * Streaming embedding near-dup ingestion: [[dedupIngest]] on the
+   * embedding band index, for (id, vector) rows. The first batch is the
    * train step: it freezes the banding plan in the index's `_embplan`
-   * ([[graft.operators.Similarity.ingestEmbeddingBatch]]), so the first
-   * batch should be representative — the [[annIngest]] contract. Both
-   * writes are per-batch-dir overwrites (replay rewrites, never
-   * duplicates), and with `maintainEvery > 0` the shared in-stream
-   * maintenance runs ([[maybeMaintainMinhash]] — the band-index
-   * lifecycle verbs are layout-generic, so the SAME health-gated
-   * vacuum/compaction serves this index, with compaction carrying the
-   * `_embplan` sidecar).
+   * ([[graft.operators.Similarity.ingestEmbeddingBatch]]), so it should
+   * be representative, and that sidecar decides train vs append. The
+   * maintenance ([[graft.operators.Similarity.maintainEmbeddingIndex]])
+   * also watches plan drift and answers it with a reindex from the
+   * index's own rows. Its occupancy-skew input is the one health input
+   * that costs a data-path job, so it is off in-stream unless
+   * `skewEvery = K > 0`, when every Kth maintenance window runs the
+   * column-pruned (band, key) occupancy aggregate — catching a mix that
+   * drifts anisotropic without count growth.
    */
   def embDedupIngest(vecs: DataFrame, vecCol: String, idCol: String,
       indexDir: String, pairsDir: String, checkpointDir: String,
       minCosine: Double = 0.95, bands: Int = 4, bitsPerBand: Int = 16,
       autoPlan: Boolean = true, targetOccupancy: Double = 2.0,
       maintainEvery: Int = 0, skewEvery: Int = 0,
-      skewFactor: Double = 8.0)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    vecs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        embIngestBatchStep(batch.toDF(), vecCol, idCol, indexDir,
-          pairsDir, minCosine, bands, bitsPerBand, autoPlan,
-          targetOccupancy, maintainEvery, batchId, skewEvery, skewFactor)
-      }
-      .start()
+      skewFactor: Double = 8.0): StreamingQuery =
+    ingestStream(vecs, checkpointDir, indexDir, "embDedupIngest")(
+      embStep(vecCol, idCol, indexDir, pairsDir, minCosine, bands,
+        bitsPerBand, autoPlan, targetOccupancy, maintainEvery, skewEvery,
+        skewFactor))
 
-  /** One [[embDedupIngest]] micro-batch (package-private so the crash-
-    * replay decision is testable). Train-vs-append is decided by PLAN
-    * existence, not data existence: the `_embplan` sidecar is written
-    * at the END of the training batch, after its data — so a crash
-    * between the two leaves batch-0 data with no plan, and a
-    * data-existence test would then hand the REPLAY of batch 0 the
-    * append path, which fails closed on the missing plan and leaves
-    * the stream stuck until a manual rebuild. Plan-missing instead
-    * means "the training batch never committed" (batch 1 can only have
-    * run after batch 0's checkpoint commit, which follows the plan
-    * write), so the replay safely re-trains and overwrites its own
-    * `batch=0` dir — self-healing, never mixed-plan keys. */
+  /** One [[embDedupIngest]] micro-batch, gate included (package-private
+    * so the crash-replay decision is testable). */
   private[graft] def embIngestBatchStep(df: DataFrame, vecCol: String,
       idCol: String, indexDir: String, pairsDir: String,
       minCosine: Double, bands: Int, bitsPerBand: Int, autoPlan: Boolean,
       targetOccupancy: Double, maintainEvery: Int, batchId: Long,
-      skewEvery: Int = 0, skewFactor: Double = 8.0): Unit = {
-    val spark = df.sparkSession
-    IndexStore.requireNoCrashedSwap(IndexStore.fsOf(spark, indexDir),
-      indexDir, "embDedupIngest")
-    val fs = new org.apache.hadoop.fs.Path(indexDir).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    val hasPlan = fs.exists(
-      new org.apache.hadoop.fs.Path(s"$indexDir/_embplan"))
-    graft.operators.Similarity.ingestEmbeddingBatch(df,
-      vecCol, idCol, if (hasPlan) Some(indexDir) else None,
-      s"$indexDir/batch=$batchId", minCosine, bands, bitsPerBand,
-      autoPlan, targetOccupancy,
-      pairsSink = Some(s"$pairsDir/batch=$batchId"))
-    maybeMaintainEmbedding(spark, indexDir, batchId, maintainEvery,
-      skewEvery, skewFactor)
-  }
+      skewEvery: Int = 0, skewFactor: Double = 8.0): Unit =
+    swapChecked(indexDir, "embDedupIngest")(embStep(vecCol, idCol,
+      indexDir, pairsDir, minCosine, bands, bitsPerBand, autoPlan,
+      targetOccupancy, maintainEvery, skewEvery, skewFactor))(df, batchId)
 
-  /** [[maybeMaintainMinhash]]'s embedding-index sibling (round 17):
-    * the health snapshot additionally watches PLAN DRIFT — this
-    * index's geometry is data-dependent and frozen at the training
-    * batch, so a stream that grows 100× past batch 0 would otherwise
-    * keep batch-0 banding forever while per-band candidate mass
-    * inflates — and its reindex prescription rebuilds from the index's
-    * own rows under the staged swap (sequential foreachBatch: the swap
-    * can never race an append). The occupancy-SKEW check is excluded
-    * by default in-stream (`checkOccupancy = false`): it is the one
-    * health input that costs a data-path job, so it belongs to the
-    * maintenance window, not the per-batch gate; drift, fragmentation
-    * and tombstone mass are all sidecar/listing-priced. With
-    * `skewEvery = K > 0` (round 18, judge ask #4) every Kth MAINTENANCE
-    * WINDOW additionally runs the column-pruned (band, key) occupancy
-    * aggregate — closing the in-stream blind spot where the data mix
-    * drifts anisotropic WITHOUT count growth (a hot sign cell piles up
-    * while the drift flag, which only watches the vector count, stays
-    * quiet forever): the cost is one int-column aggregate per
-    * K·maintainEvery batches, amortized and caller-priced, and the
-    * prescribed reindex rides the same answer-preserving staged swap.
-    * Gated on the plan sidecar: before the training batch commits
-    * there is nothing to maintain. */
-  private def maybeMaintainEmbedding(
-      spark: org.apache.spark.sql.SparkSession, indexDir: String,
-      batchId: Long, maintainEvery: Int, skewEvery: Int = 0,
-      skewFactor: Double = 8.0): Unit =
-    if (maintainEvery > 0 && (batchId + 1) % maintainEvery == 0 &&
-      indexHasData(spark, indexDir) &&
-      new org.apache.hadoop.fs.Path(s"$indexDir/_embplan").getFileSystem(
-        spark.sessionState.newHadoopConf())
-        .exists(new org.apache.hadoop.fs.Path(s"$indexDir/_embplan"))) {
-      // 1-based maintenance-window index: the Kth window pays the one
-      // data-path health input, every other stays sidecar/listing-only
-      val window = (batchId + 1) / maintainEvery
-      val checkOcc = skewEvery > 0 && window % skewEvery == 0
-      val acts = graft.operators.Similarity.maintainEmbeddingIndex(
-        spark, indexDir, skewFactor = skewFactor,
-        checkOccupancy = checkOcc)
-      if (acts.nonEmpty)
-        System.err.println(s"[streams] ingest maintenance($indexDir) " +
-          s"batch $batchId${if (checkOcc) " (skew window)" else ""}: " +
-          acts.mkString(", "))
-    }
+  private def embStep(vecCol: String, idCol: String, indexDir: String,
+      pairsDir: String, minCosine: Double, bands: Int, bitsPerBand: Int,
+      autoPlan: Boolean, targetOccupancy: Double, maintainEvery: Int,
+      skewEvery: Int, skewFactor: Double): Step = (df, batchId) =>
+    bandStep(df.sparkSession, batchId, indexDir, pairsDir, maintainEvery,
+      geometry = Some("_embplan")) { (prior, out, sink) =>
+      Similarity.ingestEmbeddingBatch(df, vecCol, idCol, prior, out,
+        minCosine, bands, bitsPerBand, autoPlan, targetOccupancy,
+        pairsSink = sink)
+    }(Similarity.maintainEmbeddingIndex(df.sparkSession, indexDir,
+      skewFactor = skewFactor,
+      // every skewEvery-th maintenance window (1-based) pays the data-path
+      // occupancy input; the rest stay sidecar/listing-priced
+      checkOccupancy = skewEvery > 0 &&
+        (batchId + 1) / maintainEvery % skewEvery == 0))
 
   /**
-   * Streaming perceptual-hash near-dup ingestion (round 18 —
-   * [[embDedupIngest]]'s shape on the FOURTH index family, completing
-   * the streaming symmetry): each micro-batch of media rows is hashed
-   * ONCE ([[graft.multimodal.Multimodal.perceptualHash]] — the decode
-   * gate runs inside the batch, one codec init per partition),
-   * deduplicated against everything ingested BEFORE it (corpus
-   * payloads never re-decoded, never re-hashed — keys and hashes come
-   * off the index), its pairs land under `pairsDir/batch=<id>`, and
-   * its banded rows are added under `indexDir/batch=<id>`. No training
-   * step exists: the 64-bit hash width is fixed and the banding
-   * data-independent, so there is no plan to freeze and no
-   * representative-first-batch contract. Both writes are per-batch-dir
-   * overwrites (replay rewrites, never duplicates), and with
-   * `maintainEvery > 0` the shared layout-generic in-stream
-   * maintenance runs ([[maybeMaintainMinhash]] — health-gated targeted
-   * vacuum / size-aware compaction, unchanged).
+   * Streaming perceptual-hash near-dup ingestion: [[dedupIngest]] on the
+   * phash index, for media rows. Each batch is hashed once
+   * ([[graft.multimodal.Multimodal.perceptualHash]]; the decode gate runs
+   * inside the batch) and corpus payloads are never re-decoded — keys
+   * and hashes come off the index. The 64-bit hash width is fixed and
+   * the banding data-independent, so there is no plan to freeze and
+   * batch order is free.
    */
   def phashIngest(assets: DataFrame, payloadCol: String, idCol: String,
       indexDir: String, pairsDir: String, checkpointDir: String,
       maxHamming: Int = 6, bands: Int = 4, maintainEvery: Int = 0)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    assets.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val df = batch.toDF()
-        val spark = df.sparkSession
-        IndexStore.requireNoCrashedSwap(IndexStore.fsOf(spark, indexDir),
-          indexDir, "phashIngest")
-        implicit val enc = org.apache.spark.sql.Encoders
-          .product[graft.multimodal.MediaAsset]
-        val hashes = graft.multimodal.Multimodal.perceptualHash(
-          df.select(col(idCol).cast("long").as("media_id"),
-            lit("image").as("kind"),
-            col(payloadCol).cast("binary").as("payload"),
-            lit("stream").as("source")).as[graft.multimodal.MediaAsset])
-        graft.operators.PhashDedup.ingestPhashBatch(hashes,
-          "media_id", "phash",
-          if (indexHasData(spark, indexDir)) Some(indexDir) else None,
-          s"$indexDir/batch=$batchId", maxHamming, bands,
-          pairsSink = Some(s"$pairsDir/batch=$batchId"))
-        maybeMaintainMinhash(spark, indexDir, batchId, maintainEvery)
-      }
-      .start()
+      : StreamingQuery =
+    ingestStream(assets, checkpointDir, indexDir, "phashIngest") {
+      (df, batchId) =>
+        val hashes = Multimodal.perceptualHash(df.select(
+          col(idCol).cast("long").as("media_id"), lit("image").as("kind"),
+          col(payloadCol).cast("binary").as("payload"),
+          lit("stream").as("source")).as(Encoders.product[MediaAsset]))
+        bandStep(df.sparkSession, batchId, indexDir, pairsDir,
+          maintainEvery) { (prior, out, sink) =>
+          PhashDedup.ingestPhashBatch(hashes, "media_id", "phash", prior,
+            out, maxHamming, bands, pairsSink = sink)
+        }(Dedup.maintainMinhashIndex(df.sparkSession, indexDir))
+    }
 
   /**
-   * Streaming AUDIO near-dup ingestion (round 18 continuation —
-   * [[phashIngest]]'s shape on the audio-fingerprint index, the fifth
-   * streaming family face): each micro-batch of media rows is
-   * fingerprinted ONCE ([[graft.multimodal.Multimodal
-   * .audioFingerprint]] — one mapPartitions pass, assets below the
-   * minimum-duration gate emit nothing), deduplicated against
-   * everything ingested BEFORE it (corpus payloads never re-read —
-   * full fingerprint sequences come off the index's own rows), its
-   * pairs land under `pairsDir/batch=<id>`, and its banded rows are
-   * added under `indexDir/batch=<id>`. Like the phash family there is
-   * no training step — the window/band geometry is data-independent,
-   * so batch order is free. Both writes are per-batch-dir overwrites
-   * (replay rewrites, never duplicates), and with `maintainEvery > 0`
-   * the shared layout-generic in-stream maintenance runs
-   * ([[maybeMaintainMinhash]], unchanged).
+   * Streaming audio near-dup ingestion: [[phashIngest]] on the
+   * audio-fingerprint index. Each batch is fingerprinted once
+   * ([[graft.multimodal.Multimodal.audioFingerprint]]; assets below the
+   * minimum duration emit nothing), and corpus payloads are never re-read
+   * — full fingerprint sequences come off the index's own rows. The
+   * window/band geometry is data-independent, so batch order is free.
    */
   def audioIngest(assets: DataFrame, payloadCol: String, idCol: String,
       indexDir: String, pairsDir: String, checkpointDir: String,
-      maxBitErrors: Int = 28, maintainEvery: Int = 0)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    assets.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val df = batch.toDF()
-        val spark = df.sparkSession
-        IndexStore.requireNoCrashedSwap(IndexStore.fsOf(spark, indexDir),
-          indexDir, "audioIngest")
-        val fps = graft.multimodal.Multimodal.audioFingerprint(
-          df.select(col(idCol).cast("long").as(idCol),
-            col(payloadCol).cast("binary").as(payloadCol)),
-          payloadCol, idCol)
-        graft.operators.AudioDedup.ingestAudioBatch(fps,
-          idCol,
-          if (indexHasData(spark, indexDir)) Some(indexDir) else None,
-          s"$indexDir/batch=$batchId", maxBitErrors,
-          pairsSink = Some(s"$pairsDir/batch=$batchId"))
-        maybeMaintainMinhash(spark, indexDir, batchId, maintainEvery)
-      }
-      .start()
+      maxBitErrors: Int = 28, maintainEvery: Int = 0): StreamingQuery =
+    ingestStream(assets, checkpointDir, indexDir, "audioIngest") {
+      (df, batchId) =>
+        val fps = Multimodal.audioFingerprint(df.select(
+          col(idCol).cast("long").as(idCol),
+          col(payloadCol).cast("binary").as(payloadCol)), payloadCol, idCol)
+        bandStep(df.sparkSession, batchId, indexDir, pairsDir,
+          maintainEvery) { (prior, out, sink) =>
+          AudioDedup.ingestAudioBatch(fps, idCol, prior, out, maxBitErrors,
+            pairsSink = sink)
+        }(Dedup.maintainMinhashIndex(df.sparkSession, indexDir))
+    }
 
   /**
-   * The full streaming ingestion pipeline: quality-gate each micro-batch
-   * (a caller-supplied transform adding a `disposition` column — the
-   * composed first-failing-rule gate of `text_quality_gate` is the
-   * canonical one), write the rejects with their reasons, and feed only
-   * the keepers into the incremental near-dup index
-   * ([[graft.operators.Dedup.ingestBatch]] — one signature pass, pairs +
-   * index write off one cached table). The gate runs ONCE per batch: the
-   * judged frame is persisted for its two consumers and released before
-   * the batch returns, the same cache-lifecycle discipline as the batch
-   * operators. All three writes are per-batch-dir overwrites (replay
-   * rewrites, never duplicates).
+   * [[dedupIngest]] behind a quality gate: `gate` adds a `disposition`
+   * column (the composed first-failing-rule gate of `text_quality_gate`
+   * is the canonical one); the rejects land with their reasons under
+   * `rejectsDir/batch=<id>` and only the keepers feed the index.
    */
   def qualityGatedDedupIngest(docs: DataFrame,
       gate: DataFrame => DataFrame, textCol: String, idCol: String,
       indexDir: String, pairsDir: String, rejectsDir: String,
       checkpointDir: String, shingleK: Int = 5, numHashes: Int = 16,
       bands: Int = 4, minJaccard: Double = 0.8, maintainEvery: Int = 0)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        IndexStore.requireNoCrashedSwap(IndexStore.fsOf(spark, indexDir),
-          indexDir, "qualityGatedDedupIngest")
-        val judged = gate(batch.toDF())
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          // null-safe split: a gate built from a when() chain with no
-          // otherwise() leaves disposition null — those rows must land in
-          // rejects, not vanish (every dropped row stays explainable)
-          judged.filter(!(col("disposition") <=> "keep"))
-            .write.mode("overwrite").parquet(s"$rejectsDir/batch=$batchId")
-          val kept = judged.filter(col("disposition") <=> "keep")
-            .drop("disposition")
-          graft.operators.Dedup.ingestBatch(kept, textCol, idCol,
-              if (indexHasData(spark, indexDir)) Some(indexDir) else None,
-              s"$indexDir/batch=$batchId", shingleK, numHashes, bands,
-              minJaccard, pairsSink = Some(s"$pairsDir/batch=$batchId"))
-          maybeMaintainMinhash(spark, indexDir, batchId, maintainEvery)
-        } finally judged.unpersist(false)
-      }
-      .start()
+      : StreamingQuery = {
+    val keep = minhashStep(textCol, idCol, indexDir, pairsDir, shingleK,
+      numHashes, bands, minJaccard, maintainEvery)
+    ingestStream(docs, checkpointDir, indexDir, "qualityGatedDedupIngest") {
+      (df, batchId) => judgedStep(gate(df), rejectsDir, batchId)(keep)
+    }
+  }
 
   /**
    * The streaming twin of the full [[graft.pipelines.Curation]] chain's
-   * per-document stages: each micro-batch is quality-gated (the
-   * canonical composed gate), DECONTAMINATED against a static
-   * benchmark/eval set, and only clean keepers feed the incremental
-   * near-dup index. Contaminated docs land in rejects with disposition
-   * "contaminated" — every dropped row stays explainable. The eval set
-   * reduces to its distinct word n-grams ONCE at stream start
-   * (GC-tracked eager checkpoint, benchmark-sized) and broadcasts into
-   * each batch's semi-join; the corpus-level stages (survivor selection,
-   * mixture) remain scheduled batch jobs over the accumulated index —
-   * they need global state a micro-batch cannot see.
+   * per-document stages: [[qualityGatedDedupIngest]] with the canonical
+   * composed gate, plus decontamination against a static benchmark/eval
+   * set — contaminated keepers land in rejects with disposition
+   * "contaminated". The eval set reduces to its distinct word n-grams
+   * once at stream start (GC-tracked eager checkpoint, benchmark-sized)
+   * and broadcasts into each batch's semi-join. The gate's expression
+   * tree (tokenize, repetition, language scores, PII regexes) is the
+   * expensive part, so the gated frame is persisted too, for the
+   * contaminated-id derivation and the judged join. The corpus-level
+   * stages (survivor selection, mixture) stay scheduled batch jobs over
+   * the accumulated index: they need global state a micro-batch cannot
+   * see.
    */
   def curationIngest(docs: DataFrame, evalDocs: DataFrame,
       textCol: String, idCol: String,
       indexDir: String, pairsDir: String, rejectsDir: String,
       checkpointDir: String, shingleK: Int = 5, numHashes: Int = 16,
       bands: Int = 4, minJaccard: Double = 0.8, decontamN: Int = 5,
-      maintainEvery: Int = 0)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val evalGrams = graft.operators.Decontaminate
-      .evalGramSet(evalDocs, textCol, decontamN)
+      maintainEvery: Int = 0): StreamingQuery = {
+    val evalGrams = Decontaminate.evalGramSet(evalDocs, textCol, decontamN)
       .localCheckpoint(true)
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        IndexStore.requireNoCrashedSwap(IndexStore.fsOf(spark, indexDir),
-          indexDir, "curationIngest")
-        // the gate's expression tree (tokenize, repetition, language
-        // scores, PII regexes) is the expensive part — persist it so the
-        // contaminated-id derivation and the judged join both read the
-        // materialized frame (the run-ONCE-per-batch discipline of
-        // qualityGatedDedupIngest)
-        val gated = graft.pipelines.Curation.withDisposition(batch.toDF(), textCol)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val contaminatedIds = graft.operators.Decontaminate
-          .contaminatedIdsAgainstGrams(
-            gated.filter(col("disposition") === "keep"),
-            evalGrams, textCol, idCol, decontamN)
-        val judged = gated
-          .join(contaminatedIds.withColumn("__cont", lit(1)), Seq(idCol), "left")
-          .withColumn("disposition",
-            when(col("__cont") === 1 && col("disposition") === "keep",
-              "contaminated").otherwise(col("disposition")))
-          .drop("__cont")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          judged.filter(!(col("disposition") <=> "keep"))
-            .write.mode("overwrite").parquet(s"$rejectsDir/batch=$batchId")
-          val kept = judged.filter(col("disposition") <=> "keep")
-            .drop("disposition")
-          graft.operators.Dedup.ingestBatch(kept, textCol, idCol,
-              if (indexHasData(spark, indexDir)) Some(indexDir) else None,
-              s"$indexDir/batch=$batchId", shingleK, numHashes, bands,
-              minJaccard, pairsSink = Some(s"$pairsDir/batch=$batchId"))
-          maybeMaintainMinhash(spark, indexDir, batchId, maintainEvery)
-        } finally {
-          judged.unpersist(false)
-          gated.unpersist(false)
-        }
+    val keep = minhashStep(textCol, idCol, indexDir, pairsDir, shingleK,
+      numHashes, bands, minJaccard, maintainEvery)
+    ingestStream(docs, checkpointDir, indexDir, "curationIngest") {
+      (df, batchId) => persisted(Curation.withDisposition(df, textCol)) { gated =>
+        val contaminated = Decontaminate.contaminatedIdsAgainstGrams(
+          gated.filter(col("disposition") === "keep"), evalGrams, textCol,
+          idCol, decontamN).withColumn("__cont", lit(1))
+        judgedStep(gated.join(contaminated, Seq(idCol), "left")
+          .withColumn("disposition", when(col("__cont") === 1 &&
+            col("disposition") === "keep", "contaminated")
+            .otherwise(col("disposition")))
+          .drop("__cont"), rejectsDir, batchId)(keep)
       }
-      .start()
+    }
   }
 
+  /** The ANN families' micro-batch. An empty batch is skipped outright.
+    * Geometry, not data, decides `build` vs `append`: a build writes its
+    * `geometry` sidecars after the data, so data without all of them is
+    * an interrupted train whose checkpoint never committed — the
+    * replaying batch re-trains (mode overwrite) instead of handing
+    * `append` a tree it fails closed on. An exact replay (data and
+    * geometry present, stamp == this lineage and id) is skipped; the id
+    * comparison is deliberately `==`, so ids that restart append (a
+    * possible duplicate) rather than being skipped (a loss), and a stamp
+    * without index data is stale and never suppresses a first batch.
+    * `maintain` runs on the cadence, on the replay path too. The stamp
+    * is written last and always: a maintenance swap replaces the whole
+    * directory, stamp included, so only a later stamp survives it, and
+    * re-stamping a skipped replay keeps a second replay skipping. */
+  private def annStep(df: DataFrame, batchId: Long, indexDir: String,
+      lineage: String, op: String, geometry: Seq[String],
+      maintainEvery: Int)(build: => Unit, append: => Unit,
+      maintain: => Seq[String]): Unit =
+    if (!df.isEmpty) {
+      val fs = IndexStore.fsOf(df.sparkSession, indexDir)
+      val hasData = IndexStore.hasData(fs, indexDir)
+      val trained = hasData &&
+        geometry.forall(g => fs.exists(new Path(s"$indexDir/$g")))
+      if (trained && batchId >= 0 &&
+        lastStampedBatch(fs, indexDir).contains((lineage, batchId)))
+        System.err.println(s"[streams] $op($indexDir) batch $batchId " +
+          "replayed after its writes landed — skipping it.")
+      else if (trained) append
+      else {
+        if (hasData) System.err.println(s"[streams] $op($indexDir): data " +
+          s"without ${geometry.mkString(" + ")} — an interrupted train; " +
+          "re-training from the replaying batch.")
+        build
+      }
+      maintainAt(indexDir, batchId, maintainEvery)(maintain)
+      stampBatch(fs, indexDir, batchId, lineage)
+    }
+
   /**
-   * Continuous ANN-index ingest — the streaming face of the round-14
-   * append family: each micro-batch of (id, vector) rows lands in a
-   * persisted LSH index. The FIRST non-empty batch BUILDS the index
-   * ([[graft.operators.AnnIndex.buildLsh]] — the FAISS "train" step:
-   * its auto-plan freezes bits/family/groups in the `_plan` sidecar);
-   * every later batch rides [[graft.operators.AnnIndex.appendLsh]]
-   * under that frozen geometry, so the stream never re-shuffles the
-   * accumulated corpus. Probes ([[graft.operators.AnnIndex.searchLsh]] /
-   * `lshKnnJoin`) read the same directory between batches — the index
-   * is live mid-stream.
-   *
-   * Delivery semantics: the checkpoint makes each batch process once in
-   * normal operation; on CRASH REPLAY the build batch is idempotent
-   * (mode overwrite, delete-first sidecars) and an EXACT replay of an
-   * applied append batch is SKIPPED via the `_stream_batch` stamp (see
-   * [[ingestAnnBatch]] — the standard foreachBatch gap, a crash after
-   * the writes land but before the checkpoint commits, no longer
-   * double-appends). The residual at-least-once sliver is a crash
-   * between the data write and the stamp: that replay lands twice.
-   * Pair with [[graft.sources.FileCommit]]'s manifest protocol upstream
-   * (exactly-once staging) or dedup on the id at read when that sliver
-   * matters; a duplicate row only duplicates one kNN candidate, it
-   * never corrupts the index geometry.
-   *
-   * appendLsh's occupancy-drift WARN fires across batches as the corpus
-   * outgrows the first batch's plan — for a stream that is the REBUILD
-   * signal. With `maintainEvery > 0` (round 15) the stream ANSWERS its
-   * own signal: after every Nth batch it runs
-   * [[graft.operators.AnnIndex.maintainIndex]] — reindexLsh on drift
-   * (re-plans at the grown count from the index's own rows, so the next
-   * append rides the WIDER frozen plan), else compact on the small-file
-   * accumulation appends inherently create. Both actions are
-   * answer-preserving and crash-safe (staged swaps), so maintenance
-   * between micro-batches never changes what probes see — only plan
-   * quality and file counts. At 0 (the default) the stream only WARNs,
-   * the round-14 behavior: train-then-add wants a representative first
-   * batch, same as FAISS.
+   * Continuous ANN-index ingest into a persisted LSH index. The first
+   * non-empty batch builds it ([[graft.operators.AnnIndex.buildLsh]], the
+   * FAISS "train" step: its auto-plan freezes bits/family/groups in the
+   * `_plan` sidecar), and every later batch rides
+   * [[graft.operators.AnnIndex.appendLsh]] under that frozen geometry,
+   * so the stream never re-shuffles the accumulated corpus. Probes read
+   * the same directory between batches. appendLsh's occupancy-drift WARN
+   * is the rebuild signal as the corpus outgrows the first batch's plan;
+   * with `maintainEvery > 0` the stream answers it through
+   * [[graft.operators.AnnIndex.maintainIndex]]: reindexLsh on drift
+   * (re-planned at the grown count from the index's own rows), else a
+   * compaction of the small files appends create. At 0 the stream only
+   * WARNs, and train-then-add wants a representative first batch.
    */
   def annIngest(vecs: DataFrame, vecCol: String, idCol: String,
       indexDir: String, checkpointDir: String, dims: Int = 64,
       maintainEvery: Int = 0, targetCosine: Double = 0.9,
-      targetOccupancy: Double = 2.0)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val lineage = checkpointLineage(checkpointDir)
-    vecs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        ingestAnnBatch(batch.toDF(), vecCol, idCol, indexDir, dims,
-          maintainEvery, targetCosine, targetOccupancy, batchId, lineage)
-        () // pin the lambda to Unit for the foreachBatch overload
-      }
-      .start()
-  }
+      targetOccupancy: Double = 2.0): StreamingQuery =
+    ingestStream(vecs, checkpointDir, indexDir, "annIngest")(
+      lshStep(vecCol, idCol, indexDir, dims, maintainEvery, targetCosine,
+        targetOccupancy, checkpointLineage(checkpointDir)))
+
+  /** One [[annIngest]] micro-batch, gate included (package-private so
+    * the replay guard is testable without crashing a real query between
+    * its commit points). */
+  private[graft] def ingestAnnBatch(df: DataFrame, vecCol: String,
+      idCol: String, indexDir: String, dims: Int, maintainEvery: Int,
+      targetCosine: Double, targetOccupancy: Double, batchId: Long,
+      lineage: String): Unit =
+    swapChecked(indexDir, "annIngest")(lshStep(vecCol, idCol, indexDir,
+      dims, maintainEvery, targetCosine, targetOccupancy, lineage))(df, batchId)
+
+  private def lshStep(vecCol: String, idCol: String, indexDir: String,
+      dims: Int, maintainEvery: Int, targetCosine: Double,
+      targetOccupancy: Double, lineage: String): Step = (df, batchId) =>
+    annStep(df, batchId, indexDir, lineage, "annIngest", Seq("_plan"),
+      maintainEvery)(
+      build = AnnIndex.buildLsh(df, vecCol, idCol, indexDir, dims = dims),
+      append = AnnIndex.appendLsh(df, vecCol, idCol, indexDir),
+      maintain = AnnIndex.maintainIndex(df.sparkSession, indexDir,
+        targetCosine = targetCosine, targetOccupancy = targetOccupancy))
 
   /**
-   * The composite (IVF-PQ) twin of [[annIngest]] — the production
-   * crawl-ingest shape at 100 TB, where the codes-only footprint (~m
-   * bytes/vector, cell-partitioned) is the variant that still fits
-   * cluster storage when raw vectors don't. Same contract, one
-   * difference that matters: the FIRST non-empty batch TRAINS the
-   * quantizers ([[graft.operators.AnnIndex.buildIvfPq]] — coarse cells
-   * + per-subspace codebooks freeze in `_centroids`/`_codebooks`), and
+   * The composite (IVF-PQ) twin of [[annIngest]]: the codes-only
+   * footprint (~m bytes/vector, cell-partitioned) is the variant that
+   * still fits cluster storage when raw vectors don't. The first
+   * non-empty batch trains the quantizers
+   * ([[graft.operators.AnnIndex.buildIvfPq]]: coarse cells and
+   * per-subspace codebooks freeze in `_centroids`/`_codebooks`), and
    * every later batch rides [[graft.operators.AnnIndex.appendIvfPq]]
-   * under that frozen geometry — the FAISS train-then-add contract, so
-   * the first batch should be representative (same as FAISS). Ranking
-   * quality drifts as the corpus outgrows the first batch's training:
-   * the append WARNs price occupancy drift, and with `maintainEvery >
-   * 0` the in-stream [[graft.operators.AnnIndex.maintainIndex]] runs
-   * WITHOUT a corpus handle. Round 18: the build/appends grow a
-   * `_sample` raw-vector reservoir, so the drift/staleness rebuild now
-   * EXECUTES in-stream ([[graft.operators.AnnIndex
-   * .reindexIvfPqFromReservoir]] — retrain on the bounded raw
-   * reservoir, re-encode from reconstruction-upgraded rows, staged
-   * swap); only a LEGACY reservoir-less index still reports the
-   * reindex as skipped while the cheap repairs (targeted vacuum,
-   * compaction of append small-files) run — schedule
-   * `reindexIvfPq(corpus, ...)` as a batch job when that report
-   * fires. Replay semantics are [[ingestAnnBatch]]'s,
-   * verbatim: the `_stream_batch` lineage stamp skips exact replays,
-   * degrading to duplicates, never loss.
+   * under that frozen geometry. The build and appends grow a `_sample`
+   * raw-vector reservoir, so the in-stream maintenance retrains on
+   * drift or staleness from it
+   * ([[graft.operators.AnnIndex.reindexIvfPqFromReservoir]]). A micro-
+   * batch never poses as the training corpus: on a legacy
+   * reservoir-less index maintenance reports the reindex as skipped
+   * while the cheap repairs run — schedule `reindexIvfPq(corpus, ...)`
+   * as a batch job when that report fires.
    */
   def annIngestIvfPq(vecs: DataFrame, vecCol: String, idCol: String,
       indexDir: String, checkpointDir: String, nCells: Int = 16,
       m: Int = 8, quantizer: String = "sign", autoPlan: Boolean = true,
       maintainEvery: Int = 0, targetCellRows: Long = 4096L)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val lineage = checkpointLineage(checkpointDir)
-    vecs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        ingestAnnIvfPqBatch(batch.toDF(), vecCol, idCol, indexDir,
-          nCells, m, quantizer, autoPlan, maintainEvery, targetCellRows,
-          batchId, lineage)
-        ()
-      }
-      .start()
-  }
+      : StreamingQuery =
+    ingestStream(vecs, checkpointDir, indexDir, "annIngestIvfPq")(
+      ivfPqStep(vecCol, idCol, indexDir, nCells, m, quantizer, autoPlan,
+        maintainEvery, targetCellRows, checkpointLineage(checkpointDir)))
 
-  /** One [[annIngestIvfPq]] micro-batch — [[ingestAnnBatch]]'s guard
-    * and ordering discipline (skip exact same-lineage replays, maintain
-    * after every Nth batch, stamp last and unconditionally) around the
-    * composite build/append pair. Package-private for the same
-    * replay-guard testability. */
+  /** One [[annIngestIvfPq]] micro-batch, gate included (package-private
+    * for the same replay-guard testability). */
   private[graft] def ingestAnnIvfPqBatch(df: DataFrame, vecCol: String,
       idCol: String, indexDir: String, nCells: Int, m: Int,
       quantizer: String, autoPlan: Boolean, maintainEvery: Int,
-      targetCellRows: Long, batchId: Long, lineage: String): Unit = {
-    val spark = df.sparkSession
-    IndexStore.requireNoCrashedSwap(IndexStore.fsOf(spark, indexDir),
-      indexDir, "annIngestIvfPq")
-    if (!df.isEmpty) {
-      val hasData = indexHasData(spark, indexDir)
-      // geometry decides build-vs-append (see [[ingestAnnBatch]]): an
-      // interrupted train batch leaves data with at most PART of its
-      // sidecars — the replay must re-train, not fail closed forever
-      val hasGeometry = {
-        val fs = new org.apache.hadoop.fs.Path(indexDir).getFileSystem(
-          spark.sessionState.newHadoopConf())
-        fs.exists(new org.apache.hadoop.fs.Path(s"$indexDir/_centroids")) &&
-          fs.exists(new org.apache.hadoop.fs.Path(s"$indexDir/_codebooks"))
-      }
-      val alreadyApplied = hasData && hasGeometry && batchId >= 0 &&
-        lastStampedBatch(spark, indexDir).contains((lineage, batchId))
-      if (alreadyApplied)
-        System.err.println(s"[streams] annIngestIvfPq($indexDir) batch " +
-          s"$batchId replayed after its writes landed — skipping the " +
-          s"already-applied append.")
-      else if (!hasData || !hasGeometry) {
-        if (hasData) System.err.println(
-          s"[streams] annIngestIvfPq($indexDir): data without complete " +
-            s"geometry sidecars — an interrupted train; re-training " +
-            s"from the replaying batch (overwrite).")
-        graft.operators.AnnIndex.buildIvfPq(df, vecCol, idCol, indexDir,
-          nCells = nCells, m = m, quantizer = quantizer,
-          autoPlan = autoPlan, targetCellRows = targetCellRows)
-      } else
-        graft.operators.AnnIndex.appendIvfPq(df, vecCol, idCol, indexDir,
-          targetCellRows = targetCellRows)
-      if (maintainEvery > 0 && (batchId + 1) % maintainEvery == 0) {
-        // corpus = None is deliberate: a micro-batch must never pose as
-        // the training corpus — maintainIndex retrains from the
-        // `_sample` raw reservoir when one exists (round 18), and only
-        // REPORTS the corpus-bound reindex as skipped on a legacy
-        // reservoir-less index; the cheap repairs run either way
-        val acts = graft.operators.AnnIndex.maintainIndex(spark,
-          indexDir, targetCellRows = targetCellRows)
-        if (acts.nonEmpty) System.err.println(
-          s"[streams] annIngestIvfPq($indexDir) batch $batchId " +
-            s"maintenance: ${acts.mkString(", ")}")
-      }
-      stampBatch(spark, indexDir, batchId, lineage)
-    }
-  }
+      targetCellRows: Long, batchId: Long, lineage: String): Unit =
+    swapChecked(indexDir, "annIngestIvfPq")(ivfPqStep(vecCol, idCol,
+      indexDir, nCells, m, quantizer, autoPlan, maintainEvery,
+      targetCellRows, lineage))(df, batchId)
 
-  /** The replay guard's checkpoint-lineage token: batch ids are only
-    * meaningful WITHIN one checkpoint's history, so the stamp must carry
-    * which checkpoint issued them (round 16, advisor fix — a fresh
-    * checkpoint pointed at an existing index restarts batch ids at 0,
-    * and an id-only stamp of 0 would then skip the new stream's batch 0
-    * as "already applied": silent data LOSS, the exact direction the
-    * guard promises never to take). A hash of the checkpointDir string
-    * is the right identity: a restart of the same query resumes the
-    * same checkpointLocation and keeps the lineage; a fresh checkpoint
-    * (new dir, or the old one cleared and respelled) mismatches and the
-    * guard degrades to a duplicate append — never a skip. */
+  private def ivfPqStep(vecCol: String, idCol: String, indexDir: String,
+      nCells: Int, m: Int, quantizer: String, autoPlan: Boolean,
+      maintainEvery: Int, targetCellRows: Long, lineage: String): Step =
+    (df, batchId) =>
+      annStep(df, batchId, indexDir, lineage, "annIngestIvfPq",
+        Seq("_centroids", "_codebooks"), maintainEvery)(
+        build = AnnIndex.buildIvfPq(df, vecCol, idCol, indexDir,
+          nCells = nCells, m = m, quantizer = quantizer,
+          autoPlan = autoPlan, targetCellRows = targetCellRows),
+        append = AnnIndex.appendIvfPq(df, vecCol, idCol, indexDir,
+          targetCellRows = targetCellRows),
+        maintain = AnnIndex.maintainIndex(df.sparkSession, indexDir,
+          targetCellRows = targetCellRows))
+
+  /** The replay guard's checkpoint-lineage token. Batch ids mean
+    * something only within one checkpoint's history: a fresh checkpoint
+    * pointed at an existing index restarts ids at 0, and an id-only
+    * stamp of 0 would skip its batch 0 as already applied — a silent
+    * loss. A restart of the same query resumes the same
+    * checkpointLocation and keeps the lineage; a fresh checkpoint (new
+    * dir, or the old one cleared) mismatches, and the guard degrades to
+    * a duplicate append. */
   private def checkpointLineage(checkpointDir: String): String =
     f"${scala.util.hashing.MurmurHash3.stringHash(checkpointDir)}%08x"
 
-  /** One [[annIngest]] micro-batch (package-private so the replay guard
-    * is testable without crashing a real query between its commit
-    * points). The `_stream_batch` sidecar narrows the documented
-    * at-least-once window: foreachBatch's standard gap is a crash AFTER
-    * the batch's writes land but BEFORE the checkpoint commits, which
-    * replays the batch and double-appends — so each applied batch stamps
-    * `<lineage>:<batchId>` (one small sidecar write, after the data
-    * write), and an EXACT replay of that id UNDER THE SAME CHECKPOINT
-    * LINEAGE is skipped as already applied. Both halves must match:
-    * the id comparison is deliberately `==`, not `<=` (a `<=` guard
-    * would skip real data when ids restart), and the lineage half makes
-    * a FRESH checkpoint over an existing index mismatch outright — its
-    * batch 0 appends (a possible duplicate, never a loss) instead of
-    * being mistaken for the PREVIOUS stream's applied batch 0. A legacy
-    * id-only stamp (pre-round-16) also mismatches: one duplicate append
-    * on the first post-upgrade replay, then the stamp is in the new
-    * format. A crash between the data write and the stamp still replays
-    * into a duplicate (the remaining at-least-once sliver); the
-    * dedup-ingest family doesn't need any of this — its per-batch-
-    * DIRECTORY overwrites are naturally exactly-once per dir. */
-  private[graft] def ingestAnnBatch(df: DataFrame, vecCol: String,
-      idCol: String, indexDir: String, dims: Int, maintainEvery: Int,
-      targetCosine: Double, targetOccupancy: Double, batchId: Long,
-      lineage: String): Unit = {
-    val spark = df.sparkSession
-    IndexStore.requireNoCrashedSwap(IndexStore.fsOf(spark, indexDir),
-      indexDir, "annIngest")
-    if (!df.isEmpty) {
-      val hasData = indexHasData(spark, indexDir)
-      // GEOMETRY, not data, decides build-vs-append (round 16 — the
-      // embDedupIngest discipline): buildLsh writes its `_plan` sidecar
-      // AFTER the data, so data-without-plan can only be an interrupted
-      // build whose checkpoint never committed — the replaying batch IS
-      // the training batch and safely rebuilds (mode overwrite), where
-      // the data-existence test handed it appendLsh, which fails closed
-      // on wide plans and leaves the stream stuck until a manual rebuild
-      val hasPlan = {
-        val fs = new org.apache.hadoop.fs.Path(indexDir).getFileSystem(
-          spark.sessionState.newHadoopConf())
-        fs.exists(new org.apache.hadoop.fs.Path(s"$indexDir/_plan"))
-      }
-      // skip ONLY an exact replay of a batch whose writes are on disk:
-      // a stamp without index data is stale (a cleared/reused dir) and
-      // must not suppress a real first batch
-      val alreadyApplied = hasData && hasPlan && batchId >= 0 &&
-        lastStampedBatch(spark, indexDir).contains((lineage, batchId))
-      if (alreadyApplied)
-        System.err.println(s"[streams] annIngest($indexDir) batch " +
-          s"$batchId replayed after its writes landed — skipping the " +
-          s"already-applied append.")
-      else if (!hasData || !hasPlan) {
-        if (hasData) System.err.println(
-          s"[streams] annIngest($indexDir): data without a _plan " +
-            s"sidecar — an interrupted build; re-training from the " +
-            s"replaying batch (overwrite).")
-        graft.operators.AnnIndex.buildLsh(df, vecCol, idCol, indexDir,
-          dims = dims)
-      } else
-        graft.operators.AnnIndex.appendLsh(df, vecCol, idCol, indexDir)
-      // in-stream maintenance: foreachBatch is sequential, so the
-      // staged-swap rewrite can never race an append of this stream.
-      // It runs on the replay path too (idempotent, answer-preserving)
-      // — the re-stamp below restores the guard after its swap.
-      if (maintainEvery > 0 && (batchId + 1) % maintainEvery == 0) {
-        val acts = graft.operators.AnnIndex.maintainIndex(spark,
-          indexDir, targetCosine = targetCosine,
-          targetOccupancy = targetOccupancy)
-        if (acts.nonEmpty) System.err.println(
-          s"[streams] annIngest($indexDir) batch $batchId " +
-            s"maintenance: ${acts.mkString(", ")}")
-      }
-      // stamp AFTER maintenance: a maintenance rewrite swaps the whole
-      // directory (sidecars carried explicitly — this one isn't), so a
-      // pre-maintenance stamp would be lost with the old tree; stamping
-      // last also means any crash inside the batch leaves no stamp and
-      // the replay re-runs everything (the safe direction — duplicates,
-      // never loss). UNCONDITIONAL (round 16, advisor fix): on the
-      // replay-skip path a maintenance swap above just destroyed the
-      // stamp that marked the batch applied — re-stamping the same
-      // (lineage, id) is idempotent and keeps a SECOND replay of the
-      // same batch from double-appending.
-      stampBatch(spark, indexDir, batchId, lineage)
-    }
-  }
-
   /** The `_stream_batch` sidecar's last applied (lineage, batch id), or
-    * None when absent/unreadable/legacy-format (pre-round-16 stream,
-    * torn write — the guard then simply doesn't skip, the safe
-    * direction). */
-  private def lastStampedBatch(
-      spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): Option[(String, Long)] = {
-    val p = new org.apache.hadoop.fs.Path(s"$indexDir/_stream_batch")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) None
-    else try {
-      val in = fs.open(p)
-      val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      s.trim.split(":", 2) match {
-        case Array(lin, id) => Some((lin, id.toLong))
-        case _ => None // legacy id-only stamp: never skip on it
-      }
-    } catch { case scala.util.control.NonFatal(_) => None }
-  }
+    * None when absent, unreadable or a legacy id-only stamp — the guard
+    * then does not skip, the safe direction. */
+  private def lastStampedBatch(fs: FileSystem,
+      indexDir: String): Option[(String, Long)] = scala.util.Try {
+    val in = fs.open(new Path(s"$indexDir/_stream_batch"))
+    val stamp = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+      finally in.close()
+    stamp.trim.split(":", 2) match { case Array(lin, id) => (lin, id.toLong) }
+  }.toOption
 
-  private def stampBatch(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, batchId: Long, lineage: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$indexDir/_stream_batch")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(p, true)
+  private def stampBatch(fs: FileSystem, indexDir: String, batchId: Long,
+      lineage: String): Unit = {
+    val out = fs.create(new Path(s"$indexDir/_stream_batch"), true)
     try out.write(s"$lineage:$batchId".getBytes("UTF-8")) finally out.close()
   }
 

@@ -543,64 +543,86 @@ class AnnAppendSpec extends SparkSpec {
     assert(res(idx) === res(full))
   }
 
+  /** An ANN stream family driven through its single-batch step, behind
+    * the one replay guard: step(batch, index dir, maintainEvery, batch
+    * id, lineage). Each step's maintenance target is tiny, so an index
+    * that grew without maintenance is `drifted`, and maintenance then
+    * reindexes — a staged swap of the whole directory. */
+  private case class AnnFamily(name: String,
+      step: (org.apache.spark.sql.DataFrame, String, Int, Long, String) => Unit,
+      drifted: String => Boolean)
+
+  private lazy val annFamilies = Seq(
+    AnnFamily("lsh", (df, idx, every, id, lineage) =>
+      graft.streaming.Streams.ingestAnnBatch(df, "embedding", "vec_id",
+        idx, 64, every, 0.9, 0.001, id, lineage),
+      idx => AnnIndex.indexHealth(spark, idx, targetOccupancy = 0.001).drifted),
+    // sign cells at 2 planned rows each: the occupied cells stay fewer
+    // than the planned ones, so the drift never settles
+    AnnFamily("ivfpq", (df, idx, every, id, lineage) =>
+      graft.streaming.Streams.ingestAnnIvfPqBatch(df, "embedding",
+        "vec_id", idx, 4, 16, "sign", false, every, 2L, id, lineage),
+      idx => AnnIndex.indexHealth(spark, idx, targetCellRows = 2L).drifted))
+
   test("annIngest replay guard: an exact same-lineage replay of an " +
       "applied batch is skipped (no double-append); an id mismatch, a " +
       "FRESH-CHECKPOINT lineage mismatch at the same id, a legacy " +
       "id-only stamp, and a stale stamp without data all still append " +
       "— never data loss") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_areplay").toString
-    val idx = s"$dir/idx"
     val (b0, b1) = (emb.filter(col("vec_id") % 2 === 0),
       emb.filter(col("vec_id") % 2 =!= 0))
-    def ingest(df: org.apache.spark.sql.DataFrame, id: Long,
-        lineage: String = "ckptA"): Unit =
-      graft.streaming.Streams.ingestAnnBatch(df, "embedding", "vec_id",
-        idx, 64, 0, 0.9, 2.0, id, lineage)
-    ingest(b0, 0L) // build
-    ingest(b1, 1L) // append
-    val full = spark.read.parquet(idx).count()
-    assert(full === emb.count())
-    // the foreachBatch crash-after-write gap: batch 1 replays verbatim
-    ingest(b1, 1L)
-    assert(spark.read.parquet(idx).count() === full,
-      "exact replay double-appended")
-    // a DIFFERENT id under the same lineage appends — degrades to
-    // duplicates, never silently drops data
-    ingest(b1, 0L)
-    val afterDup = full + b1.count()
-    assert(spark.read.parquet(idx).count() === afterDup)
-    // the round-16 advisor scenario: the last stamp is now (ckptA, 0);
-    // a FRESH checkpoint over this index restarts ids at 0 — with an
-    // id-only stamp its batch 0 would be skipped as "already applied"
-    // (silent LOSS); the lineage half must make it append instead
-    ingest(b1, 0L, lineage = "ckptB")
-    assert(spark.read.parquet(idx).count() === afterDup + b1.count(),
-      "fresh-checkpoint batch 0 was skipped against the old stream's " +
-        "stamp — the data-loss direction the lineage binding exists for")
-    // a legacy id-only stamp (pre-round-16) never matches: one
-    // duplicate append, then the stamp is in the new format
-    val fsA = new org.apache.hadoop.fs.Path(idx)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val legacyOut = fsA.create(
-      new org.apache.hadoop.fs.Path(s"$idx/_stream_batch"), true)
-    try legacyOut.write("5".getBytes("UTF-8")) finally legacyOut.close()
-    val beforeLegacy = spark.read.parquet(idx).count()
-    ingest(b1, 5L)
-    assert(spark.read.parquet(idx).count() === beforeLegacy + b1.count(),
-      "legacy id-only stamp skipped a batch")
-    // a stale stamp WITHOUT index data must not suppress a first batch
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_astale").toString
-    val idx2 = s"$dir2/idx"
-    val fs = new org.apache.hadoop.fs.Path(idx2)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(idx2))
-    val out = fs.create(
-      new org.apache.hadoop.fs.Path(s"$idx2/_stream_batch"), true)
-    try out.write("ckptA:0".getBytes("UTF-8")) finally out.close()
-    graft.streaming.Streams.ingestAnnBatch(b0, "embedding", "vec_id",
-      idx2, 64, 0, 0.9, 2.0, 0L, "ckptA")
-    assert(spark.read.parquet(idx2).count() === b0.count(),
-      "stale stamp suppressed a real first batch")
+    for (f <- annFamilies) withClue(s"[${f.name}] ") {
+      val dir = java.nio.file.Files.createTempDirectory(
+        s"graft_areplay_${f.name}").toString
+      val idx = s"$dir/idx"
+      def ingest(df: org.apache.spark.sql.DataFrame, id: Long,
+          lineage: String = "ckptA"): Unit = f.step(df, idx, 0, id, lineage)
+      ingest(b0, 0L) // build
+      ingest(b1, 1L) // append
+      val full = spark.read.parquet(idx).count()
+      assert(full === emb.count())
+      // the foreachBatch crash-after-write gap: batch 1 replays verbatim
+      ingest(b1, 1L)
+      assert(spark.read.parquet(idx).count() === full,
+        "exact replay double-appended")
+      // a DIFFERENT id under the same lineage appends — degrades to
+      // duplicates, never silently drops data
+      ingest(b1, 0L)
+      val afterDup = full + b1.count()
+      assert(spark.read.parquet(idx).count() === afterDup)
+      // the round-16 advisor scenario: the last stamp is now (ckptA, 0);
+      // a FRESH checkpoint over this index restarts ids at 0 — with an
+      // id-only stamp its batch 0 would be skipped as "already applied"
+      // (silent LOSS); the lineage half must make it append instead
+      ingest(b1, 0L, lineage = "ckptB")
+      assert(spark.read.parquet(idx).count() === afterDup + b1.count(),
+        "fresh-checkpoint batch 0 was skipped against the old stream's " +
+          "stamp — the data-loss direction the lineage binding exists for")
+      // a legacy id-only stamp (pre-round-16) never matches: one
+      // duplicate append, then the stamp is in the new format
+      val fsA = new org.apache.hadoop.fs.Path(idx)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val legacyOut = fsA.create(
+        new org.apache.hadoop.fs.Path(s"$idx/_stream_batch"), true)
+      try legacyOut.write("5".getBytes("UTF-8")) finally legacyOut.close()
+      val beforeLegacy = spark.read.parquet(idx).count()
+      ingest(b1, 5L)
+      assert(spark.read.parquet(idx).count() === beforeLegacy + b1.count(),
+        "legacy id-only stamp skipped a batch")
+      // a stale stamp WITHOUT index data must not suppress a first batch
+      val dir2 = java.nio.file.Files.createTempDirectory(
+        s"graft_astale_${f.name}").toString
+      val idx2 = s"$dir2/idx"
+      val fs = new org.apache.hadoop.fs.Path(idx2)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.mkdirs(new org.apache.hadoop.fs.Path(idx2))
+      val out = fs.create(
+        new org.apache.hadoop.fs.Path(s"$idx2/_stream_batch"), true)
+      try out.write("ckptA:0".getBytes("UTF-8")) finally out.close()
+      f.step(b0, idx2, 0, 0L, "ckptA")
+      assert(spark.read.parquet(idx2).count() === b0.count(),
+        "stale stamp suppressed a real first batch")
+    }
   }
 
   test("annIngestIvfPq: first micro-batch TRAINS (sidecars frozen from " +
@@ -753,27 +775,35 @@ class AnnAppendSpec extends SparkSpec {
   test("annIngest replay guard survives a replay-path maintenance swap: " +
       "the swap destroys the stamp, the unconditional re-stamp restores " +
       "it, and a SECOND replay of the same batch still skips") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_arestamp").toString
-    val idx = s"$dir/idx"
     val (b0, b1) = (emb.filter(col("vec_id") % 2 === 0),
       emb.filter(col("vec_id") % 2 =!= 0))
-    // maintainEvery=1 with a tiny occupancy target: EVERY batch's
-    // maintenance reindexes, whose staged swap replaces the whole
-    // directory (the stamp is not a carried sidecar)
-    def ingest(df: org.apache.spark.sql.DataFrame, id: Long): Unit =
-      graft.streaming.Streams.ingestAnnBatch(df, "embedding", "vec_id",
-        idx, 64, 1, 0.9, 0.001, id, "ckptA")
-    ingest(b0, 0L) // build + maintain
-    ingest(b1, 1L) // append + maintain
-    val full = spark.read.parquet(idx).count()
-    assert(full === emb.count())
-    ingest(b1, 1L) // replay 1: skipped, maintenance runs, MUST re-stamp
-    assert(spark.read.parquet(idx).count() === full,
-      "first replay double-appended")
-    ingest(b1, 1L) // replay 2: only skips if the re-stamp happened
-    assert(spark.read.parquet(idx).count() === full,
-      "second replay double-appended — the replay-path maintenance " +
-        "swap lost the stamp and the guard with it")
+    for (f <- annFamilies) withClue(s"[${f.name}] ") {
+      val dir = java.nio.file.Files.createTempDirectory(
+        s"graft_arestamp_${f.name}").toString
+      val idx = s"$dir/idx"
+      // the batches run without maintenance and leave the index drifted
+      // from the tiny target; the first replay runs it, so its
+      // maintenance reindexes, whose staged swap replaces the whole
+      // directory (the stamp is not a carried sidecar). With maintenance
+      // on from batch 0 the LSH plan converges at batch 1 and no replay
+      // would swap. The second replay runs without maintenance: an
+      // IVF-PQ reindex from the reservoir collapses duplicate ids, which
+      // would hide a double-append from the count.
+      def ingest(df: org.apache.spark.sql.DataFrame, id: Long,
+          every: Int): Unit = f.step(df, idx, every, id, "ckptA")
+      ingest(b0, 0L, 0) // build
+      ingest(b1, 1L, 0) // append
+      val full = spark.read.parquet(idx).count()
+      assert(full === emb.count())
+      assert(f.drifted(idx), "the replay's maintenance would not swap")
+      ingest(b1, 1L, 1) // replay 1: skipped, maintenance swaps, MUST re-stamp
+      assert(spark.read.parquet(idx).count() === full,
+        "first replay double-appended")
+      ingest(b1, 1L, 0) // replay 2: only skips if the re-stamp happened
+      assert(spark.read.parquet(idx).count() === full,
+        "second replay double-appended — the replay-path maintenance " +
+          "swap lost the stamp and the guard with it")
+    }
   }
 
   // ------------------------------------------- round 15: advisor fixes

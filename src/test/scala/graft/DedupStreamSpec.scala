@@ -1,6 +1,8 @@
 package graft
 
+import graft.operators.{Dedup, IndexStore}
 import graft.streaming.Streams
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 /** Streaming incremental dedup: batch 2 must find its near-dups against
@@ -126,5 +128,27 @@ class DedupStreamSpec extends SparkSpec {
         .select("id_a", "id_b").as[(Long, Long)].collect().toSet
       assert(b1 === Set((1L, 3L)))
     } finally q.stop()
+  }
+
+  test("IndexStore.hasData: a band tree holding only an empty batch dir " +
+      "and a tombstones parquet has no data, gains it with a written " +
+      "batch, and agrees with dataFiles on every tree") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_hasdata").toString
+    val idx = s"$dir/idx"
+    val fs = IndexStore.fsOf(spark, idx)
+    def hasData(): Boolean = {
+      val has = IndexStore.hasData(fs, idx)
+      assert(has === IndexStore.dataFiles(fs, idx).nonEmpty)
+      has
+    }
+    assert(!IndexStore.hasData(fs, idx), "a missing path holds data")
+    // what an empty micro-batch leaves behind
+    fs.create(new Path(s"$idx/batch=0/_SUCCESS")).close()
+    assert(!hasData())
+    Seq(1L).toDF("id").write.parquet(s"$idx/_tombstones")
+    assert(!hasData(), "a _tombstones parquet counted as index data")
+    Dedup.ingestBatch(Seq((1L, docA), (2L, docC)).toDF("doc_id", "text"),
+      "text", "doc_id", None, s"$idx/batch=1")
+    assert(hasData(), "the written batch=1 is not seen as data")
   }
 }
