@@ -266,7 +266,7 @@ object QueriesMultimodal {
           maxHamming = 6, maintainEvery = 1)
         try q.processAllAvailable() finally q.stop()
         val h = graft.operators.Dedup.minhashIndexHealth(s, s"$root/idx")
-        require(h.batches == 1 && h.prescription == "healthy",
+        require(h.generations == 1 && h.prescription == "healthy",
           s"in-stream maintenance did not run: $h")
         s.read.parquet(s"$root/pairs")
           .select("id_a", "id_b", "hamming").distinct()
@@ -493,7 +493,7 @@ object QueriesMultimodal {
           maintainEvery = 1)
         try q.processAllAvailable() finally q.stop()
         val h = graft.operators.Dedup.minhashIndexHealth(s, s"$root/idx")
-        require(h.batches == 1 && h.prescription == "healthy",
+        require(h.generations == 1 && h.prescription == "healthy",
           s"in-stream maintenance did not run: $h")
         s.read.parquet(s"$root/pairs")
           .select("id_a", "id_b", "bit_errors").distinct()

@@ -389,8 +389,8 @@ object QueriesText {
           corpus.filter(col("doc_id") % 7 === 1).select("doc_id"),
           idCol = "doc_id")
         val h = Dedup.minhashIndexHealth(s, idx, tombstoneFloor = 10L)
-        Seq((h.layout, h.batches, h.bands, h.tombstones, h.tombstoneHeavy,
-          h.prescription))
+        Seq((h.layout, h.generations, h.partitions, h.tombstones,
+          h.tombstoneHeavy, h.prescription))
           .toDF("layout", "batches", "bands", "tombstones",
             "tombstone_heavy", "prescription")
       }),
@@ -866,12 +866,13 @@ object QueriesText {
         // drifted (which is vacuously false right after any build: the
         // fresh plan re-derives from the same recorded count)
         require(Similarity.readEmbPlan(s, idx).planned == ((4, 16)),
-          s"planner widened at ${h.vectors} vectors — oracle counts " +
+          s"planner widened at ${h.signal.vectors} vectors — oracle counts " +
             "must keep the reference plan")
         require(h.tombstoneHeavy, "takedown below the 10-id floor")
-        Seq((h.layout, h.bands, h.bits, h.vectors, h.drifted, h.buckets,
-          h.maxBucket, h.meanOccupancy, h.skewed, h.tombstones,
-          h.tombstoneHeavy, h.prescription))
+        val sig = h.signal
+        Seq((h.layout, sig.bands, sig.bits, sig.vectors, sig.drifted,
+          sig.buckets, sig.maxBucket, sig.meanOccupancy, sig.skewed,
+          h.tombstones, h.tombstoneHeavy, h.prescription))
           .toDF("layout", "bands", "bits", "vectors", "drifted",
             "buckets", "max_bucket", "mean_occupancy", "skewed",
             "tombstones", "tombstone_heavy", "prescription")
@@ -936,7 +937,7 @@ object QueriesText {
           "fixture defect: the stream never outgrew batch 0's plan — " +
             "the in-stream reindex was vacuous")
         require(!Similarity.embeddingIndexHealth(s, s"$root/idx",
-          checkOccupancy = false).drifted,
+          checkOccupancy = false).signal.drifted,
           "post-stream health still reports drift")
         s.read.parquet(s"$root/pairs")
           .select(col("id_a"), col("id_b"), col("cosine"))
@@ -1291,10 +1292,10 @@ object QueriesText {
 
     // ------------------------ similarity: index health (r15, late)
     // indexHealth as an oracle row: the snapshot's DETERMINISTIC fields
-    // (layout, row/tombstone counts from sidecars, occupied sign cells,
-    // the planIvfCells re-plan and the drift/tombstone-mass flags) are
-    // all DuckDB-replayable — count(*), the 2-bit sign-pattern distinct
-    // count, and the max(cur, 2^ceil(log2(n/target))) plan formula — so
+    // (layout, row/tombstone counts from sidecars, the planned sign key
+    // space, the planIvfCells re-plan and the drift/tombstone-mass flags)
+    // are all DuckDB-replayable — count(*), the 2-bit key space, and the
+    // max(cur, 2^ceil(log2(n/target))) plan formula — so
     // a health API that misreads a sidecar, re-plans with the wrong
     // formula, or flips a threshold hash-fails at the driver. File/
     // fragmentation fields are physical-layout facts (not SQL-stable)
@@ -1310,8 +1311,9 @@ object QueriesText {
           e.filter(col("vec_id") % 10 === 3).select("vec_id"))
         val h = graft.operators.AnnIndex.indexHealth(s, idx,
           targetCellRows = 64L)
-        Seq((h.layout, h.rows, h.tombstones, h.currentUnits.toLong,
-          h.plannedUnits.toLong, h.drifted, h.tombstoneHeavy))
+        Seq((h.layout, h.rows.get, h.tombstones,
+          h.signal.currentUnits.toLong, h.signal.plannedUnits.toLong,
+          h.signal.drifted, h.tombstoneHeavy))
           .toDF("layout", "n_rows", "tombstones", "cells",
             "planned_cells", "drifted", "tombstone_heavy")
       }),
@@ -1390,8 +1392,8 @@ object QueriesText {
           "vec_id", idx)
         val h = graft.operators.AnnIndex.indexHealth(s, idx,
           staleMinRows = 1L)
-        Seq((h.layout, h.baseReconErr, h.appendedReconErr,
-          h.appendedReconRows, h.stale))
+        Seq((h.layout, h.signal.baseReconErr, h.signal.appendedReconErr,
+          h.signal.appendedReconRows, h.signal.stale))
           .toDF("layout", "base_raw", "appended_raw", "appended_n", "stale")
           .select(col("layout"),
             round(col("base_raw"), 6).as("base_recon"),
@@ -1505,7 +1507,7 @@ object QueriesText {
           quantizer = "sign", autoPlan = false, maintainEvery = 1)
         try q.processAllAvailable() finally q.stop()
         val h = graft.operators.AnnIndex.indexHealth(s, s"$root/idx")
-        require(!h.fragmented && !h.drifted,
+        require(!h.fragmented && !h.signal.drifted,
           s"in-stream maintenance did not compact the append files: $h")
         graft.operators.AnnIndex.ivfPqKnnJoin(s, s"$root/idx",
           e.filter(col("vec_id") < 5), e, "embedding", "vec_id",
@@ -2996,7 +2998,7 @@ object QueriesText {
           maintainEvery = 1)
         try q.processAllAvailable() finally q.stop()
         val h = graft.operators.Dedup.minhashIndexHealth(s, s"$root/idx")
-        require(h.batches == 1 && h.prescription == "healthy",
+        require(h.generations == 1 && h.prescription == "healthy",
           s"in-stream maintenance did not run: $h")
         s.read.parquet(s"$root/pairs")
           .select(col("id_a"), col("id_b"), col("jaccard"))
@@ -3251,9 +3253,10 @@ object QueriesText {
   /** ann_health oracle — replays indexHealth's deterministic fields:
     * `n_rows`/`tombstones` are plain counts (the `_rows` sidecar is
     * stamped at build — a stale stamp diverges from count(*) and
-    * hash-fails), `cells` is the occupied 2-bit sign-pattern count
-    * (nCells=4 → sign of dims 1..2, the quantizer annIvfTopkOracleSql
-    * already replays), `planned_cells` is planIvfCells at
+    * hash-fails), `cells` is the planned key space of the 2-bit sign
+    * quantizer (nCells=4 → sign of dims 1..2, the quantizer
+    * annIvfTopkOracleSql already replays: 4 cells, occupied or not),
+    * `planned_cells` is planIvfCells at
     * targetCellRows=64 — max(cur, 2^ceil(log2(max(1, n/64)))) — and the
     * flags are the drift and tombstone-mass thresholds verbatim. */
   private lazy val annHealthOracleSql: String = """
@@ -3261,11 +3264,7 @@ object QueriesText {
         SELECT count(*) AS n,
                count(*) FILTER (WHERE vec_id % 10 = 3) AS tomb
         FROM embeddings),
-      c AS (
-        SELECT count(DISTINCT
-          (CASE WHEN embedding[1] >= 0 THEN 1 ELSE 0 END) +
-          (CASE WHEN embedding[2] >= 0 THEN 2 ELSE 0 END)) AS cur
-        FROM embeddings),
+      c AS (SELECT 4 AS cur),
       p AS (
         SELECT GREATEST(cur, LEAST(1048576,
           CAST(pow(2.0, CEIL(log2(GREATEST(1.0, n / 64.0)))) AS BIGINT)))

@@ -385,15 +385,8 @@ object AnnIndex {
     * NO job over the index data path. A legacy/damaged sidecar self-heals:
     * count once (parquet metadata), re-stamp, and every later append is
     * listing-free again. */
-  private[graft] def indexRowCount(spark: SparkSession, path: String): Long = {
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    IndexStore.readRows(fs, path).getOrElse {
-      val n = spark.read.parquet(path).count()
-      IndexStore.writeRows(fs, path, n)
-      n
-    }
-  }
+  private[graft] def indexRowCount(spark: SparkSession, path: String): Long =
+    IndexStore.stampedRows(spark, path)(spark.read.parquet(path).count())
 
   /** An index scan restricted to LIVE rows ([[IndexStore.dropTombstoned]])
     * — applied BEFORE every top-k cut, so deleted rows neither appear in
@@ -496,6 +489,17 @@ object AnnIndex {
           s"occupied-cell count under-counts it on skewed data, and a " +
           s"wrong width silently misfiles rows); rebuild the index once " +
           s"to stamp it."))
+    /** The planned key space: 2^signBits sign cells, or the kmeans
+      * centroid count — the one reference width for drift, the append
+      * WARN and a reindex. Skewed data leaves sign cells empty, so the
+      * occupied count would read drifted forever (and is not a power of
+      * two a sign rebuild could take). A pre-sign_bits sign sidecar
+      * falls back to the occupied count, so health and maintenance
+      * still reach the rebuild that stamps the width; appends refuse it
+      * ([[signBits]]). */
+    def refCells: Int =
+      if (quantizerOpt.contains("sign")) signBitsOpt.fold(cells.length)(1 << _)
+      else cells.length
   }
 
   private[graft] def readCentroidsSidecar(
@@ -2086,7 +2090,7 @@ object AnnIndex {
     // absent metric = AQE-collapsed empty batch (see appendLsh) → 0
     val appended = IndexStore.observedCount(obs, "n")
     IndexStore.writeRows(IndexStore.fsOf(spark, path), path, oldN + appended)
-    warnIvfDrift(path, "appendIvf", oldN + appended, cents.length,
+    warnIvfDrift(path, "appendIvf", oldN + appended, sc.refCells,
       targetCellRows, "AnnIndex.reindexIvf(spark, path) — re-plans and " +
         "rebuilds from the index's own rows")
     appended
@@ -2235,7 +2239,7 @@ object AnnIndex {
     foldReconObserved(spark, path, metrics.getOrElse("recon_sum", null), appended)
     // reservoir: add the batch's id-hash-stable members (see `_sample`)
     appendReservoir(spark, base, "nv", path, oldN)
-    warnIvfDrift(path, "appendIvfPq", oldN + appended, cents.length,
+    warnIvfDrift(path, "appendIvfPq", oldN + appended, sc.refCells,
       targetCellRows, "AnnIndex.reindexIvfPq(corpus, ...) — or, with a " +
         "_sample reservoir present, reindexIvfPqFromReservoir")
     appended
@@ -2251,21 +2255,22 @@ object AnnIndex {
   // (sidecar, staged swap, roll-forward manifest, crash states) is
   // [[IndexStore]]'s; this layout supplies what is ANN-specific.
 
-  /** Fail-closed geometry check shared by the mutations: a sidecar-less
-    * tree is an interrupted rebuild (or not an AnnIndex layout), and an
-    * inconsistent one must not hide behind a mutation's results. */
+  /** Fail-closed geometry check shared by the mutations and health: a
+    * sidecar-less tree is an interrupted rebuild (or not an AnnIndex
+    * layout), and an inconsistent one must not hide behind a verb's
+    * results. @return the layout its sidecars name */
   private def requireGeometry(spark: SparkSession, path: String,
-      op: String): Unit = {
-    val fs = IndexStore.fsOf(spark, path)
-    val sidecars = Seq("_plan", "_centroids", "_codebooks")
-      .filter(s => fs.exists(new org.apache.hadoop.fs.Path(s"$path/$s")))
-    if (sidecars.isEmpty) throw new IllegalStateException(
+      op: String, root: Set[String]): String = {
+    val has = root.contains _
+    if (has("_plan")) { lshIndexPlan(spark, path); "lsh" }
+    else if (has("_centroids")) {
+      ivfCentroids(spark, path)
+      if (has("_codebooks")) "ivfpq" else "ivf"
+    } else if (has("_codebooks")) { requireCodebooks(spark, path); "pq" }
+    else throw new IllegalStateException(
       s"$op($path): no sidecars — an interrupted rebuild (rebuild the " +
-        s"index) or not an AnnIndex layout; refusing to mutate an index " +
+        s"index) or not an AnnIndex layout; refusing to act on an index " +
         s"whose geometry is unknown.")
-    if (sidecars.contains("_plan")) lshIndexPlan(spark, path)
-    else if (sidecars.contains("_centroids")) ivfCentroids(spark, path)
-    else requireCodebooks(spark, path) // flat PQ
   }
 
   /** The build's write discipline for rewritten rows: explicit-width
@@ -2293,6 +2298,9 @@ object AnnIndex {
     "deleteIds", "vacuumTombstones", "compactIndex", requireGeometry,
     indexRowCount, (df, _) => rewriteWriter(df, 1),
     df => rewriteWriter(df, math.max(1, writeParts(df) / 4)),
+    // builds and compactions write one file per partition dir; flat PQ
+    // has none and writes at most one per task, so its unit is the width
+    fragmentUnit = (parts, width) => if (parts > 0) parts else width,
     carried = Seq("_plan", "_centroids", "_codebooks", "_recon",
       "_sample_cap"),
     filtered = Seq("_sample"), restampRows = true)
@@ -2346,152 +2354,90 @@ object AnnIndex {
   def vacuumTombstones(spark: SparkSession, path: String): (Long, Long) =
     IndexStore.vacuum(spark, path, IndexLayout)
 
-  // --------------------------------------------- index health (r15 late)
+  // ------------------------------------------------------- index health
   //
-  // The lifecycle's maintenance signals were spread across per-call
-  // stderr WARNs (append drift, delete accumulation, vacuum targeting) —
-  // the right alarms at mutation time, but an OPERATOR schedules
-  // maintenance from a snapshot, not from grepping logs. indexHealth is
-  // that snapshot (sidecar reads + one directory listing, NO job over
-  // the index data path), and maintainIndex executes its prescription.
+  // The append drift, delete accumulation and vacuum targeting WARNs are
+  // the alarms at mutation time; an operator schedules maintenance from
+  // [[indexHealth]]'s snapshot (the store's one schema,
+  // [[IndexStore.health]]), and [[maintainIndex]] executes it.
 
-  /** Operational snapshot of a persisted index. All fields derive from
-    * sidecars and one recursive listing — no Spark job touches the data
-    * path (the `_rows` self-heal on a legacy index is the one exception,
-    * once). `plannedUnits`/`currentUnits` are bits for LSH, coarse cells
-    * for the IVF family, 0/0 for flat PQ (codebook refit drift is not
-    * modeled — the codes' key space does not grow with the corpus).
-    *
-    * @param prescription "healthy", or comma-joined calls in execution
-    *                     order (reindex subsumes vacuum+compact: a
-    *                     rebuild drops tombstones and defragments;
-    *                     compact subsumes vacuum: the full rewrite
-    *                     drops tombstoned rows and clears the sidecar) */
-  case class IndexHealth(layout: String, rows: Long, tombstones: Long,
-      partitions: Int, dataFiles: Long, currentUnits: Int,
-      plannedUnits: Int, drifted: Boolean, fragmented: Boolean,
-      tombstoneHeavy: Boolean, prescription: String,
-      stale: Boolean = false, baseReconErr: Double = 0.0,
-      appendedReconErr: Double = 0.0, appendedReconRows: Long = 0L)
+  /** The ANN family's signal in [[IndexStore.IndexHealth]]: occupancy
+    * drift and codebook staleness. `plannedUnits`/`currentUnits` are bits
+    * for LSH, coarse cells for the IVF family — the planned key space
+    * ([[CentroidsSidecar.refCells]]), never the occupied-cell count a
+    * skewed sign index never reaches — and 0/0 for flat PQ (codebook
+    * refit drift is not modeled: the codes' key space does not grow with
+    * the corpus). `stale` compares the appended mass's measured
+    * reconstruction error with the build's baseline (the `_recon`
+    * sidecar; absent = unknown = not flagged). */
+  case class AnnSignal(currentUnits: Int, plannedUnits: Int,
+      drifted: Boolean, stale: Boolean, baseReconErr: Double,
+      appendedReconErr: Double, appendedReconRows: Long,
+      rebuild: Option[String]) extends IndexStore.Signal
 
   /**
-   * Compute [[IndexHealth]] for any persisted AnnIndex layout.
-   * Fail-closed like every reader (geometry cross-checks, interrupted-
-   * vacuum marker). Thresholds:
+   * [[IndexStore.health]] for any persisted AnnIndex layout, with the
+   * family's signal:
    *
    *  - `drifted`: a fresh plan at the CURRENT row count picks more
-   *    bits/cells than the index has — the same planners the append
-   *    WARNs consult ([[Similarity.planLshProbe]] /
+   *    bits/cells than the index's planned width — the same planners the
+   *    append WARNs consult ([[Similarity.planLshProbe]] /
    *    [[Similarity.planIvfCells]]), so health and the WARNs can never
    *    disagree;
-   *  - `fragmented`: data files exceed `fragmentFactor` × partition
-   *    dirs (builds and compactions write one file per partition — K
-   *    appends multiply that by up to K). Flat PQ has no partition
-   *    dirs, so its unit is the session's shuffle width instead (builds
-   *    write at most one file per task; comparing its corpus-width file
-   *    count to ONE would flag every healthy flat-PQ index forever and
-   *    turn each maintainIndex call into a full rewrite);
-   *  - `tombstoneHeavy`: ≥ `tombstoneFloor` ids AND ≥ 1% of rows (the
-   *    [[deleteIds]] WARN's threshold, parameterized for tests).
+   *  - `stale`: at least `staleMinRows` appended rows whose
+   *    reconstruction error exceeds `staleFactor` × the build's (the
+   *    floor keeps one odd micro-batch from prescribing a rewrite).
+   *
+   * Either prescribes the layout's reindex. Flat PQ's fragmentation unit
+   * is the session's shuffle width (it has no partition dirs).
+   * `tombstoneHeavy` also needs ≥ 1% of rows (the [[deleteIds]] WARN's
+   * threshold, parameterized for tests).
    */
   def indexHealth(spark: SparkSession, path: String,
       targetCellRows: Long = 4096L, targetCosine: Double = 0.9,
       targetOccupancy: Double = 2.0, fragmentFactor: Double = 2.0,
       tombstoneFloor: Long = 1024L, staleFactor: Double = 1.5,
-      staleMinRows: Long = 1024L): IndexHealth = {
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(hPath)) throw new IllegalStateException(
-      s"indexHealth($path): no index at this path")
-    IndexStore.requireNoInterruptedVacuum(fs, path, "indexHealth",
-      IndexLayout)
-    val sidecars = Seq("_plan", "_centroids", "_codebooks")
-      .filter(s => fs.exists(new org.apache.hadoop.fs.Path(s"$path/$s")))
-    if (sidecars.isEmpty) throw new IllegalStateException(
-      s"indexHealth($path): no sidecars — an interrupted rebuild " +
-        s"(rebuild the index) or not an AnnIndex layout.")
-    val layout =
-      if (sidecars.contains("_plan")) "lsh"
-      else if (sidecars.contains("_centroids") &&
-        sidecars.contains("_codebooks")) "ivfpq"
-      else if (sidecars.contains("_centroids")) "ivf"
-      else "pq"
-    val rows = indexRowCount(spark, path)
-    val tombstones = IndexStore.tombstoneCount(spark, path, IndexLayout)
-    val partitions = fs.listStatus(hPath).iterator.map(_.getPath.getName)
-      .count(n => n.startsWith("sig_grp=") || n.startsWith("cell=") ||
-        n.startsWith("sig="))
-    val files = IndexStore.dataFiles(fs, path).size.toLong
-    val (current, planned) = layout match {
-      case "lsh" =>
-        val m = lshIndexMeta(spark, path)
-        (m.bits, Similarity.planLshProbe(rows, targetCosine, m.bits,
-          m.probeHamming, targetOccupancy)._1)
-      case "pq" => (0, 0)
-      case _ =>
-        val nCells = ivfCentroids(spark, path).length
-        (nCells, Similarity.planIvfCells(rows, nCells, targetCellRows))
+      staleMinRows: Long = 1024L): IndexStore.IndexHealth[AnnSignal] =
+    IndexStore.health(spark, path, IndexLayout, "indexHealth",
+        fragmentFactor, tombstoneFloor) { (layout, rowsOpt) =>
+      val rows = rowsOpt.get // IndexLayout's `_rows` is the live count
+      val (current, planned) = layout match {
+        case "lsh" =>
+          val m = lshIndexMeta(spark, path)
+          (m.bits, Similarity.planLshProbe(rows, targetCosine, m.bits,
+            m.probeHamming, targetOccupancy)._1)
+        case "pq" => (0, 0)
+        case _ =>
+          val ref = readCentroidsSidecar(spark, path).refCells
+          (ref, Similarity.planIvfCells(rows, ref, targetCellRows))
+      }
+      val (baseErr, appErr, appN) =
+        (if (layout.endsWith("pq")) readReconSidecar(
+          IndexStore.fsOf(spark, path), path) else None)
+          .map { case (b, e, n, _) => (b, e, n) }.getOrElse((0.0, 0.0, 0L))
+      val stale = appN >= staleMinRows && baseErr > 0.0 &&
+        appErr > staleFactor * baseErr
+      AnnSignal(current, planned, planned > current, stale, baseErr, appErr,
+        appN, Option.when(planned > current || stale)(reindexVerb(layout) +
+          (if (layout.endsWith("pq"))
+            " (corpus-bound — pass the upstream corpus)" else "")))
     }
-    val drifted = planned > current
-    // codebook staleness (round 16): the lossy families' DISTRIBUTION
-    // drift signal — the appended mass's measured reconstruction error
-    // vs the build's baseline, both read from the advisory `_recon`
-    // sidecar ([[writeReconSidecar]]; absent on legacy indexes =
-    // staleness unknown = not flagged). The flag needs MATERIAL
-    // appended mass (`staleMinRows`) so one odd micro-batch can't
-    // prescribe a corpus rewrite.
-    val recon =
-      if (layout == "pq" || layout == "ivfpq") readReconSidecar(fs, path)
-      else None
-    val (baseErr, appErr, appN) = recon
-      .map { case (b, e, n, _) => (b, e, n) }.getOrElse((0.0, 0.0, 0L))
-    val stale = appN >= staleMinRows && baseErr > 0.0 &&
-      appErr > staleFactor * baseErr
-    val fragUnit =
-      if (partitions > 0) partitions
-      else spark.sessionState.conf.numShufflePartitions // flat PQ
-    val fragmented = files > fragmentFactor * math.max(1, fragUnit)
-    val heavy = tombstones >= tombstoneFloor && tombstones * 100L >= rows
-    val needRebuild = drifted || stale
-    val rx = (
-      (if (needRebuild) Seq(layout match {
-        case "lsh" => "reindexLsh"
-        case "ivf" => "reindexIvf"
-        case "pq" => "reindexPq (corpus-bound — pass the upstream corpus)"
-        case _ => "reindexIvfPq (corpus-bound — pass the upstream corpus)"
-      }) else Seq.empty) ++
-      // a reindex rebuilds from survivors and writes one file per
-      // partition — vacuum/compact would be redundant work after it;
-      // likewise compactIndex's full rewrite already drops tombstoned
-      // rows and clears the sidecar, so a fragmented index never needs
-      // the targeted vacuum first (it would rewrite the affected files
-      // TWICE). When the executor SKIPS a corpus-bound rebuild (no
-      // corpus handle) it still runs the cheap repairs — that is
-      // [[maintainIndex]]'s subsumption rule, not the prescription's.
-      (if (!needRebuild && heavy && !fragmented) Seq("vacuumTombstones")
-       else Seq.empty) ++
-      (if (!needRebuild && fragmented) Seq("compactIndex") else Seq.empty))
-    IndexHealth(layout, rows, tombstones, partitions, files, current,
-      planned, drifted, fragmented, heavy,
-      if (rx.isEmpty) "healthy" else rx.mkString(", "),
-      stale, baseErr, appErr, appN)
-  }
+
+  private def reindexVerb(layout: String): String = "reindex" +
+    Map("lsh" -> "Lsh", "ivf" -> "Ivf", "ivfpq" -> "IvfPq", "pq" -> "Pq")(layout)
 
   /**
-   * Execute [[indexHealth]]'s prescription: reindex on drift (which
-   * also drops tombstones and defragments — nothing else runs after
-   * it), else compact on fragmentation (whose full rewrite also makes
-   * tombstones physical), else vacuum on tombstone mass alone.
-   * The composite/flat PQ reindexes are corpus-bound (lossy codes) —
-   * when `corpus` is None the drift action is REPORTED but not taken,
-   * and the cheap repairs still run, so a takedown never waits on a
-   * corpus handle. Every action rides its own crash protocol
-   * (staged-swap / roll-forward manifest); a crash mid-maintenance
-   * leaves the index answering or fail-closed, never silently wrong.
+   * [[IndexStore.maintain]] on [[indexHealth]]: reindex on drift or
+   * staleness, else the cheap repairs. The raw-vector layouts reindex
+   * from their own rows at the planned width; the lossy composite and
+   * flat-PQ codes take the upstream `corpus`, or without one retrain
+   * from the `_sample` reservoir. With neither, the reindex is reported
+   * as skipped and the cheap repairs still run, so a takedown never
+   * waits on a corpus handle.
    *
    * @return the actions taken, in order, by the names indexHealth
    *         prescribes ("skipped: ..." for a corpus-bound reindex
-   *         without a corpus)
+   *         without a corpus or reservoir)
    */
   def maintainIndex(spark: SparkSession, path: String,
       corpus: Option[DataFrame] = None, vecCol: String = "vec",
@@ -2502,67 +2448,31 @@ object AnnIndex {
     val h = indexHealth(spark, path, targetCellRows, targetCosine,
       targetOccupancy, fragmentFactor, tombstoneFloor, staleFactor,
       staleMinRows)
-    val actions = scala.collection.mutable.ArrayBuffer.empty[String]
-    // occupancy drift OR codebook staleness (round 16 — the lossy
-    // families' distribution-shift signal) both prescribe the rebuild
-    if (h.drifted || h.stale) h.layout match {
+    val (width, verb) = (h.signal.currentUnits, reindexVerb(h.layout))
+    IndexStore.maintain(spark, path, IndexLayout, h)(h.layout match {
       case "lsh" =>
-        reindexLsh(spark, path, bits = h.currentUnits,
-          targetCosine = targetCosine, targetOccupancy = targetOccupancy)
-        actions += "reindexLsh"
+        reindexLsh(spark, path, bits = width, targetCosine = targetCosine,
+          targetOccupancy = targetOccupancy)
+        Right(verb)
       case "ivf" =>
-        reindexIvf(spark, path, nCells = h.currentUnits,
+        reindexIvf(spark, path, nCells = width,
           targetCellRows = targetCellRows)
-        actions += "reindexIvf"
-      case "ivfpq" => corpus match {
+        Right(verb)
+      case lossy => corpus match {
         case Some(c) =>
-          reindexIvfPq(c, vecCol, idCol, path,
-            nCells = h.currentUnits, targetCellRows = targetCellRows)
-          actions += "reindexIvfPq"
+          if (lossy == "ivfpq") reindexIvfPq(c, vecCol, idCol, path,
+            nCells = width, targetCellRows = targetCellRows)
+          else reindexPq(c, vecCol, idCol, path)
+          Right(verb)
         case None if hasReservoir(spark, path) =>
-          // round 18: the `_sample` reservoir lifts the corpus-bound
-          // limit — the in-stream drift/staleness maintenance EXECUTES
-          // the rebuild (retrain on raw reservoir, re-encode from
-          // reconstruction-upgraded rows) instead of only reporting
-          // it. nCells stays default: the verb derives the reference
-          // width from the sidecar's planned geometry (the occupied
-          // count h.currentUnits is not a power of two on skewed data
-          // and a sign rebuild at it would throw mid-maintenance).
-          reindexIvfPqFromReservoir(spark, path,
-            targetCellRows = targetCellRows)
-          actions += "reindexIvfPqFromReservoir"
-        case None =>
-          actions += "skipped: reindexIvfPq requires the upstream " +
-            "corpus (no _sample reservoir)"
+          if (lossy == "ivfpq") reindexIvfPqFromReservoir(spark, path,
+            nCells = width, targetCellRows = targetCellRows)
+          else reindexPqFromReservoir(spark, path)
+          Right(s"${verb}FromReservoir")
+        case None => Left(Some(s"skipped: $verb requires the upstream " +
+          "corpus (no _sample reservoir)"))
       }
-      case _ => corpus match { // flat pq: staleness is its ONLY rebuild signal
-        case Some(c) =>
-          reindexPq(c, vecCol, idCol, path)
-          actions += "reindexPq"
-        case None if hasReservoir(spark, path) =>
-          reindexPqFromReservoir(spark, path)
-          actions += "reindexPqFromReservoir"
-        case None =>
-          actions += "skipped: reindexPq requires the upstream corpus " +
-            "(no _sample reservoir)"
-      }
-    }
-    // the cheap repairs run whenever a reindex did NOT rebuild the data;
-    // compact subsumes vacuum (its full rewrite drops tombstoned rows
-    // and clears the sidecar), so the targeted vacuum runs only when
-    // the index is NOT also being compacted
-    val rebuilt = actions.headOption.exists(_.startsWith("reindex"))
-    if (!rebuilt) {
-      if (h.tombstoneHeavy && !h.fragmented) {
-        vacuumTombstones(spark, path)
-        actions += "vacuumTombstones"
-      }
-      if (h.fragmented) {
-        compactIndex(spark, path)
-        actions += "compactIndex"
-      }
-    }
-    actions.toSeq
+    })
   }
 
   /**
@@ -2577,7 +2487,7 @@ object AnnIndex {
    * corpus-bound [[reindexIvfPq]]/[[reindexPq]]: their codes are lossy.
    * Fail-closed on sidecar-less and pre-marker states.
    *
-   * @return the new cell count
+   * @return the new planned cell count ([[CentroidsSidecar.refCells]])
    */
   def reindexIvf(spark: SparkSession, path: String, nCells: Int = 16,
       seed: Long = 42L, targetCellRows: Long = 4096L,
@@ -2592,7 +2502,7 @@ object AnnIndex {
         seed = seed, autoPlan = true, targetCellRows = targetCellRows,
         fitSampleCap = fitSampleCap, quantizer = quant)
     }
-    ivfCentroids(spark, path).length
+    readCentroidsSidecar(spark, path).refCells
   }
 
   /**
@@ -2646,7 +2556,7 @@ object AnnIndex {
    * subspace count (from `_codebooks`); the quantizer family always
    * comes from the sidecar marker.
    *
-   * @return the new cell count
+   * @return the new planned cell count ([[CentroidsSidecar.refCells]])
    */
   def reindexIvfPq(embeddings: DataFrame, vecCol: String, idCol: String,
       path: String, nCells: Int = 16, m: Int = -1, seed: Long = 42L,
@@ -2666,7 +2576,7 @@ object AnnIndex {
         m = useM, seed = seed, quantizer = quant, autoPlan = true,
         targetCellRows = targetCellRows, fitSampleCap = fitSampleCap)
     }
-    ivfCentroids(spark, path).length
+    readCentroidsSidecar(spark, path).refCells
   }
 
   /**
@@ -2774,14 +2684,13 @@ object AnnIndex {
    * Fails closed when no reservoir exists (legacy index) — callers fall
    * back to the corpus-bound [[reindexIvfPq]].
    *
-   * @return the new cell count
+   * @return the new planned cell count ([[CentroidsSidecar.refCells]])
    */
   def reindexIvfPqFromReservoir(spark: SparkSession, path: String,
       nCells: Int = -1, seed: Long = 42L, targetCellRows: Long = 4096L,
       fitSampleCap: Long = KmeansFitSampleCap): Int = {
     // ONE sidecar read serves the geometry check + marker + width
     val sc = readCentroidsSidecar(spark, path)
-    val cents = sc.cells
     requireCodebooks(spark, path)         // fail-closed
     val quant = sc.quantizer(path)
     val cb = readCodebooks(spark, path)
@@ -2791,14 +2700,7 @@ object AnnIndex {
         s"reindexIvfPqFromReservoir($path): no _sample reservoir (a " +
           s"legacy or interrupted build) — use reindexIvfPq(corpus, ...)"))
       .localCheckpoint(true) // read by the fit, the upgrade join and the re-stamp
-    // the reference width: the sidecar's PLANNED geometry, never the
-    // occupied-cell count — on skewed data the occupied count is not a
-    // power of two and a sign rebuild at it would throw mid-maintenance
-    // (the exact trap indexSignBits exists for on the append path)
-    val refCells =
-      if (nCells > 0) nCells
-      else if (quant == "sign") 1 << sc.signBits(path)
-      else cents.length
+    val refCells = if (nCells > 0) nCells else sc.refCells
     val fs = IndexStore.fsOf(spark, path)
     IndexStore.rewriteStaged(fs, path, IndexStore.Reindex,
         "reindexIvfPqFromReservoir") { tmp =>
@@ -2815,7 +2717,7 @@ object AnnIndex {
         .coalesce(8).write.mode("overwrite").parquet(s"$tmp/_sample")
       restampReservoirCap(fs, path, tmp)
     }
-    ivfCentroids(spark, path).length
+    readCentroidsSidecar(spark, path).refCells
   }
 
   /** Copy the live reservoir's stamped cap onto a staged rebuild (the
@@ -2934,7 +2836,8 @@ object AnnIndex {
 
   /** Shared occupancy-drift WARN for the IVF-family appends: when a
     * fresh build at the post-append count would plan MORE cells
-    * ([[Similarity.planIvfCells]]), each probe now scans
+    * ([[Similarity.planIvfCells]]) than the index's planned key space
+    * `nCells` ([[CentroidsSidecar.refCells]]), each probe now scans
     * total/nCells > targetCellRows rows per cell — linear probe-cost
     * growth until a rebuild re-plans. `rebuildCall` names the exact
     * prescribed action (round 15: the raw-vector family reindexes from

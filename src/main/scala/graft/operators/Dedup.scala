@@ -1184,16 +1184,17 @@ object Dedup {
    * operators per batch would run the CPU-heavy canon+shingle+minhash
    * chain twice per document (once for pairs, once for the index append),
    * violating the index contract that signatures are computed once ever.
+   *
+   * @param pairsSink the streaming cadence's per-batch pairs directory:
+   *   when set, the pairs materialize DIRECTLY into it (see
+   *   [[materializePairs]] — one write job instead of
+   *   checkpoint-then-rewrite) and the returned frame reads it back.
+   *   That frame is a lazy read of the directory, not a snapshot: consume
+   *   it before anything overwrites the directory (a replay of the batch,
+   *   or a later batch given the same sink) — after that it reads the
+   *   newer rows or fails mid-scan. Without a sink the frame is a
+   *   GC-tracked local checkpoint that keeps its own rows.
    */
-  /** @param pairsSink the streaming cadence's per-batch pairs
-    *   directory: when set, the pairs materialize DIRECTLY into it
-    *   (see [[materializePairs]] — one write job instead of
-    *   checkpoint-then-rewrite) and the returned frame reads it back.
-    *   That frame is a lazy read of the directory, not a snapshot:
-    *   consume it before anything overwrites the directory (a replay of
-    *   the batch, or a later batch given the same sink) — after that it
-    *   reads the newer rows or fails mid-scan. Without a sink the frame
-    *   is a GC-tracked local checkpoint that keeps its own rows. */
   def ingestBatch(newDocs: DataFrame, textCol: String, idCol: String,
       indexPath: Option[String], indexBatchDir: String, shingleK: Int = 5,
       numHashes: Int = 16, bands: Int = 4,
@@ -1263,20 +1264,18 @@ object Dedup {
       (if (hasBatch) Seq(StructField("batch", LongType)) else Nil))
   }
 
-  /** Fail-closed layout check for the mutations: a tree with neither
-    * layout's partition directories is not a band index, and
+  /** Fail-closed layout check for the mutations and health: a tree with
+    * neither layout's partition directories is not a band index, and
     * tombstoning or rewriting rows whose layout is unknown helps
-    * nobody. */
+    * nobody. @return "batch" (`batch=N/band=`) or "flat" (`band=`) */
   private def requireBandLayout(spark: org.apache.spark.sql.SparkSession,
-      path: String, op: String): Unit =
-    if (!IndexStore.fsOf(spark, path)
-        .listStatus(new org.apache.hadoop.fs.Path(path)).iterator
-        .map(_.getPath.getName)
-        .exists(n => n.startsWith("band=") || n.startsWith("batch=")))
-      throw new IllegalStateException(
-        s"$op($path): no band=/batch= partition directories — not a " +
-          s"minhash index layout; refusing to mutate a tree whose " +
-          s"layout is unknown.")
+      path: String, op: String, root: Set[String]): String =
+    if (root.exists(_.startsWith("batch="))) "batch"
+    else if (root.exists(_.startsWith("band="))) "flat"
+    else throw new IllegalStateException(
+      s"$op($path): no band=/batch= partition directories — not a " +
+        s"minhash index layout; refusing to act on a tree whose " +
+        s"layout is unknown.")
 
   /** The band indexes' [[IndexStore.Layout]]. A delete prices
     * tombstones against the signature rows (a parquet metadata count —
@@ -1311,6 +1310,9 @@ object Dedup {
         indexWrite(live.withColumn("batch", lit(-1L)))
           .partitionBy("batch", "band")
       else indexWrite(live).partitionBy("band"),
+    // one bounded write leaves at most a session width of files per band
+    // dir ([[indexWrite]])
+    fragmentUnit = (bands, width) => bands * width,
     carried = Seq("_embplan", "_rows"), readSchema = bandReadSchema)
 
   /**
@@ -1328,150 +1330,36 @@ object Dedup {
       ids: DataFrame, idCol: String = "id"): Long =
     IndexStore.delete(spark, path, ids, idCol, BandLayout)
 
-  /** Operational snapshot of a persisted minhash index — the
-    * [[graft.operators.AnnIndex.indexHealth]] discipline on the second
-    * index. All fields derive from directory listings and the
-    * `_tombstones` sidecar; no job runs over the index data path.
-    *
-    * @param layout        "flat" (`band=` at root) or "batch"
-    *                      (`batch=N/band=`)
-    * @param batches       `batch=` generations (0 for flat; the
-    *                      compacted `batch=-1` base counts as one)
-    * @param bands         band partitions per generation
-    * @param dataFiles     parquet data files (sidecar excluded)
-    * @param tombstones    distinct tombstoned ids
-    * @param fragmented    see [[minhashIndexHealth]]'s threshold note —
-    *                      SIZE-AWARE on the batch layout (round 16)
-    * @param tombstoneHeavy ≥ `tombstoneFloor` ids accumulated (absolute —
-    *                      the delete-time WARN prices the proportional
-    *                      mass, which needs a row count this snapshot
-    *                      deliberately never pays)
-    * @param freshBytes    batch layout: bytes in non-compacted
-    *                      (`batch=N`, N ≥ 0) generations — the mass a
-    *                      compaction would fold into the base
-    * @param baseBytes     batch layout: bytes in the compacted
-    *                      `batch=-1` base generation (0 when none)
-    * @param prescription  "healthy", "vacuumMinhashTombstones"
-    *                      (tombstone mass alone — the targeted
-    *                      physical delete), or "compactMinhashIndex"
-    *                      (fragmentation — the full rewrite, which
-    *                      subsumes the vacuum: it drops tombstoned
-    *                      rows and clears the sidecar too) */
-  case class MinhashIndexHealth(layout: String, batches: Int, bands: Int,
-      dataFiles: Long, tombstones: Long, fragmented: Boolean,
-      tombstoneHeavy: Boolean, prescription: String,
-      freshBytes: Long = 0L, baseBytes: Long = 0L)
-
-  /** Compute [[MinhashIndexHealth]] for either index layout. Fail-closed
-    * on a directory that is not a minhash index, and on an interrupted
-    * vacuum's mid-swap state.
-    *
-    * Fragmentation thresholds:
-    *  - batch layout (round 16, advisor fix — the old trigger counted
-    *    generations alone, so after a collapse to `batch=-1` a
-    *    long-lived stream FULL-rewrote the whole index every
-    *    ~`fragmentFactor` micro-batches: quadratic cumulative write
-    *    amplification): more than `fragmentFactor` non-compacted
-    *    generations AND their byte mass is at least
-    *    `minCompactionGain` of the compacted base (no base = always
-    *    worth collapsing). Each compaction therefore grows the base by
-    *    ≥ `minCompactionGain`, so lifetime rewrite bytes are bounded by
-    *    ~(1/minCompactionGain) × ingested bytes — amortized LINEAR, the
-    *    tiered-compaction discipline. `maxGenerations` caps the
-    *    generation count regardless of mass (directory/partition-
-    *    listing cost grows with generations even when their bytes are
-    *    negligible); past it, rewrites amortize to base/maxGenerations
-    *    per batch. Also flags when files exceed the generations'
-    *    bounded worth (a pre-write-discipline tree).
-    *  - flat layout: files exceed `fragmentFactor` × one write's
-    *    bounded worth (bands × session width — see [[indexWrite]]). */
+  /** [[IndexStore.health]] for a band index of either layout ("flat"
+    * `band=` at root, "batch" `batch=N/band=`): `partitions` is the band
+    * count, `generations` the `batch=` dirs. The fragmentation unit is
+    * one write's bounded worth (bands × session width, see
+    * [[indexWrite]]), and a `batch=` tree also flags on its size-aware
+    * generation trigger. `tombstoneHeavy` is the absolute floor alone:
+    * the delete WARN's proportional clause needs a row count this
+    * snapshot never pays for. There is no drift signal — shingle/hash
+    * parameters are the caller's contract, not data-dependent. */
   def minhashIndexHealth(spark: org.apache.spark.sql.SparkSession,
       path: String, fragmentFactor: Double = 2.0,
       tombstoneFloor: Long = 1024L, minCompactionGain: Double = 0.1,
-      maxGenerations: Int = 64): MinhashIndexHealth = {
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(hPath)) throw new IllegalStateException(
-      s"minhashIndexHealth($path): no index at this path")
-    IndexStore.requireNoInterruptedVacuum(fs, path, "minhashIndexHealth",
-      BandLayout)
-    val roots = fs.listStatus(hPath).map(_.getPath)
-    val batchDirs = roots.filter(_.getName.startsWith("batch="))
-    val rootBands = roots.count(_.getName.startsWith("band="))
-    if (batchDirs.isEmpty && rootBands == 0)
-      throw new IllegalStateException(
-        s"minhashIndexHealth($path): no band=/batch= partition " +
-          s"directories — not a minhash index layout.")
-    val layout = if (batchDirs.nonEmpty) "batch" else "flat"
-    val bands =
-      if (layout == "flat") rootBands
-      else batchDirs.map(d => fs.listStatus(d)
-        .count(_.getPath.getName.startsWith("band="))).max
-    var files = 0L
-    var baseBytes = 0L
-    var freshBytes = 0L
-    IndexStore.dataFiles(fs, path).foreach { f =>
-      val s = f.getPath.toString
-      files += 1
-      if (s.contains("/batch=-1/")) baseBytes += f.getLen
-      else if (s.contains("/batch=")) freshBytes += f.getLen
-    }
-    val tombstones = IndexStore.tombstoneCount(spark, path, BandLayout)
-    val width = spark.sessionState.conf.numShufflePartitions
-    val freshGens = batchDirs.count(_.getName != "batch=-1")
-    // batch layout: accumulated generations (size-aware — see the
-    // scaladoc threshold note) OR within-generation small files (a
-    // pre-write-discipline tree: one generation, input-width files per
-    // band dir); flat layout: files vs one write's bounded worth
-    val fileBloat = files > fragmentFactor *
-      math.max(1, bands * width * math.max(1, batchDirs.length))
-    val fragmented =
-      if (layout == "batch")
-        (freshGens > fragmentFactor &&
-          (baseBytes == 0L || freshGens > maxGenerations ||
-            freshBytes >= minCompactionGain * baseBytes)) || fileBloat
-      else files > fragmentFactor * math.max(1, bands * width)
-    val heavy = tombstones >= tombstoneFloor
-    // by CAUSE (round 16): fragmentation needs the full rewrite, which
-    // also makes deletes physical; tombstone mass alone needs only the
-    // targeted vacuum — prescribing compaction for it would rewrite the
-    // whole index for a takedown's worth of rows
-    val rx =
-      if (fragmented) "compactMinhashIndex"
-      else if (heavy) "vacuumMinhashTombstones"
-      else "healthy"
-    MinhashIndexHealth(layout, batchDirs.length, bands, files, tombstones,
-      fragmented, heavy, rx, freshBytes, baseBytes)
-  }
+      maxGenerations: Int = 64): IndexStore.IndexHealth[IndexStore.Signal] =
+    IndexStore.health(spark, path, BandLayout, "minhashIndexHealth",
+      fragmentFactor, tombstoneFloor, minCompactionGain, maxGenerations)(
+      (_, _) => IndexStore.NoSignal)
 
-  /** Execute [[minhashIndexHealth]]'s prescription — the
-    * [[graft.operators.AnnIndex.maintainIndex]] symmetry for the second
-    * index: [[compactMinhashIndex]] on fragmentation (the full rewrite
-    * also drops tombstoned rows and clears the sidecar — running the
-    * vacuum first would rewrite the affected files twice),
-    * [[vacuumMinhashTombstones]] on tombstone mass alone (O(affected
-    * files), never the corpus). The signature geometry never drifts —
-    * shingle/hash parameters are the caller's contract, not
-    * data-dependent — so there is no reindex verb. A healthy index is
-    * left completely untouched.
+  /** [[IndexStore.maintain]] on [[minhashIndexHealth]]:
+    * [[compactMinhashIndex]] on fragmentation, else
+    * [[vacuumMinhashTombstones]] on tombstone mass (O(affected files),
+    * never the corpus); a healthy index is left untouched.
     *
     * @return the actions taken, in order */
   def maintainMinhashIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, fragmentFactor: Double = 2.0,
       tombstoneFloor: Long = 1024L, minCompactionGain: Double = 0.1,
-      maxGenerations: Int = 64): Seq[String] = {
-    val h = minhashIndexHealth(spark, path, fragmentFactor, tombstoneFloor,
-      minCompactionGain, maxGenerations)
-    h.prescription match {
-      case "healthy" => Seq.empty
-      case "vacuumMinhashTombstones" =>
-        vacuumMinhashTombstones(spark, path)
-        Seq("vacuumMinhashTombstones")
-      case _ =>
-        compactMinhashIndex(spark, path)
-        Seq("compactMinhashIndex")
-    }
-  }
+      maxGenerations: Int = 64): Seq[String] =
+    IndexStore.maintain(spark, path, BandLayout, minhashIndexHealth(spark,
+      path, fragmentFactor, tombstoneFloor, minCompactionGain,
+      maxGenerations))(Left(None))
 
   /**
    * Compact a persisted band index: drop tombstoned rows PHYSICALLY,

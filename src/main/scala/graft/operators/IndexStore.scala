@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.StructType
  * the band indexes the minhash, embedding, phash and audio families
  * share ([[Dedup]]: flat `band=` and streaming `batch=N/band=` trees).
  * This is the only code that knows the protocol; a family supplies a
- * small [[Layout]] and its public verbs are one-line calls in here.
+ * small [[Layout]] and its public verbs are thin calls in here.
  *
  * '''Tombstones.''' A delete appends ids to the `_tombstones` sidecar
  * (underscore-invisible to the data reader): O(ids), no data rewrite,
@@ -59,6 +59,11 @@ import org.apache.spark.sql.types.StructType
  * of the sidecar files, so a warm probe of an unchanged index runs no
  * decode or inference job. The gates above still run on every read.
  *
+ * '''Health and maintenance''' ([[health]], [[maintain]]): one snapshot
+ * schema and one by-cause rule for every family — rebuild on the
+ * family's drift signal, else compact when fragmented, else vacuum when
+ * tombstone-heavy. A family supplies only its signal and its rebuild.
+ *
  * Design decisions:
  *  - A reader racing a swap sees a MISSING path between the two renames
  *    and errors — never a half-index, but it doesn't retry. A `_current`
@@ -90,12 +95,17 @@ private[graft] object IndexStore {
     *                        the `_tombstones` sidecar's one column
     * @param requireGeometry fail-closed check that the tree is this
     *                        family's layout with consistent geometry
-    *                        sidecars: (spark, path, op)
+    *                        sidecars: (spark, path, op, the root's entry
+    *                        names) => the layout's name, as [[health]]
+    *                        reports it
     * @param rowCount        the row count a delete WARN prices
     *                        tombstones against
     * @param writeStaged     the vacuum's discipline for the survivors of
     *                        the affected files (rows, affected file count)
     * @param writeCompacted  the compaction's discipline for every live row
+    * @param fragmentUnit    the data files one bounded write leaves per
+    *                        generation, from (partitions, session shuffle
+    *                        width) — [[health]]'s fragmentation unit
     * @param carried         sidecars a compaction copies byte-identical
     * @param filtered        sidecars holding ids that must drop their
     *                        tombstoned rows when the tombstones clear
@@ -105,10 +115,11 @@ private[graft] object IndexStore {
     *                        caller's frame schema (see [[liveRows]]) */
   case class Layout(owner: String, idCol: String, deleteOp: String,
       vacuumOp: String, compactOp: String,
-      requireGeometry: (SparkSession, String, String) => Unit,
+      requireGeometry: (SparkSession, String, String, Set[String]) => String,
       rowCount: (SparkSession, String) => Long,
       writeStaged: (DataFrame, Int) => DataFrameWriter[Row],
       writeCompacted: DataFrame => DataFrameWriter[Row],
+      fragmentUnit: (Int, Int) => Int,
       carried: Seq[String], filtered: Seq[String] = Nil,
       restampRows: Boolean = false,
       readSchema: (FileSystem, String, StructType) => StructType =
@@ -163,6 +174,18 @@ private[graft] object IndexStore {
       Some(s.trim.toLong)
     } catch { case scala.util.control.NonFatal(_) => None }
   }
+
+  /** `_rows`, self-healing: when absent or unreadable, run `count` once
+    * and re-stamp it, so every later read is sidecar-only again. */
+  def stampedRows(spark: SparkSession, path: String)(count: => Long): Long = {
+    val fs = fsOf(spark, path)
+    readRows(fs, path).getOrElse { val n = count; writeRows(fs, path, n); n }
+  }
+
+  /** The names of `path`'s direct entries: what a family's geometry gate
+    * ([[Layout.requireGeometry]]) checks the tree against. */
+  private def rootNames(fs: FileSystem, path: String): Set[String] =
+    fs.listStatus(new Path(path)).map(_.getPath.getName).toSet
 
   // ----------------------------------------------------------- sidecar memo
 
@@ -370,7 +393,7 @@ private[graft] object IndexStore {
     val op = layout.deleteOp
     requireIndex(fs, path, op)
     requireNoInterruptedVacuum(fs, path, op, layout)
-    layout.requireGeometry(spark, path, op)
+    layout.requireGeometry(spark, path, op, rootNames(fs, path))
     val obs = Observation()
     ids.select(col(idCol).as(layout.idCol)).distinct()
       .observe(obs, count(lit(1)).as("n"))
@@ -440,7 +463,7 @@ private[graft] object IndexStore {
     val op = layout.compactOp
     requireIndex(fs, path, op)
     requireNoInterruptedVacuum(fs, path, op, layout)
-    layout.requireGeometry(spark, path, op)
+    layout.requireGeometry(spark, path, op, rootNames(fs, path))
     val before = dataFiles(fs, path).size.toLong
     rewriteStaged(fs, path, Compaction, op)(
       stageCompaction(spark, path, _, layout))
@@ -534,7 +557,7 @@ private[graft] object IndexStore {
     requireNoInterruptedVacuum(fs, path, op, layout)
     fs.delete(child(path, s"$Marker.tmp"), false)
     fs.delete(child(path, Staged), true)
-    layout.requireGeometry(spark, path, op)
+    layout.requireGeometry(spark, path, op, rootNames(fs, path))
     if (!hasTombstones(fs, path)) return None
     val id = layout.idCol
     val tomb = spark.read.parquet(s"$path/$Tombstones").select(id).distinct()
@@ -676,4 +699,130 @@ private[graft] object IndexStore {
     fs.delete(child(path, Marker), false)
     (m.steps.count(_.isInstanceOf[Delete]).toLong, m.rowsDropped)
   }
+
+  // -------------------------------------------------- health and maintain
+
+  /** A family's rebuild signal in an [[IndexHealth]]: `rebuild` names the
+    * rebuild the signal prescribes, if any. */
+  trait Signal { def rebuild: Option[String] }
+
+  /** The signal of a family whose geometry is the caller's contract and
+    * never drifts (the minhash, phash and audio band indexes). */
+  case object NoSignal extends Signal { val rebuild: Option[String] = None }
+
+  /** Operational snapshot of a persisted index, one schema for every
+    * family. An operator schedules maintenance from it; [[maintain]]
+    * executes it.
+    *
+    * @param layout       the layout's name ([[Layout.requireGeometry]]:
+    *                     "lsh", "ivf", "ivfpq", "pq"; "flat" or "batch"
+    *                     for a band index)
+    * @param rows         live rows, when a sidecar holds them (the ANN
+    *                     `_rows` count)
+    * @param partitions   partition directories (per generation on a
+    *                     `batch=` tree: the most any generation holds)
+    * @param generations  `batch=` generations (0 on a flat tree; a
+    *                     compacted `batch=-1` base counts as one)
+    * @param dataFiles    parquet data files ([[dataFiles]])
+    * @param freshBytes   bytes in non-compacted `batch=N` (N ≥ 0)
+    *                     generations — the mass a compaction would fold
+    *                     into the base
+    * @param baseBytes    bytes in the compacted `batch=-1` generation
+    * @param prescription "healthy", or the verb [[maintain]] runs: the
+    *                     signal's rebuild, else the layout's compaction
+    *                     when fragmented, else its vacuum when tombstone-
+    *                     heavy (see [[maintain]] for why each subsumes the
+    *                     next) */
+  case class IndexHealth[+S <: Signal](layout: String, rows: Option[Long],
+      tombstones: Long, partitions: Int, generations: Int, dataFiles: Long,
+      freshBytes: Long, baseBytes: Long, fragmented: Boolean,
+      tombstoneHeavy: Boolean, signal: S, prescription: String)
+
+  /** Compute [[IndexHealth]]: the exists, interrupted-vacuum and geometry
+    * gates, one root listing (plus one per `batch=` generation), the
+    * data-file walk, the `_tombstones` distinct count — no job over the
+    * index data path — then the family's `signal` from the layout name
+    * and `rows`.
+    *
+    *  - `fragmented`: data files exceed `fragmentFactor` × the layout's
+    *    [[Layout.fragmentUnit]] × max(1, generations) — K appends or
+    *    micro-batches multiply one write's files by up to K — or, on a
+    *    `batch=` tree, more than `fragmentFactor` fresh generations whose
+    *    bytes are at least `minCompactionGain` of the compacted base (no
+    *    base: always), or more than `maxGenerations` of them whatever
+    *    their mass. The mass gate grows the base by ≥ `minCompactionGain`
+    *    per compaction, so a stream that maintains every batch rewrites
+    *    amortized-linear bytes, not quadratic; the cap bounds listing
+    *    cost, which grows with generations even when their bytes don't.
+    *  - `tombstoneHeavy`: ≥ `tombstoneFloor` distinct tombstoned ids, and
+    *    ≥ 1% of `rows` when a sidecar gives them (the delete WARN's
+    *    threshold). */
+  def health[S <: Signal](spark: SparkSession, path: String, layout: Layout,
+      op: String, fragmentFactor: Double, tombstoneFloor: Long,
+      minCompactionGain: Double = 0.1, maxGenerations: Int = 64)(
+      signal: (String, Option[Long]) => S): IndexHealth[S] = {
+    val fs = fsOf(spark, path)
+    requireIndex(fs, path, op)
+    requireNoInterruptedVacuum(fs, path, op, layout)
+    val root = fs.listStatus(new Path(path))
+    val kind = layout.requireGeometry(spark, path, op,
+      root.map(_.getPath.getName).toSet)
+    // partition dirs: the reader's `key=value` rule
+    def partitionsIn(sts: Array[FileStatus]): Int = sts.count(st =>
+      st.isDirectory && st.getPath.getName.contains("=") &&
+        !st.getPath.getName.startsWith("batch="))
+    val gens = root.map(_.getPath).filter(_.getName.startsWith("batch="))
+    val partitions =
+      if (gens.isEmpty) partitionsIn(root)
+      else gens.map(g => partitionsIn(fs.listStatus(g))).max
+    val files = dataFiles(fs, path)
+    val (base, fresh) = files.map(f => (f.getPath.toString, f.getLen))
+      .filter(_._1.contains("/batch=")).partition(_._1.contains("/batch=-1/"))
+    val (baseBytes, freshBytes) = (base.map(_._2).sum, fresh.map(_._2).sum)
+    val rows =
+      if (layout.restampRows) Some(layout.rowCount(spark, path)) else None
+    val tombstones = tombstoneCount(spark, path, layout)
+    val unit = layout.fragmentUnit(partitions,
+      spark.sessionState.conf.numShufflePartitions)
+    val freshGens = gens.count(_.getName != "batch=-1")
+    val fragmented =
+      files.size > fragmentFactor * math.max(1, unit * math.max(1, gens.size)) ||
+        (gens.nonEmpty && freshGens > fragmentFactor && (baseBytes == 0L ||
+          freshGens > maxGenerations ||
+          freshBytes >= minCompactionGain * baseBytes))
+    val heavy = tombstones >= tombstoneFloor &&
+      rows.forall(tombstones * 100L >= _)
+    val s = signal(kind, rows)
+    IndexHealth(kind, rows, tombstones, partitions, gens.size,
+      files.size.toLong, freshBytes, baseBytes, fragmented, heavy, s,
+      s.rebuild.orElse(Option.when(fragmented)(layout.compactOp))
+        .orElse(Option.when(heavy)(layout.vacuumOp)).getOrElse("healthy"))
+  }
+
+  /** Execute `h` by cause: the family's `rebuild` when the signal
+    * prescribes one — it rewrites every live row, dropping tombstones
+    * and defragmenting, so nothing else runs after it. Anything not
+    * rebuilt (a healthy signal, or a rebuild the family declined) gets
+    * the cheap repairs: [[compact]] when fragmented — its full rewrite
+    * also drops tombstoned rows and clears the sidecar, so a vacuum first
+    * would rewrite the affected files twice — else the targeted [[vacuum]]
+    * when tombstone-heavy. A healthy index is left untouched. Every
+    * action rides its own crash protocol.
+    *
+    * @param rebuild the family's rebuild: Right(action) when it rewrote
+    *                the index, Left(note) when it declined (a note is
+    *                reported as an action)
+    * @return the actions taken, in order */
+  def maintain(spark: SparkSession, path: String, layout: Layout,
+      h: IndexHealth[Signal])(
+      rebuild: => Either[Option[String], String]): Seq[String] =
+    (if (h.signal.rebuild.isEmpty) Left(None) else rebuild) match {
+      case Right(action) => Seq(action)
+      case Left(note) => note.toSeq ++ (
+        if (h.fragmented) {
+          compact(spark, path, layout); Seq(layout.compactOp)
+        } else if (h.tombstoneHeavy) {
+          vacuum(spark, path, layout); Seq(layout.vacuumOp)
+        } else Nil)
+    }
 }

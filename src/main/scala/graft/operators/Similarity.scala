@@ -931,15 +931,9 @@ object Similarity {
     * other bands' footers), re-stamped so the next caller reads the
     * sidecar. */
   private[graft] def embVectorCount(
-      spark: org.apache.spark.sql.SparkSession, path: String): Long = {
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    IndexStore.readRows(fs, path).getOrElse {
-      val n = spark.read.parquet(path).filter(col("band") === 0).count()
-      IndexStore.writeRows(fs, path, n)
-      n
-    }
-  }
+      spark: org.apache.spark.sql.SparkSession, path: String): Long =
+    IndexStore.stampedRows(spark, path)(
+      spark.read.parquet(path).filter(col("band") === 0).count())
 
   /** The fresh plan [[planEmbeddingBands]] would pick at `n` vectors,
     * when it is WIDER than the frozen one — None for explicit-plan
@@ -967,13 +961,13 @@ object Similarity {
         s"re-band from the index's own rows.")
     }
 
-  /** [[embeddingIndexHealth]]'s snapshot — the
-    * [[graft.operators.Dedup.MinhashIndexHealth]] fields (the file/
-    * tombstone lifecycle is inherited layout-generically) plus the two
-    * signals only THIS index needs because its plan is data-dependent:
+  /** The embedding index's signal in [[IndexStore.IndexHealth]] — the
+    * two inputs only THIS band index needs because its plan is
+    * data-dependent (`bands`/`bits` are the frozen plan, `vectors` the
+    * `_rows` count):
     *
-    *  - `drifted`: growth — a fresh [[planEmbeddingBands]] at the
-    *    current `_rows` count picks a wider geometry than the frozen
+    *  - `drifted`: growth — a fresh [[planEmbeddingBands]] at `vectors`
+    *    picks a wider geometry (`freshBands`/`freshBits`) than the frozen
     *    one (same planner the append WARN consults, so health and the
     *    WARN can never disagree). Sidecar-only, no job.
     *  - `skewed`: distribution shift — bands were planned for
@@ -988,22 +982,18 @@ object Similarity {
     * `buckets`/`maxBucket`/`meanOccupancy` come from ONE column-pruned
     * aggregate over the live (band, key) columns — two small integer
     * columns (plus `id` when a `_tombstones` sidecar forces the live
-    * anti-join), no vectors read. That is a data-path job, unlike the ANN
-    * healths: run this at maintenance-window cadence, or pass
-    * `checkOccupancy = false` (the in-stream maintenance default) for
-    * a sidecar/listing-only snapshot with the skew fields zeroed.
-    *
-    * `prescription` is by CAUSE, one verb, most-subsuming first:
-    * drift/skew → [[reindexEmbeddingIndex]] (the rebuild drops
-    * tombstones and rewrites files, so it subsumes both takedown
-    * verbs); else fragmentation → the inherited compaction; else
-    * tombstone mass → the inherited targeted vacuum. */
-  case class EmbeddingIndexHealth(layout: String, batches: Int,
-      bands: Int, bits: Int, vectors: Long,
-      freshBands: Int, freshBits: Int, drifted: Boolean,
-      buckets: Long, maxBucket: Long, meanOccupancy: Double,
-      skewed: Boolean, dataFiles: Long, tombstones: Long,
-      fragmented: Boolean, tombstoneHeavy: Boolean, prescription: String)
+    * anti-join), no vectors read. That is a data-path job, unlike the
+    * rest of the snapshot: run it at maintenance-window cadence, or pass
+    * `checkOccupancy = false` (the in-stream maintenance default) for a
+    * sidecar/listing-only snapshot with the skew fields zeroed. Either
+    * flag prescribes [[reindexEmbeddingIndex]]. */
+  case class EmbeddingSignal(bands: Int, bits: Int, vectors: Long,
+      freshBands: Int, freshBits: Int, drifted: Boolean, buckets: Long,
+      maxBucket: Long, meanOccupancy: Double, skewed: Boolean)
+      extends IndexStore.Signal {
+    def rebuild: Option[String] =
+      Option.when(drifted || skewed)("reindexEmbeddingIndex")
+  }
 
   /** The skew scan's frame — live (band, key) bucket sizes. Factored so
     * the spec can pin its PLAN: `band` is a partition column and `key`
@@ -1017,43 +1007,38 @@ object Similarity {
     IndexStore.liveRows(spark, path, Dedup.BandLayout)
       .groupBy(col("band"), col("key")).count()
 
-  /** Compute [[EmbeddingIndexHealth]] for either layout (flat `band=`
-    * or streaming `batch=N/band=`). Fail-closed on a missing `_embplan`
-    * and on mid-vacuum trees, like every other reader. */
+  /** [[Dedup.minhashIndexHealth]] plus the [[EmbeddingSignal]], for
+    * either layout (flat `band=` or streaming `batch=N/band=`).
+    * Fail-closed on a missing `_embplan` and on mid-vacuum trees, like
+    * every other reader. */
   def embeddingIndexHealth(spark: org.apache.spark.sql.SparkSession,
       path: String, skewFactor: Double = 8.0,
       fragmentFactor: Double = 2.0, tombstoneFloor: Long = 1024L,
       minCompactionGain: Double = 0.1, maxGenerations: Int = 64,
-      checkOccupancy: Boolean = true): EmbeddingIndexHealth = {
-    val plan = readEmbPlan(spark, path) // fail-closed embplan + vacuum
-    val base = Dedup.minhashIndexHealth(spark, path, fragmentFactor,
-      tombstoneFloor, minCompactionGain, maxGenerations)
-    val vectors = embVectorCount(spark, path)
-    val fresh = embPlanDrift(plan, vectors)
-    val (buckets, maxBucket, meanOcc) =
-      if (!checkOccupancy) (0L, 0L, 0.0)
-      else {
-        val occ = embOccupancyFrame(spark, path)
-          .agg(count(lit(1)).as("buckets"), max(col("count")).as("mx"),
-            sum(col("count")).as("rows"))
-          .head()
-        val b = occ.getLong(0)
-        if (b == 0L) (0L, 0L, 0.0)
-        else (b, occ.getLong(1), occ.getLong(2).toDouble / b.toDouble)
-      }
-    val skewed = checkOccupancy && buckets > 0L &&
-      maxBucket.toDouble >
-        skewFactor * math.max(meanOcc, plan.targetOccupancy)
-    val rx =
-      if (fresh.isDefined || skewed) "reindexEmbeddingIndex"
-      else base.prescription
-    EmbeddingIndexHealth(base.layout, base.batches,
-      plan.planned._1, plan.planned._2, vectors,
-      fresh.map(_._1).getOrElse(plan.planned._1),
-      fresh.map(_._2).getOrElse(plan.planned._2), fresh.isDefined,
-      buckets, maxBucket, meanOcc, skewed, base.dataFiles,
-      base.tombstones, base.fragmented, base.tombstoneHeavy, rx)
-  }
+      checkOccupancy: Boolean = true)
+      : IndexStore.IndexHealth[EmbeddingSignal] =
+    IndexStore.health(spark, path, Dedup.BandLayout, "embeddingIndexHealth",
+        fragmentFactor, tombstoneFloor, minCompactionGain, maxGenerations) { (_, _) =>
+      val plan = readEmbPlan(spark, path) // fail-closed embplan
+      val vectors = embVectorCount(spark, path)
+      val fresh = embPlanDrift(plan, vectors)
+      val (buckets, maxBucket, meanOcc) =
+        if (!checkOccupancy) (0L, 0L, 0.0)
+        else {
+          val occ = embOccupancyFrame(spark, path)
+            .agg(count(lit(1)).as("buckets"), max(col("count")).as("mx"),
+              sum(col("count")).as("rows"))
+            .head()
+          val b = occ.getLong(0)
+          if (b == 0L) (0L, 0L, 0.0)
+          else (b, occ.getLong(1), occ.getLong(2).toDouble / b.toDouble)
+        }
+      val (bands, bits) = fresh.getOrElse(plan.planned)
+      EmbeddingSignal(plan.planned._1, plan.planned._2, vectors, bands, bits,
+        fresh.isDefined, buckets, maxBucket, meanOcc,
+        skewed = checkOccupancy && buckets > 0L && maxBucket.toDouble >
+          skewFactor * math.max(meanOcc, plan.targetOccupancy))
+    }
 
   /**
    * Re-plan and re-band a persisted embedding index FROM ITS OWN ROWS —
@@ -1131,22 +1116,19 @@ object Similarity {
     } finally cells.unpersist(false)
   }
 
-  /** Execute [[embeddingIndexHealth]]'s prescription — the third
-    * index's [[graft.operators.AnnIndex.maintainIndex]] /
-    * [[Dedup.maintainMinhashIndex]] symmetry, completing the verb set
-    * the other two families already have. One verb per call, by cause;
-    * a healthy index is left completely untouched.
-    *
-    * The reindex arm is guarded against two rewrite-without-progress
-    * traps (both the unbounded-write-amplification class the round-16
-    * compaction trigger fix removed):
+  /** [[IndexStore.maintain]] on [[embeddingIndexHealth]]: the reindex
+    * on drift or skew, else the inherited compaction or vacuum. The
+    * reindex is guarded against two rewrite-without-progress traps (both
+    * the unbounded-write-amplification class the round-16 compaction
+    * trigger fix removed); a declined reindex WARNs and the cheap repairs
+    * still run, so a takedown on a skewed index still goes physical:
     *
     *  - An EXPLICIT-plan index (autoPlan=false frozen at build) is the
     *    caller's key-space contract — drift never fires for it, and a
     *    skew flip must not silently convert it to auto-planned keys
     *    (anything replaying the contracted banding externally would
-    *    lose every collision). Maintain WARNs and leaves it untouched;
-    *    the fix is the caller's (rebuild wider, or dedup the corpus).
+    *    lose every collision). The fix is the caller's (rebuild wider,
+    *    or dedup the corpus).
     *  - Skew WITHOUT drift means the count hasn't crossed a planner
     *    boundary, so a same-occupancy re-plan reproduces byte-identical
     *    keys — an O(index) rewrite that cannot change the measurement.
@@ -1157,8 +1139,7 @@ object Similarity {
     *    directions) instead of thrashing in place. When even the
     *    tightened plan equals the frozen one (the maxBits cap), the
     *    hot mass is plan-invariant — duplicate vectors share every key
-    *    under every hyperplane family — and maintain WARNs that no
-    *    banding fixes that (dedup the corpus) rather than rewriting.
+    *    under every hyperplane family — and no banding fixes that.
     *
     * @return the actions taken, in order */
   def maintainEmbeddingIndex(spark: org.apache.spark.sql.SparkSession,
@@ -1168,60 +1149,46 @@ object Similarity {
       checkOccupancy: Boolean = true): Seq[String] = {
     val h = embeddingIndexHealth(spark, path, skewFactor, fragmentFactor,
       tombstoneFloor, minCompactionGain, maxGenerations, checkOccupancy)
-    h.prescription match {
-      case "healthy" => Seq.empty
-      case "reindexEmbeddingIndex" =>
-        val plan = readEmbPlan(spark, path)
-        if (!plan.autoPlan) {
-          System.err.println(s"[similarity] WARN " +
-            s"maintainEmbeddingIndex($path): band-occupancy skew on an " +
-            s"EXPLICIT-plan index — the geometry is the caller's " +
-            s"contract, so maintain will not re-band it; rebuild with " +
-            s"a wider explicit plan (or autoPlan) or dedup the corpus.")
-          Seq.empty
-        } else {
-          val occ =
-            if (h.drifted) plan.targetOccupancy
-            else plan.targetOccupancy / 4
-          // the guard's candidate must plan at the LIVE count — the
-          // count the reindex itself will re-plan at (round 18, advisor
-          // fix): the advisory `_rows` count over-reads by tombstoned
-          // mass, so under heavy takedowns a `_rows`-planned candidate
-          // can differ from the frozen plan while the actual reindex
-          // (live-planned) reproduces identical geometry — exactly the
-          // O(index) rewrite-without-progress this guard exists to
-          // block. The live band-0 count is one partition-pruned job,
-          // and only runs when a sidecar exists to diverge over.
-          val guardN = {
-            val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-              spark.sparkContext.hadoopConfiguration)
-            if (IndexStore.hasTombstones(fs, path))
-              IndexStore.liveRows(spark, path, Dedup.BandLayout)
-                .filter(col("band") === 0).count()
-            else embVectorCount(spark, path)
-          }
-          val candidate = planEmbeddingBands(guardN,
-            plan.minCosine, plan.ref._1, plan.ref._2, occ)
-          if (candidate == plan.planned) {
-            System.err.println(s"[similarity] WARN " +
-              s"maintainEmbeddingIndex($path): skew is PLAN-INVARIANT " +
-              s"at this count (hot cells survive even a ${occ}-target " +
-              s"re-plan — duplicate vectors share every key under " +
-              s"every hyperplane family); skipping the no-progress " +
-              s"rewrite. Dedup the corpus, or lower targetOccupancy " +
-              s"manually via reindexEmbeddingIndex.")
-            Seq.empty
-          } else {
-            reindexEmbeddingIndex(spark, path, targetOccupancy = occ)
-            Seq("reindexEmbeddingIndex")
-          }
-        }
-      case "vacuumMinhashTombstones" =>
-        Dedup.vacuumMinhashTombstones(spark, path)
-        Seq("vacuumMinhashTombstones")
-      case _ =>
-        Dedup.compactMinhashIndex(spark, path)
-        Seq("compactMinhashIndex")
+    IndexStore.maintain(spark, path, Dedup.BandLayout, h) {
+      val plan = readEmbPlan(spark, path)
+      val occ =
+        if (h.signal.drifted) plan.targetOccupancy
+        else plan.targetOccupancy / 4
+      // the guard's candidate must plan at the LIVE count — the count the
+      // reindex itself will re-plan at (round 18, advisor fix): the
+      // advisory `_rows` count over-reads by tombstoned mass, so under
+      // heavy takedowns a `_rows`-planned candidate can differ from the
+      // frozen plan while the actual reindex (live-planned) reproduces
+      // identical geometry — exactly the O(index) rewrite-without-
+      // progress this guard exists to block. The live band-0 count is one
+      // partition-pruned job, and only runs when a sidecar exists to
+      // diverge over.
+      def guardN =
+        if (IndexStore.hasTombstones(IndexStore.fsOf(spark, path), path))
+          IndexStore.liveRows(spark, path, Dedup.BandLayout)
+            .filter(col("band") === 0).count()
+        else embVectorCount(spark, path)
+      val declined =
+        if (!plan.autoPlan) Some("band-occupancy skew on an EXPLICIT-plan " +
+          "index — the geometry is the caller's contract, so maintain " +
+          "will not re-band it; rebuild with a wider explicit plan (or " +
+          "autoPlan) or dedup the corpus.")
+        else if (planEmbeddingBands(guardN, plan.minCosine, plan.ref._1,
+            plan.ref._2, occ) == plan.planned) Some("skew is PLAN-INVARIANT " +
+          s"at this count (hot cells survive even a ${occ}-target re-plan " +
+          "— duplicate vectors share every key under every hyperplane " +
+          "family); skipping the no-progress rewrite. Dedup the corpus, or " +
+          "lower targetOccupancy manually via reindexEmbeddingIndex.")
+        else None
+      declined match {
+        case Some(why) =>
+          System.err.println(
+            s"[similarity] WARN maintainEmbeddingIndex($path): $why")
+          Left(None)
+        case None =>
+          reindexEmbeddingIndex(spark, path, targetOccupancy = occ)
+          Right("reindexEmbeddingIndex")
+      }
     }
   }
 

@@ -556,13 +556,15 @@ class AnnAppendSpec extends SparkSpec {
     AnnFamily("lsh", (df, idx, every, id, lineage) =>
       graft.streaming.Streams.ingestAnnBatch(df, "embedding", "vec_id",
         idx, 64, every, 0.9, 0.001, id, lineage),
-      idx => AnnIndex.indexHealth(spark, idx, targetOccupancy = 0.001).drifted),
-    // sign cells at 2 planned rows each: the occupied cells stay fewer
-    // than the planned ones, so the drift never settles
+      idx => AnnIndex.indexHealth(spark, idx, targetOccupancy = 0.001)
+        .signal.drifted),
+    // sign cells at 2 planned rows each: the batch-0 4-cell key space is
+    // far below the plan at the grown count
     AnnFamily("ivfpq", (df, idx, every, id, lineage) =>
       graft.streaming.Streams.ingestAnnIvfPqBatch(df, "embedding",
         "vec_id", idx, 4, 16, "sign", false, every, 2L, id, lineage),
-      idx => AnnIndex.indexHealth(spark, idx, targetCellRows = 2L).drifted))
+      idx => AnnIndex.indexHealth(spark, idx, targetCellRows = 2L)
+        .signal.drifted))
 
   test("annIngest replay guard: an exact same-lineage replay of an " +
       "applied batch is skipped (no double-append); an id mismatch, a " +
@@ -854,6 +856,15 @@ class AnnAppendSpec extends SparkSpec {
     val e = intercept[IllegalStateException](
       AnnIndex.appendIvf(odds, "embedding", "vec_id", p))
     assert(e.getMessage.contains("sign_bits"))
+    // health still reports it (the width falls back to the occupied
+    // count), and the rebuild maintenance prescribes stamps the width
+    val occupied = AnnIndex.ivfCentroids(spark, p).length
+    val h = AnnIndex.indexHealth(spark, p, targetCellRows = 1L)
+    assert(h.layout === "ivf" && h.signal.currentUnits === occupied &&
+      h.signal.drifted, h.toString)
+    assert(AnnIndex.maintainIndex(spark, p, targetCellRows = 1L)
+      === Seq("reindexIvf"))
+    assert(AnnIndex.indexSignBits(spark, p) > 0)
   }
 
   test("appendLsh refuses a legacy raw-sig (sig=) layout — appending " +

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.AnnIndex
+import graft.operators.{AnnIndex, Dedup, Similarity}
 import org.apache.spark.sql.functions._
 
 /** indexHealth / maintainIndex (round 15, late): the lifecycle's
@@ -40,10 +40,10 @@ class AnnMaintainSpec extends SparkSpec {
     AnnIndex.buildLsh(emb, "embedding", "vec_id", p, dims = 64, bits = 8)
     val h = AnnIndex.indexHealth(spark, p)
     assert(h.layout === "lsh")
-    assert(!h.drifted && !h.fragmented && !h.tombstoneHeavy)
+    assert(!h.signal.drifted && !h.fragmented && !h.tombstoneHeavy)
     assert(h.tombstones === 0L)
     assert(h.prescription === "healthy")
-    assert(h.rows === emb.count())
+    assert(h.rows === Some(emb.count()))
     val before = dataFiles(p)
     assert(AnnIndex.maintainIndex(spark, p) === Seq.empty)
     assert(dataFiles(p) === before)
@@ -62,7 +62,7 @@ class AnnMaintainSpec extends SparkSpec {
     // floor is lowered so BOTH flags fire and reindex subsumes vacuum
     val h = AnnIndex.indexHealth(spark, p, targetOccupancy = 0.001,
       tombstoneFloor = 10L)
-    assert(h.drifted && h.plannedUnits > h.currentUnits)
+    assert(h.signal.drifted && h.signal.plannedUnits > h.signal.currentUnits)
     assert(h.tombstoneHeavy)
     assert(h.prescription === "reindexLsh")
     val acts = AnnIndex.maintainIndex(spark, p,
@@ -70,7 +70,7 @@ class AnnMaintainSpec extends SparkSpec {
     assert(acts === Seq("reindexLsh"))
     val h2 = AnnIndex.indexHealth(spark, p, targetOccupancy = 0.001,
       tombstoneFloor = 10L)
-    assert(!h2.drifted && !h2.tombstoneHeavy && h2.tombstones === 0L)
+    assert(!h2.signal.drifted && !h2.tombstoneHeavy && h2.tombstones === 0L)
     assert(h2.prescription === "healthy")
     // the rebuild really dropped the tombstoned rows
     assert(spark.read.parquet(p)
@@ -90,7 +90,7 @@ class AnnMaintainSpec extends SparkSpec {
     AnnIndex.deleteIds(spark, p,
       emb.filter(col("vec_id") % 10 === 3).select("vec_id"))
     val h = AnnIndex.indexHealth(spark, p, tombstoneFloor = 10L)
-    assert(!h.drifted)
+    assert(!h.signal.drifted)
     assert(h.fragmented, s"3 writes over ${h.partitions} cells should " +
       s"exceed 2x: ${h.dataFiles} files")
     assert(h.tombstoneHeavy)
@@ -116,7 +116,7 @@ class AnnMaintainSpec extends SparkSpec {
     AnnIndex.deleteIds(spark, p,
       emb.filter(col("vec_id") % 10 === 3).select("vec_id"))
     val h = AnnIndex.indexHealth(spark, p, tombstoneFloor = 10L)
-    assert(!h.drifted && !h.fragmented && h.tombstoneHeavy)
+    assert(!h.signal.drifted && !h.fragmented && h.tombstoneHeavy)
     assert(h.prescription === "vacuumTombstones")
     val acts = AnnIndex.maintainIndex(spark, p, tombstoneFloor = 10L)
     assert(acts === Seq("vacuumTombstones"))
@@ -158,7 +158,7 @@ class AnnMaintainSpec extends SparkSpec {
       emb.filter(col("vec_id") % 10 === 3).select("vec_id"))
     val h = AnnIndex.indexHealth(spark, p, targetCellRows = 16L,
       tombstoneFloor = 10L)
-    assert(h.layout === "ivfpq" && h.drifted && h.tombstoneHeavy)
+    assert(h.layout === "ivfpq" && h.signal.drifted && h.tombstoneHeavy)
     assert(h.prescription.startsWith("reindexIvfPq"))
     val acts = AnnIndex.maintainIndex(spark, p, corpus = None,
       targetCellRows = 16L, tombstoneFloor = 10L)
@@ -175,7 +175,7 @@ class AnnMaintainSpec extends SparkSpec {
     assert(acts2 === Seq("reindexIvfPq"))
     val h2 = AnnIndex.indexHealth(spark, p, targetCellRows = 16L,
       tombstoneFloor = 10L)
-    assert(!h2.drifted && h2.prescription === "healthy")
+    assert(!h2.signal.drifted && h2.prescription === "healthy")
     // RESERVOIR index (the round-18 default): the corpus-less maintain
     // executes the rebuild — drift AND tombstones resolved in one verb
     val pr = tmp("mnt_pqres")
@@ -191,7 +191,54 @@ class AnnMaintainSpec extends SparkSpec {
       "the reservoir rebuild resurrected a tombstoned row")
     val hr = AnnIndex.indexHealth(spark, pr, targetCellRows = 16L,
       tombstoneFloor = 10L)
-    assert(!hr.drifted && hr.prescription === "healthy", hr.toString)
+    assert(!hr.signal.drifted && hr.prescription === "healthy", hr.toString)
+  }
+
+  test("sign IVF / IVF-PQ with an EMPTY cell: drift reads the planned " +
+      "key space, so after one re-plan the next maintain is a no-op and " +
+      "an append does not WARN") {
+    // first dim >= 0 everywhere: half the sign patterns stay empty at any
+    // width, so the occupied-cell count never reaches the plan
+    val skewed = emb.filter(element_at(col("embedding"), 1) >= 0)
+    val n = skewed.count()
+    for (layout <- Seq("ivf", "ivfpq")) withClue(s"[$layout] ") {
+      val p = tmp(s"mnt_empty_$layout")
+      if (layout == "ivf") AnnIndex.buildIvf(skewed, "embedding", "vec_id",
+        p, nCells = 4, quantizer = "sign")
+      else AnnIndex.buildIvfPq(skewed, "embedding", "vec_id", p,
+        nCells = 4, m = 4, quantizer = "sign")
+      val acts = AnnIndex.maintainIndex(spark, p, targetCellRows = 2L)
+      assert(acts.size === 1 && acts.head.startsWith("reindexIvf"), acts)
+      val width = 1 << AnnIndex.indexSignBits(spark, p)
+      assert(AnnIndex.ivfCentroids(spark, p).length < width,
+        "fixture defect: every sign cell is occupied")
+      // a reindex at the same count reports the planned width too
+      assert((if (layout == "ivf") AnnIndex.reindexIvf(spark, p, nCells = width,
+        targetCellRows = 2L)
+      else AnnIndex.reindexIvfPqFromReservoir(spark, p,
+        targetCellRows = 2L)) === width)
+      val h = AnnIndex.indexHealth(spark, p, targetCellRows = 2L)
+      assert(h.signal.currentUnits === width &&
+        h.signal.plannedUnits === width && !h.signal.drifted, h.toString)
+      val before = dataFiles(p)
+      assert(AnnIndex.maintainIndex(spark, p, targetCellRows = 2L)
+        === Seq.empty, "the second maintain reindexed an unchanged index")
+      assert(dataFiles(p) === before)
+      // the append WARN reads the same width
+      assert(Similarity.planIvfCells(n + 1, width, 2L) === width,
+        "fixture defect: one more row crosses a plan boundary")
+      val one = skewed.limit(1).withColumn("vec_id", col("vec_id") + 1000000L)
+      val err = new java.io.ByteArrayOutputStream()
+      val old = System.err
+      try {
+        System.setErr(new java.io.PrintStream(err, true))
+        if (layout == "ivf") AnnIndex.appendIvf(one, "embedding", "vec_id",
+          p, targetCellRows = 2L)
+        else AnnIndex.appendIvfPq(one, "embedding", "vec_id", p,
+          targetCellRows = 2L)
+      } finally System.setErr(old)
+      assert(!err.toString.contains("probe cost has outgrown"), err.toString)
+    }
   }
 
   test("codebook staleness (round 16): same-distribution appends keep " +
@@ -204,16 +251,16 @@ class AnnMaintainSpec extends SparkSpec {
     AnnIndex.buildIvfPq(base, "embedding", "vec_id", p, nCells = 4,
       m = 16, quantizer = "sign", autoPlan = false)
     val h0 = AnnIndex.indexHealth(spark, p, staleMinRows = 1L)
-    assert(h0.baseReconErr > 0.0 && h0.appendedReconRows === 0L)
-    assert(!h0.stale)
+    assert(h0.signal.baseReconErr > 0.0 && h0.signal.appendedReconRows === 0L)
+    assert(!h0.signal.stale)
     // SAME distribution: the other half of the corpus — appended error
     // tracks the baseline, no flag
     val odds = emb.filter(col("vec_id") % 2 =!= 0)
       .select(col("vec_id"), col("embedding"))
     AnnIndex.appendIvfPq(odds, "embedding", "vec_id", p)
     val h1 = AnnIndex.indexHealth(spark, p, staleMinRows = 1L)
-    assert(h1.appendedReconRows === odds.count())
-    assert(!h1.stale,
+    assert(h1.signal.appendedReconRows === odds.count())
+    assert(!h1.signal.stale,
       s"same-distribution append flagged stale: $h1")
     // SHIFTED distribution: scale odd dims 100x (positive scaling —
     // signs, hence cells and codes, are preserved; only the normalized
@@ -226,9 +273,10 @@ class AnnMaintainSpec extends SparkSpec {
           .otherwise(x)).as("embedding"))
     AnnIndex.appendIvfPq(shifted, "embedding", "vec_id", p)
     val h2 = AnnIndex.indexHealth(spark, p, staleMinRows = 1L)
-    assert(h2.stale,
-      s"shifted appends did not flip stale: base=${h2.baseReconErr} " +
-        s"appended=${h2.appendedReconErr} n=${h2.appendedReconRows}")
+    assert(h2.signal.stale,
+      s"shifted appends did not flip stale: base=${h2.signal.baseReconErr} " +
+        s"appended=${h2.signal.appendedReconErr} " +
+        s"n=${h2.signal.appendedReconRows}")
     assert(h2.prescription.startsWith("reindexIvfPq"))
     // without a corpus AND without a reservoir (legacy): reported, not
     // taken (codes are lossy and there is nothing to retrain from)
@@ -243,7 +291,7 @@ class AnnMaintainSpec extends SparkSpec {
       vecCol = "embedding", idCol = "vec_id", staleMinRows = 1L)
     assert(acts2 === Seq("reindexIvfPq"))
     val h3 = AnnIndex.indexHealth(spark, p, staleMinRows = 1L)
-    assert(!h3.stale && h3.appendedReconRows === 0L)
+    assert(!h3.signal.stale && h3.signal.appendedReconRows === 0L)
     assert(h3.prescription === "healthy")
     // flat PQ shares the signal — staleness is its ONLY rebuild trigger.
     // Round 18: builds/appends grew the `_sample` reservoir, so the
@@ -255,11 +303,11 @@ class AnnMaintainSpec extends SparkSpec {
       quantizer = "sign")
     AnnIndex.appendPq(shifted, "embedding", "vec_id", p2)
     val hp = AnnIndex.indexHealth(spark, p2, staleMinRows = 1L)
-    assert(hp.layout === "pq" && hp.stale)
+    assert(hp.layout === "pq" && hp.signal.stale)
     assert(hp.prescription.startsWith("reindexPq"))
     assert(AnnIndex.maintainIndex(spark, p2, staleMinRows = 1L)
       === Seq("reindexPqFromReservoir"))
-    assert(!AnnIndex.indexHealth(spark, p2, staleMinRows = 1L).stale,
+    assert(!AnnIndex.indexHealth(spark, p2, staleMinRows = 1L).signal.stale,
       "the reservoir refit did not clear staleness")
   }
 
@@ -339,17 +387,48 @@ class AnnMaintainSpec extends SparkSpec {
 
   test("health issues no job over the index data path once _rows " +
       "exists (sidecar + listing only)") {
-    val p = tmp("mnt_nojob")
-    AnnIndex.buildIvf(emb, "embedding", "vec_id", p, nCells = 4,
-      quantizer = "sign")
-    // corrupt every data file: a health that scanned data would throw
-    val fs = fsOf(p)
-    dataFiles(p).keys.foreach { f =>
-      val out = fs.create(new org.apache.hadoop.fs.Path(f), true)
-      try out.write("not parquet".getBytes("UTF-8")) finally out.close()
+    case class Input(tag: String, build: String => Unit,
+        health: String => graft.operators.IndexStore.IndexHealth[
+          graft.operators.IndexStore.Signal],
+        layout: String, rows: Option[Long], tombstones: Long,
+        prescription: String)
+    val docs = Tables.load(spark, "/root/testdata/sf0.001", "documents")
+    val inputs = Seq(
+      Input("mnt_nojob", p => AnnIndex.buildIvf(emb, "embedding", "vec_id",
+          p, nCells = 4, quantizer = "sign"),
+        AnnIndex.indexHealth(spark, _), "ivf", Some(emb.count()), 0L,
+        "healthy"),
+      // a batch=-layout minhash index with a takedown
+      Input("mnt_nojob_mh", { p =>
+          (0 until 2).foreach(i => Dedup.ingestBatch(
+            docs.filter(col("doc_id") % 2 === i), "text", "doc_id",
+            Option.when(i > 0)(p), s"$p/batch=$i", minJaccard = 0.5))
+          Dedup.deleteFromMinhashIndex(spark, p, Seq(1L, 2L).toDF("doc_id"),
+            idCol = "doc_id")
+        }, Dedup.minhashIndexHealth(spark, _, tombstoneFloor = 1L),
+        "batch", None, 2L, "vacuumMinhashTombstones"),
+      // an embedding index with the data-path occupancy scan declined
+      Input("mnt_nojob_emb", p => Similarity.buildEmbeddingIndex(emb,
+          "embedding", "vec_id", p, minCosine = 0.9, bands = 4,
+          bitsPerBand = 16, autoPlan = false),
+        Similarity.embeddingIndexHealth(spark, _, checkOccupancy = false),
+        "flat", None, 0L, "healthy"))
+    for (in <- inputs) withClue(s"[${in.tag}] ") {
+      val p = tmp(in.tag)
+      in.build(p)
+      // corrupt every data file: a health that scanned data would throw
+      val fs = fsOf(p)
+      val files = dataFiles(p).keys
+      files.foreach { f =>
+        val out = fs.create(new org.apache.hadoop.fs.Path(f), true)
+        try out.write("not parquet".getBytes("UTF-8")) finally out.close()
+      }
+      val h = in.health(p)
+      assert(h.layout === in.layout)
+      assert(h.rows === in.rows) // from the _rows sidecar
+      assert(h.tombstones === in.tombstones)
+      assert(h.dataFiles === files.size.toLong)
+      assert(h.prescription === in.prescription)
     }
-    val h = AnnIndex.indexHealth(spark, p)
-    assert(h.rows === emb.count()) // from the _rows sidecar
-    assert(h.layout === "ivf")
   }
 }

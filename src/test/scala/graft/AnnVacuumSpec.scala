@@ -263,7 +263,7 @@ class AnnVacuumSpec extends SparkSpec {
         .foreach(s => assert(!fs.exists(new org.apache.hadoop.fs.Path(s)),
           s"$layout/$verb left $s"))
       assert(probe(p) === 0L, s"$layout/$verb: tombstoned rows answered")
-      assert(AnnIndex.indexHealth(spark, p).rows === 64L, s"$layout/$verb")
+      assert(AnnIndex.indexHealth(spark, p).rows === Some(64L), s"$layout/$verb")
     }
   }
 

@@ -162,7 +162,7 @@ class AudioDedupSpec extends SparkSpec {
     assert(got === Set((2L, 102L), (3L, 103L)),
       s"cross-batch twins through the streamed index: $got")
     assert(graft.operators.Dedup.minhashIndexHealth(spark,
-      s"$dir/idx").batches === 2)
+      s"$dir/idx").generations === 2)
   }
 
   test("nearDupPairsByKind routes each kind to its own family and " +

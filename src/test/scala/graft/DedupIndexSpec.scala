@@ -120,7 +120,7 @@ class DedupIndexSpec extends SparkSpec {
     Dedup.buildMinhashIndex(corpus, "text", "doc_id", flat,
       shingleK = 5, numHashes = 16, bands = 4)
     val h0 = Dedup.minhashIndexHealth(spark, flat)
-    assert(h0.layout === "flat" && h0.bands === 4)
+    assert(h0.layout === "flat" && h0.partitions === 4)
     assert(!h0.fragmented && !h0.tombstoneHeavy)
     assert(h0.prescription === "healthy")
 
@@ -132,13 +132,13 @@ class DedupIndexSpec extends SparkSpec {
     Dedup.deleteFromMinhashIndex(spark, idx, Seq(1L).toDF("doc_id"),
       idCol = "doc_id")
     val h1 = Dedup.minhashIndexHealth(spark, idx, tombstoneFloor = 1L)
-    assert(h1.layout === "batch" && h1.batches === 3)
+    assert(h1.layout === "batch" && h1.generations === 3)
     assert(h1.fragmented, s"3 generations should flag at factor 2: $h1")
     assert(h1.tombstoneHeavy && h1.tombstones === 1L)
     assert(h1.prescription === "compactMinhashIndex")
     Dedup.compactMinhashIndex(spark, idx)
     val h2 = Dedup.minhashIndexHealth(spark, idx, tombstoneFloor = 1L)
-    assert(h2.batches === 1 && !h2.fragmented && h2.tombstones === 0L)
+    assert(h2.generations === 1 && !h2.fragmented && h2.tombstones === 0L)
     assert(h2.prescription === "healthy")
   }
 
@@ -165,7 +165,7 @@ class DedupIndexSpec extends SparkSpec {
       q.processAllAvailable() // generation 3 -> in-stream compact
     } finally q.stop()
     val h = Dedup.minhashIndexHealth(spark, idx)
-    assert(h.batches === 1, s"in-stream compaction did not run: $h")
+    assert(h.generations === 1, s"in-stream compaction did not run: $h")
     assert(h.tombstones === 0L)
     assert(spark.read.parquet(idx).filter(col("id") === 1L).count() === 0L,
       "the takedown did not go physical at the in-stream compaction")
@@ -410,7 +410,7 @@ class DedupIndexSpec extends SparkSpec {
       Some(idx), s"$idx/batch=$i", shingleK = 5, numHashes = 16,
       bands = 4, minJaccard = 0.5))
     val h = Dedup.minhashIndexHealth(spark, idx, minCompactionGain = 100.0)
-    assert(h.batches === 4 && h.baseBytes > 0L && h.freshBytes > 0L)
+    assert(h.generations === 4 && h.baseBytes > 0L && h.freshBytes > 0L)
     assert(!h.fragmented,
       s"fresh mass below the gain gate must not prescribe a full " +
         s"rewrite of the base: $h")

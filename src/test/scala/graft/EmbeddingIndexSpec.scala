@@ -163,7 +163,7 @@ class EmbeddingIndexSpec extends SparkSpec {
       q.processAllAvailable() // generation 3 -> in-stream compact
     } finally q.stop()
     val h = Dedup.minhashIndexHealth(spark, idx)
-    assert(h.batches === 1, s"in-stream compaction did not run: $h")
+    assert(h.generations === 1, s"in-stream compaction did not run: $h")
     assert(h.tombstones === 0L)
     assert(fsOf(idx).exists(
       new org.apache.hadoop.fs.Path(s"$idx/_embplan")),
@@ -253,12 +253,12 @@ class EmbeddingIndexSpec extends SparkSpec {
       autoPlan = true, targetOccupancy = 0.25)
     assert(planned === ((2, 4)))
     val h0 = Similarity.embeddingIndexHealth(spark, idx)
-    assert(!h0.drifted && h0.vectors === 3L &&
+    assert(!h0.signal.drifted && h0.signal.vectors === 3L &&
       h0.prescription === "healthy", h0.toString)
     Similarity.appendToEmbeddingIndex(growth, "embedding", "vec_id", idx)
     val h1 = Similarity.embeddingIndexHealth(spark, idx)
-    assert(h1.drifted && h1.vectors === 19L, h1.toString)
-    assert(h1.freshBits > h1.bits)
+    assert(h1.signal.drifted && h1.signal.vectors === 19L, h1.toString)
+    assert(h1.signal.freshBits > h1.signal.bits)
     assert(h1.prescription === "reindexEmbeddingIndex")
     // a takedown before the reindex must not resurrect through it
     Dedup.deleteFromMinhashIndex(spark, idx, Seq(2L).toDF("vec_id"),
@@ -268,7 +268,8 @@ class EmbeddingIndexSpec extends SparkSpec {
     // acos(0.9)/π ≈ 0.8564 → 4 (the recall-compensated widening)
     assert(newPlan === ((4, 7)), newPlan.toString)
     val h2 = Similarity.embeddingIndexHealth(spark, idx)
-    assert(!h2.drifted && h2.bits === 7 && h2.vectors === 18L &&
+    assert(!h2.signal.drifted && h2.signal.bits === 7 &&
+      h2.signal.vectors === 18L &&
       h2.prescription === "healthy", h2.toString)
     assert(!fsOf(idx).exists(
       new org.apache.hadoop.fs.Path(s"$idx/_tombstones")),
@@ -301,16 +302,17 @@ class EmbeddingIndexSpec extends SparkSpec {
       autoPlan = true, targetOccupancy = 2.0)
     assert(p0 === ((2, 4)))
     val hq = Similarity.embeddingIndexHealth(spark, idx)
-    assert(!hq.skewed && hq.buckets === 6L && hq.maxBucket === 7L &&
-      hq.meanOccupancy === 3.0, hq.toString)
+    assert(!hq.signal.skewed && hq.signal.buckets === 6L &&
+      hq.signal.maxBucket === 7L && hq.signal.meanOccupancy === 3.0,
+      hq.toString)
     val hs = Similarity.embeddingIndexHealth(spark, idx, skewFactor = 2.0)
-    assert(hs.skewed && hs.prescription === "reindexEmbeddingIndex",
+    assert(hs.signal.skewed && hs.prescription === "reindexEmbeddingIndex",
       hs.toString)
     // declining the data-path scan zeroes the skew fields (the
     // in-stream maintenance mode — sidecar/listing-only)
     val hn = Similarity.embeddingIndexHealth(spark, idx,
       skewFactor = 2.0, checkOccupancy = false)
-    assert(!hn.skewed && hn.buckets === 0L, hn.toString)
+    assert(!hn.signal.skewed && hn.signal.buckets === 0L, hn.toString)
     val before = pairsOf(idx)
     // skew WITHOUT drift: a same-occupancy re-plan would reproduce
     // byte-identical keys, so maintain tightens 4× — geometry PROVABLY
@@ -341,6 +343,15 @@ class EmbeddingIndexSpec extends SparkSpec {
     val expPlan = Similarity.readEmbPlan(spark, exp)
     assert(expPlan.planned === ((2, 4)) && !expPlan.autoPlan)
     assert(pairsOf(exp) === before)
+    // ...but a declined re-band still runs the cheap repairs: a takedown
+    // of one hot copy leaves the cell skewed, and maintain vacuums it
+    Dedup.deleteFromMinhashIndex(spark, exp, Seq(30L).toDF("vec_id"),
+      idCol = "vec_id")
+    assert(Similarity.embeddingIndexHealth(spark, exp, skewFactor = 2.0,
+      tombstoneFloor = 1L).prescription === "reindexEmbeddingIndex")
+    assert(Similarity.maintainEmbeddingIndex(spark, exp, skewFactor = 2.0,
+      tombstoneFloor = 1L) === Seq("vacuumMinhashTombstones"))
+    assert(spark.read.parquet(exp).filter(col("id") === 30L).count() === 0L)
     // PLAN-INVARIANT skew: at a maxed-out geometry (occupancy so tight
     // the maxBits/maxBands caps bind) even the tightened re-plan equals
     // the frozen one — maintain skips the no-progress rewrite
@@ -355,7 +366,7 @@ class EmbeddingIndexSpec extends SparkSpec {
     val ctl = tmp("embskew_ctl")
     build(ctl, corpus)
     assert(!Similarity.embeddingIndexHealth(spark, ctl,
-      skewFactor = 2.0).skewed)
+      skewFactor = 2.0).signal.skewed)
   }
 
   test("reindex to an explicit plan is content-identical to a fresh " +
@@ -404,7 +415,7 @@ class EmbeddingIndexSpec extends SparkSpec {
       q.processAllAvailable() // 19 vectors → drift → in-stream reindex
       assert(Similarity.readEmbPlan(spark, idx).planned === ((4, 7)),
         "the in-stream maintenance did not re-plan the drifted index")
-      assert(Dedup.minhashIndexHealth(spark, idx).batches === 1,
+      assert(Dedup.minhashIndexHealth(spark, idx).generations === 1,
         "the reindex did not collapse the stream's generations")
       mem.addData(batch.as[(Long, Seq[Float])].collect().toSeq: _*)
       q.processAllAvailable() // probes ride the REINDEXED geometry
@@ -443,7 +454,7 @@ class EmbeddingIndexSpec extends SparkSpec {
       assert(Similarity.readEmbPlan(spark, idx).planned === ((2, 4)),
         "an off-window maintenance ran the data-path skew check")
       assert(Similarity.embeddingIndexHealth(spark, idx,
-        skewFactor = 2.0).skewed, "fixture defect: hot cell not skewed")
+        skewFactor = 2.0).signal.skewed, "fixture defect: hot cell not skewed")
       mem.addData(lone.as[(Long, Seq[Float])].collect().toSeq: _*)
       q.processAllAvailable() // window 3 — the Kth: skew check runs,
       // maintain tightens 4x and the in-stream reindex widens the plan
@@ -453,7 +464,7 @@ class EmbeddingIndexSpec extends SparkSpec {
         s"the Kth window did not execute the skew reindex (${plan1.planned})")
       assert(plan1.targetOccupancy === 0.5 && plan1.planned._2 > 4,
         plan1.toString)
-      assert(Dedup.minhashIndexHealth(spark, idx).batches === 1,
+      assert(Dedup.minhashIndexHealth(spark, idx).generations === 1,
         "the skew reindex did not collapse the stream's generations")
       mem.addData(batch.as[(Long, Seq[Float])].collect().toSeq: _*)
       q.processAllAvailable() // window 4 — declined again; probes ride

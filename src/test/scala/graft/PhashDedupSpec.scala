@@ -181,7 +181,7 @@ class PhashDedupSpec extends SparkSpec {
     // both batches landed as generations of the shared layout; the
     // generic health sees them
     assert(graft.operators.Dedup.minhashIndexHealth(spark,
-      s"$dir/idx").batches === 2)
+      s"$dir/idx").generations === 2)
   }
 
   test("the persisted index rides the inherited lifecycle: build + " +
