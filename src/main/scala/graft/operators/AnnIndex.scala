@@ -1,5 +1,7 @@
 package graft.operators
 
+import org.apache.spark.ml.clustering.{KMeans, KMeansModel}
+import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -25,10 +27,10 @@ object AnnIndex {
   import Similarity.{cosine, hyperplaneSig}
 
   /** cell = sign pattern of the first `signBits` dims — the deterministic
-    * coarse quantizer. ONE expression tree shared by buildIvf/buildIvfPq's
-    * "sign" arms and the frozen-geometry appends ([[appendIvf]] /
-    * [[appendIvfPq]]), so build- and append-time assignment can never
-    * drift into different key spaces. */
+    * coarse quantizer. ONE expression tree shared by the sign
+    * [[cellStage]] and the frozen-geometry appends ([[appendCells]]), so
+    * build- and append-time assignment can never drift into different
+    * key spaces. */
   private def signCellExpr(v: Column, signBits: Int): Column =
     if (signBits == 0) lit(0L)
     else (0 until signBits).map(j =>
@@ -36,9 +38,9 @@ object AnnIndex {
         .otherwise(lit(0L))).reduce(_ + _)
 
   /** code[j] = sign pattern of subvector j of the (unit-normalized)
-    * vector — the deterministic sub-quantizer, shared by buildPq /
-    * buildIvfPq's "sign" arms and the appends for the same reason as
-    * [[signCellExpr]]. */
+    * vector — the deterministic sub-quantizer, shared by the sign
+    * [[codeStage]] and the appends ([[Codes.codeCol]]) for the same
+    * reason as [[signCellExpr]]. */
   private def signCodeExpr(v: Column, m: Int, sub: Int): Column =
     array((0 until m).map { j =>
       (0 until sub).map { b =>
@@ -173,8 +175,8 @@ object AnnIndex {
     * tables, O(batch) append frames).
     *
     * @return (mean error, rows sampled) — (0, 0) on an empty frame */
-  private def reconError(coded: DataFrame, vecColName: String,
-      cb: DataFrame, m: Int, sub: Int, n: Long, cap: Long): (Double, Long) = {
+  private def reconError(coded: DataFrame, cb: DataFrame, m: Int, sub: Int,
+      n: Long, cap: Long): (Double, Long) = {
     if (n == 0L) return (0.0, 0L)
     val sample = kmeansFitSample(coded, n, cap)
     val cbSlim = cb.select(col("subspace").cast("int").as("subspace"),
@@ -184,7 +186,7 @@ object AnnIndex {
     // ONE job: total error + exploded-row count together (rows sampled
     // = count / m — posexplode emits exactly m rows per input row)
     val r = sample
-      .select(col(vecColName).as("__v"),
+      .select(col("vec").as("__v"),
         posexplode_outer(col("code")).as(Seq("subspace", "centroid_id")))
       .select(col("__v"), col("subspace").cast("int").as("subspace"),
         col("centroid_id").cast("int").as("centroid_id"))
@@ -209,14 +211,13 @@ object AnnIndex {
     * zero vector, exactly [[reconError]]'s coalesce arm. The codebook
     * rides as one bounded nested-array Literal (m × k × sub doubles) —
     * never an unrolled expression tree. */
-  private def reconRowErr(vec: Column, code: Column,
-      cb: Map[(Int, Int), Array[Double]], m: Int, sub: Int): Column = {
-    val kk = cb.keys.map(_._2).max + 1
+  private def reconRowErr(g: Codes): Column = {
+    val (m, sub, kk) = (g.m, g.sub, g.k)
     val cbLit = typedLit((0 until m).map(j => (0 until kk).map(c =>
-      cb.get((j, c)).map(_.toList).orNull)))
+      g.cb.get((j, c)).map(_.toList).orNull)))
     (0 until m).map { j =>
-      val cj = code.getItem(j)
-      val seg = slice(vec, j * sub + 1, sub)
+      val cj = col("code").getItem(j)
+      val seg = slice(col("vec"), j * sub + 1, sub)
       aggregate(zip_with(seg,
           coalesce(when(cj.between(0, kk - 1),
             element_at(element_at(cbLit, j + 1), cj + 1)),
@@ -260,9 +261,8 @@ object AnnIndex {
     * build's own checkpointed table — re-reading its bounded sample is
     * cheap, and the codebooks read back is one tiny sidecar. */
   private def stampReconBaseline(spark: SparkSession, path: String,
-      coded: DataFrame, vecColName: String, m: Int, sub: Int,
-      n: Long): Unit = {
-    val (err, sn) = reconError(coded, vecColName, codebooksFrame(spark, path),
+      coded: DataFrame, m: Int, sub: Int, n: Long): Unit = {
+    val (err, sn) = reconError(coded, codebooksFrame(spark, path),
       m, sub, n, KmeansFitSampleCap)
     writeReconSidecar(new org.apache.hadoop.fs.Path(path).getFileSystem(
       spark.sparkContext.hadoopConfiguration), path, err, 0.0, 0L, sn)
@@ -313,10 +313,10 @@ object AnnIndex {
     * SAME cap, or a non-default build cap would make default-cap
     * appends write at a too-HIGH level — rows never written that a
     * later build-cap read expects, the unrecoverable direction. */
-  private def writeReservoir(base: DataFrame, vecColName: String,
-      path: String, n: Long, cap: Long): Unit = {
+  private def writeReservoir(base: DataFrame, path: String, n: Long,
+      cap: Long): Unit = {
     base.filter(reservoirMember(reservoirLevel(n, cap)))
-      .select(col("vec_id"), col(vecColName).as("vec"))
+      .select(col("vec_id"), col("vec"))
       .coalesce(8).write.mode("overwrite").parquet(s"$path/_sample")
     val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
       base.sparkSession.sparkContext.hadoopConfiguration)
@@ -351,13 +351,13 @@ object AnnIndex {
     * The level comes from the PRE-append count at the STAMPED cap (see
     * the level note in the section comment). */
   private def appendReservoir(spark: SparkSession, base: DataFrame,
-      vecColName: String, path: String, oldN: Long): Unit = {
+      path: String, oldN: Long): Unit = {
     val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     if (fs.exists(new org.apache.hadoop.fs.Path(s"$path/_sample")))
       base.filter(reservoirMember(
           reservoirLevel(oldN, reservoirCap(fs, path))))
-        .select(col("vec_id"), col(vecColName).as("vec"))
+        .select(col("vec_id"), col("vec"))
         .coalesce(1).write.mode("append").parquet(s"$path/_sample")
   }
 
@@ -464,7 +464,7 @@ object AnnIndex {
   /** The `_centroids` sidecar fully parsed in ONE read+collect (r18
     * optimization round): the IVF-family verbs previously read the same
     * tiny sidecar up to three times each — [[ivfCentroids]] for the
-    * cells, [[indexQuantizer]] for the marker, [[indexSignBits]] for
+    * cells, a marker reader for the quantizer, [[indexSignBits]] for
     * the planned width — each read paying its own schema-inference job
     * plus collect (two jobs and their driver gaps, per read, per verb,
     * at bench scale). Legacy detection is unchanged: the marker/width
@@ -604,6 +604,211 @@ object AnnIndex {
           s"silently mis-rank. Rebuild the index.")
   }
 
+  // -------------------------------------------------------- quantizer kit
+  //
+  // Every IVF / PQ / IVF-PQ build, append and lossy reindex composes the
+  // stages below, each written once: the unit normalize, a CELL stage
+  // (the coarse quantizer), a CODE stage (the product quantizer), the
+  // index write, the append write and the two lossy reindex bodies.
+  // IVF-PQ is IVF's cell stage followed by PQ's code stage over the same
+  // normalized vector — IVFADC (Jégou et al., TPAMI 2011) without
+  // residuals. Stages read and write the frame's `vec` column.
+
+  /** (`id`, `out`) rows, `out` the unit-normalized double vector of
+    * `vecCol` (a zero vector passes unchanged). On the unit sphere
+    * squared-L2 is monotone in cosine (||a-b||² = 2 - 2cos), so the
+    * asymmetric distance ranks candidates in true cosine order —
+    * unnormalized, the two metrics disagree and recall collapses for
+    * off-norm neighbors. The lossy builds, their appends and fit frames,
+    * and the batched IVF-PQ queries all normalize here. */
+  private def unitNormalized(df: DataFrame, idCol: String, vecCol: String,
+      id: String = "vec_id", out: String = "vec"): DataFrame =
+    df.select(col(idCol).as(id), col(vecCol).cast("array<double>").as("raw"))
+      .withColumn("__n",
+        sqrt(aggregate(col("raw"), lit(0.0), (a, x) => a + x * x)))
+      .select(col(id), transform(col("raw"),
+        x => when(col("__n") > 0, x / col("__n")).otherwise(x)).as(out))
+
+  /** k-means training rows: a reservoir reindex's raw `fitFrame`
+    * (normalized here and materialized — every fit re-reads it), else
+    * the bounded hash-sample of the normalized corpus. */
+  private def fitRows(base: DataFrame, n: Long, cap: Long,
+      fitFrame: Option[DataFrame]): DataFrame =
+    fitFrame.fold(kmeansFitSample(base, n, cap))(f =>
+      unitNormalized(f, "vec_id", "vec").localCheckpoint(true))
+
+  /** A seeded k-means fit on the `features` array of `fit`'s rows. */
+  private def kmeansFit(fit: DataFrame, features: Column, k: Int, seed: Long,
+      out: String): KMeansModel =
+    new KMeans().setK(k).setSeed(seed).setFeaturesCol("__f")
+      .setPredictionCol(out).fit(fit.withColumn("__f", array_to_vector(features)))
+
+  /** `df` plus the model's nearest-center id of `features`. */
+  private def kmeansAssign(model: KMeansModel, features: Column)(
+      df: DataFrame): DataFrame =
+    model.transform(df.withColumn("__f", array_to_vector(features))).drop("__f")
+
+  /** Sign-quantizer centroids: the per-position mean of each `keys`
+    * group's member vectors, from (keys…, `pos`, x) exploded rows —
+    * partial-aggregated, so the explode collapses to (groups × dims) rows
+    * before the exchange. One rule for cell centroids and codebooks. */
+  private def memberMeans(exploded: DataFrame, keys: Seq[String],
+      pos: String): DataFrame =
+    exploded.groupBy((keys :+ pos).map(col): _*).agg(avg(col("x")).as("m"))
+      .groupBy(keys.map(col): _*)
+      .agg(array_sort(collect_list(struct(col(pos), col("m")))).as("cm"))
+      .select(keys.map(col) :+
+        transform(col("cm"), s => s.getField("m")).as("centroid"): _*)
+
+  /** `_centroids`: (cell, centroid) plus the trailing quantizer marker
+    * ([[CentroidsSidecar.quantizer]]) and the PLANNED sign width —
+    * occupied cells on skewed data can be fewer than 2^signBits, so
+    * appends must never re-derive it ([[indexSignBits]]); k-means has
+    * none (null). */
+  private def writeCentroids(cents: DataFrame, path: String,
+      quantizer: String, signBits: Column): Unit =
+    cents.withColumn("quantizer", lit(quantizer))
+      .withColumn("sign_bits", signBits)
+      .coalesce(1).write.mode("overwrite").parquet(s"$path/_centroids")
+
+  /** `_codebooks`: (subspace, centroid_id, centroid) plus the marker. */
+  private def writeCodebooks(books: DataFrame, path: String,
+      quantizer: String): Unit =
+    books.withColumn("quantizer", lit(quantizer))
+      .coalesce(1).write.mode("overwrite").parquet(s"$path/_codebooks")
+
+  /** One quantizer stage of a build: `encode` adds its column ("cell" or
+    * "code") to (vec_id, vec, …) rows; `persist` writes its sidecar after
+    * the data — sign stages from the encoded rows (member means), k-means
+    * stages from their fitted centers. */
+  private final case class Stage(encode: DataFrame => DataFrame,
+      persist: (DataFrame, String) => Unit)
+
+  /** The coarse quantizer: cell = sign pattern of the first log2(cells)
+    * dims with member-mean centroids of `vec` (raw for IVF, normalized for
+    * IVF-PQ), or a seeded k-means fit on `fit` (read by the k-means arm
+    * only). `cellType` is the
+    * `_centroids` cell type the family writes: IVF's k-means build has
+    * always stored int, every other build long. */
+  private def cellStage(op: String, quantizer: String, cells: Int, seed: Long,
+      fit: => DataFrame, cellType: String): Stage = quantizer match {
+    case "sign" =>
+      val bits = java.lang.Long.numberOfTrailingZeros(cells.toLong)
+      require(cells > 0 && (1 << bits) == cells,
+        s"$op(sign): nCells must be a power of two, got $cells")
+      Stage(_.withColumn("cell", signCellExpr(col("vec"), bits)),
+        (coded, path) => writeCentroids(memberMeans(coded.select(col("cell"),
+          posexplode_outer(col("vec").cast("array<double>")).as(Seq("i", "x"))),
+          Seq("cell"), "i"), path, "sign", lit(bits)))
+    case "kmeans" =>
+      val features = col("vec").cast("array<double>")
+      lazy val model = kmeansFit(fit, features, cells, seed, "cell")
+      Stage(df => kmeansAssign(model, features)(df), { (coded, path) =>
+        val spark = coded.sparkSession
+        import spark.implicits._
+        writeCentroids(model.clusterCenters.toSeq.zipWithIndex
+          .map { case (c, i) => (i.toLong, c.toArray.toSeq) }
+          .toDF("cell", "centroid").withColumn("cell", col("cell").cast(cellType)),
+          path, "kmeans", lit(null).cast("int"))
+      })
+    case other => throw new IllegalArgumentException(
+      s"$op: unknown quantizer '$other' (kmeans|sign)")
+  }
+
+  /** The product quantizer over `m` subvectors of width `sub`: code[j] =
+    * sign pattern of subvector j (up to 2^sub codes) with member-mean
+    * codebooks, or one seeded k-means fit of `k` codewords per subspace
+    * on `fit` (read by the k-means arm only). */
+  private def codeStage(op: String, quantizer: String, m: Int, sub: Int,
+      k: Int, seed: Long, fit: => DataFrame): Stage = quantizer match {
+    case "sign" =>
+      require(sub <= 16, s"$op(sign): subvector width $sub would " +
+        s"mean 2^$sub codes per subspace — raise m or use kmeans")
+      Stage(_.withColumn("code", signCodeExpr(col("vec"), m, sub)),
+        (coded, path) => writeCodebooks(memberMeans(coded
+          .select(col("code"), posexplode_outer(col("vec")).as(Seq("i", "x")))
+          .withColumn("subspace", (col("i") / lit(sub)).cast("int"))
+          .withColumn("centroid_id", element_at(col("code"), col("subspace") + 1))
+          .withColumn("p", (col("i") % lit(sub)).cast("int")),
+          Seq("subspace", "centroid_id"), "p"), path, "sign"))
+    case "kmeans" =>
+      def subvec(j: Int) = slice(col("vec"), j * sub + 1, sub)
+      lazy val models = {
+        val rows = fit // ONE training frame for all m sub-fits
+        (0 until m).map(j => kmeansFit(rows, subvec(j), k, seed + j, s"__c$j"))
+      }
+      Stage({ df =>
+        val coded = models.zipWithIndex.foldLeft(df) { case (d, (model, j)) =>
+          val c = kmeansAssign(model, subvec(j))(d)
+          // bound the encode chain's plan depth at large m: chained
+          // transforms analyze as ONE lineage before the write, and past
+          // a few dozen the optimizer pass cost grows superlinearly — cut
+          // it every 8 subspaces (never at the production m=8; the
+          // checkpoint is eager and deterministic, codes are unchanged)
+          if (j >= 8 && j % 8 == 0) c.localCheckpoint(true) else c
+        }
+        coded.select(df.columns.map(col) :+
+          array((0 until m).map(j => col(s"__c$j")): _*).as("code"): _*)
+      }, { (coded, path) =>
+        val spark = coded.sparkSession
+        import spark.implicits._
+        writeCodebooks(models.zipWithIndex.flatMap { case (model, j) =>
+          model.clusterCenters.zipWithIndex.map { case (c, i) =>
+            (j, i, c.toArray.toSeq) }
+        }.toDF("subspace", "centroid_id", "centroid"), path, "kmeans")
+      })
+    case other => throw new IllegalArgumentException(
+      s"$op: unknown quantizer '$other' (kmeans|sign)")
+  }
+
+  /** Apply `stages` in order. A sign encode is materialized once: the
+    * data write, its member-means sidecars and the `_recon` baseline all
+    * re-read it; a k-means encode is model transforms the write reads. */
+  private def encode(rows: DataFrame, quantizer: String,
+      stages: Stage*): DataFrame = {
+    val coded = stages.foldLeft(rows)((df, s) => s.encode(df))
+    if (quantizer == "sign") coded.localCheckpoint(true) else coded
+  }
+
+  /** The index data write: a `cell` column partitions the layout behind
+    * the size/dir-aware write shuffle over `cells` keys ([[writeShuffle]]
+    * — never W × nCells small files); flat PQ rows write as they are. */
+  private def writeIndex(rows: DataFrame, path: String, mode: String,
+      cells: Int): Unit =
+    if (!rows.columns.contains("cell")) rows.write.mode(mode).parquet(path)
+    else rows.transform(writeShuffle(cells, col("cell")))
+      .write.mode(mode).partitionBy("cell").parquet(path)
+
+  /** A lossy index's frozen code geometry, read fail-closed: the
+    * `_codebooks` map — (subspace, code) → centroid, m subspaces of `sub`
+    * dims, `k` codeword slots — the quantizer marker (`_centroids`' for
+    * IVF-PQ, `_codebooks`' for flat PQ) and IVF-PQ's `_centroids`. */
+  private final case class Codes(cb: Map[(Int, Int), Array[Double]],
+      quantizer: String, cells: Option[CentroidsSidecar]) {
+    val m: Int = cb.keys.map(_._1).max + 1
+    val k: Int = cb.keys.map(_._2).max + 1
+    val sub: Int = cb.values.head.length
+    /** code[j] of an append row's `vec` under the frozen codebooks. */
+    def codeCol: Column = quantizer match {
+      case "sign"   => signCodeExpr(col("vec"), m, sub)
+      case "kmeans" => kmeansCodeExpr(col("vec"), cb, m, sub)
+    }
+  }
+
+  private def readCodes(spark: SparkSession, path: String,
+      ivf: Boolean): Codes =
+    if (ivf) {
+      // ONE sidecar read serves cells + marker + width
+      val sc = readCentroidsSidecar(spark, path)
+      requireCodebooks(spark, path)
+      Codes(readCodebooks(spark, path), sc.quantizer(path), Some(sc))
+    } else {
+      requireCodebooks(spark, path)
+      // ONE sidecar read serves marker + map (see [[readCodebooksSidecar]])
+      val (cb, q) = readCodebooksSidecar(spark, path)
+      Codes(cb, q, None)
+    }
+
   // ------------------------------------------------------------------ IVF
 
   /**
@@ -634,7 +839,6 @@ object AnnIndex {
       fitSampleCap: Long = KmeansFitSampleCap,
       quantizer: String = "kmeans"): Unit = {
     val spark = embeddings.sparkSession
-    import spark.implicits._
     val n = embeddings.count()
     val cells =
       if (!autoPlan) nCells
@@ -645,64 +849,15 @@ object AnnIndex {
     // and `_tombstones` drop too: a rebuild replaces ALL data, so a stale
     // count or stale deletes describing the old rows must not survive it.
     deleteSidecars(embeddings, path, "_centroids", "_rows", "_tombstones")
-    quantizer match {
-      case "kmeans" =>
-        import org.apache.spark.ml.clustering.KMeans
-        import org.apache.spark.ml.functions.array_to_vector
-        val prepared = embeddings
-          .select(col(idCol).as("vec_id"), col(vecCol).as("vec"))
-          .withColumn("__features", array_to_vector(col("vec").cast("array<double>")))
-        // fit on the bounded sample, encode the full corpus — see
-        // [[KmeansFitSampleCap]]
-        val model = new KMeans().setK(cells).setSeed(seed)
-          .setFeaturesCol("__features").setPredictionCol("cell")
-          .fit(kmeansFitSample(prepared, n, fitSampleCap))
-        model.transform(prepared)
-          .select(col("vec_id"), col("vec"), col("cell"))
-          // size/dir-aware write shuffle: see [[writeShuffle]] (avoids
-          // W x nCells files at any scale)
-          .transform(writeShuffle(cells, col("cell")))
-          .write.mode("overwrite").partitionBy("cell").parquet(path)
-        model.clusterCenters.toSeq.zipWithIndex
-          .map { case (c, i) => (i, c.toArray.toSeq) }
-          .toDF("cell", "centroid")
-          .withColumn("quantizer", lit("kmeans")) // trailing marker, see [[indexQuantizer]]
-          .withColumn("sign_bits", lit(null).cast("int")) // kmeans has no bit width
-          .coalesce(1).write.mode("overwrite").parquet(s"$path/_centroids")
-      case "sign" =>
-        val signBits = java.lang.Long.numberOfTrailingZeros(cells.toLong).toInt
-        require(cells > 0 && (1 << signBits) == cells,
-          s"buildIvf(sign): nCells must be a power of two, got $cells")
-        val assigned = embeddings
-          .select(col(idCol).as("vec_id"), col(vecCol).as("vec"))
-          .withColumn("cell", signCellExpr(col("vec"), signBits))
-          .localCheckpoint(true) // read by the write + the centroid agg
-        assigned
-          .transform(writeShuffle(cells, col("cell"))) // see [[writeShuffle]]
-          .write.mode("overwrite").partitionBy("cell").parquet(path)
-        // centroids: per-dim member means of the RAW vectors (the
-        // in-memory ivfTopK(sign) contract — partial-aggregated like
-        // buildIvfPq's)
-        assigned
-          .select(col("cell"),
-            posexplode_outer(col("vec").cast("array<double>")).as(Seq("i", "x")))
-          .groupBy("cell", "i").agg(avg(col("x")).as("m"))
-          .groupBy("cell")
-          .agg(array_sort(collect_list(struct(col("i"), col("m")))).as("cm"))
-          .select(col("cell"),
-            transform(col("cm"), s => s.getField("m")).as("centroid"))
-          .withColumn("quantizer", lit("sign")) // trailing marker, see [[indexQuantizer]]
-          // the PLANNED width, persisted (round 15, advisor ask): occupied
-          // cells on skewed data can be fewer than 2^signBits, so appends
-          // must never re-derive the width from the occupied count — a
-          // wrong width encodes batch cells in a different key space and
-          // silently misfiles any row whose wrong-width cell collides
-          // with a known cell id. See [[indexSignBits]].
-          .withColumn("sign_bits", lit(signBits))
-          .coalesce(1).write.mode("overwrite").parquet(s"$path/_centroids")
-      case other => throw new IllegalArgumentException(
-        s"buildIvf: unknown quantizer '$other' (kmeans|sign)")
-    }
+    // raw vectors (no normalize): sign centroids are the in-memory
+    // ivfTopK(sign) contract's member means; kmeans fits on the bounded
+    // sample and encodes the full corpus — see [[KmeansFitSampleCap]]
+    val rows = embeddings.select(col(idCol).as("vec_id"), col(vecCol).as("vec"))
+    val cell = cellStage("buildIvf", quantizer, cells, seed,
+      kmeansFitSample(rows, n, fitSampleCap), cellType = "int")
+    val assigned = encode(rows, quantizer, cell)
+    writeIndex(assigned.select("vec_id", "vec", "cell"), path, "overwrite", cells)
+    cell.persist(assigned, path)
     // stamp the count — appends price the drift WARN from this sidecar
     // instead of a per-append listing job (see [[IndexStore.writeRows]])
     IndexStore.writeRows(IndexStore.fsOf(spark, path), path, n)
@@ -829,96 +984,26 @@ object AnnIndex {
     // `_tombstones` drop too: a rebuild replaces all data)
     deleteSidecars(embeddings, path, "_codebooks", "_rows", "_tombstones",
       "_recon", "_sample", "_sample_cap")
-    // UNIT-normalize before encoding: on the unit sphere squared-L2 is
-    // monotone in cosine (||a-b||^2 = 2 - 2cos), so the asymmetric
-    // distance ranks candidates in true cosine order — unnormalized, the
-    // two metrics disagree and recall collapses for off-norm neighbors.
-    val base = embeddings
-      .select(col(idCol).as("vec_id"), col(vecCol).cast("array<double>").as("raw"))
-      .withColumn("__n",
-        sqrt(aggregate(col("raw"), lit(0.0), (a, x) => a + x * x)))
-      .select(col("vec_id"),
-        transform(col("raw"),
-          x => when(col("__n") > 0, x / col("__n")).otherwise(x)).as("vec"))
+    // UNIT-normalize before encoding ([[unitNormalized]])
+    val base = unitNormalized(embeddings, idCol, vecCol)
       .localCheckpoint(true) // read by the fits + the encode pass
     val n = base.count() // checkpointed — cheap; reused by the sampler,
                          // the recon stamp and the _rows sidecar below
     val dim = base.select(size(col("vec"))).head().getInt(0)
     require(dim % m == 0, s"dim $dim not divisible by m=$m")
     val sub = dim / m
-    quantizer match {
-      case "kmeans" =>
-        import org.apache.spark.ml.clustering.KMeans
-        import org.apache.spark.ml.functions.array_to_vector
-        // fits run on the bounded hash-sample, the encode chain on the
-        // full corpus — m sub-fits over the corpus would otherwise be m
-        // multi-pass whole-corpus scans (see [[KmeansFitSampleCap]]).
-        // fitFrame override: see buildIvfPq (the reservoir reindex).
-        val fitBase = fitFrame match {
-          case Some(f) => f
-            .select(col("vec_id"), col("vec").cast("array<double>").as("raw"))
-            .withColumn("__fn",
-              sqrt(aggregate(col("raw"), lit(0.0), (a, x) => a + x * x)))
-            .select(col("vec_id"), transform(col("raw"),
-              x => when(col("__fn") > 0, x / col("__fn")).otherwise(x)).as("vec"))
-            .localCheckpoint(true)
-          case None => kmeansFitSample(base, n, fitSampleCap)
-        }
-        var coded = base
-        val codebooks = (0 until m).map { j =>
-          val featCol = s"__f$j"
-          val subvec = array_to_vector(slice(col("vec"), j * sub + 1, sub))
-          val model = new KMeans().setK(k).setSeed(seed + j)
-            .setFeaturesCol(featCol).setPredictionCol(s"__c$j")
-            .fit(fitBase.withColumn(featCol, subvec))
-          coded = model.transform(coded.withColumn(featCol, subvec))
-            .drop(featCol)
-          // same plan-depth bound as buildIvfPq's kmeans arm: cut the
-          // m-transform lineage every 8 subspaces past the first 8
-          if (j >= 8 && j % 8 == 0) coded = coded.localCheckpoint(true)
-          (j, model.clusterCenters.map(_.toArray))
-        }
-        val withCode = coded.select(col("vec_id"), col("vec"),
-          array((0 until m).map(j => col(s"__c$j")): _*).as("code"))
-        withCode.select(col("vec_id"), col("code"))
-          .write.mode("overwrite").parquet(path)
-        import spark.implicits._
-        codebooks.flatMap { case (j, cents) =>
-          cents.zipWithIndex.map { case (c, i) => (j, i, c.toSeq) }
-        }.toDF("subspace", "centroid_id", "centroid")
-          .withColumn("quantizer", lit("kmeans")) // trailing marker, see [[indexQuantizer]]
-          .coalesce(1).write.mode("overwrite").parquet(s"$path/_codebooks")
-        stampReconBaseline(spark, path, withCode, "vec", m, sub, n)
-      case "sign" =>
-        require(sub <= 16, s"buildPq(sign): subvector width $sub would " +
-          s"mean 2^$sub codes per subspace — raise m or use kmeans")
-        val coded = base.withColumn("code", signCodeExpr(col("vec"), m, sub))
-          .localCheckpoint(true) // read by the write + the codebook agg
-        coded.select(col("vec_id"), col("code"))
-          .write.mode("overwrite").parquet(path)
-        // codebook entries are member means per (subspace, code, pos) —
-        // partial aggregation collapses the explode to (m x codes x sub)
-        // rows before the exchange, same shape as semDedup centroids
-        coded
-          .select(col("code"), posexplode_outer(col("vec")).as(Seq("i", "x")))
-          .withColumn("subspace", (col("i") / lit(sub)).cast("int"))
-          .withColumn("centroid_id", element_at(col("code"), col("subspace") + 1))
-          .withColumn("p", (col("i") % lit(sub)).cast("int"))
-          .groupBy("subspace", "centroid_id", "p").agg(avg(col("x")).as("m"))
-          .groupBy("subspace", "centroid_id")
-          .agg(array_sort(collect_list(struct(col("p"), col("m")))).as("cm"))
-          .select(col("subspace"), col("centroid_id"),
-            transform(col("cm"), s => s.getField("m")).as("centroid"))
-          .withColumn("quantizer", lit("sign")) // trailing marker, see [[indexQuantizer]]
-          .coalesce(1).write.mode("overwrite").parquet(s"$path/_codebooks")
-        stampReconBaseline(spark, path, coded, "vec", m, sub, n)
-      case other => throw new IllegalArgumentException(
-        s"buildPq: unknown quantizer '$other' (kmeans|sign)")
-    }
+    // fits run on the bounded hash-sample (or the reservoir reindex's
+    // `fitFrame`), the encode on the full corpus — see [[KmeansFitSampleCap]]
+    val code = codeStage("buildPq", quantizer, m, sub, k, seed,
+      fitRows(base, n, fitSampleCap, fitFrame))
+    val coded = encode(base, quantizer, code)
+    writeIndex(coded.select("vec_id", "code"), path, "overwrite", 0)
+    code.persist(coded, path)
+    stampReconBaseline(spark, path, coded, m, sub, n)
     // stamp the count (sidecar-read appends — see [[IndexStore.writeRows]])
     IndexStore.writeRows(IndexStore.fsOf(spark, path), path, n)
     // raw-vector reservoir for corpus-less retraining (see `_sample`)
-    writeReservoir(base, "vec", path, n, fitSampleCap)
+    writeReservoir(base, path, n, fitSampleCap)
   }
 
   /**
@@ -975,8 +1060,10 @@ object AnnIndex {
    * in `_centroids`, sub-quantizer codebooks in `_codebooks` (the same
    * underscore-sidecar convention as both parents).
    *
-   * Vectors are unit-normalized before both quantizers (buildPq's
-   * invariant: on the unit sphere squared-L2 is monotone in cosine).
+   * The composition is [[buildIvf]]'s cell stage then [[buildPq]]'s code
+   * stage ([[cellStage]], [[codeStage]]) over the unit-normalized vector
+   * ([[unitNormalized]]: on the unit sphere squared-L2 is monotone in
+   * cosine).
    * Codes quantize the normalized vector itself, not the cell residual
    * (FAISS's by_residual=false flavor) — the codebooks are shared across
    * cells, so the query's distance table is computed ONCE driver-side
@@ -1001,7 +1088,6 @@ object AnnIndex {
       fitSampleCap: Long = KmeansFitSampleCap,
       fitFrame: Option[DataFrame] = None): Unit = {
     val spark = embeddings.sparkSession
-    import spark.implicits._
     // delete-first sidecar protocol — see [[deleteSidecars]]: BOTH
     // geometry sidecars drop before the data write, so a crash anywhere
     // in the build leaves a state every reader rejects ([[ivfCentroids]]
@@ -1011,18 +1097,12 @@ object AnnIndex {
       "_centroids", "_codebooks", "_rows", "_tombstones", "_recon",
       "_sample", "_sample_cap")
     // NOT checkpointed: the per-row normalize is cheaper to recompute in
-    // the one pass that derives `coded` (which IS checkpointed) than to
-    // materialize a second corpus-sized buffer
-    val base = embeddings
-      .select(col(idCol).as("vec_id"), col(vecCol).cast("array<double>").as("raw"))
-      .withColumn("__n",
-        sqrt(aggregate(col("raw"), lit(0.0), (a, x) => a + x * x)))
-      .select(col("vec_id"),
-        transform(col("raw"),
-          x => when(col("__n") > 0, x / col("__n")).otherwise(x)).as("nv"))
+    // the one pass that derives the encoded rows (which a sign build
+    // checkpoints) than to materialize a second corpus-sized buffer
+    val base = unitNormalized(embeddings, idCol, vecCol)
     // ONE column-pruned job for both build-plan scalars (was a full
     // count() plus a separate head() scan for the width)
-    val hdr = base.agg(count(lit(1)), max(size(col("nv")))).head()
+    val hdr = base.agg(count(lit(1)), max(size(col("vec")))).head()
     val n = hdr.getLong(0)
     val cellsPlanned =
       if (!autoPlan) nCells
@@ -1032,136 +1112,30 @@ object AnnIndex {
       else hdr.getInt(1)
     require(dim % m == 0, s"buildIvfPq: dim $dim not divisible by m=$m")
     val sub = dim / m
-    // each arm yields the frame the `_sample` reservoir is written from:
-    // the sign arm's checkpointed `coded` table (vec_id, nv — reading the
-    // cache instead of re-scanning + re-normalizing the source corpus, a
-    // whole input pass saved per build); the kmeans arm keeps `base`
-    // (recomputing the normalize is cheaper than re-running the m+1
-    // un-checkpointed model transforms)
-    val reservoirSrc: DataFrame = quantizer match {
-      case "sign" =>
-        require(sub <= 16, s"buildIvfPq(sign): subvector width $sub would " +
-          s"mean 2^$sub codes per subspace — raise m or use kmeans")
-        val signBits = java.lang.Long.numberOfTrailingZeros(cellsPlanned.toLong).toInt
-        require(cellsPlanned > 0 && (1 << signBits) == cellsPlanned,
-          s"buildIvfPq(sign): nCells must be a power of two, got $cellsPlanned")
-        // cell = sign pattern of the first signBits dims (normalization
-        // preserves signs, so this matches the raw vector's pattern);
-        // code = per-subspace sign pattern of the normalized vector
-        val coded = base
-          .withColumn("cell", signCellExpr(col("nv"), signBits))
-          .withColumn("code", signCodeExpr(col("nv"), m, sub))
-          .localCheckpoint(true) // read by the write + two sidecar aggs
-        // repartition ON THE CELL before the dynamic-partition write:
-        // without it every one of the W write tasks emits a file into
-        // every cell directory (W x nCells small files — measured as the
-        // whale of a 17 s 600k-row build at 256 planned cells); with it
-        // each cell's rows are colocated and the write emits ~nCells files
-        coded.select(col("vec_id"), col("code"), col("cell"))
-          .transform(writeShuffle(cellsPlanned, col("cell"))) // see [[writeShuffle]]
-          .write.mode("overwrite").partitionBy("cell").parquet(path)
-        // cell centroids: per-dim member means of the NORMALIZED vectors
-        // (what the probe ranking cosines against) — partial-aggregated
-        coded
-          .select(col("cell"), posexplode_outer(col("nv")).as(Seq("i", "x")))
-          .groupBy("cell", "i").agg(avg(col("x")).as("m"))
-          .groupBy("cell")
-          .agg(array_sort(collect_list(struct(col("i"), col("m")))).as("cm"))
-          .select(col("cell"),
-            transform(col("cm"), s => s.getField("m")).as("centroid"))
-          .withColumn("quantizer", lit("sign")) // trailing marker, see [[indexQuantizer]]
-          // planned cell width, persisted — appends must never infer it
-          // from the occupied-cell count (see [[indexSignBits]])
-          .withColumn("sign_bits", lit(signBits))
-          .coalesce(1).write.mode("overwrite").parquet(s"$path/_centroids")
-        // codebooks: member means per (subspace, code, pos) — the exact
-        // shape buildPq(sign) writes, shared across cells
-        coded
-          .select(col("code"), posexplode_outer(col("nv")).as(Seq("i", "x")))
-          .withColumn("subspace", (col("i") / lit(sub)).cast("int"))
-          .withColumn("centroid_id", element_at(col("code"), col("subspace") + 1))
-          .withColumn("p", (col("i") % lit(sub)).cast("int"))
-          .groupBy("subspace", "centroid_id", "p").agg(avg(col("x")).as("m"))
-          .groupBy("subspace", "centroid_id")
-          .agg(array_sort(collect_list(struct(col("p"), col("m")))).as("cm"))
-          .select(col("subspace"), col("centroid_id"),
-            transform(col("cm"), s => s.getField("m")).as("centroid"))
-          .withColumn("quantizer", lit("sign")) // trailing marker, see [[indexQuantizer]]
-          .coalesce(1).write.mode("overwrite").parquet(s"$path/_codebooks")
-        stampReconBaseline(spark, path, coded, "nv", m, sub, n)
-        coded.select(col("vec_id"), col("nv"))
-      case "kmeans" =>
-        import org.apache.spark.ml.clustering.KMeans
-        import org.apache.spark.ml.functions.array_to_vector
-        val prepared = base.withColumn("__f", array_to_vector(col("nv")))
-        // the coarse fit + m sub-fits ALL train on the bounded
-        // hash-sample (see [[KmeansFitSampleCap]]) — previously m+1
-        // iterative whole-corpus scans, now (m+1) sample-sized fits; the
-        // encode chain still covers the full corpus in one pass. A
-        // `fitFrame` override (the `_sample` reservoir reindex) trains
-        // on RAW sampled vectors while the encode pass covers whatever
-        // corpus the caller assembled (reconstruction-upgraded rows).
-        val fitPrepared = fitFrame match {
-          case Some(f) => f
-            .select(col("vec_id"), col("vec").cast("array<double>").as("raw"))
-            .withColumn("__fn",
-              sqrt(aggregate(col("raw"), lit(0.0), (a, x) => a + x * x)))
-            .select(col("vec_id"), transform(col("raw"),
-              x => when(col("__fn") > 0, x / col("__fn")).otherwise(x)).as("nv"))
-            .withColumn("__f", array_to_vector(col("nv")))
-            .localCheckpoint(true)
-          case None => kmeansFitSample(prepared, n, fitSampleCap)
-        }
-        val coarse = new KMeans().setK(cellsPlanned).setSeed(seed)
-          .setFeaturesCol("__f").setPredictionCol("cell").fit(fitPrepared)
-        var coded = coarse.transform(prepared).drop("__f")
-        val codebooks = (0 until m).map { j =>
-          val fc = s"__f$j"
-          val subvec = array_to_vector(slice(col("nv"), j * sub + 1, sub))
-          val model = new KMeans().setK(16).setSeed(seed + j)
-            .setFeaturesCol(fc).setPredictionCol(s"__c$j")
-            .fit(fitPrepared.withColumn(fc, subvec))
-          coded = model.transform(coded.withColumn(fc, subvec)).drop(fc)
-          // bound the encode chain's plan depth at large m: m+1 chained
-          // transforms analyze as ONE lineage before the write, and past
-          // a few dozen the optimizer pass cost grows superlinearly —
-          // cut the lineage every 8 subspaces (never triggers at the
-          // production m=8; the checkpoint is eager and deterministic,
-          // so codes are unchanged when it does)
-          if (j >= 8 && j % 8 == 0) coded = coded.localCheckpoint(true)
-          (j, model.clusterCenters.map(_.toArray))
-        }
-        val withCode = coded
-          .select(col("vec_id"), col("nv"),
-            array((0 until m).map(j => col(s"__c$j")): _*).as("code"),
-            col("cell"))
-        withCode.select(col("vec_id"), col("code"), col("cell"))
-          .transform(writeShuffle(cellsPlanned, col("cell"))) // see [[writeShuffle]]
-          .write.mode("overwrite").partitionBy("cell").parquet(path)
-        coarse.clusterCenters.toSeq.zipWithIndex
-          .map { case (c, i) => (i.toLong, c.toArray.toSeq) }
-          .toDF("cell", "centroid")
-          .withColumn("quantizer", lit("kmeans")) // trailing marker, see [[indexQuantizer]]
-          .withColumn("sign_bits", lit(null).cast("int")) // kmeans has no bit width
-          .coalesce(1).write.mode("overwrite").parquet(s"$path/_centroids")
-        codebooks.flatMap { case (j, cents) =>
-          cents.zipWithIndex.map { case (c, i) => (j, i, c.toSeq) }
-        }.toDF("subspace", "centroid_id", "centroid")
-          .withColumn("quantizer", lit("kmeans")) // trailing marker, see [[indexQuantizer]]
-          .coalesce(1).write.mode("overwrite").parquet(s"$path/_codebooks")
-        stampReconBaseline(spark, path, withCode, "nv", m, sub, n)
-        base
-      case other => throw new IllegalArgumentException(
-        s"buildIvfPq: unknown quantizer '$other' (sign|kmeans)")
-    }
+    // the coarse fit and the m sub-fits share ONE training frame: the
+    // bounded hash-sample, or the reservoir reindex's raw `fitFrame`
+    lazy val fit = fitRows(base, n, fitSampleCap, fitFrame)
+    // cell = sign pattern of the normalized vector (normalization
+    // preserves signs) or nearest coarse centroid; code over the same
+    // normalized vector, codebooks shared across cells
+    val stages = Seq(
+      cellStage("buildIvfPq", quantizer, cellsPlanned, seed, fit, "long"),
+      codeStage("buildIvfPq", quantizer, m, sub, 16, seed, fit))
+    val coded = encode(base, quantizer, stages: _*)
+    writeIndex(coded.select("vec_id", "code", "cell"), path, "overwrite",
+      cellsPlanned)
+    stages.foreach(_.persist(coded, path))
+    stampReconBaseline(spark, path, coded, m, sub, n)
     // stamp the count — sidecar-read drift WARNs (see
     // [[IndexStore.writeRows]])
     IndexStore.writeRows(IndexStore.fsOf(spark, path), path, n)
-    // raw-vector reservoir for corpus-less retraining (see the
-    // `_sample` section) — one bounded filtered write off the arm's
-    // reservoir source (sign: the checkpointed coded table — cache
-    // read, no source re-scan); the fit-sample cap IS the reservoir cap
-    writeReservoir(reservoirSrc, "nv", path, n, fitSampleCap)
+    // raw-vector reservoir for corpus-less retraining (see the `_sample`
+    // section) — one bounded filtered write; the fit-sample cap IS the
+    // reservoir cap. A sign build reads its checkpointed encode (a cache
+    // read, no source re-scan); kmeans recomputes the normalize, cheaper
+    // than re-running the m+1 un-checkpointed model transforms
+    writeReservoir(if (quantizer == "sign") coded else base, path, n,
+      fitSampleCap)
   }
 
   /**
@@ -1314,15 +1288,8 @@ object AnnIndex {
     val m = cb.keys.map(_._1).max + 1
     val kk = cb.keys.map(_._2).max + 1
     val sub = cb.values.head.length
-    // queries normalize exactly like the build (buildPq's unit-sphere
-    // invariant: squared-L2 over codes is monotone in cosine only there)
-    val qn = queries
-      .select(col(idCol).as("query_id"), col(vecCol).cast("array<double>").as("qraw"))
-      .withColumn("__n",
-        sqrt(aggregate(col("qraw"), lit(0.0), (a, x) => a + x * x)))
-      .select(col("query_id"),
-        transform(col("qraw"),
-          x => when(col("__n") > 0, x / col("__n")).otherwise(x)).as("qv"))
+    // queries normalize exactly like the build ([[unitNormalized]])
+    val qn = unitNormalized(queries, idCol, vecCol, id = "query_id", out = "qv")
     // 3a. the query's ADC table, built ONCE per query row (query-sized
     // side — the only higher-order functions in the scoring path): slot
     // j·kk + c = ||cb[j][c] − q_j||², a left fold from 0.0 exactly like
@@ -1822,23 +1789,6 @@ object AnnIndex {
   //    with [[graft.sources.FileCommit]]'s manifest protocol when
   //    exactly-once batches matter.
 
-  /** The quantizer marker a round-14+ build writes into its sidecar
-    * (trailing column — positional readers of (0..2) are unaffected).
-    * FAIL-CLOSED for appends: encoding an append batch with the WRONG
-    * quantizer family silently places rows in a different key space than
-    * the index (the searchLsh lesson), so an index without the marker
-    * (pre-marker build) refuses appends instead of guessing. */
-  private[graft] def indexQuantizer(
-      spark: SparkSession, path: String, sidecar: String): String = {
-    val df = spark.read.parquet(s"$path/$sidecar")
-    if (!df.columns.contains("quantizer"))
-      throw new IllegalStateException(
-        s"index at $path: $sidecar has no quantizer marker (pre-round-14 " +
-          s"build) — appends cannot verify the encode family; rebuild the " +
-          s"index once to stamp it.")
-    df.select("quantizer").head().getString(0)
-  }
-
   /** The planned sign-quantizer cell width from the `_centroids` sidecar
     * (round 15, advisor ask). FAIL-CLOSED like the marker: the width must
     * NEVER be re-derived from the occupied-cell count — skewed data (e.g.
@@ -1846,7 +1796,7 @@ object AnnIndex {
     * the count is not even a power of two in general, and when it happens
     * to be a SMALLER power of two the batch encodes at the wrong width
     * and rows whose wrong-width cells collide with known ids pass
-    * [[requireKnownCells]] and are silently misfiled. Pre-round-15 sign
+    * the known-cells check and are silently misfiled. Pre-round-15 sign
     * sidecars (no column / null value) refuse appends instead. */
   private[graft] def indexSignBits(spark: SparkSession, path: String): Int =
     readCentroidsSidecar(spark, path).signBits(path)
@@ -1860,10 +1810,10 @@ object AnnIndex {
     * read (index degraded to rebuild-required); sign encoding silently
     * reads missing dims as 0 and misfiles into a possibly-known cell.
     * Errors BEFORE any write, in BOTH quantizer arms. */
-  private def requireBatchDims(batch: DataFrame, vecCol: String, dim: Int,
-      op: String, path: String): Unit = {
-    val bad = batch.filter(col(vecCol).isNull ||
-      size(col(vecCol)) =!= dim).count()
+  private def requireBatchDims(batch: DataFrame, dim: Int, op: String,
+      path: String): Unit = {
+    val bad = batch.filter(col("vec").isNull ||
+      size(col("vec")) =!= dim).count()
     if (bad > 0) throw new IllegalStateException(
       s"$op($path): $bad batch row(s) carry a null vector or a width " +
         s"other than the index geometry's $dim dims — encoding them " +
@@ -1900,36 +1850,18 @@ object AnnIndex {
         col("__a.cell").as("cell"))
   }
 
-  /** Sign-quantizer appends may not invent cells: a batch cell absent
-    * from the `_centroids` sidecar would fail the index's own partition
-    * cross-check on the next read ([[ivfCentroids]]) — and silently
-    * extend the geometry probes rank. Bounded check: the distinct agg is
-    * ≤ 2^signBits rows, partial-aggregated. Errors BEFORE any write. */
-  private def requireKnownCells(assigned: DataFrame,
-      cents: Array[(Long, Array[Double])], path: String, op: String): Unit = {
-    val known = cents.map(_._1).toSet
-    val unknown = assigned.select(col("cell").cast("long")).distinct()
-      .collect().map(_.getLong(0)).filterNot(known)
-    if (unknown.nonEmpty) throw new IllegalStateException(
-      s"$op($path): append batch contains cell(s) ${unknown.sorted.take(8)
-        .mkString(", ")} not described by the _centroids sidecar " +
-        s"(${known.size} cells) — the frozen geometry cannot place them. " +
-        s"Rebuild the index over the union instead.")
-  }
-
-  /** The sign arms' two pre-write guards ([[requireBatchDims]] +
-    * [[requireKnownCells]]) in ONE bounded job (r18 optimization: the
+  /** The sign arms' two pre-write guards ([[requireBatchDims]] + the
+    * known-cells check) in ONE bounded job (r18 optimization: the
     * per-append fixed job latency is the composed rows' dominant cost
     * at bench scale, and the two aggregations read the same batch): a
     * whole-batch agg of the bad-width count and the distinct assigned
     * cells (≤ 2^signBits values, partial-aggregated collect_set).
     * Errors BEFORE any write, same messages, dims first — exactly the
     * two-job form it replaces. */
-  private def requireDimsAndKnownCells(assigned: DataFrame,
-      vecCol: String, dim: Int, cents: Array[(Long, Array[Double])],
-      path: String, op: String): Unit = {
+  private def requireDimsAndKnownCells(assigned: DataFrame, dim: Int,
+      cents: Array[(Long, Array[Double])], path: String, op: String): Unit = {
     val r = assigned.agg(
-      sum(when(col(vecCol).isNull || size(col(vecCol)) =!= dim, 1L))
+      sum(when(col("vec").isNull || size(col("vec")) =!= dim, 1L))
         .as("bad"),
       collect_set(col("cell").cast("long")).as("cells")).head()
     val bad = if (r.isNullAt(0)) 0L else r.getLong(0)
@@ -1945,6 +1877,56 @@ object AnnIndex {
         .mkString(", ")} not described by the _centroids sidecar " +
         s"(${known.size} cells) — the frozen geometry cannot place them. " +
         s"Rebuild the index over the union instead.")
+  }
+
+  /** An append's cell stage under the FROZEN `_centroids` geometry: the
+    * sign pattern at the PLANNED width (from the sidecar, never the
+    * occupied-cell count — see [[indexSignBits]]) behind the one-job
+    * dims + known-cells guard ([[requireDimsAndKnownCells]]), or the
+    * nearest frozen centroid behind the dims guard — ONE guard job either
+    * way, before any write. Both arms keep batch rows 1:1 (sign is a
+    * projection; kmeans groups on a per-row surrogate), so the written
+    * count IS the batch count. */
+  private def appendCells(sc: CentroidsSidecar, quant: String,
+      batch: DataFrame, dim: Int, path: String, op: String): DataFrame =
+    quant match {
+      case "sign" =>
+        val a = batch.withColumn("cell", signCellExpr(col("vec"), sc.signBits(path)))
+        requireDimsAndKnownCells(a, dim, sc.cells, path, op)
+        a
+      case "kmeans" =>
+        requireBatchDims(batch, dim, op, path)
+        nearestCellAssign(batch, sc.cells)
+    }
+
+  /** The append write of every IVF / PQ family: the batch count — and,
+    * for coded rows (`codes`), the reconstruction-error sum against the
+    * frozen codebooks ([[reconRowErr]]) — ride the write job (observe():
+    * the write touches every row anyway, so neither costs a pass). Then
+    * `_rows` is
+    * bumped and, for the lossy families, the staleness measure folds into
+    * `_recon` and the batch's reservoir members join `_sample` (from the
+    * unassigned `base` rows). An absent metric is the AQE-collapsed empty
+    * batch (see appendLsh): 0 rows. @return rows appended */
+  private def appendWrite(spark: SparkSession, path: String,
+      base: DataFrame, assigned: DataFrame, codes: Option[Codes],
+      cols: Seq[String], cells: Int, oldN: Long): Long = {
+    val obs = org.apache.spark.sql.Observation()
+    val n = count(lit(1)).as("n")
+    val observed = codes match {
+      case Some(g) => assigned.withColumn("code", g.codeCol)
+        .observe(obs, n, sum(reconRowErr(g)).as("recon_sum"))
+      case None => assigned.observe(obs, n)
+    }
+    writeIndex(observed.select(cols.map(col): _*), path, "append", cells)
+    val appended = IndexStore.observedCount(obs, "n")
+    IndexStore.writeRows(IndexStore.fsOf(spark, path), path, oldN + appended)
+    if (codes.isDefined) {
+      foldReconObserved(spark, path, obs.get.getOrElse("recon_sum", null),
+        appended)
+      appendReservoir(spark, base, path, oldN)
+    }
+    appended
   }
 
   /**
@@ -2040,7 +2022,7 @@ object AnnIndex {
   /**
    * Append a batch to a persisted IVF index (raw-vector variant) under
    * its FROZEN geometry: the quantizer family comes from the sidecar's
-   * marker ([[indexQuantizer]] — encoding with the wrong family is the
+   * marker ([[CentroidsSidecar.quantizer]] — encoding with the wrong family is the
    * silent-mis-placement failure, so no caller knob exists), cells are
    * assigned by the exact build rule (sign pattern, or nearest frozen
    * centroid for kmeans), and the batch appends into the partitioned
@@ -2056,40 +2038,15 @@ object AnnIndex {
     // ONE sidecar read serves cells + marker + width (see
     // [[readCentroidsSidecar]])
     val sc = readCentroidsSidecar(spark, path)
-    val cents = sc.cells
     val quant = sc.quantizer(path)
-    val dim = cents.head._2.length
     val oldN = indexRowCount(spark, path) // sidecar read, no data-path job
     val batch = newRows.select(col(idCol).as("vec_id"), col(vecCol).as("vec"))
-    // whole-batch width guard: the kmeans arm runs it alone; the sign
-    // arm folds it into the known-cells check — ONE guard job either way
-    // (see [[requireDimsAndKnownCells]])
-    if (quant != "sign")
-      requireBatchDims(batch, "vec", dim, "appendIvf", path)
     IndexStore.warnTombstonedIngest(spark, path, batch, IndexLayout,
       "appendIvf")
-    val assigned = quant match {
-      case "sign" =>
-        // the PLANNED width from the sidecar, never the occupied-cell
-        // count (skewed data under-occupies) — see [[indexSignBits]]
-        val signBits = sc.signBits(path)
-        val a = batch.withColumn("cell", signCellExpr(col("vec"), signBits))
-        requireDimsAndKnownCells(a, "vec", dim, cents, path, "appendIvf")
-        a
-      case "kmeans" =>
-        nearestCellAssign(batch, cents)
-    }
-    // both arms preserve batch rows 1:1 (sign is a projection; kmeans
-    // groups on a per-row surrogate), so the written count IS the batch
-    // count — observed inside the write job (see appendLsh)
-    val obs = org.apache.spark.sql.Observation()
-    assigned.select(col("vec_id"), col("vec"), col("cell"))
-      .observe(obs, count(lit(1)).as("n"))
-      .transform(writeShuffle(cents.length, col("cell"))) // see [[writeShuffle]]
-      .write.mode("append").partitionBy("cell").parquet(path)
-    // absent metric = AQE-collapsed empty batch (see appendLsh) → 0
-    val appended = IndexStore.observedCount(obs, "n")
-    IndexStore.writeRows(IndexStore.fsOf(spark, path), path, oldN + appended)
+    val assigned = appendCells(sc, quant, batch, sc.cells.head._2.length,
+      path, "appendIvf")
+    val appended = appendWrite(spark, path, batch, assigned, None,
+      Seq("vec_id", "vec", "cell"), sc.cells.length, oldN)
     warnIvfDrift(path, "appendIvf", oldN + appended, sc.refCells,
       targetCellRows, "AnnIndex.reindexIvf(spark, path) — re-plans and " +
         "rebuilds from the index's own rows")
@@ -2112,52 +2069,20 @@ object AnnIndex {
   def appendPq(newRows: DataFrame, vecCol: String, idCol: String,
       path: String): Long = {
     val spark = newRows.sparkSession
-    requireCodebooks(spark, path) // fail-closed
-    // ONE sidecar read serves marker + map (see [[readCodebooksSidecar]])
-    val (cb, quant) = readCodebooksSidecar(spark, path)
-    val m = cb.keys.map(_._1).max + 1
-    val sub = cb.values.head.length
+    val g = readCodes(spark, path, ivf = false) // fail-closed
     // mirror buildPq's normalize exactly (the index lives on the unit
     // sphere; appended rows must too)
-    val base = newRows
-      .select(col(idCol).as("vec_id"), col(vecCol).cast("array<double>").as("raw"))
-      .withColumn("__n",
-        sqrt(aggregate(col("raw"), lit(0.0), (a, x) => a + x * x)))
-      .select(col("vec_id"),
-        transform(col("raw"),
-          x => when(col("__n") > 0, x / col("__n")).otherwise(x)).as("vec"))
+    val base = unitNormalized(newRows, idCol, vecCol)
     // whole-batch width guard (the raw width equals the normalized width)
     // — see [[requireBatchDims]]
-    requireBatchDims(base, "vec", m * sub, "appendPq", path)
+    requireBatchDims(base, g.m * g.sub, "appendPq", path)
     IndexStore.warnTombstonedIngest(spark, path, base, IndexLayout,
       "appendPq")
     // read BEFORE the write: a legacy `_rows`-less index self-heals by
     // counting, and counting after the append would double-count the batch
     val oldN = indexRowCount(spark, path)
-    val codeCol = quant match {
-      case "sign"   => signCodeExpr(col("vec"), m, sub)
-      case "kmeans" => kmeansCodeExpr(col("vec"), cb, m, sub)
-    }
-    // count + staleness ride the write job (observe(), see appendIvfPq)
-    // — was a separate count job plus a sampled aggregation per append
-    val obs = org.apache.spark.sql.Observation()
-    base.withColumn("code", codeCol)
-      .observe(obs, count(lit(1)).as("n"),
-        sum(reconRowErr(col("vec"), col("code"), cb, m, sub))
-          .as("recon_sum"))
-      .select(col("vec_id"), col("code"))
-      .write.mode("append").parquet(path)
-    // absent metrics = AQE-collapsed empty batch (see appendLsh) → 0
-    val metrics = obs.get
-    val appended = IndexStore.observedCount(obs, "n")
-    IndexStore.writeRows(IndexStore.fsOf(spark, path), path, oldN + appended)
-    // staleness: fold THIS batch's write-observed reconstruction error
-    // against the frozen codebooks into the appended-mass mean — what
-    // indexHealth compares to the build baseline
-    foldReconObserved(spark, path, metrics.getOrElse("recon_sum", null), appended)
-    // reservoir: add the batch's id-hash-stable members (see `_sample`)
-    appendReservoir(spark, base, "vec", path, oldN)
-    appended
+    appendWrite(spark, path, base, base, Some(g), Seq("vec_id", "code"), 0,
+      oldN)
   }
 
   /**
@@ -2174,71 +2099,18 @@ object AnnIndex {
   def appendIvfPq(newRows: DataFrame, vecCol: String, idCol: String,
       path: String, targetCellRows: Long = 4096L): Long = {
     val spark = newRows.sparkSession
-    // ONE sidecar read serves cells + marker + width (see
-    // [[readCentroidsSidecar]])
-    val sc = readCentroidsSidecar(spark, path)
-    val cents = sc.cells
-    requireCodebooks(spark, path)           // fail-closed
-    val quant = sc.quantizer(path)
-    val cb = readCodebooks(spark, path)
-    val m = cb.keys.map(_._1).max + 1
-    val sub = cb.values.head.length
+    val g = readCodes(spark, path, ivf = true) // fail-closed
+    val sc = g.cells.get
     val oldN = indexRowCount(spark, path) // sidecar read, no data-path job
     // mirror buildIvfPq's normalize exactly
-    val base = newRows
-      .select(col(idCol).as("vec_id"), col(vecCol).cast("array<double>").as("raw"))
-      .withColumn("__n",
-        sqrt(aggregate(col("raw"), lit(0.0), (a, x) => a + x * x)))
-      .select(col("vec_id"),
-        transform(col("raw"),
-          x => when(col("__n") > 0, x / col("__n")).otherwise(x)).as("nv"))
-    // whole-batch width guard: kmeans arm alone; the sign arm folds it
-    // into the known-cells check — ONE guard job either way (see
-    // [[requireDimsAndKnownCells]])
-    if (quant != "sign")
-      requireBatchDims(base, "nv", m * sub, "appendIvfPq", path)
+    val base = unitNormalized(newRows, idCol, vecCol)
     IndexStore.warnTombstonedIngest(spark, path, base, IndexLayout,
       "appendIvfPq")
-    val assigned = quant match {
-      case "sign" =>
-        // planned width from the sidecar, never the occupied-cell count
-        // — see [[indexSignBits]]
-        val signBits = sc.signBits(path)
-        val a = base.withColumn("cell", signCellExpr(col("nv"), signBits))
-        requireDimsAndKnownCells(a, "nv", m * sub, cents, path,
-          "appendIvfPq")
-        a
-      case "kmeans" =>
-        nearestCellAssign(base.withColumnRenamed("nv", "vec"), cents)
-          .withColumnRenamed("vec", "nv")
-    }
-    val codeCol = quant match {
-      case "sign"   => signCodeExpr(col("nv"), m, sub)
-      case "kmeans" => kmeansCodeExpr(col("nv"), cb, m, sub)
-    }
-    // the batch count AND the staleness measure both ride the write job
-    // (observe() — the write touches every row anyway): the old path
-    // paid a separate O(batch) count job plus a separate sampled
-    // reconstruction-error aggregation per append. Both arms preserve
-    // batch rows 1:1 (sign is a projection; kmeans groups on a per-row
-    // surrogate), so the written count IS the batch count.
-    val obs = org.apache.spark.sql.Observation()
-    assigned.withColumn("code", codeCol)
-      .observe(obs, count(lit(1)).as("n"),
-        sum(reconRowErr(col("nv"), col("code"), cb, m, sub))
-          .as("recon_sum"))
-      .select(col("vec_id"), col("code"), col("cell"))
-      .transform(writeShuffle(cents.length, col("cell"))) // see [[writeShuffle]]
-      .write.mode("append").partitionBy("cell").parquet(path)
-    // absent metrics = AQE-collapsed empty batch (see appendLsh) → 0
-    val metrics = obs.get
-    val appended = IndexStore.observedCount(obs, "n")
-    IndexStore.writeRows(IndexStore.fsOf(spark, path), path, oldN + appended)
-    // staleness: fold this batch's write-observed reconstruction error
-    // into the `_recon` running mean (see appendPq)
-    foldReconObserved(spark, path, metrics.getOrElse("recon_sum", null), appended)
-    // reservoir: add the batch's id-hash-stable members (see `_sample`)
-    appendReservoir(spark, base, "nv", path, oldN)
+    // IVF's cell stage, then PQ's code stage inside the write
+    val assigned = appendCells(sc, g.quantizer, base, g.m * g.sub, path,
+      "appendIvfPq")
+    val appended = appendWrite(spark, path, base, assigned, Some(g),
+      Seq("vec_id", "code", "cell"), sc.cells.length, oldN)
     warnIvfDrift(path, "appendIvfPq", oldN + appended, sc.refCells,
       targetCellRows, "AnnIndex.reindexIvfPq(corpus, ...) — or, with a " +
         "_sample reservoir present, reindexIvfPqFromReservoir")
@@ -2562,45 +2434,50 @@ object AnnIndex {
       path: String, nCells: Int = 16, m: Int = -1, seed: Long = 42L,
       targetCellRows: Long = 4096L,
       fitSampleCap: Long = KmeansFitSampleCap): Int = {
-    val spark = embeddings.sparkSession
-    requireCodebooks(spark, path)  // fail-closed
-    val quant = readCentroidsSidecar(spark, path) // fail-closed check
-      .quantizer(path)
-    val useM =
-      if (m > 0) m
-      else readCodebooks(spark, path).keys.map(_._1).max + 1
-    IndexStore.rewriteStaged(IndexStore.fsOf(spark, path), path,
-        IndexStore.Reindex, "reindexIvfPq") { tmp =>
-      buildIvfPq(IndexStore.dropTombstoned(spark, path, embeddings, idCol,
-          "vec_id"), vecCol, idCol, tmp, nCells = nCells,
-        m = useM, seed = seed, quantizer = quant, autoPlan = true,
+    reindexFromCorpus(embeddings, idCol, path, "reindexIvfPq", ivf = true,
+        m, k = -1) { (corpus, tmp, quant, useM, _) =>
+      buildIvfPq(corpus, vecCol, idCol, tmp, nCells = nCells, m = useM,
+        seed = seed, quantizer = quant, autoPlan = true,
         targetCellRows = targetCellRows, fitSampleCap = fitSampleCap)
     }
-    readCentroidsSidecar(spark, path).refCells
+    readCentroidsSidecar(embeddings.sparkSession, path).refCells
   }
 
   /**
    * [[reindexIvfPq]]'s flat-PQ sibling: corpus-bound refit of the
    * codebooks (lossy codes — the index cannot be its own source) under
    * the same staged-swap crash protocol. `m < 0` keeps the index's own
-   * subspace count; the quantizer family comes from the sidecar marker;
-   * tombstoned ids are dropped from the corpus before building.
+   * subspace count and `k <= 0` (default) its own per-subspace codeword
+   * count (max centroid_id + 1 from `_codebooks`) — maintenance must never
+   * silently re-quantize a k=64 index at 16; the quantizer family comes
+   * from the sidecar marker; tombstoned ids are dropped from the corpus
+   * before building.
    */
   def reindexPq(embeddings: DataFrame, vecCol: String, idCol: String,
-      path: String, m: Int = -1, k: Int = 16, seed: Long = 42L,
-      fitSampleCap: Long = KmeansFitSampleCap): Unit = {
+      path: String, m: Int = -1, k: Int = -1, seed: Long = 42L,
+      fitSampleCap: Long = KmeansFitSampleCap): Unit =
+    reindexFromCorpus(embeddings, idCol, path, "reindexPq", ivf = false,
+        m, k) { (corpus, tmp, quant, useM, useK) =>
+      buildPq(corpus, vecCol, idCol, tmp, m = useM, k = useK, seed = seed,
+        quantizer = quant, fitSampleCap = fitSampleCap)
+    }
+
+  /** The corpus-bound lossy reindex, one body for IVF-PQ and flat PQ: the
+    * fail-closed geometry read ([[readCodes]]), m and k from the index
+    * unless given (> 0), the quantizer from its marker, tombstoned ids
+    * anti-joined out of the corpus, and the family's `build(corpus, tmp,
+    * quantizer, m, k)` into the staged rewrite
+    * ([[IndexStore.rewriteStaged]]). */
+  private def reindexFromCorpus(embeddings: DataFrame, idCol: String,
+      path: String, op: String, ivf: Boolean, m: Int, k: Int)(
+      build: (DataFrame, String, String, Int, Int) => Unit): Unit = {
     val spark = embeddings.sparkSession
-    requireCodebooks(spark, path) // fail-closed
-    // ONE sidecar read serves marker + map (see [[readCodebooksSidecar]])
-    val (cbAll, quant) = readCodebooksSidecar(spark, path)
-    val useM =
-      if (m > 0) m
-      else cbAll.keys.map(_._1).max + 1
+    val g = readCodes(spark, path, ivf)
     IndexStore.rewriteStaged(IndexStore.fsOf(spark, path), path,
-        IndexStore.Reindex, "reindexPq") { tmp =>
-      buildPq(IndexStore.dropTombstoned(spark, path, embeddings, idCol,
-          "vec_id"), vecCol, idCol, tmp, m = useM, k = k,
-        seed = seed, quantizer = quant, fitSampleCap = fitSampleCap)
+        IndexStore.Reindex, op) { tmp =>
+      build(IndexStore.dropTombstoned(spark, path, embeddings, idCol,
+        "vec_id"), tmp, g.quantizer, if (m > 0) m else g.m,
+        if (k > 0) k else g.k)
     }
   }
 
@@ -2689,35 +2566,42 @@ object AnnIndex {
   def reindexIvfPqFromReservoir(spark: SparkSession, path: String,
       nCells: Int = -1, seed: Long = 42L, targetCellRows: Long = 4096L,
       fitSampleCap: Long = KmeansFitSampleCap): Int = {
-    // ONE sidecar read serves the geometry check + marker + width
-    val sc = readCentroidsSidecar(spark, path)
-    requireCodebooks(spark, path)         // fail-closed
-    val quant = sc.quantizer(path)
-    val cb = readCodebooks(spark, path)
-    val (m, sub) = (cb.keys.map(_._1).max + 1, cb.values.head.length)
-    val res = reservoirRows(spark, path, fitSampleCap).getOrElse(
-      throw new IllegalStateException(
-        s"reindexIvfPqFromReservoir($path): no _sample reservoir (a " +
-          s"legacy or interrupted build) — use reindexIvfPq(corpus, ...)"))
-      .localCheckpoint(true) // read by the fit, the upgrade join and the re-stamp
-    val refCells = if (nCells > 0) nCells else sc.refCells
-    val fs = IndexStore.fsOf(spark, path)
-    IndexStore.rewriteStaged(fs, path, IndexStore.Reindex,
-        "reindexIvfPqFromReservoir") { tmp =>
-      val corpus = reservoirOrReconstructed(spark, path, res, m, sub)
-      buildIvfPq(corpus, "vec", "vec_id", tmp, nCells = refCells,
-        m = m, seed = seed, quantizer = quant, autoPlan = true,
+    reindexFromReservoir(spark, path, "reindexIvfPqFromReservoir", ivf = true,
+        fitSampleCap) { (corpus, res, tmp, g) =>
+      buildIvfPq(corpus, "vec", "vec_id", tmp,
+        nCells = if (nCells > 0) nCells else g.cells.get.refCells,
+        m = g.m, seed = seed, quantizer = g.quantizer, autoPlan = true,
         targetCellRows = targetCellRows, fitSampleCap = fitSampleCap,
         fitFrame = Some(res))
-      // re-stamp the staged reservoir from the RAW rows — buildIvfPq just
-      // derived one from the mixed (partly reconstructed) corpus — and
-      // carry the ORIGINAL cap (the one every existing row leveled
-      // against), not the build's own
+    }
+    readCentroidsSidecar(spark, path).refCells
+  }
+
+  /** The reservoir reindex, one body for IVF-PQ and flat PQ: the
+    * fail-closed geometry read ([[readCodes]]), the live reservoir
+    * (materialized: the fit, the upgrade join and the re-stamp read it),
+    * and — inside the staged rewrite — the family's `build(corpus,
+    * reservoir, tmp, geometry)` over [[reservoirOrReconstructed]], then
+    * the staged `_sample` re-stamped from the RAW reservoir (the build
+    * just derived one from the mixed, partly reconstructed corpus) at the
+    * ORIGINAL cap, the one every existing row leveled against. */
+  private def reindexFromReservoir(spark: SparkSession, path: String,
+      op: String, ivf: Boolean, fitSampleCap: Long)(
+      build: (DataFrame, DataFrame, String, Codes) => Unit): Unit = {
+    val g = readCodes(spark, path, ivf)
+    val res = reservoirRows(spark, path, fitSampleCap).getOrElse(
+      throw new IllegalStateException(
+        s"$op($path): no _sample reservoir (a legacy or interrupted " +
+          s"build) — use ${op.stripSuffix("FromReservoir")}(corpus, ...)"))
+      .localCheckpoint(true)
+    val fs = IndexStore.fsOf(spark, path)
+    IndexStore.rewriteStaged(fs, path, IndexStore.Reindex, op) { tmp =>
+      build(reservoirOrReconstructed(spark, path, res, g.m, g.sub), res, tmp,
+        g)
       res.select(col("vec_id"), col("vec"))
         .coalesce(8).write.mode("overwrite").parquet(s"$tmp/_sample")
       restampReservoirCap(fs, path, tmp)
     }
-    readCentroidsSidecar(spark, path).refCells
   }
 
   /** Copy the live reservoir's stamped cap onto a staged rebuild (the
@@ -2738,29 +2622,13 @@ object AnnIndex {
     * path must never silently re-quantize a k=64 index at 16. */
   def reindexPqFromReservoir(spark: SparkSession, path: String,
       k: Int = -1, seed: Long = 42L,
-      fitSampleCap: Long = KmeansFitSampleCap): Unit = {
-    requireCodebooks(spark, path) // fail-closed
-    // ONE sidecar read serves marker + map (see [[readCodebooksSidecar]])
-    val (cb, quant) = readCodebooksSidecar(spark, path)
-    val (m, sub) = (cb.keys.map(_._1).max + 1, cb.values.head.length)
-    val useK = if (k > 0) k else cb.keys.map(_._2).max + 1
-    val res = reservoirRows(spark, path, fitSampleCap).getOrElse(
-      throw new IllegalStateException(
-        s"reindexPqFromReservoir($path): no _sample reservoir (a " +
-          s"legacy or interrupted build) — use reindexPq(corpus, ...)"))
-      .localCheckpoint(true)
-    val fs = IndexStore.fsOf(spark, path)
-    IndexStore.rewriteStaged(fs, path, IndexStore.Reindex,
-        "reindexPqFromReservoir") { tmp =>
-      val corpus = reservoirOrReconstructed(spark, path, res, m, sub)
-      buildPq(corpus, "vec", "vec_id", tmp, m = m, k = useK,
-        seed = seed, quantizer = quant, fitSampleCap = fitSampleCap,
-        fitFrame = Some(res))
-      res.select(col("vec_id"), col("vec"))
-        .coalesce(8).write.mode("overwrite").parquet(s"$tmp/_sample")
-      restampReservoirCap(fs, path, tmp)
+      fitSampleCap: Long = KmeansFitSampleCap): Unit =
+    reindexFromReservoir(spark, path, "reindexPqFromReservoir", ivf = false,
+        fitSampleCap) { (corpus, res, tmp, g) =>
+      buildPq(corpus, "vec", "vec_id", tmp, m = g.m,
+        k = if (k > 0) k else g.k, seed = seed, quantizer = g.quantizer,
+        fitSampleCap = fitSampleCap, fitFrame = Some(res))
     }
-  }
 
   /** The `_codebooks` sidecar schema every build writes (see [[buildPq]]
     * / [[buildIvfPq]]). Reading with it skips Spark's per-read schema

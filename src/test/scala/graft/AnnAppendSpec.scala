@@ -1128,6 +1128,16 @@ class AnnAppendSpec extends SparkSpec {
       .select(col("vec_id"), col("code").cast("array<int>"))
       .as[(Long, Seq[Int])].collect().toSet
     assert(read(p) === read(fresh))
+    // k preserved too: a k=8 kmeans index reindexed with the defaults
+    // (maintainIndex's call) keeps 8 codewords per subspace, not 16
+    val km = tmp("pq_reindex_k8")
+    AnnIndex.buildPq(evens, "embedding", "vec_id", km, m = 8, k = 8,
+      quantizer = "kmeans")
+    AnnIndex.reindexPq(emb, "embedding", "vec_id", km)
+    val perSub = spark.read.parquet(s"$km/_codebooks")
+      .groupBy("subspace").count().select("count").as[Long].collect()
+    assert(perSub.length === 8 && perSub.forall(_ === 8L),
+      perSub.mkString(","))
   }
 
   test("appendPq(kmeans): appended codes match the frozen per-subspace " +

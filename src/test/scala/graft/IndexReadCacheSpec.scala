@@ -2,7 +2,6 @@ package graft
 
 import graft.operators.{AnnIndex, IndexStore}
 import org.apache.hadoop.fs.{FileUtil, Path}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 /** The session memo of decoded sidecars and read schemas
@@ -44,28 +43,6 @@ class IndexReadCacheSpec extends SparkSpec {
     * inference runs inside a `DataFrameReader` call. */
   private val decodeSites = Seq("readCentroidsSidecar", "readCodebooks",
     "codebooksSidecar", "lshIndexMeta", "lshPlanSidecar", "DataFrameReader")
-
-  /** `body`'s result and the call-site details of every job it ran
-    * (the job group tags them; the status tracker says when the
-    * asynchronous listener has seen them all). */
-  private def jobsOf[A](group: String)(body: => A): (A, Seq[String]) = {
-    val sc = spark.sparkContext
-    val seen = scala.collection.concurrent.TrieMap[Int, String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen(e.jobId) = e.stageInfos.map(_.details).mkString("\n")
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, group)
-    val out = try body finally sc.clearJobGroup()
-    val ids = sc.statusTracker.getJobIdsForGroup(group).toSeq
-    val deadline = System.nanoTime() + 30L * 1000000000L
-    while (!ids.forall(seen.contains) && System.nanoTime() < deadline)
-      Thread.sleep(20)
-    sc.removeSparkListener(listener)
-    assert(ids.forall(seen.contains), s"$group: listener missed jobs")
-    (out, ids.map(seen))
-  }
 
   private def decodeJobs(details: Seq[String]): Seq[String] =
     details.filter(d => decodeSites.exists(d.contains))

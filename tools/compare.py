@@ -3,6 +3,12 @@
 against the DuckDB oracle SQL on the same testdata tables, compare as
 column-name-sorted, row-sorted value sets. Usage:
   python3 tools/compare.py <sfDir> <verifyOutDir>
+
+Dump-vs-dump mode compares two Verify dumps of the same testdata (say,
+before and after a change) query by query with the same normalization,
+oracle or not, and lists every query whose rows differ or that only one
+dump holds:
+  python3 tools/compare.py --dumps <beforeOutDir> <afterOutDir>
 """
 import duckdb
 import json
@@ -25,7 +31,50 @@ def norm(df):
     return rows
 
 
+def query_dirs(out):
+    return {d for d in os.listdir(out) if os.path.isdir(os.path.join(out, d))}
+
+
+def errors(out):
+    path = f"{out}/_errors.json"
+    return json.load(open(path)) if os.path.exists(path) else {}
+
+
+def compare_dumps(a, b):
+    """Every query output of dump `a` against dump `b`: 0 when all match."""
+    n_same = n_diff = 0
+    for side, out in (("before", a), ("after", b)):
+        for name, msg in sorted(errors(out).items()):
+            print(f"ERR  {side} {name}: {msg}")
+            n_diff += 1
+    qa, qb = query_dirs(a), query_dirs(b)
+    for name in sorted(qa | qb):
+        if name not in qb or name not in qa:
+            print(f"MISSING {name}: only in {'before' if name in qa else 'after'}")
+            n_diff += 1
+            continue
+        ga, gb = pd.read_parquet(f"{a}/{name}"), pd.read_parquet(f"{b}/{name}")
+        if sorted(ga.columns) != sorted(gb.columns):
+            print(f"DIFF {name}: columns {sorted(ga.columns)} vs {sorted(gb.columns)}")
+            n_diff += 1
+            continue
+        ra, rb = norm(ga), norm(gb)
+        if ra != rb:
+            sa, sb = set(ra), set(rb)
+            print(f"DIFF {name}: rows {len(ra)} vs {len(rb)}; before-only "
+                  f"{[r for r in ra if r not in sb][:2]} after-only "
+                  f"{[r for r in rb if r not in sa][:2]}")
+            n_diff += 1
+        else:
+            n_same += 1
+    print(f"\n{n_same} identical, {n_diff} differing or missing, "
+          f"{len(qa | qb)} output dirs")
+    return 1 if n_diff else 0
+
+
 def main():
+    if len(sys.argv) == 4 and sys.argv[1] == "--dumps":
+        return compare_dumps(sys.argv[2], sys.argv[3])
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     out = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
     con = duckdb.connect()
@@ -78,8 +127,7 @@ def main():
             print(f"PASS {name} ({len(g)} rows)")
             n_pass += 1
     # rows-only queries (no oracle)
-    qnames = [d for d in os.listdir(out) if os.path.isdir(os.path.join(out, d))]
-    for name in sorted(set(qnames) - set(oracle)):
+    for name in sorted(query_dirs(out) - set(oracle)):
         got = pd.read_parquet(f"{out}/{name}")
         print(f"ROWS {name}: {len(got)} rows (no oracle)")
     print(f"\n{n_pass} passed, {n_fail} failed, {len(oracle)} total with oracle")
