@@ -599,7 +599,9 @@ object ProbeSuite {
         }).as("embedding")).localCheckpoint(true)
       // fixed held-out batch: ×2-scaled twins of %400 ids — divisible
       // by 4, so their originals are in EVERY fraction and recovery is
-      // exactly countable (750 at each size)
+      // exactly countable (750 at each size). Answers must hold across
+      // the lifecycle: the post-vacuum and post-compaction probes equal
+      // the post-delete (tombstone-masked) probe pair for pair.
       val twinBatch = bigBase.filter(col("vec_id") % 400 === 0)
         .select((col("vec_id") + 5000000L).as("vec_id"),
           transform(col("embedding"), x => x * lit(2.0f)).as("embedding"))
@@ -624,9 +626,13 @@ object ProbeSuite {
         import spark.implicits._
         val (_, tD) = timed(deleteFromMinhashIndex(spark, sIdx,
           doomedSlope.toDF("vec_id"), idCol = "vec_id"))
+        val pairSet = (rs: Array[org.apache.spark.sql.Row]) =>
+          rs.map(r => (r.getLong(0), r.getLong(1))).toSet
+        val afterDel = pairSet(probe())
         val ((vFiles, vRows), tV) =
           timed(vacuumMinhashTombstones(spark, sIdx))
         val afterVac = probe()
+        val vacSame = pairSet(afterVac) == afterDel
         val dead = doomedSlope.toSet
         val leak = afterVac.exists(r =>
           dead(r.getLong(0)) || dead(r.getLong(1)))
@@ -634,6 +640,7 @@ object ProbeSuite {
           .getFileSystem(spark.sparkContext.hadoopConfiguration)
           .exists(new org.apache.hadoop.fs.Path(s"$sIdx/_tombstones"))
         val (_, tC) = timed(compactMinhashIndex(spark, sIdx))
+        val compactSame = pairSet(probe()) == afterDel
         // at the FULL size: the round-17 reindex verb as a standing
         // bound — a tighter occupancy target forces a wider re-plan
         // (the drift scenario's fix) FROM THE INDEX'S OWN ROWS; probe
@@ -647,21 +654,23 @@ object ProbeSuite {
               Similarity.reindexEmbeddingIndex(spark, sIdx,
                 targetOccupancy = 0.25))
             val afterReidx = probe()
-            val same = afterReidx.map(r => (r.getLong(0), r.getLong(1)))
-              .toSet == afterVac.map(r => (r.getLong(0), r.getLong(1))).toSet
+            val same = pairSet(afterReidx) == pairSet(afterVac)
             Some((tR, newPlan, same && newPlan._2 > sPlan._2))
           }
         val ok = twinsGot == nTwinBatch && !leak && sidecarGone &&
+          vacSame && compactSame &&
           vFiles <= 8L * sPlan._1 && vRows == 8L * sPlan._1 &&
           reidx.forall(_._3)
         println(f"[probes] emb_index slope n=${nBig / den} plan=$sPlan " +
           f"build=$tB%.1fs probe=$tP%.1fs twins=$twinsGot/$nTwinBatch " +
           f"delete=$tD%.2fs vacuum=$tV%.1fs (files=$vFiles bound " +
           f"${8L * sPlan._1} rows=$vRows) compact=$tC%.1fs " +
+          f"vacuum_identical=$vacSame compact_identical=$compactSame " +
           reidx.fold("")(r => f"reindex=${r._1}%.1fs -> ${r._2} " +
             f"identical_ok=${r._3} ") +
           (if (ok) "ok" else "BAD"))
-        (den, sPlan, tB, tP, tD, tV, vFiles, tC, ok, reidx)
+        (den, sPlan, tB, tP, tD, tV, vFiles, tC, ok, reidx,
+          vacSame && compactSame)
       }
       val q = slope.head; val full = slope.last
       // wall-clock flatness is RECORDED TELEMETRY, not a pass/fail input
@@ -679,11 +688,12 @@ object ProbeSuite {
           f"flat=$deleteFlat; vacuum ¼=${q._6}%.1fs 1×=${full._6}%.1fs " +
           f"flat=$vacuumFlat")
       val slopeJson = slope.map {
-        case (den, p, tB, tP, tD, tV, vF, tC, ok, reidx) =>
+        case (den, p, tB, tP, tD, tV, vF, tC, ok, reidx, same) =>
           s"""{"n":${nBig / den},"plan_bands":${p._1},"plan_bits":${p._2},""" +
             s""""build_sec":$tB,"probe_sec":$tP,"delete_sec":$tD,""" +
             s""""vacuum_sec":$tV,"vacuum_files":$vF,""" +
             s""""vacuum_file_bound":${8L * p._1},"compact_sec":$tC,""" +
+            s""""lifecycle_identical":$same,""" +
             reidx.fold("") { case (tR, np, rok) =>
               s""""reindex_sec":$tR,"reindex_bands":${np._1},""" +
                 s""""reindex_bits":${np._2},"reindex_identical":$rok,"""

@@ -63,68 +63,30 @@ object AudioDedup {
     fps.select(col(idCol).as("id"), col("window_idx").as("band"),
       col("subfp").as("key"))
 
-  /** In-set pairs over banded fingerprint rows (id, band, key):
-    * bucket-join candidates, whole-sequence bit-error verify. Both
-    * sides passed the duration gate, so each pair aligns exactly
-    * nWindows-1 windows and the sum is the whole-sequence count.
-    * Duplicate (id, band) rows are dropped before the verify joins —
-    * a duplicated id (the families' legal replay/re-ingest state,
-    * identical content so identical rows) would otherwise double-join
-    * its windows and inflate the sum past the cut, losing true pairs.
-    * Duplicates with DIFFERING content for one id remain a caller
-    * contract violation in every family (the arbitrary survivor is
-    * nondeterministic); content replacement goes through
-    * delete -> vacuum/compact -> re-ingest. */
-  private def pairsOverBanded(banded: DataFrame,
-      maxBitErrors: Int): DataFrame = {
-    val idPairs = Dedup.bucketPairs(
-      banded.select("band", "key", "id"), Seq("band", "key"))
-    val fa = banded.select(col("id").as("id_a"), col("band"),
-      col("key").as("fp_a")).dropDuplicates("id_a", "band")
-    val fb = banded.select(col("id").as("id_b"), col("band"),
-      col("key").as("fp_b")).dropDuplicates("id_b", "band")
-    idPairs.join(fa, Seq("id_a")).join(fb, Seq("id_b", "band"))
-      .groupBy("id_a", "id_b")
-      .agg(sum(bitErrors(col("fp_a"), col("fp_b"))).as("bit_errors"))
-      .filter(col("bit_errors") <= maxBitErrors)
-  }
-
-  /** Batch-vs-index pairs: window-collision candidates between the
-    * banded batch and the live index rows, pair-dedup BEFORE the
-    * verify (a near-identical pair collides in several windows), then
-    * the whole-sequence verify re-joining both sides' band rows.
-    * Returns canonical (id_a, id_b, bit_errors). */
-  private def indexedPairs(batch: DataFrame, index: DataFrame,
-      maxBitErrors: Int, par: Int): DataFrame =
-    batch.select(col("band"), col("key"), col("id").as("id_n"))
-      .join(index.select(col("band"), col("key"), col("id").as("id_c")),
-        Seq("band", "key"))
-      .filter(col("id_n") =!= col("id_c"))
-      // the collided window's (band, key) must NOT ride into the
-      // verify joins below — they join the SAME frames again, and the
-      // leftover columns shadow the re-joined ones
-      .select("id_n", "id_c")
-      // repartition before the dedup: one exchange serves both (see
-      // Dedup.bucketPairs' r19 note); duplicate keys carry identical
-      // payloads, so the pick is value-deterministic
-      .repartition(par, col("id_n"))
-      .dropDuplicates("id_n", "id_c")
-      // duplicate (id, band) rows on EITHER side (a legally replayed/
-      // re-ingested id — identical content, identical rows) would
-      // double-join sequence windows and inflate the bit-error sum
-      // past the cut, losing the pair; see pairsOverBanded's note on
-      // the differing-content caller contract
-      .join(batch.select(col("id").as("id_n"), col("band"),
-        col("key").as("fp_n")).dropDuplicates("id_n", "band"),
-        Seq("id_n"))
-      .join(index.select(col("id").as("id_c"), col("band"),
-        col("key").as("fp_c")).dropDuplicates("id_c", "band"),
-        Seq("id_c", "band"))
-      .groupBy("id_n", "id_c")
-      .agg(sum(bitErrors(col("fp_n"), col("fp_c"))).as("bit_errors"))
-      .filter(col("bit_errors") <= maxBitErrors)
-      .select(least(col("id_n"), col("id_c")).as("id_a"),
-        greatest(col("id_n"), col("id_c")).as("id_b"), col("bit_errors"))
+  /** The audio verify: the whole-sequence bit-error count, re-joining
+    * both sides' window rows. Both sides passed the duration gate, so
+    * each pair aligns exactly nWindows-1 windows and the sum is the
+    * whole-sequence count. The family carries no payload through the
+    * band join — its window collides on one band, the verify reads
+    * every band. Duplicate (id, band) rows are dropped before the
+    * verify joins — a duplicated id (the families' legal replay/
+    * re-ingest state, identical content so identical rows) would
+    * otherwise double-join its windows and inflate the sum past the
+    * cut, losing true pairs. Duplicates with DIFFERING content for one
+    * id remain a caller contract violation in every family (the
+    * arbitrary survivor is nondeterministic); content replacement goes
+    * through delete -> vacuum/compact -> re-ingest. */
+  private def audioFamily(maxBitErrors: Int) =
+    Dedup.BandFamily(Nil, (pairs, x, y, sideX, sideY) => {
+      def windows(side: DataFrame, z: String) = side.select(
+        col("id").as(s"id_$z"), col("band"), col("key").as(s"fp_$z"))
+        .dropDuplicates(s"id_$z", "band")
+      pairs.join(windows(sideX, x), Seq(s"id_$x"))
+        .join(windows(sideY, y), Seq(s"id_$y", "band"))
+        .groupBy(s"id_$x", s"id_$y")
+        .agg(sum(bitErrors(col(s"fp_$x"), col(s"fp_$y"))).as("bit_errors"))
+        .filter(col("bit_errors") <= maxBitErrors)
+    })
 
   /** Window-collision candidate id pairs BEFORE the bit-error verify —
     * the probe/diagnostic surface whose mass the independent-bit model
@@ -151,7 +113,7 @@ object AudioDedup {
       .audioFingerprint(assets, payloadCol, idCol, nWindows, bands), idCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     Dedup.materializeAndRelease(
-      pairsOverBanded(banded, maxBitErrors), banded)
+      Dedup.inSetPairs(banded, banded, audioFamily(maxBitErrors)), banded)
   }
 
   /**
@@ -165,8 +127,7 @@ object AudioDedup {
    * audio-specific control plane.
    */
   def buildAudioIndex(fps: DataFrame, idCol: String, path: String): Unit =
-    Dedup.indexWrite(bandedFps(fps, idCol))
-      .mode("overwrite").partitionBy("band").parquet(path)
+    Dedup.writeBands(bandedFps(fps, idCol), "overwrite", path)
 
   /** Append a batch's fingerprint rows. The window/band geometry is
     * the caller's contract (like the phash bands parameter — the
@@ -174,17 +135,9 @@ object AudioDedup {
     * drift). Refuses mid-vacuum trees and the streaming batch=
     * layout, like every flat-layout appender. */
   def appendToAudioIndex(fps: DataFrame, idCol: String,
-      path: String): Unit = {
-    IndexStore.requireNoInterruptedVacuum(
-      IndexStore.fsOf(fps.sparkSession, path), path,
-      "appendToAudioIndex", Dedup.BandLayout)
-    Dedup.requireLayout(fps.sparkSession, path, "batch",
-      "appendToAudioIndex",
-      "This index is flat (band= dirs); batch= generations belong to " +
-        "the streaming ingest layout.")
-    Dedup.indexWrite(bandedFps(fps, idCol))
-      .mode("append").partitionBy("band").parquet(path)
-  }
+      path: String): Unit =
+    Dedup.appendBands(fps.sparkSession, path, "appendToAudioIndex",
+      "ingestAudioBatch")(bandedFps(fps, idCol))
 
   /**
    * Near-dup pairs of a NEW batch of fingerprints against the indexed
@@ -194,25 +147,14 @@ object AudioDedup {
    * ids are anti-joined before the window join
    * ([[IndexStore.liveRows]]); `scope` restricts which INDEXED assets
    * may pair (the shared-index per-tenant polarity of the other
-   * families). Returns (id_a, id_b, bit_errors), smaller id first.
+   * families). Returns (id_a, id_b, bit_errors), smaller id first, each
+   * pair once.
    */
   def incrementalAudioPairs(batchFps: DataFrame, idCol: String,
       indexPath: String, maxBitErrors: Int = 28,
-      scope: Option[DataFrame] = None): DataFrame = {
-    val spark = batchFps.sparkSession
-    val par = spark.sparkContext.defaultParallelism
-    val batch = bandedFps(batchFps, idCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val live = IndexStore.liveRows(spark, indexPath, Dedup.BandLayout,
-      Some(batch.schema))
-    val index = scope.fold(live)(sc =>
-      live.join(sc.select(col(sc.columns.head).as("id")).distinct(),
-        Seq("id"), "left_semi"))
-    val pairs = indexedPairs(batch, index, maxBitErrors, par)
-      .union(pairsOverBanded(batch, maxBitErrors))
-      .distinct()
-    Dedup.materializeAndRelease(pairs, batch)
-  }
+      scope: Option[DataFrame] = None): DataFrame =
+    Dedup.probeBands(bandedFps(batchFps, idCol), audioFamily(maxBitErrors),
+      indexPath, scope)
 
   /**
    * One audio-index ingestion micro-batch, fingerprint banding done
@@ -236,35 +178,9 @@ object AudioDedup {
       indexPath: Option[String], indexBatchDir: String,
       maxBitErrors: Int = 28,
       pairsSink: Option[String] = None): DataFrame = {
-    val spark = batchFps.sparkSession
-    val parent = Option(
-      new org.apache.hadoop.fs.Path(indexBatchDir).getParent)
-      .map(_.toString)
-      .getOrElse(throw new IllegalArgumentException(
-        s"ingestAudioBatch: $indexBatchDir has no parent index root"))
-    val fs = new org.apache.hadoop.fs.Path(parent).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    IndexStore.requireNoInterruptedVacuum(fs, parent,
-      "ingestAudioBatch", Dedup.BandLayout)
-    Dedup.requireLayout(spark, parent, "band", "ingestAudioBatch",
-      "Rebuild the index under batch= directories (or append with " +
-        "appendToAudioIndex instead).")
-    val batch = bandedFps(batchFps, idCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val inBatch = pairsOverBanded(batch, maxBitErrors)
-    val par = spark.sparkContext.defaultParallelism
-    val pairs = indexPath match {
-      case None => inBatch
-      case Some(p) =>
-        IndexStore.warnTombstonedIngest(spark, p, batch, Dedup.BandLayout,
-          "ingestAudioBatch")
-        indexedPairs(batch, IndexStore.liveRows(spark, p, Dedup.BandLayout,
-          Some(batch.schema)), maxBitErrors, par).union(inBatch)
-    }
-    val out = Dedup.materializePairs(pairs, pairsSink)
-    Dedup.indexWrite(batch).mode("overwrite").partitionBy("band")
-      .parquet(indexBatchDir)
-    batch.unpersist(false)
-    out
+    Dedup.ingestRoot(batchFps.sparkSession, indexBatchDir,
+      "ingestAudioBatch", "appendToAudioIndex")
+    Dedup.ingestBands(bandedFps(batchFps, idCol), audioFamily(maxBitErrors),
+      indexPath, indexBatchDir, pairsSink, "ingestAudioBatch")
   }
 }

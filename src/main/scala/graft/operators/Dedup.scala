@@ -1021,6 +1021,11 @@ object Dedup {
         posexplode_outer(col("bandkeys")).as(Seq("band", "key")))
   }
 
+  /** The minhash verify: Jaccard over the stored shingle sets. */
+  private def minhashFamily(minJaccard: Double) =
+    BandFamily.scored("shingles" -> "sh")("jaccard",
+      (a, b) => jaccard(a("sh"), b("sh")), _ >= minJaccard)
+
   /**
    * Persist a minhash index at `path`: per-document shingle sets and LSH
    * band keys, partitioned by band. This is the production ingestion
@@ -1031,8 +1036,8 @@ object Dedup {
   def buildMinhashIndex(docs: DataFrame, textCol: String, idCol: String,
       path: String, shingleK: Int = 5, numHashes: Int = 16,
       bands: Int = 4): Unit =
-    indexWrite(minhashBanded(docs, textCol, idCol, shingleK, numHashes,
-      bands)).mode("overwrite").partitionBy("band").parquet(path)
+    writeBands(minhashBanded(docs, textCol, idCol, shingleK, numHashes,
+      bands), "overwrite", path)
 
   /** The index write discipline (round 15; SIZE-AWARE since the r18
     * optimization round): shuffle on (band, id) before partitionBy so
@@ -1081,15 +1086,10 @@ object Dedup {
     * tree: `band=` dirs next to `batch=` dirs brick the read. */
   def appendToMinhashIndex(docs: DataFrame, textCol: String, idCol: String,
       path: String, shingleK: Int = 5, numHashes: Int = 16,
-      bands: Int = 4): Unit = {
-    IndexStore.requireNoInterruptedVacuum(
-      IndexStore.fsOf(docs.sparkSession, path), path,
-      "appendToMinhashIndex", BandLayout)
-    requireLayout(docs.sparkSession, path, "batch", "appendToMinhashIndex",
-      "Use ingestBatch (a batch= subdirectory) on this index.")
-    indexWrite(minhashBanded(docs, textCol, idCol, shingleK, numHashes,
-      bands)).mode("append").partitionBy("band").parquet(path)
-  }
+      bands: Int = 4): Unit =
+    appendBands(docs.sparkSession, path, "appendToMinhashIndex",
+      "ingestBatch")(minhashBanded(docs, textCol, idCol, shingleK,
+      numHashes, bands))
 
   /**
    * Near-dup pairs of a NEW batch against an indexed corpus (plus within
@@ -1099,79 +1099,27 @@ object Dedup {
    * index rows whose band key collides with the batch (a day's batch vs
    * a years-deep corpus: the batch side broadcasts), and the verify uses
    * shingle sets stored in the index. Returns (id_a, id_b, jaccard) with
-   * the smaller id first, batch-internal pairs included.
-   */
-  /** Batch-internal pairs over a banded signature table: bucket self-join
-    * + pair-distributed Jaccard verify (shared by the one-shot-per-batch
-    * and streaming ingestion paths). */
-  private def inBatchPairs(batch: DataFrame, minJaccard: Double): DataFrame = {
-    val idPairs = bucketPairs(batch.select(col("band"), col("key"), col("id")),
-      Seq("band", "key"))
-    val sa = batch.select(col("id").as("id_a"), col("shingles").as("sh_a"))
-      .dropDuplicates("id_a")
-    val sb = batch.select(col("id").as("id_b"), col("shingles").as("sh_b"))
-      .dropDuplicates("id_b")
-    idPairs.join(sa, Seq("id_a")).join(sb, Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        jaccard(col("sh_a"), col("sh_b")).as("jaccard"))
-      .filter(col("jaccard") >= minJaccard)
-  }
-
-  /** Batch-vs-corpus candidates: collide the batch's band keys with the
-    * index rows, canonical id order, pair-distributed verify. */
-  private def indexCandPairs(batch: DataFrame, index: DataFrame, par: Int,
-      minJaccard: Double): DataFrame =
-    batch.select(col("band"), col("key"),
-        col("id").as("id_n"), col("shingles").as("sh_n"))
-      .join(index.select(col("band"), col("key"),
-        col("id").as("id_c"), col("shingles").as("sh_c")), Seq("band", "key"))
-      .filter(col("id_n") =!= col("id_c"))
-      .select(col("id_n"), col("id_c"), col("sh_n"), col("sh_c"))
-      // repartition BEFORE the dedup: one exchange serves both the
-      // (id_n, id_c) dedup (subset clustering — duplicates co-locate)
-      // and the verify width (see the bucketPairs note); duplicate keys
-      // carry identical shingle payloads, so the arbitrary-row pick is
-      // value-deterministic
-      .repartition(par, col("id_n"))
-      .dropDuplicates("id_n", "id_c")
-      .select(
-        least(col("id_n"), col("id_c")).as("id_a"),
-        greatest(col("id_n"), col("id_c")).as("id_b"),
-        jaccard(col("sh_n"), col("sh_c")).as("jaccard"))
-      .filter(col("jaccard") >= minJaccard)
-
-  /** @param scope id-set restricting which INDEXED documents the batch
-    *   may pair with (round 16 — the [[AnnIndex.lshKnnJoin]] `scope`
-    *   discipline on the dedup index): a tenant / license / language
-    *   filter resolved upstream to an id table lets ONE shared index
-    *   serve per-tenant dedup without per-filter index rebuilds. The
-    *   semi-join applies to the index rows BEFORE the band join (the
-    *   same seam as the tombstone anti-join — positive polarity), so a
-    *   scoped probe of the full index equals a probe of an index built
-    *   from the scope subset alone; out-of-scope docs neither surface
-    *   nor suppress. `None` (default) leaves the plan untouched.
-    *   In-batch pairs are NOT scoped — the caller owns the batch frame
-    *   and pre-filters it when the batch itself needs restricting. */
+   * the smaller id first, batch-internal pairs included, each pair once.
+   *
+   * @param scope id-set restricting which INDEXED documents the batch
+   *   may pair with (round 16 — the [[AnnIndex.lshKnnJoin]] `scope`
+   *   discipline on the dedup index): a tenant / license / language
+   *   filter resolved upstream to an id table lets ONE shared index
+   *   serve per-tenant dedup without per-filter index rebuilds. The
+   *   semi-join applies to the index rows BEFORE the band join (the
+   *   same seam as the tombstone anti-join — positive polarity), so a
+   *   scoped probe of the full index equals a probe of an index built
+   *   from the scope subset alone; out-of-scope docs neither surface
+   *   nor suppress. `None` (default) leaves the plan untouched.
+   *   In-batch pairs are NOT scoped — the caller owns the batch frame
+   *   and pre-filters it when the batch itself needs restricting. */
   def incrementalNearDupPairs(newDocs: DataFrame, textCol: String,
       idCol: String, indexPath: String, shingleK: Int = 5,
       numHashes: Int = 16, bands: Int = 4,
       minJaccard: Double = 0.8,
-      scope: Option[DataFrame] = None): DataFrame = {
-    val spark = newDocs.sparkSession
-    val par = spark.sparkContext.defaultParallelism
-    val batch = minhashBanded(newDocs, textCol, idCol, shingleK, numHashes, bands)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val live = IndexStore.liveRows(spark, indexPath, BandLayout,
-      Some(batch.schema))
-    val index = scope.fold(live)(s =>
-      live.join(s.select(col(s.columns.head).as("id")).distinct(),
-        Seq("id"), "left_semi"))
-    val cand = indexCandPairs(batch, index, par, minJaccard)
-    val inBatch = inBatchPairs(batch, minJaccard)
-    // scope the persisted batch signatures to this call: a daily driver
-    // looping over batches must not accumulate one cached table per day
-    materializeAndRelease(cand.union(inBatch), batch)
-  }
+      scope: Option[DataFrame] = None): DataFrame =
+    probeBands(minhashBanded(newDocs, textCol, idCol, shingleK, numHashes,
+      bands), minhashFamily(minJaccard), indexPath, scope)
 
   /**
    * One ingestion micro-batch, signature work done ONCE: compute the
@@ -1200,38 +1148,194 @@ object Dedup {
       numHashes: Int = 16, bands: Int = 4,
       minJaccard: Double = 0.8,
       pairsSink: Option[String] = None): DataFrame = {
-    val spark = newDocs.sparkSession
-    val par = spark.sparkContext.defaultParallelism
-    val batch = minhashBanded(newDocs, textCol, idCol, shingleK, numHashes, bands)
+    ingestRoot(newDocs.sparkSession, indexBatchDir, "ingestBatch",
+      "appendToMinhashIndex")
+    ingestBands(minhashBanded(newDocs, textCol, idCol, shingleK, numHashes,
+      bands), minhashFamily(minJaccard), indexPath, indexBatchDir,
+      pairsSink, "ingestBatch")
+  }
+
+  // --------------------------------------------- the band-index kit
+  //
+  // The four near-dup band indexes — minhash above, embedding in
+  // [[Similarity]], phash in [[PhashDedup]], audio in [[AudioDedup]] —
+  // share one build, append, probe and ingest body. A family supplies
+  // its banding into (id, band, key, payload…) and its [[BandFamily]]
+  // verify; the kit composes them with the candidate stage (band-key
+  // collisions, pair-dedup before the verify) and the write discipline
+  // ([[indexWrite]]). [[BandLayout]] serves the lifecycle verbs.
+
+  /** A band family's verify half. `payload` (banded column → short name)
+    * rides the batch-vs-index join as `<short>_n`/`<short>_c` and joins
+    * back per side as `<short>_a`/`<short>_b` onto in-set pairs.
+    * `verify(pairs, x, y, sideX, sideY)` turns candidate pairs
+    * (id_x, id_y, payload…) into the (id_x, id_y, score) rows that
+    * pass; `sideX`/`sideY` are each side's banded rows, for a verify
+    * that reads more than a per-id payload (audio's aligned windows,
+    * which declare none). The score must be symmetric in the sides. */
+  private[operators] case class BandFamily(payload: Seq[(String, String)],
+      verify: (DataFrame, String, String, DataFrame, DataFrame) => DataFrame) {
+    def carried(x: String): Seq[Column] =
+      payload.map { case (c, s) => col(c).as(s"${s}_$x") }
+    def carriedNames(x: String): Seq[String] = payload.map(p => s"${p._2}_$x")
+  }
+
+  private[operators] object BandFamily {
+    /** A per-pair `score` over the payload (each side's columns by short
+      * name), kept where `keep` holds. */
+    def scored(payload: (String, String)*)(name: String,
+        score: (String => Column, String => Column) => Column,
+        keep: Column => Column): BandFamily =
+      BandFamily(payload, (pairs, x, y, _, _) =>
+        pairs.select(col(s"id_$x"), col(s"id_$y"),
+          score(c => col(s"${c}_$x"), c => col(s"${c}_$y")).as(name))
+          .filter(keep(col(name))))
+  }
+
+  /** The band index write: one (band, id)-rebalanced partitionBy("band")
+    * write — a build (overwrite), an append, an ingest's own batch dir. */
+  private[operators] def writeBands(banded: DataFrame, mode: String,
+      path: String): Unit =
+    indexWrite(banded).mode(mode).partitionBy("band").parquet(path)
+
+  /** The flat-layout append preamble: refuse a mid-vacuum tree and a
+    * streaming batch= tree (see [[requireLayout]]). */
+  private[operators] def requireAppendable(
+      spark: org.apache.spark.sql.SparkSession, path: String, op: String,
+      ingestOp: String): Unit = {
+    IndexStore.requireNoInterruptedVacuum(IndexStore.fsOf(spark, path),
+      path, op, BandLayout)
+    requireLayout(spark, path, "batch", op,
+      s"Use $ingestOp (a batch= subdirectory) on this index.")
+  }
+
+  /** Append a banded batch to a flat index, after the preamble. */
+  private[operators] def appendBands(spark: org.apache.spark.sql.SparkSession,
+      path: String, op: String, ingestOp: String)(banded: => DataFrame): Unit = {
+    requireAppendable(spark, path, op, ingestOp)
+    writeBands(banded, "append", path)
+  }
+
+  /** In-set pairs of one banded set: the bucket self-join on keys alone
+    * ([[bucketPairs]]), each side's payload joined back from `src`
+    * (bytes proportional to the pair count), the family's verify. */
+  private[operators] def inSetPairs(banded: DataFrame, src: DataFrame,
+      f: BandFamily): DataFrame = {
+    val idPairs = bucketPairs(
+      banded.select(col("band"), col("key"), col("id")), Seq("band", "key"))
+    def side(x: String) = src.select(col("id").as(s"id_$x") +: f.carried(x): _*)
+      .dropDuplicates(s"id_$x")
+    val pairs =
+      if (f.payload.isEmpty) idPairs
+      else idPairs.join(side("a"), Seq("id_a")).join(side("b"), Seq("id_b"))
+    f.verify(pairs, "a", "b", src, src)
+  }
+
+  /** Batch-vs-index pairs: collide the batch's band keys (side n) with
+    * the index rows' (side c), self-pairs out, the family's verify,
+    * canonical (id_a < id_b) order. Repartition BEFORE the (id_n, id_c)
+    * dedup: one exchange serves both the dedup (subset clustering —
+    * duplicates co-locate) and the verify width (see the bucketPairs
+    * note); duplicate keys carry identical payloads, so the
+    * arbitrary-row pick is value-deterministic. */
+  private def indexPairs(batch: DataFrame, index: DataFrame,
+      f: BandFamily): DataFrame = {
+    def side(df: DataFrame, x: String) = df.select(
+      Seq(col("band"), col("key"), col("id").as(s"id_$x")) ++ f.carried(x): _*)
+    val cands = side(batch, "n").join(side(index, "c"), Seq("band", "key"))
+      .filter(col("id_n") =!= col("id_c"))
+      .select((Seq("id_n", "id_c") ++ f.carriedNames("n") ++
+        f.carriedNames("c")).map(col): _*)
+      .repartition(batch.sparkSession.sparkContext.defaultParallelism,
+        col("id_n"))
+      .dropDuplicates("id_n", "id_c")
+    val scored = f.verify(cands, "n", "c", batch, index)
+    scored.select(least(col("id_n"), col("id_c")).as("id_a"),
+      greatest(col("id_n"), col("id_c")).as("id_b"), col(scored.columns(2)))
+  }
+
+  /** The pairs of a persisted banded batch, the one body under the probe
+    * and the ingest: in-set (payloads from `src`, else the batch), plus
+    * against `index` when given. A pair of two batch ids that are both
+    * indexed surfaces on several paths (both orders through the index,
+    * and in-set); [[materializePairs]]' distinct folds them, so each
+    * canonical pair comes out once. */
+  private def batchPairs(batch: DataFrame, src: Option[DataFrame],
+      index: Option[DataFrame], f: BandFamily,
+      pairsSink: Option[String]): DataFrame = {
+    val inSet = inSetPairs(batch, src.getOrElse(batch), f)
+    materializePairs(index.fold(inSet)(indexPairs(batch, _, f).union(inSet)),
+      pairsSink)
+  }
+
+  /**
+   * The incremental probe of every band family: each canonical pair of
+   * a batch id once, against the live index AND within the batch. The
+   * banded batch is persisted for the call; tombstoned index rows are
+   * anti-joined and `scope` semi-joins the index rows BEFORE the band
+   * join (in-batch pairs are not scoped). `src` as [[ingestBands]]'.
+   */
+  private[operators] def probeBands(banded: DataFrame, f: BandFamily,
+      indexPath: String, scope: Option[DataFrame],
+      src: Option[DataFrame] = None): DataFrame = {
+    val spark = banded.sparkSession
+    val batch = banded
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val inBatch = inBatchPairs(batch, minJaccard)
-    val pairs = indexPath match {
-      case None => inBatch
-      case Some(p) =>
-        IndexStore.warnTombstonedIngest(spark, p, batch, BandLayout,
-          "ingestBatch")
-        indexCandPairs(batch, IndexStore.liveRows(spark, p, BandLayout,
-          Some(batch.schema)), par, minJaccard)
-          .union(inBatch)
+    val live = IndexStore.liveRows(spark, indexPath, BandLayout,
+      Some(batch.schema))
+    val index = scope.fold(live)(s =>
+      live.join(s.select(col(s.columns.head).as("id")).distinct(),
+        Seq("id"), "left_semi"))
+    val out = batchPairs(batch, src, Some(index), f, None)
+    // scope the persisted batch to this call: a daily driver looping
+    // over batches must not accumulate one cached table per day
+    batch.unpersist(false)
+    out
+  }
+
+  /** The ingest gates, run before anything is read or written: the
+    * batch dir's parent is the index root, which must not be mid-vacuum
+    * and must not be a flat (band=) tree — batch= dirs next to it brick
+    * every read ([[requireLayout]]). @return the index root */
+  private[operators] def ingestRoot(spark: org.apache.spark.sql.SparkSession,
+      indexBatchDir: String, op: String, appendOp: String): String = {
+    val parent = Option(new org.apache.hadoop.fs.Path(indexBatchDir).getParent)
+      .map(_.toString)
+      .getOrElse(throw new IllegalArgumentException(
+        s"$op: $indexBatchDir has no parent index root"))
+    IndexStore.requireNoInterruptedVacuum(IndexStore.fsOf(spark, parent),
+      parent, op, BandLayout)
+    requireLayout(spark, parent, "band", op, "Rebuild the index under " +
+      s"batch= directories (or append with $appendOp instead).")
+    parent
+  }
+
+  /** One ingest micro-batch of any band family, after [[ingestRoot]]:
+    * the banded batch persisted once, its pairs ([[batchPairs]])
+    * materialized FIRST — they read the index before this batch's own
+    * rows join it — then the batch dir written from the same persisted
+    * rows (overwrite, so a replay is idempotent). `observed` wraps that
+    * write (a family's `observe()` bookkeeping). `src` replaces the
+    * persisted batch as the in-set payload source (embedding re-projects
+    * its `cells`: read off the persisted batch, the payload side joins
+    * cost its probe and ingests three more jobs each). See
+    * [[ingestBatch]] for `pairsSink`. */
+  private[operators] def ingestBands(banded: DataFrame, f: BandFamily,
+      indexPath: Option[String], indexBatchDir: String,
+      pairsSink: Option[String], op: String,
+      src: Option[DataFrame] = None,
+      observed: DataFrame => DataFrame = identity): DataFrame = {
+    val spark = banded.sparkSession
+    val batch = banded
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val index = indexPath.map { p =>
+      // re-ingesting a tombstoned id is legal but invisible until a
+      // vacuum/compaction clears the sidecar
+      IndexStore.warnTombstonedIngest(spark, p, batch, BandLayout, op)
+      IndexStore.liveRows(spark, p, BandLayout, Some(batch.schema))
     }
-    // a flat-layout root (band= dirs) must not gain batch= dirs — the
-    // mixed tree bricks every read; see [[requireLayout]] — and a
-    // mid-swap (interrupted-vacuum) tree must not gain anything at all
-    Option(new org.apache.hadoop.fs.Path(indexBatchDir).getParent)
-      .foreach { parent =>
-        IndexStore.requireNoInterruptedVacuum(
-          parent.getFileSystem(spark.sparkContext.hadoopConfiguration),
-          parent.toString, "ingestBatch", BandLayout)
-        requireLayout(spark, parent.toString, "band",
-          "ingestBatch", "Rebuild the index under batch= directories (or " +
-            "append with appendToMinhashIndex instead).")
-      }
-    // materialize the pairs FIRST (reads the index before this batch's
-    // own rows join it), then write the index partition from the cached
-    // signatures — both actions reuse the one persisted signature table
-    val out = materializePairs(pairs, pairsSink)
-    indexWrite(batch).mode("overwrite").partitionBy("band")
-      .parquet(indexBatchDir)
+    val out = batchPairs(batch, src, index, f, pairsSink)
+    writeBands(observed(batch), "overwrite", indexBatchDir)
     batch.unpersist(false)
     out
   }

@@ -83,6 +83,11 @@ object PhashDedup {
         .select("band", "key", "id"),
       Seq("band", "key"))
 
+  /** The phash verify: hamming distance over the stored full hashes. */
+  private def phashFamily(maxHamming: Int) =
+    Dedup.BandFamily.scored("phash" -> "h")("hamming",
+      (a, b) => hamming(a("h"), b("h")), _ <= maxHamming)
+
   /** One-shot near-dup pairs over a hash table (`idCol`, `hashCol`):
     * band-bucket candidates, hamming verify, canonical (id_a < id_b)
     * order. Returns (id_a, id_b, hamming). */
@@ -90,17 +95,8 @@ object PhashDedup {
       hashCol: String, maxHamming: Int = 6, bands: Int = 4): DataFrame = {
     val banded = phashBanded(hashes, idCol, hashCol, bands)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val idPairs = Dedup.bucketPairs(
-      banded.select("band", "key", "id"), Seq("band", "key"))
-    val a = banded.select(col("id").as("id_a"), col("phash").as("h_a"))
-      .dropDuplicates("id_a")
-    val b = banded.select(col("id").as("id_b"), col("phash").as("h_b"))
-      .dropDuplicates("id_b")
-    val pairs = idPairs.join(a, Seq("id_a")).join(b, Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        hamming(col("h_a"), col("h_b")).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-    Dedup.materializeAndRelease(pairs, banded)
+    Dedup.materializeAndRelease(
+      Dedup.inSetPairs(banded, banded, phashFamily(maxHamming)), banded)
   }
 
   /**
@@ -114,8 +110,8 @@ object PhashDedup {
    */
   def buildPhashIndex(hashes: DataFrame, idCol: String, hashCol: String,
       path: String, bands: Int = 4): Unit =
-    Dedup.indexWrite(phashBanded(hashes, idCol, hashCol, bands))
-      .mode("overwrite").partitionBy("band").parquet(path)
+    Dedup.writeBands(phashBanded(hashes, idCol, hashCol, bands),
+      "overwrite", path)
 
   /** Append a batch's hash rows under the index's banding (bands is
     * the caller's contract, like the minhash shingle/hash parameters —
@@ -123,17 +119,9 @@ object PhashDedup {
     * plan to freeze or drift). Refuses mid-vacuum trees and the
     * streaming batch= layout, like every flat-layout appender. */
   def appendToPhashIndex(hashes: DataFrame, idCol: String,
-      hashCol: String, path: String, bands: Int = 4): Unit = {
-    IndexStore.requireNoInterruptedVacuum(
-      IndexStore.fsOf(hashes.sparkSession, path), path,
-      "appendToPhashIndex", Dedup.BandLayout)
-    Dedup.requireLayout(hashes.sparkSession, path, "batch",
-      "appendToPhashIndex",
-      "This index is flat (band= dirs); batch= generations belong to " +
-        "the streaming ingest layout.")
-    Dedup.indexWrite(phashBanded(hashes, idCol, hashCol, bands))
-      .mode("append").partitionBy("band").parquet(path)
-  }
+      hashCol: String, path: String, bands: Int = 4): Unit =
+    Dedup.appendBands(hashes.sparkSession, path, "appendToPhashIndex",
+      "ingestPhashBatch")(phashBanded(hashes, idCol, hashCol, bands))
 
   /**
    * One phash-index ingestion micro-batch, banding work done ONCE —
@@ -157,66 +145,11 @@ object PhashDedup {
       hashCol: String, indexPath: Option[String], indexBatchDir: String,
       maxHamming: Int = 6, bands: Int = 4,
       pairsSink: Option[String] = None): DataFrame = {
-    val spark = batchHashes.sparkSession
-    val parent = Option(
-      new org.apache.hadoop.fs.Path(indexBatchDir).getParent)
-      .map(_.toString)
-      .getOrElse(throw new IllegalArgumentException(
-        s"ingestPhashBatch: $indexBatchDir has no parent index root"))
-    val fs = new org.apache.hadoop.fs.Path(parent).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    IndexStore.requireNoInterruptedVacuum(fs, parent,
-      "ingestPhashBatch", Dedup.BandLayout)
-    // a flat-layout root (band= dirs) must not gain batch= dirs — the
-    // mixed tree bricks every read
-    Dedup.requireLayout(spark, parent, "band", "ingestPhashBatch",
-      "Rebuild the index under batch= directories (or append with " +
-        "appendToPhashIndex instead).")
-    val batch = phashBanded(batchHashes, idCol, hashCol, bands)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val idPairs = Dedup.bucketPairs(
-      batch.select("band", "key", "id"), Seq("band", "key"))
-    val a = batch.select(col("id").as("id_a"), col("phash").as("h_a"))
-      .dropDuplicates("id_a")
-    val b = batch.select(col("id").as("id_b"), col("phash").as("h_b"))
-      .dropDuplicates("id_b")
-    val inBatch = idPairs.join(a, Seq("id_a")).join(b, Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        hamming(col("h_a"), col("h_b")).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-    val par = spark.sparkContext.defaultParallelism
-    val pairs = indexPath match {
-      case None => inBatch
-      case Some(p) =>
-        // re-ingesting a tombstoned id is legal but invisible until a
-        // vacuum/compaction clears the sidecar — the shared WARN
-        IndexStore.warnTombstonedIngest(spark, p, batch, Dedup.BandLayout,
-          "ingestPhashBatch")
-        val index = IndexStore.liveRows(spark, p, Dedup.BandLayout,
-          Some(batch.schema))
-        batch.select(col("band"), col("key"), col("id").as("id_n"),
-            col("phash").as("h_n"))
-          .join(index.select(col("band"), col("key"),
-            col("id").as("id_c"), col("phash").as("h_c")),
-            Seq("band", "key"))
-          .filter(col("id_n") =!= col("id_c"))
-          // repartition before the dedup: one exchange serves both (see
-          // Dedup.bucketPairs' r19 note); duplicate keys carry
-          // identical payloads, so the pick is value-deterministic
-          .repartition(par, col("id_n"))
-          .dropDuplicates("id_n", "id_c")
-          .select(
-            least(col("id_n"), col("id_c")).as("id_a"),
-            greatest(col("id_n"), col("id_c")).as("id_b"),
-            hamming(col("h_n"), col("h_c")).as("hamming"))
-          .filter(col("hamming") <= maxHamming)
-          .union(inBatch)
-    }
-    val out = Dedup.materializePairs(pairs, pairsSink)
-    Dedup.indexWrite(batch).mode("overwrite").partitionBy("band")
-      .parquet(indexBatchDir)
-    batch.unpersist(false)
-    out
+    Dedup.ingestRoot(batchHashes.sparkSession, indexBatchDir,
+      "ingestPhashBatch", "appendToPhashIndex")
+    Dedup.ingestBands(phashBanded(batchHashes, idCol, hashCol, bands),
+      phashFamily(maxHamming), indexPath, indexBatchDir, pairsSink,
+      "ingestPhashBatch")
   }
 
   /**
@@ -227,50 +160,11 @@ object PhashDedup {
    * before the band join ([[IndexStore.liveRows]]); `scope` restricts
    * which INDEXED assets may pair (the shared-index per-tenant
    * polarity of the other two families). Returns (id_a, id_b,
-   * hamming), smaller id first.
+   * hamming), smaller id first, each pair once.
    */
   def incrementalPhashPairs(batchHashes: DataFrame, idCol: String,
       hashCol: String, indexPath: String, maxHamming: Int = 6,
-      bands: Int = 4, scope: Option[DataFrame] = None): DataFrame = {
-    val spark = batchHashes.sparkSession
-    val par = spark.sparkContext.defaultParallelism
-    val batch = phashBanded(batchHashes, idCol, hashCol, bands)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val live = IndexStore.liveRows(spark, indexPath, Dedup.BandLayout,
-      Some(batch.schema))
-    val index = scope.fold(live)(sc =>
-      live.join(sc.select(col(sc.columns.head).as("id")).distinct(),
-        Seq("id"), "left_semi"))
-    // batch-vs-corpus: band-key collision, pair-dedup BEFORE the
-    // verify (a near-identical pair collides in several bands)
-    val cand = batch
-      .select(col("band"), col("key"), col("id").as("id_n"),
-        col("phash").as("h_n"))
-      .join(index.select(col("band"), col("key"), col("id").as("id_c"),
-        col("phash").as("h_c")), Seq("band", "key"))
-      .filter(col("id_n") =!= col("id_c"))
-      // repartition before the dedup: one exchange serves both (see
-      // Dedup.bucketPairs' r19 note); duplicate keys carry identical
-      // payloads, so the pick is value-deterministic
-      .repartition(par, col("id_n"))
-      .dropDuplicates("id_n", "id_c")
-      .select(
-        least(col("id_n"), col("id_c")).as("id_a"),
-        greatest(col("id_n"), col("id_c")).as("id_b"),
-        hamming(col("h_n"), col("h_c")).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-    // in-batch pairs: bucket self-join on keys alone, hashes join back
-    // per side (bytes proportional to the pair count)
-    val idPairs = Dedup.bucketPairs(
-      batch.select("band", "key", "id"), Seq("band", "key"))
-    val a = batch.select(col("id").as("id_a"), col("phash").as("h_a"))
-      .dropDuplicates("id_a")
-    val b = batch.select(col("id").as("id_b"), col("phash").as("h_b"))
-      .dropDuplicates("id_b")
-    val inBatch = idPairs.join(a, Seq("id_a")).join(b, Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        hamming(col("h_a"), col("h_b")).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-    Dedup.materializeAndRelease(cand.union(inBatch).distinct(), batch)
-  }
+      bands: Int = 4, scope: Option[DataFrame] = None): DataFrame =
+    Dedup.probeBands(phashBanded(batchHashes, idCol, hashCol, bands),
+      phashFamily(maxHamming), indexPath, scope)
 }

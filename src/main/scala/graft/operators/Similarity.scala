@@ -443,11 +443,7 @@ object Similarity {
       embeddings: DataFrame, vecCol: String, idCol: String,
       minCosine: Double = 0.95, bands: Int = 4, bitsPerBand: Int = 16,
       autoPlan: Boolean = true, targetOccupancy: Double = 2.0): DataFrame = {
-    // Norms are computed ONCE per vector before the pair join; per-pair
-    // work is then a single dot-product scan instead of five.
-    val cells = embeddings
-      .select(col(idCol).as("id"), col(vecCol).as("v"))
-      .withColumn("n", norm(col("v")))
+    val cells = embCells(embeddings, vecCol, idCol)
     val idPairs = embeddingCandidates(cells, minCosine,
       bands, bitsPerBand, autoPlan, targetOccupancy)
     val a = cells.select(col("id").as("id_a"), col("v").as("v_a"), col("n").as("n_a"))
@@ -498,14 +494,23 @@ object Similarity {
   private def bandedEmbeddingCells(cells: DataFrame,
       planned: (Int, Int), ref: (Int, Int)): DataFrame = {
     val (refBands, refBits) = ref
+    val width = refBands * refBits
     if (planned == ref)
       cells.select(col("*"), posexplode_outer(
+        // a vector narrower than the plan fails with a message naming
+        // both, inside the key expression (no extra job)
+        when(col("v").isNotNull && size(col("v")) < width, raise_error(concat(
+          lit(s"embedding band index: the reference plan ($refBands bands " +
+            s"x $refBits bits) reads $width dims, but vector "),
+          col("id").cast("string"), lit(" has "),
+          size(col("v")).cast("string"), lit(" — widen the vectors or " +
+            "pass bands x bitsPerBand <= the dimension")))).otherwise(
         array((0 until refBands).map { k =>
           (0 until refBits).map { j =>
             when(element_at(col("v"), k * refBits + j + 1) >= 0,
               lit(1L << j)).otherwise(lit(0L))
           }.reduce(_ + _)
-        }: _*)).as(Seq("band", "key")))
+        }: _*))).as(Seq("band", "key")))
     else {
       val (nBands, nBits) = planned
       cells.select(col("*"), posexplode_outer(
@@ -515,6 +520,21 @@ object Similarity {
         }: _*)).as(Seq("band", "key")))
     }
   }
+
+  /** (id, v, n) cells of a vector table: norms computed ONCE per
+    * vector, the per-pair verify is then a single dot product. */
+  private def embCells(vecs: DataFrame, vecCol: String,
+      idCol: String): DataFrame =
+    vecs.select(col(idCol).as("id"), col(vecCol).as("v"))
+      .withColumn("n", norm(col("v")))
+
+  /** The embedding verify: cosine over the stored vectors and norms,
+    * 6dp-rounded like the one-shot [[embeddingNearDupPairs]]. */
+  private def embFamily(minCosine: Double) =
+    Dedup.BandFamily.scored("v" -> "v", "n" -> "n")("cosine", (a, b) =>
+      round(when(a("n") > 0 && b("n") > 0,
+        dot(a("v"), b("v")) / (a("n") * b("n"))).otherwise(lit(0.0)), 6),
+      _ >= minCosine)
 
   // ----------------------- persisted embedding band index (round 16)
   //
@@ -565,9 +585,7 @@ object Similarity {
     // delete-first sidecar protocol: every interrupted state is
     // sidecar-LESS and readers refuse it
     fs.delete(new org.apache.hadoop.fs.Path(s"$path/_embplan"), true)
-    val cells = embeddings
-      .select(col(idCol).as("id"), col(vecCol).as("v"))
-      .withColumn("n", norm(col("v")))
+    val cells = embCells(embeddings, vecCol, idCol)
     // the autoPlan count doubles as the `_rows` drift-WARN baseline —
     // one column-pruned job either way, never two
     val nVecs = cells.count()
@@ -575,9 +593,8 @@ object Similarity {
       if (!autoPlan) (bands, bitsPerBand)
       else planEmbeddingBands(nVecs, minCosine, bands,
         bitsPerBand, targetOccupancy)
-    Dedup.indexWrite(
-      bandedEmbeddingCells(cells, planned, (bands, bitsPerBand)))
-      .mode("overwrite").partitionBy("band").parquet(path)
+    Dedup.writeBands(bandedEmbeddingCells(cells, planned,
+      (bands, bitsPerBand)), "overwrite", path)
     writeEmbPlan(fs, path, EmbPlan(planned, (bands, bitsPerBand),
       minCosine, targetOccupancy, autoPlan))
     IndexStore.writeRows(fs, path, nVecs)
@@ -602,21 +619,15 @@ object Similarity {
   def appendToEmbeddingIndex(newVecs: DataFrame, vecCol: String,
       idCol: String, path: String): Long = {
     val spark = newVecs.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    IndexStore.requireNoInterruptedVacuum(fs, path,
-      "appendToEmbeddingIndex", Dedup.BandLayout)
-    Dedup.requireLayout(spark, path, "batch", "appendToEmbeddingIndex",
-      "This index is flat (band= dirs); batch= generations belong to " +
-        "the streaming ingest layout.")
+    val fs = IndexStore.fsOf(spark, path)
+    Dedup.requireAppendable(spark, path, "appendToEmbeddingIndex",
+      "ingestEmbeddingBatch")
     val plan = readEmbPlan(spark, path)
     // read the OLD count before the append lands: the missing-sidecar
     // fallback counts the data path, and counting after would fold the
     // batch in twice
     val oldN = embVectorCount(spark, path)
-    val cells = newVecs
-      .select(col(idCol).as("id"), col(vecCol).as("v"))
-      .withColumn("n", norm(col("v")))
+    val cells = embCells(newVecs, vecCol, idCol)
     // bump the advisory count BEFORE the data append (round 18, advisor
     // fix): a crash between the two must leave the sidecar OVER-reading
     // by the batch (WARN fires early), never a valid-but-stale count
@@ -628,9 +639,8 @@ object Similarity {
     // still over-reads — the designed direction.
     val appended = newVecs.select(col(idCol)).count()
     IndexStore.writeRows(fs, path, oldN + appended)
-    try Dedup.indexWrite(
-        bandedEmbeddingCells(cells, plan.planned, plan.ref))
-      .mode("append").partitionBy("band").parquet(path)
+    try Dedup.writeBands(bandedEmbeddingCells(cells, plan.planned,
+      plan.ref), "append", path)
     catch { case e: Throwable =>
       IndexStore.writeRows(fs, path, oldN); throw e
     }
@@ -648,7 +658,8 @@ object Similarity {
    * ids ([[Dedup.deleteFromMinhashIndex]]) are anti-joined before the
    * band join; `scope` (round-16 polarity discipline) restricts which
    * INDEXED vectors may pair — one shared index serves per-tenant
-   * dedup. Returns (id_a, id_b, cosine), smaller id first.
+   * dedup. Returns (id_a, id_b, cosine), smaller id first, each pair
+   * once.
    *
    * @param minCosine NaN (default) = the threshold the index was
    *   planned for (`_embplan`); pass a value to override — the plan's
@@ -657,56 +668,11 @@ object Similarity {
   def incrementalEmbeddingPairs(newVecs: DataFrame, vecCol: String,
       idCol: String, indexPath: String, minCosine: Double = Double.NaN,
       scope: Option[DataFrame] = None): DataFrame = {
-    val spark = newVecs.sparkSession
-    val par = spark.sparkContext.defaultParallelism
-    val plan = readEmbPlan(spark, indexPath)
-    val (planned, ref) = (plan.planned, plan.ref)
-    val threshold = if (minCosine.isNaN) plan.minCosine else minCosine
-    val cells = newVecs
-      .select(col(idCol).as("id"), col(vecCol).as("v"))
-      .withColumn("n", norm(col("v")))
-    val batch = bandedEmbeddingCells(cells, planned, ref)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val live = IndexStore.liveRows(spark, indexPath, Dedup.BandLayout,
-      Some(batch.schema))
-    val index = scope.fold(live)(sc =>
-      live.join(sc.select(col(sc.columns.head).as("id")).distinct(),
-        Seq("id"), "left_semi"))
-    val cosine6 = (vA: Column, nA: Column, vB: Column, nB: Column) =>
-      round(when(nA > 0 && nB > 0, dot(vA, vB) / (nA * nB))
-        .otherwise(lit(0.0)), 6)
-    // batch-vs-corpus: band-key collision, pair-dedup BEFORE the
-    // cosine (a pair can collide in several bands), canonical order
-    val cand = batch.select(col("band"), col("key"),
-        col("id").as("id_n"), col("v").as("v_n"), col("n").as("n_n"))
-      .join(index.select(col("band"), col("key"), col("id").as("id_c"),
-        col("v").as("v_c"), col("n").as("n_c")), Seq("band", "key"))
-      .filter(col("id_n") =!= col("id_c"))
-      // repartition before the dedup: one exchange serves both (see
-      // Dedup.bucketPairs' r19 note); duplicate keys carry identical
-      // payloads, so the pick is value-deterministic
-      .repartition(par, col("id_n"))
-      .dropDuplicates("id_n", "id_c")
-      .select(
-        least(col("id_n"), col("id_c")).as("id_a"),
-        greatest(col("id_n"), col("id_c")).as("id_b"),
-        cosine6(col("v_n"), col("n_n"), col("v_c"), col("n_c"))
-          .as("cosine"))
-      .filter(col("cosine") >= threshold)
-    // in-batch pairs: the bucket self-join on keys alone (vectors join
-    // back per side — bytes proportional to the pair count)
-    val idPairs = Dedup.bucketPairs(
-      batch.select("band", "key", "id"), Seq("band", "key"))
-    val a = cells.select(col("id").as("id_a"), col("v").as("v_a"),
-      col("n").as("n_a")).dropDuplicates("id_a")
-    val b = cells.select(col("id").as("id_b"), col("v").as("v_b"),
-      col("n").as("n_b")).dropDuplicates("id_b")
-    val inBatch = idPairs.join(a, Seq("id_a")).join(b, Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        cosine6(col("v_a"), col("n_a"), col("v_b"), col("n_b"))
-          .as("cosine"))
-      .filter(col("cosine") >= threshold)
-    Dedup.materializeAndRelease(cand.union(inBatch), batch)
+    val plan = readEmbPlan(newVecs.sparkSession, indexPath)
+    val cells = embCells(newVecs, vecCol, idCol)
+    Dedup.probeBands(bandedEmbeddingCells(cells, plan.planned, plan.ref),
+      embFamily(if (minCosine.isNaN) plan.minCosine else minCosine),
+      indexPath, scope, Some(cells))
   }
 
   /**
@@ -735,23 +701,10 @@ object Similarity {
       targetOccupancy: Double = 2.0,
       pairsSink: Option[String] = None): DataFrame = {
     val spark = newVecs.sparkSession
-    val parent = Option(
-      new org.apache.hadoop.fs.Path(indexBatchDir).getParent)
-      .map(_.toString)
-      .getOrElse(throw new IllegalArgumentException(
-        s"ingestEmbeddingBatch: $indexBatchDir has no parent index root"))
-    val fs = new org.apache.hadoop.fs.Path(parent).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    IndexStore.requireNoInterruptedVacuum(fs, parent,
-      "ingestEmbeddingBatch", Dedup.BandLayout)
-    // a flat-layout root (band= dirs) must not gain batch= dirs — the
-    // mixed tree bricks every read
-    Dedup.requireLayout(spark, parent, "band", "ingestEmbeddingBatch",
-      "Rebuild the index under batch= directories (or append with " +
-        "appendToEmbeddingIndex instead).")
-    val cells = newVecs
-      .select(col(idCol).as("id"), col(vecCol).as("v"))
-      .withColumn("n", norm(col("v")))
+    val parent = Dedup.ingestRoot(spark, indexBatchDir,
+      "ingestEmbeddingBatch", "appendToEmbeddingIndex")
+    val fs = IndexStore.fsOf(spark, parent)
+    val cells = embCells(newVecs, vecCol, idCol)
     // the TRAIN batch's vector count feeds the banding plan, so it is
     // counted up front; APPEND batches fold their count into the index
     // write below instead (observe() over the band-0 rows — the exact
@@ -772,54 +725,6 @@ object Similarity {
         EmbPlan(pl, (bands, bitsPerBand), minCosine, targetOccupancy,
           autoPlan)
     }
-    val (planned, ref, threshold) =
-      (plan.planned, plan.ref, plan.minCosine)
-    val batch = bandedEmbeddingCells(cells, planned, ref)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cosine6 = (vA: Column, nA: Column, vB: Column, nB: Column) =>
-      round(when(nA > 0 && nB > 0, dot(vA, vB) / (nA * nB))
-        .otherwise(lit(0.0)), 6)
-    val idPairs = Dedup.bucketPairs(
-      batch.select("band", "key", "id"), Seq("band", "key"))
-    val a = cells.select(col("id").as("id_a"), col("v").as("v_a"),
-      col("n").as("n_a")).dropDuplicates("id_a")
-    val b = cells.select(col("id").as("id_b"), col("v").as("v_b"),
-      col("n").as("n_b")).dropDuplicates("id_b")
-    val inBatch = idPairs.join(a, Seq("id_a")).join(b, Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        cosine6(col("v_a"), col("n_a"), col("v_b"), col("n_b"))
-          .as("cosine"))
-      .filter(col("cosine") >= threshold)
-    val par = spark.sparkContext.defaultParallelism
-    val pairs = indexPath match {
-      case None => inBatch
-      case Some(p) =>
-        // re-ingesting a tombstoned id is legal but invisible until a
-        // vacuum/compaction clears the sidecar — same WARN as the
-        // minhash ingest (the id column is shared, the check generic)
-        IndexStore.warnTombstonedIngest(spark, p, batch, Dedup.BandLayout,
-          "ingestEmbeddingBatch")
-        val index = IndexStore.liveRows(spark, p, Dedup.BandLayout,
-          Some(batch.schema))
-        batch.select(col("band"), col("key"), col("id").as("id_n"),
-            col("v").as("v_n"), col("n").as("n_n"))
-          .join(index.select(col("band"), col("key"),
-            col("id").as("id_c"), col("v").as("v_c"),
-            col("n").as("n_c")), Seq("band", "key"))
-          .filter(col("id_n") =!= col("id_c"))
-          // repartition before the dedup: one exchange serves both (see
-          // Dedup.bucketPairs' r19 note); duplicate keys carry
-          // identical payloads, so the pick is value-deterministic
-          .repartition(par, col("id_n"))
-          .dropDuplicates("id_n", "id_c")
-          .select(
-            least(col("id_n"), col("id_c")).as("id_a"),
-            greatest(col("id_n"), col("id_c")).as("id_b"),
-            cosine6(col("v_n"), col("n_n"), col("v_c"), col("n_c"))
-              .as("cosine"))
-          .filter(col("cosine") >= threshold)
-          .union(inBatch)
-    }
     // the OLD advisory count, read BEFORE this batch's rows land: a
     // missing sidecar (a legacy round-16 index, or a crash mid-update)
     // self-heals via [[embVectorCount]]'s band-0 metadata count — a
@@ -827,17 +732,15 @@ object Similarity {
     // (the count would then under-read unboundedly and the WARN/health
     // drift flag would never fire again)
     val oldN = indexPath.fold(0L)(p => embVectorCount(spark, p))
-    // materialize the pairs FIRST (reads the index before this batch's
-    // own rows join it), then write the batch partition from the cached
-    // banded table — both actions reuse the one persisted table
-    val out = Dedup.materializePairs(pairs, pairsSink)
     val obs = org.apache.spark.sql.Observation()
-    val toWrite =
-      if (indexPath.isEmpty) batch
-      else batch.observe(obs,
-        sum(when(col("band") === 0, 1L)).as("n_vecs"))
-    Dedup.indexWrite(toWrite).mode("overwrite").partitionBy("band")
-      .parquet(indexBatchDir)
+    val out = Dedup.ingestBands(
+      bandedEmbeddingCells(cells, plan.planned, plan.ref),
+      embFamily(plan.minCosine), indexPath, indexBatchDir, pairsSink,
+      "ingestEmbeddingBatch", Some(cells),
+      observed = batch =>
+        if (indexPath.isEmpty) batch
+        else batch.observe(obs,
+          sum(when(col("band") === 0, 1L)).as("n_vecs")))
     if (indexPath.isEmpty) {
       writeEmbPlan(fs, parent, plan)
       IndexStore.writeRows(fs, parent, nTrainVecs)
@@ -852,7 +755,6 @@ object Similarity {
       IndexStore.writeRows(fs, parent, newN)
       warnEmbDrift(plan, newN, s"ingestEmbeddingBatch($parent)")
     }
-    batch.unpersist(false)
     out
   }
 

@@ -232,6 +232,19 @@ class EmbeddingIndexSpec extends SparkSpec {
     assert(e2.getMessage.contains("_embplan"))
   }
 
+  test("input boundary: a vector narrower than the reference plan fails " +
+      "with a message naming the width and the plan") {
+    val narrow = Seq((1L, vec(Seq.fill(16)(1.0): _*)),
+      (2L, vec(Seq.fill(16)(-1.0): _*))).toDF("vec_id", "embedding")
+    val e = intercept[Exception](Similarity.buildEmbeddingIndex(narrow,
+      "embedding", "vec_id", tmp("embnarrow"), autoPlan = false))
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage))
+      .mkString("\n")
+    assert(msgs.contains("(4 bands x 16 bits) reads 64 dims") &&
+      msgs.contains("has 16"), msgs)
+  }
+
   // 16 extra ±1 vectors whose sign patterns are the bit patterns of
   // their ids — distinct directions (any two differ in ≥1 of 8 dims →
   // cosine ≤ 0.75 < 0.9), none colliding with the fixture corpus's
