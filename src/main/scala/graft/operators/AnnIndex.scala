@@ -315,9 +315,9 @@ object AnnIndex {
     * later build-cap read expects, the unrecoverable direction. */
   private def writeReservoir(base: DataFrame, path: String, n: Long,
       cap: Long): Unit = {
-    base.filter(reservoirMember(reservoirLevel(n, cap)))
-      .select(col("vec_id"), col("vec"))
-      .coalesce(8).write.mode("overwrite").parquet(s"$path/_sample")
+    IndexStore.writer(base.filter(reservoirMember(reservoirLevel(n, cap)))
+      .select(col("vec_id"), col("vec")).coalesce(8))
+      .mode("overwrite").parquet(s"$path/_sample")
     val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
       base.sparkSession.sparkContext.hadoopConfiguration)
     val out = fs.create(
@@ -355,10 +355,10 @@ object AnnIndex {
     val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     if (fs.exists(new org.apache.hadoop.fs.Path(s"$path/_sample")))
-      base.filter(reservoirMember(
+      IndexStore.writer(base.filter(reservoirMember(
           reservoirLevel(oldN, reservoirCap(fs, path))))
-        .select(col("vec_id"), col("vec"))
-        .coalesce(1).write.mode("append").parquet(s"$path/_sample")
+        .select(col("vec_id"), col("vec")).coalesce(1))
+        .mode("append").parquet(s"$path/_sample")
   }
 
   /** The live reservoir at the CURRENT level (STAMPED cap — the cap
@@ -667,15 +667,15 @@ object AnnIndex {
     * none (null). */
   private def writeCentroids(cents: DataFrame, path: String,
       quantizer: String, signBits: Column): Unit =
-    cents.withColumn("quantizer", lit(quantizer))
-      .withColumn("sign_bits", signBits)
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/_centroids")
+    IndexStore.writer(cents.withColumn("quantizer", lit(quantizer))
+      .withColumn("sign_bits", signBits).coalesce(1))
+      .mode("overwrite").parquet(s"$path/_centroids")
 
   /** `_codebooks`: (subspace, centroid_id, centroid) plus the marker. */
   private def writeCodebooks(books: DataFrame, path: String,
       quantizer: String): Unit =
-    books.withColumn("quantizer", lit(quantizer))
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/_codebooks")
+    IndexStore.writer(books.withColumn("quantizer", lit(quantizer))
+      .coalesce(1)).mode("overwrite").parquet(s"$path/_codebooks")
 
   /** One quantizer stage of a build: `encode` adds its column ("cell" or
     * "code") to (vec_id, vec, …) rows; `persist` writes its sidecar after
@@ -687,11 +687,10 @@ object AnnIndex {
   /** The coarse quantizer: cell = sign pattern of the first log2(cells)
     * dims with member-mean centroids of `vec` (raw for IVF, normalized for
     * IVF-PQ), or a seeded k-means fit on `fit` (read by the k-means arm
-    * only). `cellType` is the
-    * `_centroids` cell type the family writes: IVF's k-means build has
-    * always stored int, every other build long. */
+    * only). `_centroids` stores `cell` as long; readers also accept the
+    * int an older k-means IVF build wrote. */
   private def cellStage(op: String, quantizer: String, cells: Int, seed: Long,
-      fit: => DataFrame, cellType: String): Stage = quantizer match {
+      fit: => DataFrame): Stage = quantizer match {
     case "sign" =>
       val bits = java.lang.Long.numberOfTrailingZeros(cells.toLong)
       require(cells > 0 && (1 << bits) == cells,
@@ -708,8 +707,7 @@ object AnnIndex {
         import spark.implicits._
         writeCentroids(model.clusterCenters.toSeq.zipWithIndex
           .map { case (c, i) => (i.toLong, c.toArray.toSeq) }
-          .toDF("cell", "centroid").withColumn("cell", col("cell").cast(cellType)),
-          path, "kmeans", lit(null).cast("int"))
+          .toDF("cell", "centroid"), path, "kmeans", lit(null).cast("int"))
       })
     case other => throw new IllegalArgumentException(
       s"$op: unknown quantizer '$other' (kmeans|sign)")
@@ -775,9 +773,10 @@ object AnnIndex {
     * — never W × nCells small files); flat PQ rows write as they are. */
   private def writeIndex(rows: DataFrame, path: String, mode: String,
       cells: Int): Unit =
-    if (!rows.columns.contains("cell")) rows.write.mode(mode).parquet(path)
-    else rows.transform(writeShuffle(cells, col("cell")))
-      .write.mode(mode).partitionBy("cell").parquet(path)
+    if (!rows.columns.contains("cell"))
+      IndexStore.writer(rows).mode(mode).parquet(path)
+    else IndexStore.writer(rows.transform(writeShuffle(cells, col("cell"))))
+      .mode(mode).partitionBy("cell").parquet(path)
 
   /** A lossy index's frozen code geometry, read fail-closed: the
     * `_codebooks` map — (subspace, code) → centroid, m subspaces of `sub`
@@ -854,7 +853,7 @@ object AnnIndex {
     // sample and encodes the full corpus — see [[KmeansFitSampleCap]]
     val rows = embeddings.select(col(idCol).as("vec_id"), col(vecCol).as("vec"))
     val cell = cellStage("buildIvf", quantizer, cells, seed,
-      kmeansFitSample(rows, n, fitSampleCap), cellType = "int")
+      kmeansFitSample(rows, n, fitSampleCap))
     val assigned = encode(rows, quantizer, cell)
     writeIndex(assigned.select("vec_id", "vec", "cell"), path, "overwrite", cells)
     cell.persist(assigned, path)
@@ -1119,7 +1118,7 @@ object AnnIndex {
     // preserves signs) or nearest coarse centroid; code over the same
     // normalized vector, codebooks shared across cells
     val stages = Seq(
-      cellStage("buildIvfPq", quantizer, cellsPlanned, seed, fit, "long"),
+      cellStage("buildIvfPq", quantizer, cellsPlanned, seed, fit),
       codeStage("buildIvfPq", quantizer, m, sub, 16, seed, fit))
     val coded = encode(base, quantizer, stages: _*)
     writeIndex(coded.select("vec_id", "code", "cell"), path, "overwrite",
@@ -1454,14 +1453,14 @@ object AnnIndex {
     val grpBits = Seq(plan._1, MaxLshPartBits, math.max(0, math.ceil(
       math.log(math.max(1.0, n.toDouble / TargetLshGroupRows)) /
         math.log(2.0)).toInt)).min
-    embeddings
+    IndexStore.writer(embeddings
       .select(col(idCol).as("vec_id"), col(vecCol).as("vec"))
       .withColumn("sig",
         Similarity.sigCol(col("vec"), plan._1, family == FamilyOrtho))
       .withColumn("sig_grp", shiftright(col("sig"), plan._1 - grpBits))
       .transform(writeShuffle(1 << grpBits, col("sig_grp"))) // see [[writeShuffle]]
-      .sortWithinPartitions("sig") // row-group stats prune to exact sigs
-      .write.mode("overwrite").partitionBy("sig_grp").parquet(path)
+      .sortWithinPartitions("sig")) // row-group stats prune to exact sigs
+      .mode("overwrite").partitionBy("sig_grp").parquet(path)
     val spark = embeddings.sparkSession
     import spark.implicits._
     Seq((plan._1, plan._2, family, grpBits))
@@ -1992,7 +1991,7 @@ object AnnIndex {
     IndexStore.warnTombstonedIngest(spark, path, batch, IndexLayout,
       "appendLsh")
     val obs = org.apache.spark.sql.Observation()
-    batch
+    IndexStore.writer(batch
       // the batch count rides the write job (observe()) — the old path
       // paid a separate O(batch) count job per append; the index data
       // path is still never scanned or listed by this call
@@ -2001,8 +2000,8 @@ object AnnIndex {
       // coalesces to one writing task over its few touched group dirs, a
       // big one keeps byte-proportional width
       .transform(writeShuffle(1 << grpBits, col("sig_grp")))
-      .sortWithinPartitions("sig") // same row-group pruning as built files
-      .write.mode("append").partitionBy("sig_grp").parquet(path)
+      .sortWithinPartitions("sig")) // same row-group pruning as built files
+      .mode("append").partitionBy("sig_grp").parquet(path)
     // AQE's empty-relation propagation collapses a provably-empty batch
     // plan and the CollectMetrics node with it — an absent metric IS the
     // empty batch, so 0 is exact, never a guess
@@ -2156,9 +2155,10 @@ object AnnIndex {
     Seq("sig_grp", "cell", "sig").find(df.columns.contains) match {
       case Some(c) =>
         val re = writeShuffle(Int.MaxValue, col(c))(df)
-        (if (c == "sig_grp") re.sortWithinPartitions("sig") else re)
-          .write.partitionBy(c)
-      case None => df.coalesce(flatFiles).write
+        IndexStore.writer(
+          if (c == "sig_grp") re.sortWithinPartitions("sig") else re)
+          .partitionBy(c)
+      case None => IndexStore.writer(df.coalesce(flatFiles))
     }
 
   /** The ANN family's [[IndexStore.Layout]]: `_rows` is the live row
@@ -2598,8 +2598,8 @@ object AnnIndex {
     IndexStore.rewriteStaged(fs, path, IndexStore.Reindex, op) { tmp =>
       build(reservoirOrReconstructed(spark, path, res, g.m, g.sub), res, tmp,
         g)
-      res.select(col("vec_id"), col("vec"))
-        .coalesce(8).write.mode("overwrite").parquet(s"$tmp/_sample")
+      IndexStore.writer(res.select(col("vec_id"), col("vec")).coalesce(8))
+        .mode("overwrite").parquet(s"$tmp/_sample")
       restampReservoirCap(fs, path, tmp)
     }
   }

@@ -113,7 +113,7 @@ object AudioDedup {
       .audioFingerprint(assets, payloadCol, idCol, nWindows, bands), idCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     Dedup.materializeAndRelease(
-      Dedup.inSetPairs(banded, banded, audioFamily(maxBitErrors)), banded)
+      Dedup.inSetPairs(banded, audioFamily(maxBitErrors)), banded)
   }
 
   /**

@@ -1056,7 +1056,7 @@ object Dedup {
     * a plain (band, id) hash shuffle at the session width — exactly the
     * round-15 behavior. */
   private[operators] def indexWrite(sigs: DataFrame) =
-    sigs.hint("rebalance", col("band"), col("id")).write
+    IndexStore.writer(sigs.hint("rebalance", col("band"), col("id")))
 
   /** The minhash index exists in two partition layouts: FLAT (`band=`
     * dirs at the root — [[buildMinhashIndex]]/[[appendToMinhashIndex]])
@@ -1217,18 +1217,27 @@ object Dedup {
   }
 
   /** In-set pairs of one banded set: the bucket self-join on keys alone
-    * ([[bucketPairs]]), each side's payload joined back from `src`
-    * (bytes proportional to the pair count), the family's verify. */
-  private[operators] def inSetPairs(banded: DataFrame, src: DataFrame,
+    * ([[bucketPairs]]), each side's payload joined back from the set's
+    * band-0 rows (bytes proportional to the pair count), the family's
+    * verify. Every family bands by `posexplode`, so an id's band rows
+    * are one input row's explode: band 0 holds its payload once, with
+    * no dedup and so no shuffle (a row-less or null-keyed id never
+    * pairs). Both sides read that ONE table, so over a checkpointed set
+    * the second side's broadcast plans as a reuse of the first, and it
+    * starts with the first wave of stages whatever the in-set pairs
+    * turn out to be. A set that repeats an id verifies each of its
+    * rows. */
+  private[operators] def inSetPairs(banded: DataFrame,
       f: BandFamily): DataFrame = {
     val idPairs = bucketPairs(
       banded.select(col("band"), col("key"), col("id")), Seq("band", "key"))
-    def side(x: String) = src.select(col("id").as(s"id_$x") +: f.carried(x): _*)
-      .dropDuplicates(s"id_$x")
+    val payload = banded.filter(col("band") === 0)
+      .select(col("id") +: f.payload.map(p => col(p._1)): _*)
+    def side(x: String) = payload.select(col("id").as(s"id_$x") +: f.carried(x): _*)
     val pairs =
       if (f.payload.isEmpty) idPairs
       else idPairs.join(side("a"), Seq("id_a")).join(side("b"), Seq("id_b"))
-    f.verify(pairs, "a", "b", src, src)
+    f.verify(pairs, "a", "b", banded, banded)
   }
 
   /** Batch-vs-index pairs: collide the batch's band keys (side n) with
@@ -1254,16 +1263,15 @@ object Dedup {
       greatest(col("id_n"), col("id_c")).as("id_b"), col(scored.columns(2)))
   }
 
-  /** The pairs of a persisted banded batch, the one body under the probe
-    * and the ingest: in-set (payloads from `src`, else the batch), plus
-    * against `index` when given. A pair of two batch ids that are both
-    * indexed surfaces on several paths (both orders through the index,
-    * and in-set); [[materializePairs]]' distinct folds them, so each
-    * canonical pair comes out once. */
-  private def batchPairs(batch: DataFrame, src: Option[DataFrame],
-      index: Option[DataFrame], f: BandFamily,
-      pairsSink: Option[String]): DataFrame = {
-    val inSet = inSetPairs(batch, src.getOrElse(batch), f)
+  /** The pairs of a checkpointed banded batch, the one body under the
+    * probe and the ingest: in-set, plus against `index` when given. A
+    * pair of two batch ids that are both indexed surfaces on several
+    * paths (both orders through the index, and in-set);
+    * [[materializePairs]]' distinct folds them, so each canonical pair
+    * comes out once. */
+  private def batchPairs(batch: DataFrame, index: Option[DataFrame],
+      f: BandFamily, pairsSink: Option[String]): DataFrame = {
+    val inSet = inSetPairs(batch, f)
     materializePairs(index.fold(inSet)(indexPairs(batch, _, f).union(inSet)),
       pairsSink)
   }
@@ -1271,26 +1279,20 @@ object Dedup {
   /**
    * The incremental probe of every band family: each canonical pair of
    * a batch id once, against the live index AND within the batch. The
-   * banded batch is persisted for the call; tombstoned index rows are
-   * anti-joined and `scope` semi-joins the index rows BEFORE the band
-   * join (in-batch pairs are not scoped). `src` as [[ingestBands]]'.
+   * banded batch is checkpointed for the call (see [[ingestBands]]);
+   * tombstoned index rows are anti-joined and `scope` semi-joins the
+   * index rows BEFORE the band join (in-batch pairs are not scoped).
    */
   private[operators] def probeBands(banded: DataFrame, f: BandFamily,
-      indexPath: String, scope: Option[DataFrame],
-      src: Option[DataFrame] = None): DataFrame = {
+      indexPath: String, scope: Option[DataFrame]): DataFrame = {
     val spark = banded.sparkSession
-    val batch = banded
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val batch = banded.localCheckpoint(true)
     val live = IndexStore.liveRows(spark, indexPath, BandLayout,
       Some(batch.schema))
     val index = scope.fold(live)(s =>
       live.join(s.select(col(s.columns.head).as("id")).distinct(),
         Seq("id"), "left_semi"))
-    val out = batchPairs(batch, src, Some(index), f, None)
-    // scope the persisted batch to this call: a daily driver looping
-    // over batches must not accumulate one cached table per day
-    batch.unpersist(false)
-    out
+    batchPairs(batch, Some(index), f, None)
   }
 
   /** The ingest gates, run before anything is read or written: the
@@ -1311,32 +1313,32 @@ object Dedup {
   }
 
   /** One ingest micro-batch of any band family, after [[ingestRoot]]:
-    * the banded batch persisted once, its pairs ([[batchPairs]])
-    * materialized FIRST — they read the index before this batch's own
-    * rows join it — then the batch dir written from the same persisted
-    * rows (overwrite, so a replay is idempotent). `observed` wraps that
-    * write (a family's `observe()` bookkeeping). `src` replaces the
-    * persisted batch as the in-set payload source (embedding re-projects
-    * its `cells`: read off the persisted batch, the payload side joins
-    * cost its probe and ingests three more jobs each). See
-    * [[ingestBatch]] for `pairsSink`. */
+    * the banded batch materialized once by an eager local checkpoint,
+    * its pairs ([[batchPairs]]) materialized FIRST — they read the index
+    * before this batch's own rows join it — then the batch dir written
+    * from the same rows (overwrite, so a replay is idempotent). A
+    * checkpoint, not `persist`: a self-join of the batch (the in-set
+    * payload sides) then plans its second exchange as a reuse of the
+    * first, which two scans of a cached relation never do under AQE
+    * (each becomes its own cache stage, compared by identity); and its
+    * blocks go with the frame (see [[materializeAndRelease]]) instead
+    * of needing an unpersist.
+    * `observed` wraps that write (a family's `observe()` bookkeeping).
+    * See [[ingestBatch]] for `pairsSink`. */
   private[operators] def ingestBands(banded: DataFrame, f: BandFamily,
       indexPath: Option[String], indexBatchDir: String,
       pairsSink: Option[String], op: String,
-      src: Option[DataFrame] = None,
       observed: DataFrame => DataFrame = identity): DataFrame = {
     val spark = banded.sparkSession
-    val batch = banded
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val batch = banded.localCheckpoint(true)
     val index = indexPath.map { p =>
       // re-ingesting a tombstoned id is legal but invisible until a
       // vacuum/compaction clears the sidecar
       IndexStore.warnTombstonedIngest(spark, p, batch, BandLayout, op)
       IndexStore.liveRows(spark, p, BandLayout, Some(batch.schema))
     }
-    val out = batchPairs(batch, src, index, f, pairsSink)
+    val out = batchPairs(batch, index, f, pairsSink)
     writeBands(observed(batch), "overwrite", indexBatchDir)
-    batch.unpersist(false)
     out
   }
 
@@ -1406,8 +1408,8 @@ object Dedup {
       val pCols =
         if (aff.columns.contains("batch")) Seq("batch", "band")
         else Seq("band")
-      aff.repartition(parts, pCols.map(col): _*)
-        .write.partitionBy(pCols: _*)
+      IndexStore.writer(aff.repartition(parts, pCols.map(col): _*))
+        .partitionBy(pCols: _*)
     },
     live =>
       if (live.columns.contains("batch"))

@@ -1,6 +1,8 @@
 package graft.operators
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, DataFrameWriter, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -58,6 +60,19 @@ import org.apache.spark.sql.types.StructType
  * sidecar, and infers the data read schema, once per on-disk identity
  * of the sidecar files, so a warm probe of an unchanged index runs no
  * decode or inference job. The gates above still run on every read.
+ *
+ * '''On-disk format.''' Every parquet file of an index — data, the
+ * `_centroids`/`_codebooks`/`_sample` sidecars, `_tombstones`, vacuum
+ * staging, compaction and reindex trees — is written through the one
+ * [[writer]], zstd-compressed. Its option overrides a session's
+ * `spark.sql.parquet.compression.codec`: the file format belongs to the
+ * engine, not to the caller's session. Readers take any codec, since
+ * parquet records it per column chunk, so an index written with
+ * another codec (snappy, the Spark default) reads unchanged and a tree
+ * mixing codecs — old generations beside new appends — reads as one
+ * table. After such an upgrade, [[health]]'s mass gate compares zstd
+ * fresh bytes against the snappy base until the first compaction
+ * rewrites it. Text sidecars (`_rows`, `_recon`, `_plan`) stay text.
  *
  * '''Health and maintenance''' ([[health]], [[maintain]]): one snapshot
  * schema and one by-cause rule for every family — rebuild on the
@@ -145,6 +160,11 @@ private[graft] object IndexStore {
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private def child(path: String, name: String) = new Path(s"$path/$name")
+
+  /** The parquet writer of every persisted index file (see the class
+    * doc's on-disk format). */
+  def writer(df: DataFrame): DataFrameWriter[Row] =
+    df.write.option("compression", "zstd")
 
   /** A count metric of a finished observed write; absent = the
     * AQE-collapsed empty input, i.e. 0. */
@@ -332,8 +352,10 @@ private[graft] object IndexStore {
   /** `df` minus its tombstoned rows: anti-join `df(dfCol)` against the
     * sidecar's `tombCol` ids. Without a sidecar the plan is untouched;
     * with one the side is a bounded id table the planner broadcasts
-    * when small. `schema` is the sidecar's read schema when the caller
-    * knows its id type (skips the inference job). */
+    * when small — not deduplicated, since an anti-join's answer does not
+    * depend on duplicates in its build side. `schema` is the sidecar's
+    * read schema when the caller knows its id type (skips the inference
+    * job). */
   def dropTombstoned(spark: SparkSession, path: String, df: DataFrame,
       dfCol: String, tombCol: String = "",
       schema: Option[StructType] = None): DataFrame =
@@ -342,8 +364,8 @@ private[graft] object IndexStore {
       val t = if (tombCol.isEmpty) dfCol else tombCol
       val ids = schema.fold(spark.read)(spark.read.schema)
         .parquet(s"$path/$Tombstones").select(t)
-      df.join((if (t == dfCol) ids else ids.withColumnRenamed(t, dfCol))
-        .distinct(), Seq(dfCol), "left_anti")
+      df.join(if (t == dfCol) ids else ids.withColumnRenamed(t, dfCol),
+        Seq(dfCol), "left_anti")
     }
 
   /** The index's LIVE rows: the interrupted-vacuum and crashed-swap
@@ -371,7 +393,7 @@ private[graft] object IndexStore {
     if (hasTombstones(fsOf(spark, path), path)) {
       val id = layout.idCol
       val hidden = batch.select(id).distinct().join(
-        spark.read.parquet(s"$path/$Tombstones").select(id).distinct(),
+        spark.read.parquet(s"$path/$Tombstones").select(id),
         Seq(id), "left_semi").count()
       if (hidden > 0)
         System.err.println(s"[${layout.tag}] WARN $op($path): $hidden " +
@@ -384,8 +406,8 @@ private[graft] object IndexStore {
   /** Tombstone-delete `ids(idCol)`: the append to `_tombstones` (its
     * distinct count rides the write via `observe()`), then the
     * accumulation WARN. The WARN's distinct count is gated behind the
-    * sidecar's metadata row count (distinct ids ≤ rows), so small
-    * takedowns never pay it.
+    * sidecar's row count (distinct ids ≤ rows), summed from its parquet
+    * footers without a Spark job, so small takedowns pay no job for it.
     * @return distinct ids tombstoned by this call */
   def delete(spark: SparkSession, path: String, ids: DataFrame,
       idCol: String, layout: Layout): Long = {
@@ -395,11 +417,11 @@ private[graft] object IndexStore {
     requireNoInterruptedVacuum(fs, path, op, layout)
     layout.requireGeometry(spark, path, op, rootNames(fs, path))
     val obs = Observation()
-    ids.select(col(idCol).as(layout.idCol)).distinct()
-      .observe(obs, count(lit(1)).as("n"))
-      .coalesce(1).write.mode("append").parquet(s"$path/$Tombstones")
+    writer(ids.select(col(idCol).as(layout.idCol)).distinct()
+      .observe(obs, count(lit(1)).as("n")).coalesce(1))
+      .mode("append").parquet(s"$path/$Tombstones")
     val n = observedCount(obs, "n")
-    if (spark.read.parquet(s"$path/$Tombstones").count() >= 1024L) {
+    if (footerRows(spark, s"$path/$Tombstones") >= 1024L) {
       val tombs = tombstoneCount(spark, path, layout)
       if (tombs >= 1024L) {
         val total = math.max(1L, layout.rowCount(spark, path))
@@ -412,6 +434,20 @@ private[graft] object IndexStore {
       }
     }
     n
+  }
+
+  /** The rows of the parquet files under `dir`, from their footers: one
+    * footer read per file, no Spark job. */
+  private def footerRows(spark: SparkSession, dir: String): Long = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    var rows = 0L
+    FsWalk.foreachFile(fsOf(spark, dir), new Path(dir)) { st =>
+      if (st.getPath.getName.endsWith(".parquet")) {
+        val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+        try rows += r.getRecordCount finally r.close()
+      }
+    }
+    rows
   }
 
   // --------------------------------------------------------- staged rewrite
@@ -490,9 +526,8 @@ private[graft] object IndexStore {
         fs, child(staged, s), false, spark.sparkContext.hadoopConfiguration)
     }
     layout.filtered.filter(s => fs.exists(child(path, s))).foreach { s =>
-      dropTombstoned(spark, path, spark.read.parquet(s"$path/$s"),
-        layout.idCol).coalesce(8).write.mode("overwrite")
-        .parquet(s"$staged/$s")
+      writer(dropTombstoned(spark, path, spark.read.parquet(s"$path/$s"),
+        layout.idCol).coalesce(8)).mode("overwrite").parquet(s"$staged/$s")
     }
     if (layout.restampRows) writeRows(fs, staged, written)
   }
@@ -560,18 +595,25 @@ private[graft] object IndexStore {
     layout.requireGeometry(spark, path, op, rootNames(fs, path))
     if (!hasTombstones(fs, path)) return None
     val id = layout.idCol
-    val tomb = spark.read.parquet(s"$path/$Tombstones").select(id).distinct()
+    val qualified = fs.makeQualified(new Path(path)).toString
+    // one schema inference serves the locate scan, the affected-file
+    // read and the sidecar's id type; the id side feeds only semi and
+    // anti joins, so it is not deduplicated
+    val schema = spark.read.option("basePath", qualified).parquet(qualified)
+      .schema
+    val tomb = spark.read.schema(StructType(Seq(schema(id))))
+      .parquet(s"$path/$Tombstones")
     // filtered sidecars drop their tombstoned rows before anything can
     // clear the tombstones that name them; the eager checkpoint makes
     // the same-path overwrite safe
     def dropFromFiltered(): Unit =
       layout.filtered.filter(s => fs.exists(child(path, s))).foreach { s =>
-        spark.read.parquet(s"$path/$s").join(tomb, Seq(id), "left_anti")
-          .localCheckpoint(true).coalesce(8).write.mode("overwrite")
-          .parquet(s"$path/$s")
+        writer(spark.read.parquet(s"$path/$s").join(tomb, Seq(id), "left_anti")
+          .localCheckpoint(true).coalesce(8))
+          .mode("overwrite").parquet(s"$path/$s")
       }
-    val qualified = fs.makeQualified(new Path(path)).toString
-    val perFile = locateScan(spark, qualified, tomb, id).collect()
+    val perFile = locateScan(spark, qualified, tomb, id, Some(schema))
+      .collect()
     val affected = perFile.map(_.getString(0))
     val dropped = perFile.map(_.getLong(1)).sum
     if (affected.isEmpty) {
@@ -585,8 +627,8 @@ private[graft] object IndexStore {
       else None
     // basePath keeps the partition columns on the per-file read
     val staged = child(path, Staged)
-    layout.writeStaged(spark.read.option("basePath", qualified)
-        .parquet(affected.toIndexedSeq: _*)
+    layout.writeStaged(spark.read.schema(schema)
+        .option("basePath", qualified).parquet(affected.toIndexedSeq: _*)
         .join(tomb, Seq(id), "left_anti"), affected.length)
       .mode("overwrite").parquet(staged.toString)
     if (affected.length.toLong * 10 >= 3L * totalFiles)
@@ -626,10 +668,14 @@ private[graft] object IndexStore {
   /** The locate scan as a frame: (file, rows-to-drop) for every data
     * file holding a tombstoned row. The read prunes to the id column
     * alone (`input_file_name` is scan metadata, not a data column), so
-    * locating costs one narrow column, not the corpus. */
+    * locating costs one narrow column, not the corpus. `schema` is the
+    * tree's read schema when the caller has it (skips the inference
+    * job). */
   private[graft] def locateScan(spark: SparkSession, qualified: String,
-      tomb: DataFrame, idCol: String): DataFrame =
-    spark.read.option("basePath", qualified).parquet(qualified)
+      tomb: DataFrame, idCol: String,
+      schema: Option[StructType] = None): DataFrame =
+    schema.fold(spark.read)(spark.read.schema).option("basePath", qualified)
+      .parquet(qualified)
       .select(col(idCol), input_file_name().as("_file"))
       .join(tomb, Seq(idCol), "left_semi")
       .groupBy("_file").count()

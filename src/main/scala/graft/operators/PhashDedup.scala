@@ -96,7 +96,7 @@ object PhashDedup {
     val banded = phashBanded(hashes, idCol, hashCol, bands)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     Dedup.materializeAndRelease(
-      Dedup.inSetPairs(banded, banded, phashFamily(maxHamming)), banded)
+      Dedup.inSetPairs(banded, phashFamily(maxHamming)), banded)
   }
 
   /**

@@ -672,7 +672,7 @@ object Similarity {
     val cells = embCells(newVecs, vecCol, idCol)
     Dedup.probeBands(bandedEmbeddingCells(cells, plan.planned, plan.ref),
       embFamily(if (minCosine.isNaN) plan.minCosine else minCosine),
-      indexPath, scope, Some(cells))
+      indexPath, scope)
   }
 
   /**
@@ -736,7 +736,7 @@ object Similarity {
     val out = Dedup.ingestBands(
       bandedEmbeddingCells(cells, plan.planned, plan.ref),
       embFamily(plan.minCosine), indexPath, indexBatchDir, pairsSink,
-      "ingestEmbeddingBatch", Some(cells),
+      "ingestEmbeddingBatch",
       observed = batch =>
         if (indexPath.isEmpty) batch
         else batch.observe(obs,

@@ -102,13 +102,17 @@ class BandIndexKitSpec extends SparkSpec {
     * refactor of the band kit must not add a job; a drop lowers the pin.
     * One exception, the price of the each-pair-once fix: the minhash
     * probe's pairs now pass the ingest's distinct (one more exchange
-    * over the skinny scored pairs), 12 → 13; the phash and audio probes
-    * already paid it, and the embedding probe holds at 10. */
+    * over the skinny scored pairs), 12 → 13. The probes and ingests then
+    * dropped when the kit checkpointed its batch instead of caching it
+    * (each self-join of the batch reuses its first exchange) and read
+    * the in-set payload off band 0 (no dedup shuffle): probe, train and
+    * append ingest went minhash 13/11/14 → 9/8/11, embedding 10/12/14 →
+    * 6/9/10, phash 15/13/17 → 8/7/10, audio 20/13/22 → 12/9/14. */
   private val pinned = Map(
-    "minhash" -> (3, 3, 13, 11, 14),
-    "embedding" -> (4, 4, 10, 12, 14),
-    "phash" -> (2, 2, 15, 13, 17),
-    "audio" -> (2, 2, 20, 13, 22))
+    "minhash" -> (3, 3, 9, 8, 11),
+    "embedding" -> (4, 4, 6, 9, 10),
+    "phash" -> (2, 2, 8, 7, 10),
+    "audio" -> (2, 2, 12, 9, 14))
 
   test("every band verb runs exactly its pinned number of jobs") {
     val measured = families.map { case (name, f) =>
